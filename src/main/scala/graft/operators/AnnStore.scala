@@ -142,16 +142,14 @@ object AnnStore {
       spark: SparkSession, dir: String, m: Manifest): DataFrame =
     // centroid generations are write-once (mutations publish a fresh
     // `cent_<v>_<hex>` dir) — resolve once per generation per session
-    GenerationCache.frame(spark, s"anncent|$dir|${m.cent}")(
-      spark.read.parquet(s"$dir/${m.cent}"))
+    GenerationCache.directory(spark, s"$dir/${m.cent}")
 
   /** The live PQ codebook table (build-immutable). */
   def codebooks(spark: SparkSession, dir: String): DataFrame = {
     val m = read(dir)
     val cb = m.codebooks.getOrElse(
       sys.error(s"index at $dir has no codebook generation (int8 tier?)"))
-    GenerationCache.frame(spark, s"anncb|$dir|$cb")(
-      spark.read.parquet(s"$dir/$cb"))
+    GenerationCache.directory(spark, s"$dir/$cb")
   }
 
   /** The live posting view: a union of the manifest's segment scans
@@ -163,30 +161,28 @@ object AnnStore {
     * byte-identical to the pre-manifest layout. Resolved from ONE
     * manifest read, so a DataFrame built here keeps seeing the
     * generation it opened even if a compact/append publishes a newer
-    * one mid-query. */
+    * one mid-query. Each segment and tombstone directory is write-once
+    * (UUID'd, committed by manifest swap), so its resolved relation —
+    * the cell-partition discovery included — is cached per directory
+    * ([[GenerationCache.directory]]): after an append, a reader lists
+    * only the appended segment. Queries still scan the bytes. */
   def postings(spark: SparkSession, dir: String): DataFrame =
     postings(spark, dir, read(dir))
 
   private[graft] def postings(
-      spark: SparkSession, dir: String, m: Manifest): DataFrame =
-    // segment/tombstone directories are write-once (UUID'd, committed
-    // by manifest swap), so the resolved relation — including the
-    // cell-partition discovery over every segment root — is reusable
-    // for the generation's lifetime; queries still scan the bytes
-    GenerationCache.frame(spark, s"annpost|$dir|${m.segments.mkString(",")}" +
-        s"|${m.tombstones.mkString(",")}") {
-      val segs = m.segments.map(s => spark.read.parquet(s"$dir/$s"))
-        .reduce(_.unionByName(_))
-      tombstoned(spark, dir, m).fold(segs)(dead =>
-        segs.join(broadcast(dead), Seq("vec_id"), "left_anti"))
-    }
+      spark: SparkSession, dir: String, m: Manifest): DataFrame = {
+    val segs = m.segments.map(s => GenerationCache.directory(spark, s"$dir/$s"))
+      .reduce(_.unionByName(_))
+    tombstoned(spark, dir, m).fold(segs)(dead =>
+      segs.join(broadcast(dead), Seq("vec_id"), "left_anti"))
+  }
 
   /** The distinct tombstoned ids of a manifest — None when no delete is
     * outstanding (so callers can skip the anti-join/guard entirely). */
   private[operators] def tombstoned(
       spark: SparkSession, dir: String, m: Manifest): Option[DataFrame] =
     if (m.tombstones.isEmpty) None
-    else Some(m.tombstones.map(t => spark.read.parquet(s"$dir/$t"))
+    else Some(m.tombstones.map(t => GenerationCache.directory(spark, s"$dir/$t"))
       .reduce(_.unionByName(_)).select(col("vec_id")).distinct())
 
   /** Absolute paths of the live posting segments (footprint

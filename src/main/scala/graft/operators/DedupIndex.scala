@@ -23,13 +23,27 @@ import org.apache.spark.sql.functions._
   *     swaps the pointer — readers resolve the manifest once and see
   *     exactly one generation, never a half-written mix.
   *   - `seg_<v>_<hex>/` — band segments: one row per (doc, band):
-  *     `(band INT, bkey LONG, doc_id LONG, sig ARRAY<LONG>)`,
-  *     PARTITIONED BY `bprefix = pmod(bkey, 256)`. The signature rides
-  *     the band row (the l6 lesson: carry the comparison payload on the
-  *     band shuffle — joining a separate signature table would
-  *     re-shuffle the corpus per query); the prefix directories give
-  *     the serving path partition PRUNING — a small probe batch touches
-  *     only the prefixes its own band keys name, not the whole table.
+  *     `(doc_id LONG, sig ARRAY<LONG>, band INT, bkey LONG, bprefix INT)`
+  *     with `bprefix = pmod(bkey, 256)`. The signature rides the band
+  *     row (the l6 lesson: carry the comparison payload on the band
+  *     shuffle — joining a separate signature table would re-shuffle
+  *     the corpus per query). A segment has one of two layouts, and a
+  *     generation may mix them:
+  *       - PREFIX layout (build, compact): PARTITIONED BY `bprefix`, one
+  *         bkey-sorted file per prefix directory — a probe touches only
+  *         the prefixes its own band keys name, by partition pruning;
+  *       - DELTA layout (every [[append]] and [[ingestFold]] append):
+  *         files sorted by (`bprefix`, `bkey`) with `bprefix` a plain
+  *         column, one per coalesced shuffle partition — ONE file for a
+  *         batch-sized append, which the prefix layout would have
+  *         spread over one 1–2-row file per prefix it touches; a large
+  *         append still writes in parallel. A probe prunes a delta file
+  *         by row-group stats and the bkey bloom filter instead of by
+  *         directory.
+  *     Readers never branch on the layout: the same `bprefix IN` /
+  *     `bkey IN` filters are partition filters on a prefix segment and
+  *     pushed data filters on a delta file, and [[compact]] folds
+  *     deltas back into the prefix layout.
   *   - `del_<v>_<hex>/` — tombstone segments: one `doc_id` column.
   *     [[delete]] is O(|deleted ids|): it writes ids, not data, and
   *     readers drop tombstoned docs with a broadcast anti-join.
@@ -184,21 +198,17 @@ object DedupIndex {
 
   private def readBands(spark: SparkSession, dir: String, m: Manifest): DataFrame = {
     require(m.segments.nonEmpty, s"dedup index at $dir has no segments")
-    // generation-keyed resolution cache: the file set behind a manifest
-    // is immutable (UUID'd write-once directories), so the listing /
-    // partition-discovery pass runs once per generation per session
-    // instead of once per read — data is still scanned per query
-    GenerationCache.frame(spark, s"dix|$dir|${m.segments.mkString(",")}" +
-        s"|${m.tombstones.mkString(",")}") {
-      val bands = m.segments.map(s => spark.read.parquet(s"$dir/$s"))
-        .reduce(_ unionByName _)
-      if (m.tombstones.isEmpty) bands
-      else {
-        val dead = m.tombstones.map(t => spark.read.parquet(s"$dir/$t"))
-          .reduce(_ unionByName _).select(col("doc_id")).distinct()
-        bands.join(broadcast(dead), Seq("doc_id"), "left_anti")
-      }
-    }
+    // directory-keyed resolution cache: segment and tombstone
+    // directories are immutable (UUID'd, write-once), so each one's
+    // listing / partition-discovery pass runs once per session, and a
+    // reader after a commit lists only the directories that commit
+    // added — data is still scanned per query
+    def dirs(names: Seq[String]): DataFrame =
+      names.map(d => GenerationCache.directory(spark, s"$dir/$d")).reduce(_ unionByName _)
+    val bands = dirs(m.segments)
+    if (m.tombstones.isEmpty) bands
+    else bands.join(broadcast(dirs(m.tombstones).select(col("doc_id")).distinct()),
+      Seq("doc_id"), "left_anti")
   }
 
   /** Build the band table from scratch (overwrite: a fresh manifest
@@ -236,12 +246,13 @@ object DedupIndex {
   }
 
   /** Append a new batch's band rows to an existing index (reads the
-    * parameterization from `meta/` — a batch can never be banded with
-    * different constants than the corpus it joins). The batch lands in
-    * its own segment directory and becomes visible in one manifest
-    * swap; post-append the index is row-identical to a fresh build over
-    * the union, because band rows are row-local per doc — no global
-    * state to refresh (DedupIndexSpec pins the equivalence). */
+    * parameterization from the meta generation — a batch can never be
+    * banded with different constants than the corpus it joins). The
+    * batch lands in its own DELTA-layout segment directory (see the
+    * object doc) and becomes visible in one manifest swap; post-append
+    * the index is row-identical to a fresh build over the union,
+    * because band rows are row-local per doc — no global state to
+    * refresh (DedupIndexSpec pins the equivalence). */
   def append(
       docs: DataFrame,
       idCol: String,
@@ -250,7 +261,7 @@ object DedupIndex {
       batchId: Option[Long] = None): Unit = {
     val (k, bands, shingleN) = meta(docs, dir)
     val seg = ManifestCommit.uniqueName("seg", readManifest(dir).version + 1)
-    writeBands(docs, idCol, textCol, dir, shingleN, k, bands, seg)
+    writeBands(docs, idCol, textCol, dir, shingleN, k, bands, seg, delta = true)
     commitDelta(dir, Seq(seg), Nil, batchId)
   }
 
@@ -411,7 +422,7 @@ object DedupIndex {
                 "left_semi")
               .select(col("__qid").as("doc_id"), col("__qsig").as("sig"),
                 col("band"), col("bkey"), col("bprefix")),
-            s"$dir/$seg")
+            s"$dir/$seg", delta = true)
           // batch ordinal rides the swap — the fold's appends carry the
           // same atomic exactly-once stamp the streaming sink checks
           commitDelta(dir, Seq(seg), Nil, Some(i.toLong))
@@ -546,7 +557,8 @@ object DedupIndex {
     * anti-join to the read path, so a daily-ingest deployment
     * accumulates per-day file opens and tombstone probes. Compact reads
     * the current generation, writes it 1-file-per-prefix into a fresh
-    * segment, and publishes a manifest naming ONLY that segment with an
+    * segment — folding any delta segments back into the prefix layout —
+    * and publishes a manifest naming ONLY that segment with an
     * empty tombstone list — one atomic pointer swap; a reader that
     * resolved the old manifest keeps its old segments (they are not
     * touched), a reader arriving after the swap sees exactly the new
@@ -638,27 +650,22 @@ object DedupIndex {
       shingleN: Int,
       k: Int,
       bands: Int,
-      segment: String): Unit = {
+      segment: String,
+      delta: Boolean = false): Unit = {
     val n = docs.sparkSession.sparkContext.defaultParallelism
     writeBandRows(
-      docs
-        // explicit-count repartition: signature compute must spread over
-        // the cores even when the input is one parquet row group
-        .repartition(n, col(idCol))
+      // explicit-count repartition: signature compute must spread over
+      // the cores even when the input is one parquet row group
+      docs.repartition(n, col(idCol))
         .select(col(idCol).as("doc_id"),
           Dedup.minhashSignature(col(textCol), k, shingleN).as("sig"))
         .select(col("doc_id"), col("sig"),
           posexplode(Dedup.lshBandKeys(col("sig"), bands, k / bands))
             .as(Seq("band", "bkey")))
         .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int")),
-      s"$dir/$segment")
+      s"$dir/$segment", delta)
   }
 
-  /** Sink for prepared band rows `(doc_id, sig, band, bkey, bprefix)` —
-    * shared by the signature-computing [[writeBands]] and
-    * [[ingestFold]]'s probe-row reuse path. Always writes a FRESH
-    * segment directory; visibility comes from the caller's manifest
-    * swap, never from files appearing in a listed directory. */
   /** Exact-IN size cap per scan: parquet evaluates a pushed IN as a
     * recursive or-chain, so a multi-thousand-value list overflows the
     * task stack (measured at ~2000 values) — 512 keeps an
@@ -731,11 +738,23 @@ object DedupIndex {
         .reduce(_ unionByName _)
   }
 
-  private def writeBandRows(rows: DataFrame, segDir: String): Unit = {
-    rows
-      // one writer per prefix directory: without this every task writes
-      // into every partition dir — 256·tasks small files per build
-      .repartition(col("bprefix"))
+  /** Sink for prepared band rows `(doc_id, sig, band, bkey, bprefix)` —
+    * shared by the signature-computing [[writeBands]] and
+    * [[ingestFold]]'s probe-row reuse path. Always writes a FRESH
+    * segment directory; visibility comes from the caller's manifest
+    * swap, never from files appearing in a listed directory. `delta`
+    * picks the segment layout (see the object doc): files sorted by
+    * (`bprefix`, `bkey`) with `bprefix` a data column, or — the default,
+    * and the layout build and compact write — one bkey-sorted file per
+    * `bprefix` partition directory. Both carry the same row-group size
+    * and bkey bloom filter. */
+  private def writeBandRows(rows: DataFrame, segDir: String, delta: Boolean = false): Unit = {
+    // each prefix lands in exactly one writer task: without this every
+    // task writes into every partition dir — 256·tasks small files per
+    // build. AQE coalesces the shuffle to the data size, so a
+    // batch-sized delta is one task writing one file, and a large one
+    // keeps several parallel writers
+    val w = rows.repartition(col("bprefix"))
       // bkey-sorted within each prefix file: every parquet row group
       // then covers a NARROW bkey range, so a point probe's pushed
       // bkey IN-filter skips row groups by min/max stats — the
@@ -769,6 +788,6 @@ object DedupIndex {
       // spec-pinned via the parquet metadata API
       .option("parquet.bloom.filter.enabled#bkey", "true")
       .option("parquet.bloom.filter.expected.ndv#bkey", "131072")
-      .partitionBy("bprefix").parquet(segDir)
+    if (delta) w.parquet(segDir) else w.partitionBy("bprefix").parquet(segDir)
   }
 }

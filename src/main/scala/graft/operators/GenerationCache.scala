@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped METADATA cache for immutable index generations — the
+/** Session-scoped METADATA cache for immutable store directories — the
   * manifest-table answer to repeated directory listings (optimization
   * guide §6: "table formats with manifest metadata avoid directory
   * listing altogether").
@@ -10,31 +10,46 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every persisted-tier read ([[DedupIndex.readBands]],
   * [[AnnStore.postings]]/[[AnnStore.centroids]]) used to call
   * `spark.read.parquet` afresh, and each call re-ran partition
-  * discovery over the generation's directories — a 256-task "Listing
-  * leaf files" job (~0.5 s at local scale, a paginated LIST per
-  * segment on an object store) per read of a table whose file set is
-  * IMMUTABLE by the commit protocol's own contract: segments,
-  * tombstones, meta and centroid generations are written once under
-  * UUID-suffixed names and never modified (mutations commit fresh
-  * directories plus a manifest swap). So the resolved relation — the
-  * file index inside the analyzed DataFrame — can be reused for as
-  * long as the generation is referenced, which is exactly keyed by the
-  * manifest content that names it.
+  * discovery over the store's directories — a 256-task "Listing leaf
+  * files" job (~0.5 s at local scale, a paginated LIST per segment on
+  * an object store) per read of a file set that is IMMUTABLE by the
+  * commit protocol's own contract: segments, tombstones, meta, centroid
+  * and codebook generations are written once under UUID-suffixed names
+  * and never modified (mutations commit fresh directories plus a
+  * manifest swap).
   *
-  * What this caches is FILE METADATA and plan resolution only: every
-  * query still scans the parquet bytes itself (no result or data
-  * caching — re-running a query re-reads the files). Keys embed the
-  * session (plans are session-bound), the store dir, and the full
-  * generation list (version + UUID'd directory names), so a rebuild
-  * into the same path, a concurrent append, or a compact all miss the
-  * stale entry and resolve fresh. Bounded LRU; evicted entries simply
-  * re-list on next use. Vacuumed generations age out of the manifest
-  * first, so a cached frame can only outlive its files if a caller
-  * holds it across its own retention window — the same loud
-  * FileNotFoundException contract as an uncached snapshot read.
+  * Keys are PER DIRECTORY ([[directory]]): each segment or tombstone
+  * directory resolves once, under its own path, and the stores union
+  * the cached per-directory relations for whatever list a manifest
+  * names. A commit therefore costs a reader exactly the listing of the
+  * directories it added — the segments an earlier generation already
+  * resolved are reused as they are.
+  *
+  * What this caches is FILE METADATA, plan resolution and small index
+  * parameters only ([[scalar]]): every query still scans the parquet
+  * bytes itself (no result or data caching — re-running a query
+  * re-reads the files). Keys embed the session's UUID (plans are
+  * session-bound, and a UUID, unlike an identity hash, is never reused
+  * by a later session) and the full directory path, whose UUID'd
+  * generation name makes a rebuild into the same store path miss the
+  * stale entry. Bounded LRU of [[MaxEntries]] per kind, shared by every
+  * store and session in the process; evicted entries simply re-list on
+  * next use. The bound counts DIRECTORIES, and a reader resolves a
+  * store's directories in the same order on every read, so once the
+  * live directories of all open stores exceed it, LRU order evicts
+  * each one before its next use and every read re-lists everything.
+  * Nothing compacts automatically and every append adds a segment, so
+  * [[DedupIndex.compact]] / [[Similarity.compactIvfIndex]] must run
+  * before a process's live segment and tombstone count nears the
+  * bound; an entry is a resolved relation (its file listing), not
+  * data, so the bound sits far above a compacted store's directory
+  * count. Vacuumed directories age out of the manifest first, so a cached
+  * frame can only outlive its files if a caller holds it across its own
+  * retention window — the same loud FileNotFoundException contract as
+  * an uncached snapshot read.
   */
 private[graft] object GenerationCache {
-  private val MaxEntries = 128
+  private[graft] val MaxEntries = 4096
 
   private final class Lru[V] extends java.util.LinkedHashMap[String, V](32, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
@@ -45,32 +60,26 @@ private[graft] object GenerationCache {
   private val scalars = new Lru[AnyRef]
 
   private def sessionKey(spark: SparkSession): String =
-    System.identityHashCode(spark).toHexString
+    org.apache.spark.sql.graftbridge.SessionBridge.uuid(spark)
 
-  /** The resolved DataFrame for an immutable generation set. `key` must
-    * name every directory the frame reads (UUID-suffixed generation
-    * names make it collision-safe across rebuilds). */
-  def frame(spark: SparkSession, key: String)(make: => DataFrame): DataFrame = {
-    val k = sessionKey(spark) + "|" + key
-    frames.synchronized { Option(frames.get(k)) } match {
-      case Some(df) => df
-      case None =>
-        val df = make
-        frames.synchronized { frames.put(k, df) }
-        df
-    }
-  }
+  /** The resolved relation of ONE immutable directory — a segment,
+    * tombstone, centroid or codebook generation. */
+  def directory(spark: SparkSession, path: String): DataFrame =
+    cached(frames, spark, path)(spark.read.parquet(path))
 
   /** A small driver-side value derived from an immutable generation set
-    * (a row count for wave sizing, a collected parameter row). Same
-    * immutability argument as [[frame]]; never query results. */
-  def scalar[T <: AnyRef](spark: SparkSession, key: String)(make: => T): T = {
+    * (a row count for wave sizing, a decoded parameter table). Same
+    * immutability argument as [[directory]]; never query results. */
+  def scalar[T <: AnyRef](spark: SparkSession, key: String)(make: => T): T =
+    cached(scalars, spark, key)(make).asInstanceOf[T]
+
+  private def cached[V](lru: Lru[V], spark: SparkSession, key: String)(make: => V): V = {
     val k = sessionKey(spark) + "|" + key
-    scalars.synchronized { Option(scalars.get(k)) } match {
-      case Some(v) => v.asInstanceOf[T]
+    lru.synchronized { Option(lru.get(k)) } match {
+      case Some(v) => v
       case None =>
         val v = make
-        scalars.synchronized { scalars.put(k, v) }
+        lru.synchronized { lru.put(k, v) }
         v
     }
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{CentroidMatrix, TopKByScore, VectorFunctions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -959,7 +959,7 @@ object Similarity {
     val view = corpus.select(col("vec_id"), col("embedding"))
     val (centroids, cnorms) = centroidsFrom match {
       case Some(src) =>
-        val rows = AnnStore.centroids(spark, src).orderBy(col("cell")).collect()
+        val rows = centroidRows(spark, src, AnnStore.read(src))
         (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
       case None =>
         val total = view.count()
@@ -1069,8 +1069,7 @@ object Similarity {
     val n = sc.defaultParallelism
     val man = AnnStore.read(dir)
     assertNotTombstoned(batch, dir, man, "appendToIvfIndex")
-    val centRows = AnnStore.centroids(spark, dir, man)
-      .orderBy(col("cell")).collect()
+    val centRows = centroidRows(spark, dir, man)
     val centroids = centRows.map(_.getSeq[Double](1).toArray)
     val cnorms = centRows.map(_.getDouble(2))
     val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
@@ -1107,29 +1106,40 @@ object Similarity {
       rows.repartition(math.min(n, math.max(1, appended.size)), col("cell"))
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("cell").parquet(s"$dir/$seg")
-      commitWithCounts(spark, dir, man, seg = Some(seg), delta = appended,
-        batchId = batchId)
+      commitWithCounts(spark, dir, man, centRows, seg = Some(seg),
+        delta = appended, batchId = batchId)
     }
 
     appended.toSeq.sortBy(_._1).toDF("cell", "n_appended")
   }
 
+  /** The centroid table of `m`'s generation as driver rows, ordered by
+    * cell (nlist rows — the bounded collect every append, probe and
+    * count refresh reads). */
+  private def centroidRows(
+      spark: SparkSession, dir: String, m: AnnStore.Manifest): Array[Row] =
+    AnnStore.centroids(spark, dir, m).orderBy(col("cell")).collect()
+
   /** Single-shot count-refreshed publish against an EXACT base: write a
     * fresh centroid generation carrying `base + delta` counts and claim
-    * `base.version + 1`. Throws [[ManifestCommit.CommitConflict]] when
-    * another writer got there first — the caller decides how to retry,
-    * because the right retry differs by mutation (see below). */
+    * `base.version + 1`. `baseRows` are [[centroidRows]] of `base` — an
+    * append passes the rows it just assigned against instead of
+    * collecting the same generation again. Throws
+    * [[ManifestCommit.CommitConflict]] when another writer got there
+    * first — the caller decides how to retry, because the right retry
+    * differs by mutation (see below). */
   private def publishWithCounts(
       spark: SparkSession,
       dir: String,
       base: AnnStore.Manifest,
+      baseRows: Array[Row],
       seg: Option[String],
       tomb: Option[String],
       delta: Map[Int, Long],
       batchId: Option[Long] = None): Unit = {
     import spark.implicits._
     val cent = ManifestCommit.uniqueName("cent", base.version + 1)
-    AnnStore.centroids(spark, dir, base).orderBy(col("cell")).collect()
+    baseRows
       .map { r =>
         val cell = r.getInt(0)
         (cell, r.getSeq[Double](1), r.getDouble(2), r.getInt(3),
@@ -1164,18 +1174,21 @@ object Similarity {
       spark: SparkSession,
       dir: String,
       base0: AnnStore.Manifest,
+      rows0: Array[Row],
       seg: Option[String],
       delta: Map[Int, Long],
       batchId: Option[Long] = None): Unit = {
     var base = base0
+    var rows = rows0
     var committed = false
     while (!committed) {
       try {
-        publishWithCounts(spark, dir, base, seg, tomb = None, delta, batchId)
+        publishWithCounts(spark, dir, base, rows, seg, tomb = None, delta, batchId)
         committed = true
       } catch {
         case _: ManifestCommit.CommitConflict =>
           base = AnnStore.read(dir)
+          rows = centroidRows(spark, dir, base)
       }
     }
   }
@@ -1257,7 +1270,8 @@ object Similarity {
         present.select(col("vec_id")).distinct()
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/$tomb")
         try {
-          publishWithCounts(spark, dir, man, seg = None, tomb = Some(tomb),
+          publishWithCounts(spark, dir, man, centroidRows(spark, dir, man),
+            seg = None, tomb = Some(tomb),
             delta = removed.map { case (c, n) => c -> -n })
           committed = true
         } catch {
@@ -1351,8 +1365,7 @@ object Similarity {
     val sc = spark.sparkContext
     val n = sc.defaultParallelism
     val man = AnnStore.read(indexDir) // ONE pointer resolve per query
-    val centRows = AnnStore.centroids(spark, indexDir, man)
-      .orderBy(col("cell")).collect()
+    val centRows = centroidRows(spark, indexDir, man)
     val centroids = centRows.map(_.getSeq[Double](1).toArray)
     val cnorms = centRows.map(_.getDouble(2))
     val totalN = centRows.map(_.getLong(4)).sum
@@ -1449,7 +1462,7 @@ object Similarity {
     val view = corpus.select(col("vec_id"), col("embedding"))
     val (centroids, cnorms) = centroidsFrom match {
       case Some(src) =>
-        val rows = AnnStore.centroids(spark, src).orderBy(col("cell")).collect()
+        val rows = centroidRows(spark, src, AnnStore.read(src))
         (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
       case None =>
         val total = view.count()
@@ -1560,8 +1573,7 @@ object Similarity {
     val n = sc.defaultParallelism
     val man = AnnStore.read(dir)
     assertNotTombstoned(batch, dir, man, "appendToPqIndex")
-    val centRows = AnnStore.centroids(spark, dir, man)
-      .orderBy(col("cell")).collect()
+    val centRows = centroidRows(spark, dir, man)
     val centroids = centRows.map(_.getSeq[Double](1).toArray)
     val cnorms = centRows.map(_.getDouble(2))
     val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
@@ -1593,8 +1605,8 @@ object Similarity {
       rows.repartition(math.min(n, math.max(1, appended.size)), col("cell"))
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("cell").parquet(s"$dir/$seg")
-      commitWithCounts(spark, dir, man, seg = Some(seg), delta = appended,
-        batchId = batchId)
+      commitWithCounts(spark, dir, man, centRows, seg = Some(seg),
+        delta = appended, batchId = batchId)
     }
 
     appended.toSeq.sortBy(_._1).toDF("cell", "n_appended")
@@ -1604,25 +1616,31 @@ object Similarity {
     * [[graft.functions.PqCodebooks]] the encode/ADC primitives run on —
     * m·ks rows, one bounded driver-side collect (~128 KB at the
     * defaults); shared by serving, [[appendToPqIndex]] and the
-    * `codebooksFrom` rebuild so every consumer decodes the SAME bytes. */
+    * `codebooksFrom` rebuild so every consumer decodes the SAME bytes.
+    * A codebook generation is immutable after build, so the decoded
+    * table is an index PARAMETER resolved once per generation per
+    * session ([[GenerationCache.scalar]], the [[DedupIndex]] meta
+    * precedent) — never a query result. */
   private def loadPqCodebooks(
       spark: SparkSession, indexDir: String,
       man: AnnStore.Manifest): graft.functions.PqCodebooks = {
-    val cbRows = spark.read.parquet(
-      man.codebooks.map(cb => s"$indexDir/$cb").getOrElse(
-        sys.error(s"index at $indexDir has no codebook generation")))
-      .orderBy(col("sub"), col("code")).collect()
-    val m = cbRows.map(_.getInt(0)).max + 1
-    val ksEff = cbRows.map(_.getInt(1)).max + 1
-    val dsub = cbRows(0).getSeq[Double](2).length
-    val flat = new Array[Double](m * ksEff * dsub)
-    cbRows.foreach { r =>
-      val base = (r.getInt(0) * ksEff + r.getInt(1)) * dsub
-      val cw = r.getSeq[Double](2)
-      var j = 0
-      while (j < dsub) { flat(base + j) = cw(j); j += 1 }
+    val cb = man.codebooks.getOrElse(
+      sys.error(s"index at $indexDir has no codebook generation"))
+    GenerationCache.scalar(spark, s"pqcb|$indexDir/$cb") {
+      val cbRows = GenerationCache.directory(spark, s"$indexDir/$cb")
+        .orderBy(col("sub"), col("code")).collect()
+      val m = cbRows.map(_.getInt(0)).max + 1
+      val ksEff = cbRows.map(_.getInt(1)).max + 1
+      val dsub = cbRows(0).getSeq[Double](2).length
+      val flat = new Array[Double](m * ksEff * dsub)
+      cbRows.foreach { r =>
+        val base = (r.getInt(0) * ksEff + r.getInt(1)) * dsub
+        val cw = r.getSeq[Double](2)
+        var j = 0
+        while (j < dsub) { flat(base + j) = cw(j); j += 1 }
+      }
+      graft.functions.PqCodebooks(flat, m, ksEff, dsub)
     }
-    graft.functions.PqCodebooks(flat, m, ksEff, dsub)
   }
 
   /** q3 vector → (PQ codes, inflated residual norm) with broadcast
@@ -1680,8 +1698,7 @@ object Similarity {
     val sc = spark.sparkContext
     val n = sc.defaultParallelism
     val man = AnnStore.read(indexDir) // ONE pointer resolve per query
-    val centRows = AnnStore.centroids(spark, indexDir, man)
-      .orderBy(col("cell")).collect()
+    val centRows = centroidRows(spark, indexDir, man)
     val centroids = centRows.map(_.getSeq[Double](1).toArray)
     val cnorms = centRows.map(_.getDouble(2))
     val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))

@@ -14,3 +14,11 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** The session's UUID — `private[sql]` on the classic session, read
+  * through the same shim. Unlike an identity hash it is never reused by
+  * a later session, so caches keyed on it cannot alias across sessions. */
+object SessionBridge {
+  def uuid(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+}

@@ -9,7 +9,7 @@ import graft.operators.{Catalog, DedupIndex, StateTable}
 class CatalogSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cat_$tag").toString
+    tempDir(s"graft_cat_$tag")
 
   test("register/resolve/list; re-register re-points; reads resolve by name; pins resolve snapshots") {
     import spark.implicits._

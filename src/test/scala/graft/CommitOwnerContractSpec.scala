@@ -187,7 +187,7 @@ trait CommitOwnerContract { self: SparkSpec =>
 class LinkOwnerContractSpec extends SparkSpec with CommitOwnerContract {
   def owner: ManifestCommit.CommitOwner = ManifestCommit.LinkOwner
   def freshStore(): String =
-    "file:" + java.nio.file.Files.createTempDirectory("graft_coc_link").toString
+    "file:" + tempDir("graft_coc_link")
 }
 
 /** RenameOwner (no-overwrite rename claim) on the namenode-atomic mock
@@ -198,7 +198,7 @@ class RenameOwnerContractSpec extends SparkSpec with CommitOwnerContract {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.mocknn.impl", classOf[MockNnFs].getName)
     hc.set("fs.AbstractFileSystem.mocknn.impl", classOf[MockNnAbstractFs].getName)
-    "mocknn:" + java.nio.file.Files.createTempDirectory("graft_coc_nn").toString
+    "mocknn:" + tempDir("graft_coc_nn")
   }
 }
 
@@ -208,7 +208,7 @@ class RenameOwnerContractSpec extends SparkSpec with CommitOwnerContract {
 class ConditionalPutOwnerContractSpec extends SparkSpec with CommitOwnerContract {
   def owner: ManifestCommit.CommitOwner = ConditionalPutOwnerContractSpec.owner
   def freshStore(): String =
-    "file:" + java.nio.file.Files.createTempDirectory("graft_coc_cput").toString
+    "file:" + tempDir("graft_coc_cput")
 
   test("conditional-PUT owner end-to-end: a registered object-store scheme sustains the full commit protocol under contention") {
     // beyond the primitive's contract: the protocol built ON it (version
@@ -221,7 +221,7 @@ class ConditionalPutOwnerContractSpec extends SparkSpec with CommitOwnerContract
     hc.set("fs.AbstractFileSystem.mockos.impl", classOf[MockOsAbstractFs].getName)
     ManifestCommit.registerOwner("mockos", ConditionalPutOwnerContractSpec.owner)
     val dir = "mockos:" +
-      java.nio.file.Files.createTempDirectory("graft_coc_os").toString
+      tempDir("graft_coc_os")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
     try {

@@ -26,7 +26,7 @@ import graft.operators.ManifestCommit
 class CrossProcessCommitSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_xp_$tag").toString
+    tempDir(s"graft_xp_$tag")
 
   /** Fork one CommitHammer JVM; returns (process, collected stdout). */
   private def fork(mode: String, dir: String, id: Int, rounds: Int,

@@ -7,9 +7,16 @@ class DedupIndexSpec extends SparkSpec {
 
   private lazy val docs = Tables(spark, sf, "documents")
 
+  private def parquetFiles(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+
+  private def prefixDirs(segDir: String): Seq[java.io.File] =
+    new java.io.File(segDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bprefix=")).toSeq
+
   test("index query equals the batch pair rule restricted to probe × index") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dix_spec").toString
+    val dir = tempDir("dix_spec")
     val corpus = docs.filter($"doc_id" % 2 === 0)
     val incoming = docs.filter($"doc_id" % 2 =!= 0)
     DedupIndex.build(corpus, "doc_id", "text", dir)
@@ -46,7 +53,7 @@ class DedupIndexSpec extends SparkSpec {
     // self-guard: querying the indexed corpus against its own index
     // never drops a doc for matching ITSELF — docs without a distinct
     // near-dup partner all survive
-    val dir = java.nio.file.Files.createTempDirectory("dix_self").toString
+    val dir = tempDir("dix_self")
     val corpus = docs.filter($"doc_id" % 2 === 0)
     DedupIndex.build(corpus, "doc_id", "text", dir)
     val survivors = DedupIndex.query(corpus, "doc_id", "text", dir)
@@ -73,7 +80,7 @@ class DedupIndexSpec extends SparkSpec {
     // after the big side's shuffle write). Pin (a) the default plan
     // broadcasts the probe, (b) forcing the over-cap branch through the
     // session conf yields the identical survivor set.
-    val dir = java.nio.file.Files.createTempDirectory("dix_bcast").toString
+    val dir = tempDir("dix_bcast")
     val corpus = docs.filter($"doc_id" % 2 === 0)
     val incoming = docs.filter($"doc_id" % 2 =!= 0)
     DedupIndex.build(corpus, "doc_id", "text", dir)
@@ -94,12 +101,12 @@ class DedupIndexSpec extends SparkSpec {
     import spark.implicits._
     val batches = (0 to 3).map(i => docs.filter(pmod($"doc_id", lit(4)) === i))
     // the fold (probe-row-reuse append path)
-    val foldDir = java.nio.file.Files.createTempDirectory("dix_fold").toString
+    val foldDir = tempDir("dix_fold")
     val fold = DedupIndex.ingestFold(batches, "doc_id", "text", foldDir)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // the same schedule composed naively from the public primitives,
     // with appends that RECOMPUTE survivor signatures from text
-    val naiveDir = java.nio.file.Files.createTempDirectory("dix_naive").toString
+    val naiveDir = tempDir("dix_naive")
     var expected = Map.empty[Long, Int]
     batches.zipWithIndex.foreach { case (b, i) =>
       val kept =
@@ -126,20 +133,25 @@ class DedupIndexSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(canon(foldDir) == canon(naiveDir),
       "probe-row-reuse append wrote different band rows than the recompute path")
+    // the fold's appends are delta segments; the mixed generation holds
+    // exactly a fresh build's band rows
+    assert(DedupIndex.readManifest(foldDir).segments.tail
+      .forall(s => prefixDirs(s"$foldDir/$s").isEmpty))
+    val freshDir = tempDir("dix_fold_fresh")
+    DedupIndex.build(docs.join(fold.keys.toSeq.toDF("doc_id"), "doc_id"),
+      "doc_id", "text", freshDir)
+    assert(canon(foldDir) == canon(freshDir),
+      "a delta-grown fold index diverged from a fresh build over its survivors")
   }
 
   test("compact: append-grown index collapses to one segment with one file per prefix, rows and query identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dix_compact").toString
+    val dir = tempDir("dix_compact")
     DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dir)
     DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dir)
     DedupIndex.append(docs.filter($"doc_id" % 4 === 1), "doc_id", "text", dir)
-    def parquetFiles(prefixDir: java.io.File): Int =
-      prefixDir.listFiles().count(f => f.getName.endsWith(".parquet"))
-    def prefixDirs: Seq[java.io.File] =
-      DedupIndex.readManifest(dir).segments
-        .flatMap(s => Option(new java.io.File(s"$dir/$s").listFiles()).toSeq.flatten)
-        .filter(f => f.isDirectory && f.getName.startsWith("bprefix="))
+    def livePrefixDirs: Seq[java.io.File] =
+      DedupIndex.readManifest(dir).segments.flatMap(s => prefixDirs(s"$dir/$s"))
     assert(DedupIndex.readManifest(dir).segments.size == 3,
       "three writes must be three live segments pre-compaction")
     val incoming = docs.filter($"doc_id" % 4 === 3)
@@ -153,7 +165,7 @@ class DedupIndexSpec extends SparkSpec {
     val m = DedupIndex.readManifest(dir)
     assert(m.segments.size == 1 && m.tombstones.isEmpty,
       s"compaction must publish exactly one segment, got $m")
-    assert(prefixDirs.nonEmpty && prefixDirs.forall(parquetFiles(_) == 1),
+    assert(livePrefixDirs.nonEmpty && livePrefixDirs.forall(parquetFiles(_).size == 1),
       "every prefix directory must hold exactly one file post-compaction")
     val rowsAfter = DedupIndex.readBands(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -176,11 +188,11 @@ class DedupIndexSpec extends SparkSpec {
     // the parity law behind l57: build full, delete a slice, and the
     // index must answer query/selfPairs EXACTLY as a fresh index built
     // over corpus-minus-deleted would
-    val dir = java.nio.file.Files.createTempDirectory("dix_del").toString
+    val dir = tempDir("dix_del")
     DedupIndex.build(docs, "doc_id", "text", dir)
     val deleted = docs.filter($"doc_id" % 5 === 2).select($"doc_id")
     DedupIndex.delete(deleted, "doc_id", dir)
-    val refDir = java.nio.file.Files.createTempDirectory("dix_del_ref").toString
+    val refDir = tempDir("dix_del_ref")
     DedupIndex.build(docs.filter($"doc_id" % 5 =!= 2), "doc_id", "text", refDir)
 
     val pairsGot = DedupIndex.selfPairs(spark, dir)
@@ -222,7 +234,7 @@ class DedupIndexSpec extends SparkSpec {
 
   test("manifest swap: a reader that resolved before a compact keeps its generation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dix_gen").toString
+    val dir = tempDir("dix_gen")
     DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dir)
     DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dir)
     // resolve NOW: the returned frame is pinned to this manifest
@@ -247,7 +259,7 @@ class DedupIndexSpec extends SparkSpec {
 
   test("selfPairs from the index equals minhashLsh's pair set (the l55 pair stage)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dix_selfpairs").toString
+    val dir = tempDir("dix_selfpairs")
     DedupIndex.build(docs, "doc_id", "text", dir)
     val fromIndex = DedupIndex.selfPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -265,36 +277,112 @@ class DedupIndexSpec extends SparkSpec {
   test("band segments carry bkey bloom filters: footer offsets present, filter readable, members hit") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("dix_bloom").toString
+    val dir = tempDir("dix_bloom")
     DedupIndex.build(docs.filter($"doc_id" % 3 === 0), "doc_id", "text", dir)
-    val seg = DedupIndex.readManifest(dir).segments.head
-    val pfile = new java.io.File(s"$dir/$seg").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bprefix="))
-      .head.listFiles().filter(_.getName.endsWith(".parquet")).head
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(pfile.getAbsolutePath),
-        spark.sparkContext.hadoopConfiguration))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val bkeyChunks = blocks.flatMap(_.getColumns.asScala)
-        .filter(_.getPath.toDotString == "bkey")
-      assert(bkeyChunks.nonEmpty &&
-        bkeyChunks.forall(_.getBloomFilterOffset >= 0),
-        "every bkey column chunk must carry a bloom filter offset")
-      // the filter is readable and reports an INDEXED key as a member
-      // (the property pushed-Eq row-group filtering relies on)
-      val aKey = spark.read.parquet(pfile.getAbsolutePath)
-        .select($"bkey").head().getLong(0)
-      val bf = reader.readBloomFilter(bkeyChunks.head)
-      assert(bf != null && bf.findHash(bf.hash(aKey)),
-        "bloom filter must contain a key the chunk actually holds")
-    } finally reader.close()
+    // a batch-sized append (~167 docs) writes the one-file delta layout
+    DedupIndex.append(docs.filter($"doc_id" % 3 === 1), "doc_id", "text", dir)
+    val Seq(seg, delta) = DedupIndex.readManifest(dir).segments
+    assert(prefixDirs(s"$dir/$delta").isEmpty && parquetFiles(new java.io.File(s"$dir/$delta")).size == 1,
+      "a batch-sized append must write ONE file and no prefix directories")
+    def assertBloom(pfile: java.io.File): Unit = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(pfile.getAbsolutePath),
+          spark.sparkContext.hadoopConfiguration))
+      try {
+        val blocks = reader.getFooter.getBlocks.asScala
+        val bkeyChunks = blocks.flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == "bkey")
+        assert(bkeyChunks.nonEmpty &&
+          bkeyChunks.forall(_.getBloomFilterOffset >= 0),
+          "every bkey column chunk must carry a bloom filter offset")
+        // the filter is readable and reports an INDEXED key as a member
+        // (the property pushed-Eq row-group filtering relies on)
+        val aKey = spark.read.parquet(pfile.getAbsolutePath)
+          .select($"bkey").head().getLong(0)
+        val bf = reader.readBloomFilter(bkeyChunks.head)
+        assert(bf != null && bf.findHash(bf.hash(aKey)),
+          "bloom filter must contain a key the chunk actually holds")
+      } finally reader.close()
+    }
+    assertBloom(parquetFiles(prefixDirs(s"$dir/$seg").head).head)
+    assertBloom(parquetFiles(new java.io.File(s"$dir/$delta")).head)
+  }
+
+  test("a large append stays a parallel delta write: disjoint (bprefix, bkey)-sorted files") {
+    import spark.implicits._
+    // shrink AQE's coalescing target so a spec-sized append spans
+    // several shuffle partitions, as a corpus-sized one does at the
+    // default target: the delta write must keep one writer per
+    // partition, never fold the batch into one task
+    val confs = Seq(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k")
+    val batch = docs.filter($"doc_id" >= 50)
+    val dir = tempDir("dix_big_append")
+    DedupIndex.build(docs.filter($"doc_id" < 50), "doc_id", "text", dir)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try DedupIndex.append(batch, "doc_id", "text", dir)
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    val seg = s"$dir/${DedupIndex.readManifest(dir).segments.last}"
+    val files = parquetFiles(new java.io.File(seg))
+    assert(prefixDirs(seg).isEmpty && files.size > 1,
+      s"a large append must write several delta files, got ${files.size}")
+    val perFile = files.map { f =>
+      spark.read.parquet(f.getAbsolutePath).select($"bprefix", $"bkey")
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    }
+    perFile.foreach(rows => assert(rows == rows.sorted, "a delta file must be (bprefix, bkey)-sorted"))
+    val prefixSets = perFile.map(_.map(_._1).toSet)
+    assert(prefixSets.map(_.size).sum == prefixSets.reduce(_ ++ _).size,
+      "every prefix must land in exactly one delta file")
+    val ref = tempDir("dix_big_ref")
+    DedupIndex.build(docs, "doc_id", "text", ref)
+    assert(DedupIndex.readBands(spark, dir).collect().map(_.toSeq).toSet ==
+      DedupIndex.readBands(spark, ref).collect().map(_.toSeq).toSet)
+  }
+
+  test("mixed-layout generations read row-identically to a fresh build") {
+    import spark.implicits._
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_id").collect().map(_.getLong(0)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def bandRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    // prefix-layout base + two ~125-doc delta appends
+    val dir = tempDir("dix_mixed")
+    DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dir)
+    DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dir)
+    val v1 = DedupIndex.readManifest(dir).version
+    val batch = docs.filter($"doc_id" % 4 === 1)
+    DedupIndex.append(batch, "doc_id", "text", dir)
+    val segs = DedupIndex.readManifest(dir).segments
+    assert(segs.size == 3 && segs.tail.forall(s => prefixDirs(s"$dir/$s").isEmpty),
+      s"both appends must be delta segments: $segs")
+    val ref = tempDir("dix_mixed_ref")
+    DedupIndex.build(docs.filter($"doc_id" % 4 =!= 3), "doc_id", "text", ref)
+    val refV1 = tempDir("dix_mixed_ref_v1")
+    DedupIndex.build(docs.filter($"doc_id" % 2 === 0), "doc_id", "text", refV1)
+
+    assert(bandRows(DedupIndex.readBands(spark, dir)) == bandRows(DedupIndex.readBands(spark, ref)))
+    assert(bandRows(DedupIndex.readBandsAt(spark, dir, v1)) ==
+      bandRows(DedupIndex.readBands(spark, refV1)), "snapshot read of the first append")
+    assert(bandRows(spark.sql(s"SELECT * FROM graft_dedup_bands('$dir')")) ==
+      bandRows(DedupIndex.readBands(spark, ref)), "graft_dedup_bands over a mixed generation")
+    val probe = docs.filter($"doc_id" % 4 === 3)
+    assert(ids(DedupIndex.query(probe, "doc_id", "text", dir)) ==
+      ids(DedupIndex.query(probe, "doc_id", "text", ref)))
+    val selfGot = pairs(DedupIndex.selfPairs(spark, dir))
+    assert(selfGot.nonEmpty && selfGot == pairs(DedupIndex.selfPairs(spark, ref)))
+    val newGot = pairs(DedupIndex.pairsWithNew(spark, dir, batch, "doc_id", "text"))
+    assert(newGot.nonEmpty &&
+      newGot == pairs(DedupIndex.pairsWithNew(spark, ref, batch, "doc_id", "text")))
   }
 
   test("selfPairs edge inputs: exact twins pair, null-text and disjoint docs contribute nothing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dix_selfpairs_edge").toString
+    val dir = tempDir("dix_selfpairs_edge")
     val tiny = Seq(
       (1L, "a b c d e f g h"),
       (2L, "a b c d e f g h"),        // exact twin of 1 — must pair

@@ -368,7 +368,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.DedupIndex
     val docs = Tables(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("dix_tt").toString
+    val dir = tempDir("dix_tt")
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id").distinct().collect().map(_.getLong(0)).toSet
     val base = docs.filter($"doc_id" % 10 =!= 7)
@@ -402,7 +402,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.{Dedup, DedupIndex}
     val docs = Tables(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("dix_pairs_new").toString
+    val dir = tempDir("dix_pairs_new")
     DedupIndex.build(docs.filter($"doc_id" % 10 =!= 7), "doc_id", "text", dir)
     val oldPairs = DedupIndex.selfPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -423,7 +423,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.DedupIndex
     val docs = Tables(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("dix_pp").toString
+    val dir = tempDir("dix_pp")
     DedupIndex.build(docs.filter($"doc_id" % 10 =!= 7), "doc_id", "text", dir)
     val probe = docs.filter($"doc_id" % 10 === 7)
     def ids(df: org.apache.spark.sql.DataFrame) =

@@ -51,7 +51,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("counter handles negative values and repeated sets") {
-    val path = java.nio.file.Files.createTempDirectory("graft_cnt_edge").toString + "/c"
+    val path = tempDir("graft_cnt_edge") + "/c"
     val c = new plans.Counter(spark, path)
     assert(c.decr() == -1L)
     assert(c.set(0L) == 0L)

@@ -50,7 +50,7 @@ class ChrootFs extends org.apache.hadoop.fs.LocalFileSystem(new ChrootRawFs()) {
 class ManifestCommitSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mc_$tag").toString
+    tempDir(s"graft_mc_$tag")
 
   private lazy val docs = Tables(spark, sf, "documents")
 

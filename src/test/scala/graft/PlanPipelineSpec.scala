@@ -47,7 +47,7 @@ class PlanPipelineSpec extends SparkSpec {
   }
 
   test("counter: get-default, set, incr, decr, persistence across instances") {
-    val path = java.nio.file.Files.createTempDirectory("graft_counter").toString + "/c"
+    val path = tempDir("graft_counter") + "/c"
     val c = new Counter(spark, path)
     assert(c.get() == 0L)           // absent reads as 0 (plan-server.ts:80-82)
     assert(c.set(41L) == 41L)
@@ -145,7 +145,7 @@ class PlanPipelineSpec extends SparkSpec {
   test("dynamic partition overwrite: untouched partitions' files survive byte-identical") {
     import spark.implicits._
     val orders = Tables(spark, sf, "orders")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_m5_spec").toString
+    val tmp = tempDir("graft_m5_spec")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(tmp)
     def partFiles(status: String): Map[String, Long] = {
       val d = new java.io.File(s"$tmp/o_orderstatus=$status")

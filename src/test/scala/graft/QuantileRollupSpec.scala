@@ -122,7 +122,7 @@ class QuantileRollupSpec extends SparkSpec {
   }
 
   test("persisted bucket table answers the same rollups after a parquet round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qsketch_").toString
+    val dir = tempDir("graft_qsketch_")
     try {
       val fine = QuantileRollup.buildSketchTable(events, Seq("event_type", "day"), "value")
       fine.write.mode("overwrite").parquet(dir)

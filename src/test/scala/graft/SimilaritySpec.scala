@@ -210,7 +210,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted int8 IVF index: complete, parity with l22's direct path, single postings scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_spec").toString
+    val dir = tempDir("graft_idx_spec")
     val counts = Similarity.buildIvfIndex(
       emb.select(col("vec_id"), col("embedding")), dir, cellCap = Some(256))
     // completeness: every corpus vector posted exactly once, and the
@@ -261,8 +261,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted PQ index: m-byte postings, serve parity with the int8 tier, sound ADC bounds") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_pq_int8").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
+    val dirA = tempDir("graft_pq_int8")
+    val dirB = tempDir("graft_pq_idx")
     val corpus = emb.select(col("vec_id"), col("embedding"))
     Similarity.buildIvfIndex(corpus, dirA, cellCap = Some(256)).count()
     val counts = Similarity.buildPqIndex(corpus, dirB, cellCap = Some(256),
@@ -334,8 +334,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("PQ codebooks: bit-identical rebuild, ks self-caps on a tiny corpus") {
     val corpus = emb.select(col("vec_id"), col("embedding"))
-    val d1 = java.nio.file.Files.createTempDirectory("graft_pq_d1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_pq_d2").toString
+    val d1 = tempDir("graft_pq_d1")
+    val d2 = tempDir("graft_pq_d2")
     Similarity.buildPqIndex(corpus, d1, cellCap = Some(256)).count()
     Similarity.buildPqIndex(corpus, d2, cellCap = Some(256)).count()
     def cb(d: String) = graft.operators.AnnStore.codebooks(spark, d)
@@ -349,8 +349,8 @@ class SimilaritySpec extends SparkSpec {
     // a corpus smaller than ks must still train, cap codewords at the
     // sample size, and keep serve parity against the int8 tier
     val tiny = corpus.orderBy(col("vec_id")).limit(40)
-    val tA = java.nio.file.Files.createTempDirectory("graft_pq_ta").toString
-    val tB = java.nio.file.Files.createTempDirectory("graft_pq_tb").toString
+    val tA = tempDir("graft_pq_ta")
+    val tB = tempDir("graft_pq_tb")
     Similarity.buildIvfIndex(tiny, tA, nlistOpt = Some(4)).count()
     Similarity.buildPqIndex(tiny, tB, centroidsFrom = Some(tA)).count()
     assert(graft.operators.AnnStore.codebooks(spark, tB)
@@ -365,8 +365,8 @@ class SimilaritySpec extends SparkSpec {
   test("index append: read path after append is row-identical to a fixed-centroid rebuild") {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_idx_app").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_idx_reb").toString
+    val dir1 = tempDir("graft_idx_app")
+    val dir2 = tempDir("graft_idx_reb")
     Similarity.buildIvfIndex(base.select(col("vec_id"), col("embedding")),
       dir1, cellCap = Some(256)).count()
     // untouched-cell witness: a cell the batch does not post into must
@@ -387,8 +387,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("index delete: read path after delete ≡ fixed-centroid rebuild without the ids; emptied cells drop") {
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_idx_del").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_idx_delref").toString
+    val dir1 = tempDir("graft_idx_del")
+    val dir2 = tempDir("graft_idx_delref")
     Similarity.buildIvfIndex(emb.select(col("vec_id"), col("embedding")),
       dir1, cellCap = Some(256)).count()
     val delIds = emb.filter(col("vec_id") % 10 === 7).select(col("vec_id"))
@@ -446,8 +446,8 @@ class SimilaritySpec extends SparkSpec {
     val corpus = emb.select(col("vec_id"), col("embedding"))
     val base = corpus.filter(col("vec_id") % 10 =!= 0)
     val batch = corpus.filter(col("vec_id") % 10 === 0)
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_pq_app").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_pq_reb").toString
+    val dir1 = tempDir("graft_pq_app")
+    val dir2 = tempDir("graft_pq_reb")
     Similarity.buildPqIndex(base, dir1, cellCap = Some(256)).count()
     val appended = Similarity.appendToPqIndex(batch, dir1)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -479,7 +479,7 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(_.getLong(1)).sum
     assert(removed == delIds.count())
     val remaining = corpus.filter(col("vec_id") % 10 =!= 7)
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_pq_delref").toString
+    val dir3 = tempDir("graft_pq_delref")
     Similarity.buildPqIndex(remaining, dir3,
       centroidsFrom = Some(dir1), codebooksFrom = Some(dir1)).count()
     assert(sorted(Similarity.pqTopKIndexed(remaining, remaining, dir1, 3))
@@ -487,7 +487,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ANN manifest commits: mid-compact reader keeps its generation; vacuum reclaims only garbage") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_man").toString
+    val dir = tempDir("graft_idx_man")
     Similarity.buildIvfIndex(emb.select(col("vec_id"), col("embedding")),
       dir, cellCap = Some(256)).count()
     Similarity.deleteFromIvfIndex(
@@ -544,7 +544,7 @@ class SimilaritySpec extends SparkSpec {
     // exact-equal slicing — content hashing would pile the near-
     // identical cluster, whose int8 codes collide, back into one
     // shard), while uncapped the hot cell is one bucket
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_hot").toString
+    val dir = tempDir("graft_idx_hot")
     Similarity.buildIvfIndex(corpus, dir, nlistOpt = Some(8),
       cellCap = Some(32)).count()
     val buckets = Similarity.indexPostings(spark, dir)

@@ -98,7 +98,7 @@ class SketchRollupSpec extends SparkSpec {
   }
 
   test("persisted sketch table answers the same rollup after a parquet round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sketch_").toString
+    val dir = tempDir("graft_sketch_")
     try {
       val fine = SketchRollup.buildSketchTable(events, Seq("event_type", "day"), "user_id")
       fine.write.mode("overwrite").parquet(dir)

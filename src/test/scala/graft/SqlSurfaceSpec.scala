@@ -13,7 +13,7 @@ import graft.operators.{AnnStore, Catalog, DedupIndex, Similarity, StateTable}
 class SqlSurfaceSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_sqls_$tag").toString
+    tempDir(s"graft_sqls_$tag")
 
   private lazy val docs = Tables(spark, sf, "documents")
   private lazy val emb = Tables(spark, sf, "embeddings")

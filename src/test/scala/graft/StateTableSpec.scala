@@ -18,7 +18,7 @@ class StateTableSpec extends SparkSpec {
     (1 to n).map(i => (i.toLong, tag)).toSet
 
   test("publish/read round-trip; versions are immutable snapshots") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st").toString
+    val dir = tempDir("graft_st")
     assert(!StateTable.exists(dir))
     assert(StateTable.publish(rows(3, "a"), dir) == 1L)
     assert(StateTable.publish(rows(5, "b"), dir) == 2L)
@@ -29,7 +29,7 @@ class StateTableSpec extends SparkSpec {
   }
 
   test("the batch stamp rides the swap: lastBatchId reflects exactly the committed publishes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_bid").toString
+    val dir = tempDir("graft_st_bid")
     assert(StateTable.lastBatchId(dir).isEmpty)
     StateTable.publish(rows(1, "x"), dir, Some(0L))
     StateTable.publish(rows(2, "x"), dir, Some(1L))
@@ -53,7 +53,7 @@ class StateTableSpec extends SparkSpec {
   }
 
   test("publish claims exactly one version: a stale expectedVersion (or a lost race) conflicts instead of dropping state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_cas").toString
+    val dir = tempDir("graft_st_cas")
     assert(StateTable.publish(rows(2, "a"), dir, expectedVersion = Some(0L)) == 1L)
     // writer computed its fold against version 0 but version 1 landed
     // meanwhile: the publish must refuse (whole-state rewrites cannot
@@ -70,7 +70,7 @@ class StateTableSpec extends SparkSpec {
   }
 
   test("mid-publish reader keeps its generation; computing the next state from the current one needs no fence") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_gen").toString
+    val dir = tempDir("graft_st_gen")
     StateTable.publish(rows(4, "g1"), dir)
     val reader = StateTable.read(spark, dir) // pins gen_1
     // the merge-loop shape: next state DERIVED from the current state,
@@ -84,7 +84,7 @@ class StateTableSpec extends SparkSpec {
   }
 
   test("retention vacuum: retained snapshots survive, older generations and manifests drop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_vac").toString
+    val dir = tempDir("graft_st_vac")
     StateTable.publish(rows(1, "v1"), dir)
     StateTable.publish(rows(2, "v2"), dir)
     StateTable.publish(rows(3, "v3"), dir)
@@ -100,7 +100,7 @@ class StateTableSpec extends SparkSpec {
   }
 
   test("vacuum age guard: an unreferenced young directory (an in-flight publish) survives the default vacuum") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_age").toString
+    val dir = tempDir("graft_st_age")
     StateTable.publish(rows(2, "v1"), dir)
     // simulate a concurrent writer's generation written AHEAD of its
     // commit: a parquet directory no manifest references yet

@@ -254,8 +254,7 @@ class StreamingSpec extends SparkSpec {
 
     // streaming run: MemoryStream micro-batches through the same
     // query-then-append-survivors loop the replay folds
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_dix").toString
+    val idxDir = tempDir("graft_stream_dix")
     val stream = MemoryStream[(Long, String)]
     var survivors = Seq.empty[(Long, Long)].toDF("doc_id", "ingest_batch")
     var batchNo = -1L
@@ -287,8 +286,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == expected, s"streaming fold: $got")
 
     // batch replay (the s10 shape) over the same schedule ≡ streaming
-    val replayDir = java.nio.file.Files
-      .createTempDirectory("graft_replay_dix").toString
+    val replayDir = tempDir("graft_replay_dix")
     val replay = graft.operators.DedupIndex.ingestFold(
         Seq(b0, b1, b2).map(_.toDF("doc_id", "text")),
         "doc_id", "text", replayDir)
@@ -309,7 +307,7 @@ class StreamingSpec extends SparkSpec {
 
   test("s9 crash recovery: upsert restarts from its checkpoint; the redelivered batch re-applies idempotently") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_s9_recov")
+    val root = java.nio.file.Paths.get(tempDir("graft_s9_recov"))
     val src = root.resolve("src"); java.nio.file.Files.createDirectories(src)
     val chk = root.resolve("chk").toString
     def writeFile(n: String, rows: Seq[String]): Unit =
@@ -363,7 +361,7 @@ class StreamingSpec extends SparkSpec {
   test("s10 crash recovery: ingest-dedup restarts from checkpoint; marker-guarded append stays exactly-once") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_s10_recov")
+    val root = java.nio.file.Paths.get(tempDir("graft_s10_recov"))
     val src = root.resolve("src"); Files.createDirectories(src)
     val chk = root.resolve("chk").toString
     val idxDir = root.resolve("idx").toString
@@ -433,7 +431,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == expected, s"recovered fold: $got")
     // the persisted index is IDENTICAL to an uninterrupted batch replay
     // over the same schedule — band row for band row
-    val replayDir = Files.createTempDirectory("graft_s10_recov_replay").toString
+    val replayDir = tempDir("graft_s10_recov_replay")
     graft.operators.DedupIndex.ingestFold(
       Seq(b0, b1, b2).map(_.toDF("doc_id", "text")),
       "doc_id", "text", replayDir).collect()
@@ -473,7 +471,7 @@ class StreamingSpec extends SparkSpec {
       * (publish is called WITHOUT a batchId, deliberately, to pin
       * that idempotence). */
     def drive(tag: String, crash: Boolean): org.apache.spark.sql.DataFrame = {
-      val root = Files.createTempDirectory(s"graft_s12_$tag")
+      val root = java.nio.file.Paths.get(tempDir(s"graft_s12_$tag"))
       val src = root.resolve("src"); Files.createDirectories(src)
       val chk = root.resolve("chk").toString
       val stateDir = root.resolve("sketches").toString
@@ -567,7 +565,7 @@ class StreamingSpec extends SparkSpec {
       * window), which is the commit shape a Delta/Iceberg sink
       * provides. */
     def drive(tag: String, crash: Boolean): org.apache.spark.sql.DataFrame = {
-      val root = Files.createTempDirectory(s"graft_s13_$tag")
+      val root = java.nio.file.Paths.get(tempDir(s"graft_s13_$tag"))
       val src = root.resolve("src"); Files.createDirectories(src)
       val chk = root.resolve("chk").toString
       val stateDir = root.resolve("buckets").toString
@@ -660,7 +658,7 @@ class StreamingSpec extends SparkSpec {
       "doc_id LONG, text STRING, embedding ARRAY<FLOAT>")
 
     def drive(tag: String, crash: Boolean): (String, String) = {
-      val root = Files.createTempDirectory(s"graft_twostore_$tag")
+      val root = java.nio.file.Paths.get(tempDir(s"graft_twostore_$tag"))
       val src = root.resolve("src"); Files.createDirectories(src)
       val chk = root.resolve("chk").toString
       val dix = root.resolve("dix").toString

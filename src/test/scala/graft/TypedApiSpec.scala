@@ -33,7 +33,7 @@ class TypedApiSpec extends SparkSpec {
   test("streaming counter feeds the Counter snapshot via foreachBatch") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft_cnt_stream").toString + "/c"
+    val path = tempDir("graft_cnt_stream") + "/c"
     val counter = new Counter(spark, path)
     val stream = MemoryStream[(String, Long)]
     val folded = StreamingOps.runningCounter(stream.toDS()).toDF("key", "value")
