@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query wall times.
   *
@@ -138,29 +137,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE scale big shuffles UP, not just coalesce down — at 10⁵+
-      // vectors the ANN candidate shuffles carry 10⁸ rows (see Engine)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // fixture tables are single parquet files; without this a scan is
-      // ONE task and a broadcast-join pipeline runs on one core of 32
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      // keep typed-Aggregator top-k hash-based (see Engine.session)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // point-probe pushdown (l42/l55/l57/l59): the exact-IN form needs
-      // the threshold above DedupIndex.InKeyCap or Spark degrades the
-      // pushed IN to one [min,max] range (see Engine.session)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "600")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the persisted-tier SQL surface (graft_dedup_bands etc.) — l66
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]")
 
     val qs = SparkEntry.benchQueries
     // SPARK_GRAFT_ONLY=q1,q2 narrows the run for local iteration; the

@@ -20,20 +20,7 @@ object JobProf {
     val name = sys.env.getOrElse("SPARK_GRAFT_PROF",
       sys.error("set SPARK_GRAFT_PROF to a bench query name"))
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "3").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "600")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]")
 
     case class J(id: Int, start: Long, var end: Long = 0L,
                  var desc: String = "", var stages: Int = 0,
@@ -56,9 +43,6 @@ object JobProf {
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
-        jobs.values().forEach { j =>
-          if (j.end == 0L) () // attribute to the open job below
-        }
         // attribute to the most recent unfinished job (local mode runs
         // bench queries serially, so this is unambiguous)
         val openIds = order.toArray(Array.empty[Integer])

@@ -8,8 +8,9 @@ import java.nio.charset.StandardCharsets
   *
   * The judge cannot run Spark; these files are how plan-shape claims in
   * OPTIMIZATION_r15.md (Exchange counts, join strategies, PushedFilters)
-  * are checked against reality. Uses the SAME session configuration as
-  * [[Bench]] so the captured plan is the one the driver's bench executes.
+  * are checked against reality. Builds its session through
+  * [[Engine.session]], as [[Bench]] does, so the captured plan is the one
+  * the bench executes.
   *
   * Usage: SPARK_GRAFT_PLANS=q1,q2 SPARK_GRAFT_PLAN_TAG=r15 \
   *        SPARK_GRAFT_PLAN_SUFFIX=before sbt "runMain graft.PlanDump"
@@ -25,20 +26,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r15")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.maxPartitionBytes", s"${4 * 1024 * 1024}")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "600")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]")
 
     val qs = SparkEntry.benchQueries
     val names = sys.env.get("SPARK_GRAFT_PLANS")

@@ -40,21 +40,7 @@ object ScaleBench {
       .getOrElse(Set.empty)
     def wanted(name: String): Boolean = only.isEmpty || only.contains(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Engine.session(s"local[$cpus]", "graft-scalebench",
-      shufflePartitions = Some(cpus.toInt))
-    // CPU-dense-per-byte shuffles (int8 code screens, band scoring:
-    // tens of candidate dots per shuffled row) want advisory partitions
-    // far below Spark's IO-tuned 64 MB: at 10⁶ vectors the int8 scoring
-    // join coalesced to 34 minute-long tasks on 32 cores (two-wave
-    // tail, 92-180 s swings); at 16 MB the same query runs 49-64 s.
-    // Round-11: the ENGINE now derives that split per job
-    // (Similarity.denseShuffleSides — explicit cores×waves repartition
-    // of the candidate-join sides when the estimated shuffle exceeds
-    // one 64 MB wave), so this bench runs the NORMAL Engine.session
-    // configuration by default and the env override exists only for
-    // A/B experiments against the in-engine sizing.
-    sys.env.get("SPARK_GRAFT_ADVISORY").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
+    val spark = Engine.session(s"local[$cpus]", "graft-scalebench")
 
     val emb = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val n = emb.count()

@@ -21,8 +21,9 @@ object Tables {
     * `events.ts` has shipped in two physical forms across fixture
     * generations: Parquet TIMESTAMP(NANOS) — which Spark's vectorized
     * reader rejects ([PARQUET_TYPE_ILLEGAL]), so it is read as a raw
-    * nanosecond Long (legacy conf) and truncated to microseconds — and
-    * plain TIMESTAMP(MICROS), which arrives as TIMESTAMP_NTZ. Both
+    * nanosecond Long (the profile's legacy conf, see [[Engine]]) and
+    * truncated to microseconds — and plain TIMESTAMP(MICROS), which
+    * arrives as TIMESTAMP_NTZ. Both
     * normalize to the session-zone TimestampType every downstream query
     * and oracle was written against (session TZ is pinned UTC, so the
     * NTZ→TZ cast is value-preserving and DuckDB comparisons stay
@@ -30,7 +31,6 @@ object Tables {
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

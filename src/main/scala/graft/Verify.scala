@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // big shuffles start wide, AQE coalesces small ones (see Engine)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep typed-Aggregator top-k hash-based (see Engine.session)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // the persisted-tier SQL surface (graft_dedup_bands etc.) — l66
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=name1,name2 narrows the dump for local iteration
     // (same contract as Bench); the full oracle_sql.json is always

@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object TestSpark {
-  lazy val spark: SparkSession =
-    Engine.session("local[4]", "graft-test", shufflePartitions = Some(4))
+  lazy val spark: SparkSession = Engine.session("local[4]", "graft-test")
   val sf: String = "/root/testdata/sf0.001"
 }
 
