@@ -19,7 +19,14 @@ import org.apache.spark.sql.functions._
   *     pair statistics are per-word-occurrence, so the word table plus
   *     `freq` is a lossless sufficient statistic, and it is orders of
   *     magnitude smaller than the corpus (the one corpus-scale shuffle).
-  *   - Each word starts as its character sequence. Per merge round:
+  *   - Each word starts as its sequence of UTF-16 code units (Scala
+  *     `Char`s), so a supplementary character (a surrogate pair, e.g.
+  *     most emoji) starts as TWO symbols. The distributed and driver-side
+  *     training branches and encoding all split this way, so they agree;
+  *     a merge may join the pair back into one symbol. (The Python
+  *     cross-oracle splits into code points instead; the fixture text is
+  *     ASCII, so its cross-check never reaches the difference.) Per
+  *     merge round:
   *     count all ADJACENT symbol pairs (overlapping — "aaa" contributes
   *     (a,a) twice), weighted by word freq; the winner is the
   *     lexicographically-least most-frequent pair (count desc, left
@@ -45,7 +52,9 @@ object Bpe {
 
   /** Character split as a UDF rather than `split(w, "")`: Java's regex
     * split keeps a trailing empty match under Spark's limit=-1, and the
-    * word table this runs over is tiny relative to the corpus. */
+    * word table this runs over is tiny relative to the corpus. It splits
+    * into UTF-16 code units (a surrogate pair becomes two symbols), the
+    * same split `trainOnDriver` and encoding use. */
   private val initSyms = udf { (w: String) => w.map(_.toString) }
 
   /** One greedy left-to-right non-overlapping rewrite of (left, right)

@@ -1,12 +1,82 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import graft.plans.{Counter, PlanPipeline}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Reference-semantics tests (SURVEY §5.2): mask edge cases under true
   * 64-bit arithmetic — bit 0, bit 30, bit 31, bit 63, zero mask, missing
-  * plan id, multi-bit ordering. */
-class PlanPipelineSpec extends SparkSpec {
+  * plan id, multi-bit ordering — plus a differential check of the
+  * per-row decode against the explode/join/aggregate formulation. */
+class PlanPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  /** The built-in formulation `groupEntities` replaced: explode the set
+    * bits, broadcast-join `plans`, nest per gid, left-join back. For
+    * unique non-null gids it defines the expected output. */
+  private def explodeJoinReference(plans: DataFrame, groups: DataFrame): DataFrame = {
+    val exploded = groups
+      .withColumn("bit",
+        explode(expr("filter(sequence(0, 63), i -> (shiftleft(CAST(1 AS BIGINT), i) & mask) != 0)")))
+      .withColumn("plan_id", expr("shiftleft(CAST(1 AS BIGINT), bit)"))
+    val nested = exploded
+      .join(broadcast(plans), exploded("plan_id") === plans("id"))
+      .groupBy(col("gid"))
+      .agg(
+        count(lit(1)).as("n_plans"),
+        concat_ws(",",
+          transform(
+            sort_array(collect_list(struct(col("bit"), col("title")))),
+            p => p.getField("title"))).as("plan_titles"))
+    groups.join(nested, Seq("gid"), "left")
+      .select(
+        col("gid"), col("gtitle").as("title"), col("mask"),
+        coalesce(col("n_plans"), lit(0L)).as("n_plans"),
+        coalesce(col("plan_titles"), lit("")).as("plan_titles"))
+  }
+
+  private def entityRows(df: DataFrame): Seq[(Option[Long], String, Option[Long], Long, String)] =
+    df.collect().toSeq.map(r => (
+      Option(r.getAs[java.lang.Long]("gid")).map(_.longValue), r.getAs[String]("title"),
+      Option(r.getAs[java.lang.Long]("mask")).map(_.longValue),
+      r.getAs[Long]("n_plans"), r.getAs[String]("plan_titles")))
+
+  /** Jobs `f` launches from this thread, counted by a listener. Listener
+    * events arrive in order, so a marker job run after `f` drains them. */
+  private def jobsLaunched(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"plan-spec-${System.nanoTime()}"
+    val marker = "drain"
+    val seen = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("graft.spec.tag") == tag).foreach { p =>
+          if (p.getProperty("spark.job.description") == marker) drained.countDown()
+          else seen.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      f
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
+      seen.get
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("bitmask pipeline edge cases: bits 0/30/31/63, zero mask, missing plan, order") {
     import spark.implicits._
@@ -38,6 +108,87 @@ class PlanPipelineSpec extends SparkSpec {
     assert(got("g_multi") == (3L, "p0,p31,p63")) // bit order pinned
   }
 
+  test("per-row decode equals the explode/join/aggregate formulation on random inputs") {
+    import spark.implicits._
+    // titles that order differently by UTF-16 and by UTF-8 bytes, an
+    // empty title (kept by concat_ws) and repeats
+    val titlePool = Seq("a", "B", "b", "", "é", "z", "\uFFFD", "\uD835\uDCB3", "p1", "p10", "p2")
+    // slot 5 always holds the whole pool and a null title, so the order
+    // within a slot is exercised on every seed that has plans
+    val slot5 = titlePool.map(Option(_)) :+ None
+    for (seed <- Seq(1, 2, 3, 4, 5)) {
+      val rnd = new scala.util.Random(seed)
+      def bit(): Long = 1L << rnd.nextInt(64)
+      val plans = (if (seed == 5) Seq.empty else Seq.fill(40 + rnd.nextInt(40)) {
+        val id: Option[Long] = rnd.nextInt(20) match {
+          case 0 => None
+          case 1 => Some(0L)
+          case 2 => Some(bit() | bit() | 3L)       // not a power of two
+          case 3 => Some(-1L)
+          case 4 => Some(1L << 31)
+          case 5 => Some(Long.MinValue)            // bit 63
+          case n if n < 12 => Some(1L << rnd.nextInt(8)) // shared slots
+          case _ => Some(bit())
+        }
+        val title = if (rnd.nextInt(6) == 0) None else Some(titlePool(rnd.nextInt(titlePool.size)))
+        (id, title, "opt")
+      } ++ slot5.map(t => (Some(1L << 5), t, "opt"))).toDF("id", "title", "optional")
+      val gids = rnd.shuffle((0L until 600L).toList)
+      val groups = gids.map { gid =>
+        val mask: Option[Long] = rnd.nextInt(20) match {
+          case 0 => None
+          case 1 => Some(0L)
+          case 2 => Some(-1L)                        // all 64 bits
+          case 3 => Some(rnd.nextLong())             // ~half the bits
+          case 4 => Some((1L << 31) | Long.MinValue)
+          case _ => Some(Seq.fill(1 + rnd.nextInt(13))(bit()).reduce(_ | _))
+        }
+        (gid, s"g$gid", mask)
+      }.toDF("gid", "gtitle", "mask").repartition(3)
+
+      val got = PlanPipeline.groupEntities(plans, groups)
+      val want = explodeJoinReference(plans, groups)
+      assert(got.schema == want.schema)
+      val (g, w) = (entityRows(got).sortBy(_._1), entityRows(want).sortBy(_._1))
+      assert(g.size == 600 && g == w,
+        s"seed $seed: first difference ${g.zip(w).find(p => p._1 != p._2)}")
+      if (seed == 1) assert(g.exists(_._4 > 3) && g.exists(r => r._4 > 0 && r._5.isEmpty),
+        "the inputs must reach multi-plan groups and matched null or empty titles")
+    }
+  }
+
+  test("decode is per row: duplicate and null gids each decode their own mask") {
+    import spark.implicits._
+    val plans = Seq((1L, "p0"), (2L, "p1")).toDF("id", "title")
+    val groups = Seq(
+      (Some(7L), "first", 1L), (Some(7L), "second", 2L), (None, "nogid", 3L)
+    ).toDF("gid", "gtitle", "mask")
+    val got = entityRows(PlanPipeline.groupEntities(plans, groups))
+      .map(r => r._2 -> (r._1, r._4, r._5)).toMap
+    assert(got == Map(
+      "first" -> (Some(7L), 1L, "p0"),
+      "second" -> (Some(7L), 1L, "p1"),
+      "nogid" -> (None, 2L, "p0,p1")))
+  }
+
+  test("group-entity plan: no shuffle or broadcast exchange, only m3's ordering") {
+    def exchanges(df: DataFrame): Seq[String] = {
+      df.collect() // finalize the adaptive plan
+      collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e.outputPartitioning.toString
+        case e: BroadcastExchangeLike => "broadcast"
+      }
+    }
+    val entities = PlanPipeline.groupEntities(
+      PlanPipeline.plansFrom(Tables(spark, sf, "nation")),
+      PlanPipeline.groupsFrom(Tables(spark, sf, "supplier")))
+    assert(exchanges(entities).isEmpty, entities.queryExecution.executedPlan)
+    // the declared query adds only its ORDER BY gid range exchange
+    val m3 = SparkEntry.queries("m3_plan_group_entities")(spark, sf)
+    val ex = exchanges(m3)
+    assert(ex.size == 1 && ex.head.startsWith("rangepartitioning(gid"), ex)
+  }
+
   test("fixture-derived pipeline: every supplier yields a group row") {
     val supplier = Tables(spark, sf, "supplier")
     val out = plans.PlanPipeline.m3Groups.run(spark, sf)
@@ -55,6 +206,32 @@ class PlanPipelineSpec extends SparkSpec {
     assert(c.decr() == 41L)
     val c2 = new Counter(spark, path) // fresh handle, same snapshot
     assert(c2.get() == 41L)
+  }
+
+  test("counter: get runs one job, incr two") {
+    val c = new Counter(spark, tempDir("graft_counter_jobs") + "/c")
+    c.set(5L)
+    assert(jobsLaunched(assert(c.get() == 5L)) == 1)
+    assert(jobsLaunched(assert(c.incr() == 6L)) == 2)
+  }
+
+  test("counter: concurrent incr through two handles on one path loses no update") {
+    val path = tempDir("graft_counter_mt") + "/c"
+    // the second handle spells the same path as a URI: one lock per qualified path
+    val handles = Seq(new Counter(spark, path), new Counter(spark, s"file:$path"))
+    val pool = Executors.newFixedThreadPool(4)
+    val results = new ConcurrentLinkedQueue[java.lang.Long]
+    try {
+      val futures = (0 until 4).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 25).foreach(_ => results.add(handles(t % 2).incr()))
+        })
+      }
+      futures.foreach(_.get(10, TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    assert(handles.map(_.get()) == Seq(100L, 100L))
+    // atomic: every increment returned its own value
+    assert(results.asScala.map(_.longValue).toSeq.sorted == (1L to 100L))
   }
 
   test("merge upsert laws: identity, idempotence, NULL-carrying change wins") {
