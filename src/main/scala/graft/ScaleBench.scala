@@ -510,9 +510,11 @@ object ScaleBench {
       }
       // persisted text-dedup band index: build over 99% of the corpus,
       // probe with the remaining 1% (the daily-ingest serving shape),
-      // append that batch — the text analog of index_build/index_append
+      // append that batch and compact — the text analog of
+      // index_build/index_append
       if (wanted("dix_build") || wanted("dix_query") || wanted("dix_append") ||
-          wanted("dix_query_point") || wanted("dix_query_point_nopush")) {
+          wanted("dix_query_point") || wanted("dix_query_point_nopush") ||
+          wanted("dix_compact")) {
         val dixDir = s"/tmp/graft_dix_scale_${n}"
         val corpus99 = docs.filter(pmod(col("doc_id"), lit(100L)) =!= 0)
         val batch1 = docs.filter(pmod(col("doc_id"), lit(100L)) === 0)
@@ -568,6 +570,12 @@ object ScaleBench {
           }
         if (wanted("dix_append")) runs("dix_append") = timed("dix_append") {
           graft.operators.DedupIndex.append(batch1, "doc_id", "text", dixDir)
+          0L
+        }
+        // the maintenance pass after that append (the op perfbench's
+        // serve workload times): rewrite base + appended segment into one
+        if (wanted("dix_compact")) runs("dix_compact") = timed("dix_compact") {
+          graft.operators.DedupIndex.compact(spark, dixDir)
           0L
         }
       }

@@ -27,23 +27,23 @@ import org.apache.spark.sql.functions._
   *     with `bprefix = pmod(bkey, 256)`. The signature rides the band
   *     row (the l6 lesson: carry the comparison payload on the band
   *     shuffle — joining a separate signature table would re-shuffle
-  *     the corpus per query). A segment has one of two layouts, and a
-  *     generation may mix them:
-  *       - PREFIX layout (build, compact): PARTITIONED BY `bprefix`, one
-  *         bkey-sorted file per prefix directory — a probe touches only
-  *         the prefixes its own band keys name, by partition pruning;
-  *       - DELTA layout (every [[append]] and [[ingestFold]] append):
-  *         files sorted by (`bprefix`, `bkey`) with `bprefix` a plain
-  *         column, one per coalesced shuffle partition — ONE file for a
-  *         batch-sized append, which the prefix layout would have
-  *         spread over one 1–2-row file per prefix it touches; a large
-  *         append still writes in parallel. A probe prunes a delta file
-  *         by row-group stats and the bkey bloom filter instead of by
-  *         directory.
-  *     Readers never branch on the layout: the same `bprefix IN` /
-  *     `bkey IN` filters are partition filters on a prefix segment and
-  *     pushed data filters on a delta file, and [[compact]] folds
-  *     deltas back into the prefix layout.
+  *     the corpus per query). Every writer (build, append, the
+  *     [[ingestFold]] appends, compact) writes ONE layout
+  *     ([[writeBandRows]]): parquet files sorted by (`bprefix`, `bkey`)
+  *     with `bprefix` a plain column, one file per coalesced
+  *     `repartition(bprefix)` shuffle partition, so each prefix lands in
+  *     exactly one file of its segment. A batch-sized append is one
+  *     file; a corpus-sized build or compact keeps several parallel
+  *     writers. Metadata is proportional to the data: 1 MB row groups,
+  *     each with a `bkey` bloom filter sized to the keys it holds
+  *     ([[BloomMaxBytes]]). A probe's `bprefix IN` / `bkey IN` filters
+  *     reach the files as pushed data filters, and row-group min/max
+  *     stats plus the bloom filters skip the groups holding none of the
+  *     probe's keys. Segments written in the former PREFIX layout
+  *     (partitioned by `bprefix`, one file per `bprefix=` directory)
+  *     stay readable: readers never branch on the layout (the same
+  *     filters are partition filters there), and the next [[compact]]
+  *     rewrites them.
   *   - `del_<v>_<hex>/` — tombstone segments: one `doc_id` column.
   *     [[delete]] is O(|deleted ids|): it writes ids, not data, and
   *     readers drop tombstoned docs with a broadcast anti-join.
@@ -181,8 +181,8 @@ object DedupIndex {
   /** The live band table: union of the manifest's segments minus its
     * tombstoned docs. Resolved from ONE manifest read, so a DataFrame
     * built here keeps seeing the generation it opened even if a
-    * compact/append publishes a newer one mid-query. Partition pruning
-    * on `bprefix` applies per segment scan; the tombstone anti-join is
+    * compact/append publishes a newer one mid-query. A `bprefix` filter
+    * reaches every segment scan; the tombstone anti-join is
     * a broadcast of the (small) deleted-id set and disappears entirely
     * when nothing was ever deleted. */
   def readBands(spark: SparkSession, dir: String): DataFrame =
@@ -200,7 +200,7 @@ object DedupIndex {
     require(m.segments.nonEmpty, s"dedup index at $dir has no segments")
     // directory-keyed resolution cache: segment and tombstone
     // directories are immutable (UUID'd, write-once), so each one's
-    // listing / partition-discovery pass runs once per session, and a
+    // file listing runs once per session, and a
     // reader after a commit lists only the directories that commit
     // added — data is still scanned per query
     def dirs(names: Seq[String]): DataFrame =
@@ -248,8 +248,9 @@ object DedupIndex {
   /** Append a new batch's band rows to an existing index (reads the
     * parameterization from the meta generation — a batch can never be
     * banded with different constants than the corpus it joins). The
-    * batch lands in its own DELTA-layout segment directory (see the
-    * object doc) and becomes visible in one manifest swap; post-append
+    * batch lands in its own segment directory — one file when it is
+    * batch-sized (see the object doc) — and becomes visible in one
+    * manifest swap; post-append
     * the index is row-identical to a fresh build over the union,
     * because band rows are row-local per doc — no global state to
     * refresh (DedupIndexSpec pins the equivalence). */
@@ -261,7 +262,7 @@ object DedupIndex {
       batchId: Option[Long] = None): Unit = {
     val (k, bands, shingleN) = meta(docs, dir)
     val seg = ManifestCommit.uniqueName("seg", readManifest(dir).version + 1)
-    writeBands(docs, idCol, textCol, dir, shingleN, k, bands, seg, delta = true)
+    writeBands(docs, idCol, textCol, dir, shingleN, k, bands, seg)
     commitDelta(dir, Seq(seg), Nil, batchId)
   }
 
@@ -299,8 +300,8 @@ object DedupIndex {
 
   /** Survivors of `incoming` against the indexed corpus: drops every
     * doc with an indexed near-duplicate (shared band + agreement ≥
-    * `threshold`). The corpus side is a partition-pruned scan of the
-    * probe's own band prefixes; only the batch is ever re-banded. */
+    * `threshold`). The corpus side is a scan filtered to the probe's
+    * own band prefixes; only the batch is ever re-banded. */
   def query(
       incoming: DataFrame,
       idCol: String,
@@ -338,7 +339,7 @@ object DedupIndex {
         .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int")))
     // ≤ 256 groups by construction — driver-bounded. One job yields
     // BOTH probe-side scalars the serving path needs: the prefix list
-    // for partition pruning AND the total probe band-row count the
+    // for the pushed prefix filter AND the total probe band-row count the
     // broadcast decision below reads (round-15: the count was its own
     // job over the same checkpointed blocks — fused, one scan fewer
     // per probe).
@@ -392,7 +393,7 @@ object DedupIndex {
     * so an unmaterialized survivor plan re-executed after later appends
     * would see a bigger index than existed when its batch arrived.
     * Scale shape: per batch this is l42's probe (batch-sized re-band +
-    * partition-pruned scan) + l43's append (row-local) — the corpus is
+    * prefix-filtered scan) + l43's append (row-local) — the corpus is
     * never re-banded, and the append REUSES the probe's checkpointed
     * band rows (a semi-join on survivor ids) instead of computing every
     * survivor's signature a second time: band rows are a deterministic
@@ -422,7 +423,7 @@ object DedupIndex {
                 "left_semi")
               .select(col("__qid").as("doc_id"), col("__qsig").as("sig"),
                 col("band"), col("bkey"), col("bprefix")),
-            s"$dir/$seg", delta = true)
+            s"$dir/$seg")
           // batch ordinal rides the swap — the fold's appends carry the
           // same atomic exactly-once stamp the streaming sink checks
           commitDelta(dir, Seq(seg), Nil, Some(i.toLong))
@@ -498,11 +499,11 @@ object DedupIndex {
     * a row-local, batch-sized pass; band rows are a deterministic
     * function of the text, so they are bit-identical to the rows
     * [[append]] wrote, and the index is never scanned just to recover
-    * them) broadcast against a partition-pruned scan of the prefixes
+    * them) broadcast against a prefix-filtered scan of the prefixes
     * those rows name — the same probe shape as [[query]], emitting
     * pairs instead of a survivor verdict. One index scan total, vs the
     * former id-semi-join form's two (a doc_id lookup gets no prefix
-    * pruning, so deriving the probe from the index cost a full
+    * filter, so deriving the probe from the index cost a full
     * band-table scan — at 10⁶ docs that was half the delta run).
     * Call AFTER the batch's [[append]]: batch×batch pairs surface from
     * the probe hitting the batch's own indexed rows. Pair rule
@@ -550,15 +551,15 @@ object DedupIndex {
       .select(col("u").as("id_a"), col("v").as("id_b"))
   }
 
-  /** Rewrite the live band rows into one segment with one file per
-    * prefix directory, MATERIALIZING tombstones — the maintenance pass
+  /** Rewrite the live band rows into one segment, each prefix in
+    * exactly one file, MATERIALIZING tombstones — the maintenance pass
     * an append/delete-grown index needs: every [[append]] (or
     * [[ingestFold]] batch) adds a segment, every [[delete]] adds an
     * anti-join to the read path, so a daily-ingest deployment
     * accumulates per-day file opens and tombstone probes. Compact reads
-    * the current generation, writes it 1-file-per-prefix into a fresh
-    * segment — folding any delta segments back into the prefix layout —
-    * and publishes a manifest naming ONLY that segment with an
+    * the current generation, writes it into a fresh segment (the one
+    * layout of [[writeBandRows]], which also rewrites any legacy
+    * prefix-layout segment) and publishes a manifest naming ONLY that segment with an
     * empty tombstone list — one atomic pointer swap; a reader that
     * resolved the old manifest keeps its old segments (they are not
     * touched), a reader arriving after the swap sees exactly the new
@@ -570,8 +571,6 @@ object DedupIndex {
   def compact(spark: SparkSession, dir: String): Unit = {
     val m = readManifest(dir)
     val seg = ManifestCommit.uniqueName("seg", m.version + 1)
-    // one file per prefix, bkey-sorted with point-probe row groups —
-    // the same layout the build writes (writeBandRows)
     writeBandRows(readBands(spark, dir, m), s"$dir/$seg")
     // A compact's segment list REPLACES the state it read — but its
     // delta still COMMUTES with the mergeable mutations (round-14;
@@ -650,8 +649,7 @@ object DedupIndex {
       shingleN: Int,
       k: Int,
       bands: Int,
-      segment: String,
-      delta: Boolean = false): Unit = {
+      segment: String): Unit = {
     val n = docs.sparkSession.sparkContext.defaultParallelism
     writeBandRows(
       // explicit-count repartition: signature compute must spread over
@@ -663,7 +661,7 @@ object DedupIndex {
           posexplode(Dedup.lshBandKeys(col("sig"), bands, k / bands))
             .as(Seq("band", "bkey")))
         .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int")),
-      s"$dir/$segment", delta)
+      s"$dir/$segment")
   }
 
   /** Exact-IN size cap per scan: parquet evaluates a pushed IN as a
@@ -694,7 +692,7 @@ object DedupIndex {
     * against a big index), attach a band-key filter to the corpus scan.
     * Semantically a no-op (the join is on bkey anyway — spec-pinned
     * both branches), but the filter REACHES the parquet reader, and
-    * because [[writeBandRows]] sorts each prefix file by bkey,
+    * because [[writeBandRows]] sorts each file by (bprefix, bkey),
     * row-group min/max stats skip every group holding none of the
     * probe's keys — IO proportional to the PROBE, not the corpus.
     *
@@ -738,56 +736,44 @@ object DedupIndex {
         .reduce(_ unionByName _)
   }
 
+  /** Bloom-filter bound per `bkey` column chunk, in bytes. Every band
+    * row carries at least its 8-byte bkey and its k-long signature, so
+    * a 1 MB row group holds at most 2²⁰ / (8 + 8·k) distinct keys:
+    * 3 971 at the default k = 32, 7 710 at k = 16. A 1 %-false-positive
+    * split-block filter needs ~1.21 B per key (4.7 KB, 9.3 KB), rounded
+    * up to a power of two: 16 KB covers every k ≥ 16. A smaller k can
+    * overfill it — the filter's false-positive rate rises, and it never
+    * drops a key. */
+  private[graft] val BloomMaxBytes = 16 * 1024
+
   /** Sink for prepared band rows `(doc_id, sig, band, bkey, bprefix)` —
-    * shared by the signature-computing [[writeBands]] and
-    * [[ingestFold]]'s probe-row reuse path. Always writes a FRESH
-    * segment directory; visibility comes from the caller's manifest
-    * swap, never from files appearing in a listed directory. `delta`
-    * picks the segment layout (see the object doc): files sorted by
-    * (`bprefix`, `bkey`) with `bprefix` a data column, or — the default,
-    * and the layout build and compact write — one bkey-sorted file per
-    * `bprefix` partition directory. Both carry the same row-group size
-    * and bkey bloom filter. */
-  private def writeBandRows(rows: DataFrame, segDir: String, delta: Boolean = false): Unit = {
-    // each prefix lands in exactly one writer task: without this every
-    // task writes into every partition dir — 256·tasks small files per
-    // build. AQE coalesces the shuffle to the data size, so a
-    // batch-sized delta is one task writing one file, and a large one
-    // keeps several parallel writers
-    val w = rows.repartition(col("bprefix"))
-      // bkey-sorted within each prefix file: every parquet row group
-      // then covers a NARROW bkey range, so a point probe's pushed
-      // bkey IN-filter skips row groups by min/max stats — the
-      // point-lookup tier a small batch against a huge index needs
-      // (unsorted, each group's [min,max] spans the whole hash space
-      // and stats prune nothing). Small row groups bound the skipping
-      // granularity: at 100 TB the files are large and multi-group
-      // naturally; locally 1 MB blocks put ~10 groups in each ~9 MB
-      // prefix file. MEASURED honestly at 10⁶ (BENCH_LOCAL round-12):
-      // the pruning verifiably engages (row groups skipped, PushedFilters
-      // carries the IN) but END-TO-END probe time is unchanged — the
-      // whole 8M-row table scans in ~0.5 s from a warm page cache, so
-      // probe overheads dominate locally. The claim this layout buys is
-      // cold-IO proportionality at object-store scale, where a scan is
-      // bandwidth-bound, not a local win; build cost is unchanged
-      // (13.9 s vs 16.8 s unsorted at 10⁶ — the sort rides the
-      // existing per-prefix shuffle)
+    * shared by build, append, [[ingestFold]]'s probe-row reuse path and
+    * [[compact]]. Always writes a FRESH segment directory in the one
+    * layout of the object doc; visibility comes from the caller's
+    * manifest swap, never from files appearing in a listed directory. */
+  private def writeBandRows(rows: DataFrame, segDir: String): Unit =
+    // each prefix lands in exactly one writer task; AQE coalesces the
+    // shuffle to the data size, so a batch-sized append is one file
+    rows.repartition(col("bprefix"))
+      // sorted, every 1 MB row group covers a NARROW key range, so a
+      // probe's pushed `bprefix IN` / `bkey IN` filters skip groups by
+      // min/max stats (unsorted, each group spans the whole hash space).
+      // The claim is cold-IO proportionality at object-store scale;
+      // locally a warm page cache serves a whole 10⁶-doc table in
+      // ~0.5 s (BENCH_LOCAL round-12)
       .sortWithinPartitions(col("bprefix"), col("bkey"))
       .write.option("parquet.block.size", 1024 * 1024)
-      // per-row-group BLOOM FILTER on bkey: pushed Eq predicates (the
-      // or-of-eq a ≤512-key IN translates to — and each chunk of the
-      // opt-in chunked form) consult it during row-group filtering, so
-      // membership skipping is EXACT even where min/max can't decide —
-      // a group whose [min,max] spans a probe key but holds none of
-      // them (hash collisions aside) skips anyway, and an UNSORTED
-      // legacy segment (pre-r12 layout, or a future layout change)
-      // gets point-probe skipping it otherwise structurally lacks.
-      // Sized for the ~31k distinct keys a 10⁶-corpus prefix file
-      // holds (~50 KB per ~9 MB file, <1% overhead; build-time delta
-      // measured nil — BENCH_LOCAL round-13); the footer presence is
-      // spec-pinned via the parquet metadata API
+      // per-row-group bkey BLOOM FILTER: the pushed or-of-Eq a ≤512-key
+      // IN becomes consults it, so a group whose [min,max] spans a probe
+      // key but holds none skips anyway. ADAPTIVE (a writer-wide key;
+      // only bkey has a filter): every key enters each of 5 candidates,
+      // 16 KB halved down to 1 KB — the smallest Parquet builds — and
+      // the footer keeps the smallest that meets 1 % for the keys the
+      // group holds. A fixed expected ndv sized every group's filter
+      // alike (256 KB at the former 131 072 keys)
       .option("parquet.bloom.filter.enabled#bkey", "true")
-      .option("parquet.bloom.filter.expected.ndv#bkey", "131072")
-    if (delta) w.parquet(segDir) else w.partitionBy("bprefix").parquet(segDir)
-  }
+      .option("parquet.bloom.filter.adaptive.enabled", "true")
+      .option("parquet.bloom.filter.candidates.number#bkey", "5")
+      .option("parquet.bloom.filter.max.bytes", BloomMaxBytes.toString)
+      .parquet(segDir)
 }

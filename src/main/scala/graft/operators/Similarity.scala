@@ -1115,10 +1115,15 @@ object Similarity {
 
   /** The centroid table of `m`'s generation as driver rows, ordered by
     * cell (nlist rows — the bounded collect every append, probe and
-    * count refresh reads). */
+    * count refresh reads). A centroid generation is write-once, so its
+    * rows are decoded once per generation per session
+    * ([[GenerationCache.scalar]], as [[loadPqCodebooks]]) — an index
+    * parameter, not a query result: every commit publishes a fresh
+    * `cent_<v>_<hex>`, so the first read after a write misses. */
   private def centroidRows(
       spark: SparkSession, dir: String, m: AnnStore.Manifest): Array[Row] =
-    AnnStore.centroids(spark, dir, m).orderBy(col("cell")).collect()
+    GenerationCache.scalar(spark, s"centrows|$dir/${m.cent}")(
+      AnnStore.centroids(spark, dir, m).orderBy(col("cell")).collect())
 
   /** Single-shot count-refreshed publish against an EXACT base: write a
     * fresh centroid generation carrying `base + delta` counts and claim
@@ -1693,11 +1698,11 @@ object Similarity {
   private[graft] def pqCandidatesIndexed(
       queries: DataFrame,
       indexDir: String,
-      nprobe: Int): DataFrame = {
+      nprobe: Int,
+      man: AnnStore.Manifest): DataFrame = {
     val spark = queries.sparkSession
     val sc = spark.sparkContext
     val n = sc.defaultParallelism
-    val man = AnnStore.read(indexDir) // ONE pointer resolve per query
     val centRows = centroidRows(spark, indexDir, man)
     val centroids = centRows.map(_.getSeq[Double](1).toArray)
     val cnorms = centRows.map(_.getDouble(2))
@@ -1782,9 +1787,9 @@ object Similarity {
       k: Int,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val totalN = AnnStore.centroids(spark, indexDir)
-      .agg(sum(col("n_vectors"))).head().getLong(0)
-    val cand = pqCandidatesIndexed(queries, indexDir, nprobe)
+    val man = AnnStore.read(indexDir) // ONE pointer resolve per query
+    val totalN = centroidRows(spark, indexDir, man).map(_.getLong(4)).sum
+    val cand = pqCandidatesIndexed(queries, indexDir, nprobe, man)
 
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val screen = ColumnBridge.column(graft.functions.TopKScreenAgg(

@@ -24,15 +24,21 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   */
 final class Counter(spark: SparkSession, path: String) {
 
-  private val lock = Counter.lockFor(spark, path)
+  private val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val qualified = fs.makeQualified(new Path(path))
+  private val lock = Counter.locks.computeIfAbsent(qualified.toString, _ => new Object)
 
   /** One job: the table is always the single row `set` wrote, read with
-    * its fixed schema (no footer-inference job, no aggregation). */
+    * its fixed schema (no footer-inference job, no aggregation). An
+    * absent table reads as 0 with no job: the path is checked first, so
+    * Spark never logs its missing-path WARN and stack trace. */
   def get(): Long = lock.synchronized {
     import spark.implicits._
-    try spark.read.schema("value BIGINT").parquet(path)
+    if (!fs.exists(qualified)) 0L
+    else try spark.read.schema("value BIGINT").parquet(path)
       .as[Long].collect().headOption.getOrElse(0L)
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L } // absent → 0
+    // deleted by another process between the check and the read
+    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
   }
 
   def set(v: Long): Long = lock.synchronized {
@@ -47,10 +53,4 @@ final class Counter(spark: SparkSession, path: String) {
 
 object Counter {
   private val locks = new ConcurrentHashMap[String, AnyRef]()
-
-  private def lockFor(spark: SparkSession, path: String): AnyRef = {
-    val p = new Path(path)
-    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-    locks.computeIfAbsent(key, _ => new Object)
-  }
 }

@@ -84,6 +84,23 @@ class BpeSpec extends SparkSpec {
     } finally spark.conf.unset(Bpe.DriverTrainCapKey)
   }
 
+  test("a supplementary character starts as two symbols, its UTF-16 surrogate pair") {
+    // tools/check_oracle.py self-checks its Python twin on the same word
+    val word = "a\uD83D\uDE00b"
+    val docs = Seq((1L, word)).toDF("doc_id", "text")
+    def stats(merges: Seq[(String, String)]) =
+      Bpe.bpeEncodeStats(docs, "doc_id", "text", merges)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(stats(Nil) === Seq((1L, 1L, 4L)))
+    assert(stats(Seq(("\uD83D", "\uDE00"))) === Seq((1L, 1L, 3L)))
+    // training's first merge (every pair counts 2; the halves store as
+    // "?", which sorts first) rejoins the pair into one symbol
+    val twice = Seq((1L, s"$word $word")).toDF("doc_id", "text")
+    val (_, vocab) = Bpe.bpeTrainFull(twice, "text", nMerges = 1, minPairCount = 1)
+    assert(vocab.collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toSeq ===
+      Seq(word -> Seq("a", "\uD83D\uDE00", "b")))
+  }
+
   test("null and empty text: zero stats, row survives") {
     val docs = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "ab ab"))
       .toDF("doc_id", "text")

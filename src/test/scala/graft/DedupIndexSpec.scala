@@ -1,9 +1,13 @@
 package graft
 
-import graft.operators.{Dedup, DedupIndex, LlmQueries}
+import scala.jdk.CollectionConverters._
+
+import graft.operators.{Dedup, DedupIndex, LlmQueries, ManifestCommit}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-class DedupIndexSpec extends SparkSpec {
+class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val docs = Tables(spark, sf, "documents")
 
@@ -13,6 +17,30 @@ class DedupIndexSpec extends SparkSpec {
   private def prefixDirs(segDir: String): Seq[java.io.File] =
     new java.io.File(segDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bprefix=")).toSeq
+
+  /** The one segment layout: no `bprefix=` directories, every file
+    * sorted by (bprefix, bkey), and each prefix in exactly one file.
+    * Returns the segment's files. */
+  private def assertOneLayout(segDir: String): Seq[java.io.File] = {
+    import spark.implicits._
+    val files = parquetFiles(new java.io.File(segDir))
+    assert(prefixDirs(segDir).isEmpty && files.nonEmpty,
+      s"$segDir must hold plain parquet files and no prefix directories")
+    val perFile = files.map { f =>
+      spark.read.parquet(f.getAbsolutePath).select($"bprefix", $"bkey")
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    }
+    perFile.foreach(rows => assert(rows == rows.sorted, "a segment file must be (bprefix, bkey)-sorted"))
+    val prefixSets = perFile.map(_.map(_._1).toSet)
+    assert(prefixSets.map(_.size).sum == prefixSets.reduce(_ ++ _).size,
+      "every prefix must land in exactly one file of its segment")
+    files
+  }
+
+  /** The pushed-down data filters of every index scan in `df`'s plan. */
+  private def pushedFilters(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+      .map(_.metadata.getOrElse("PushedFilters", ""))
 
   test("index query equals the batch pair rule restricted to probe × index") {
     import spark.implicits._
@@ -63,13 +91,13 @@ class DedupIndexSpec extends SparkSpec {
     val evenAll = corpus.select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == evenAll -- evenPairs,
       "self-query must drop exactly the docs with a DISTINCT near-dup partner")
-    // the serving claim: the probe's band prefixes reach the index scan
-    // as partition filters (directory pruning, not a full-table scan)
+    // the serving claim: the probe's band prefixes and its band keys
+    // reach the index scan as pushed data filters (row-group skipping,
+    // not a full-table scan)
     val tiny = docs.filter($"doc_id" % 2 =!= 0).limit(3)
-    val plan = DedupIndex.query(tiny, "doc_id", "text", dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("bprefix"),
-      s"expected bprefix partition filters in the index scan:\n${plan.take(1500)}")
+    val pushed = pushedFilters(DedupIndex.query(tiny, "doc_id", "text", dir))
+    assert(pushed.exists(f => f.contains("In(bprefix,") && f.contains("In(bkey,")),
+      s"expected bprefix IN and bkey IN among the index scan's pushed filters: $pushed")
   }
 
   test("query broadcasts a batch-sized probe; shuffle branch is result-identical") {
@@ -133,15 +161,14 @@ class DedupIndexSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(canon(foldDir) == canon(naiveDir),
       "probe-row-reuse append wrote different band rows than the recompute path")
-    // the fold's appends are delta segments; the mixed generation holds
-    // exactly a fresh build's band rows
-    assert(DedupIndex.readManifest(foldDir).segments.tail
-      .forall(s => prefixDirs(s"$foldDir/$s").isEmpty))
+    // the fold's seed build and its appends all write the one layout,
+    // and the grown generation holds exactly a fresh build's band rows
+    DedupIndex.readManifest(foldDir).segments.foreach(s => assertOneLayout(s"$foldDir/$s"))
     val freshDir = tempDir("dix_fold_fresh")
     DedupIndex.build(docs.join(fold.keys.toSeq.toDF("doc_id"), "doc_id"),
       "doc_id", "text", freshDir)
     assert(canon(foldDir) == canon(freshDir),
-      "a delta-grown fold index diverged from a fresh build over its survivors")
+      "an append-grown fold index diverged from a fresh build over its survivors")
   }
 
   test("compact: append-grown index collapses to one segment with one file per prefix, rows and query identical") {
@@ -150,8 +177,6 @@ class DedupIndexSpec extends SparkSpec {
     DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dir)
     DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dir)
     DedupIndex.append(docs.filter($"doc_id" % 4 === 1), "doc_id", "text", dir)
-    def livePrefixDirs: Seq[java.io.File] =
-      DedupIndex.readManifest(dir).segments.flatMap(s => prefixDirs(s"$dir/$s"))
     assert(DedupIndex.readManifest(dir).segments.size == 3,
       "three writes must be three live segments pre-compaction")
     val incoming = docs.filter($"doc_id" % 4 === 3)
@@ -165,8 +190,8 @@ class DedupIndexSpec extends SparkSpec {
     val m = DedupIndex.readManifest(dir)
     assert(m.segments.size == 1 && m.tombstones.isEmpty,
       s"compaction must publish exactly one segment, got $m")
-    assert(livePrefixDirs.nonEmpty && livePrefixDirs.forall(parquetFiles(_).size == 1),
-      "every prefix directory must hold exactly one file post-compaction")
+    // every prefix lands in exactly one (bprefix, bkey)-sorted file
+    assertOneLayout(s"$dir/${m.segments.head}")
     val rowsAfter = DedupIndex.readBands(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(rowsAfter == rowsBefore, "compaction must not change row content")
@@ -276,37 +301,53 @@ class DedupIndexSpec extends SparkSpec {
 
   test("band segments carry bkey bloom filters: footer offsets present, filter readable, members hit") {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
     val dir = tempDir("dix_bloom")
     DedupIndex.build(docs.filter($"doc_id" % 3 === 0), "doc_id", "text", dir)
-    // a batch-sized append (~167 docs) writes the one-file delta layout
+    // a batch-sized append (~167 docs) writes one file
     DedupIndex.append(docs.filter($"doc_id" % 3 === 1), "doc_id", "text", dir)
     val Seq(seg, delta) = DedupIndex.readManifest(dir).segments
-    assert(prefixDirs(s"$dir/$delta").isEmpty && parquetFiles(new java.io.File(s"$dir/$delta")).size == 1,
-      "a batch-sized append must write ONE file and no prefix directories")
+    assert(assertOneLayout(s"$dir/$delta").size == 1,
+      "a batch-sized append must write ONE file")
+    val conf = spark.sparkContext.hadoopConfiguration
     def assertBloom(pfile: java.io.File): Unit = {
+      val path = new org.apache.hadoop.fs.Path(pfile.getAbsolutePath)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(pfile.getAbsolutePath),
-          spark.sparkContext.hadoopConfiguration))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+      // the file's bkeys in row order: row groups are stored in order, so
+      // the footer's per-group row counts slice them into groups
+      val keys = {
+        val rows = org.apache.parquet.hadoop.ParquetReader
+          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
+          .withConf(conf).build()
+        try Iterator.continually(rows.read()).takeWhile(_ != null)
+          .map(_.getLong("bkey", 0)).toVector
+        finally rows.close()
+      }
       try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        val bkeyChunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == "bkey")
-        assert(bkeyChunks.nonEmpty &&
-          bkeyChunks.forall(_.getBloomFilterOffset >= 0),
-          "every bkey column chunk must carry a bloom filter offset")
-        // the filter is readable and reports an INDEXED key as a member
-        // (the property pushed-Eq row-group filtering relies on)
-        val aKey = spark.read.parquet(pfile.getAbsolutePath)
-          .select($"bkey").head().getLong(0)
-        val bf = reader.readBloomFilter(bkeyChunks.head)
-        assert(bf != null && bf.findHash(bf.hash(aKey)),
-          "bloom filter must contain a key the chunk actually holds")
+        val blocks = reader.getFooter.getBlocks.asScala.toSeq
+        assert(blocks.map(_.getRowCount).sum == keys.size)
+        val starts = blocks.scanLeft(0L)(_ + _.getRowCount)
+        blocks.zip(starts).foreach { case (block, start) =>
+          val chunk = block.getColumns.asScala.find(_.getPath.toDotString == "bkey").get
+          assert(chunk.getBloomFilterOffset >= 0,
+            "every bkey column chunk must carry a bloom filter offset")
+          val bf = reader.readBloomFilter(chunk)
+          val groupKeys = keys.slice(start.toInt, (start + block.getRowCount).toInt)
+          // no false negatives: every key of the group hits its filter
+          // (the property pushed-Eq row-group filtering relies on)
+          assert(bf != null && groupKeys.forall(k => bf.findHash(bf.hash(k))),
+            "every key a row group holds must hit its bloom filter")
+          // sized to the group: within the bound, and within ~4× the
+          // ~1.21 B per distinct key a 1 % filter needs (1 KB floor)
+          assert(bf.getBitsetSize <= DedupIndex.BloomMaxBytes,
+            s"filter ${bf.getBitsetSize} B exceeds the ${DedupIndex.BloomMaxBytes} B bound")
+          assert(bf.getBitsetSize <= math.max(1024, 5 * groupKeys.distinct.size),
+            s"filter ${bf.getBitsetSize} B for ${groupKeys.distinct.size} keys is not sized to its group")
+        }
       } finally reader.close()
     }
-    assertBloom(parquetFiles(prefixDirs(s"$dir/$seg").head).head)
-    assertBloom(parquetFiles(new java.io.File(s"$dir/$delta")).head)
+    assertOneLayout(s"$dir/$seg").foreach(assertBloom)
+    parquetFiles(new java.io.File(s"$dir/$delta")).foreach(assertBloom)
   }
 
   test("a large append stays a parallel delta write: disjoint (bprefix, bkey)-sorted files") {
@@ -324,18 +365,8 @@ class DedupIndexSpec extends SparkSpec {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try DedupIndex.append(batch, "doc_id", "text", dir)
     finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    val seg = s"$dir/${DedupIndex.readManifest(dir).segments.last}"
-    val files = parquetFiles(new java.io.File(seg))
-    assert(prefixDirs(seg).isEmpty && files.size > 1,
-      s"a large append must write several delta files, got ${files.size}")
-    val perFile = files.map { f =>
-      spark.read.parquet(f.getAbsolutePath).select($"bprefix", $"bkey")
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    }
-    perFile.foreach(rows => assert(rows == rows.sorted, "a delta file must be (bprefix, bkey)-sorted"))
-    val prefixSets = perFile.map(_.map(_._1).toSet)
-    assert(prefixSets.map(_.size).sum == prefixSets.reduce(_ ++ _).size,
-      "every prefix must land in exactly one delta file")
+    val files = assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).segments.last}")
+    assert(files.size > 1, s"a large append must write several files, got ${files.size}")
     val ref = tempDir("dix_big_ref")
     DedupIndex.build(docs, "doc_id", "text", ref)
     assert(DedupIndex.readBands(spark, dir).collect().map(_.toSeq).toSet ==
@@ -350,16 +381,29 @@ class DedupIndexSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def bandRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    // prefix-layout base + two ~125-doc delta appends
+    // a current-layout base, a hand-written LEGACY prefix-layout segment
+    // (partitioned by bprefix, one bkey-sorted file per prefix
+    // directory, as build and compact wrote before) committed on top,
+    // then a current-layout append
     val dir = tempDir("dix_mixed")
     DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dir)
-    DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dir)
-    val v1 = DedupIndex.readManifest(dir).version
+    val scratch = tempDir("dix_mixed_scratch")
+    DedupIndex.build(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", scratch)
+    val base = DedupIndex.readManifest(dir)
+    val legacy = ManifestCommit.uniqueName("seg", base.version + 1)
+    DedupIndex.readBands(spark, scratch).repartition($"bprefix")
+      .sortWithinPartitions($"bprefix", $"bkey")
+      .write.partitionBy("bprefix").parquet(s"$dir/$legacy")
+    assert(prefixDirs(s"$dir/$legacy").nonEmpty &&
+      prefixDirs(s"$dir/$legacy").forall(parquetFiles(_).size == 1))
+    val v1 = base.version + 1
+    ManifestCommit.commit(dir, v1, Seq(v1.toString, DedupIndex.FormatTag, base.meta,
+      (base.segments :+ legacy).mkString(","), "", "-"))
     val batch = docs.filter($"doc_id" % 4 === 1)
     DedupIndex.append(batch, "doc_id", "text", dir)
     val segs = DedupIndex.readManifest(dir).segments
-    assert(segs.size == 3 && segs.tail.forall(s => prefixDirs(s"$dir/$s").isEmpty),
-      s"both appends must be delta segments: $segs")
+    assert(segs.size == 3 && segs(1) == legacy, s"got $segs")
+    Seq(segs(0), segs(2)).foreach(s => assertOneLayout(s"$dir/$s"))
     val ref = tempDir("dix_mixed_ref")
     DedupIndex.build(docs.filter($"doc_id" % 4 =!= 3), "doc_id", "text", ref)
     val refV1 = tempDir("dix_mixed_ref_v1")
@@ -378,6 +422,20 @@ class DedupIndexSpec extends SparkSpec {
     val newGot = pairs(DedupIndex.pairsWithNew(spark, dir, batch, "doc_id", "text"))
     assert(newGot.nonEmpty &&
       newGot == pairs(DedupIndex.pairsWithNew(spark, ref, batch, "doc_id", "text")))
+    // the IN filters reach the legacy segment's scan as partition
+    // filters and the current segments' scans as pushed data filters
+    val tiny = docs.filter($"doc_id" % 4 === 3).limit(3)
+    val scans = collect(DedupIndex.query(tiny, "doc_id", "text", dir)
+      .queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.exists(_.metadata.getOrElse("PartitionFilters", "").contains("bprefix")),
+      "the legacy segment's scan must prune bprefix directories")
+    assert(pushedFilters(DedupIndex.query(tiny, "doc_id", "text", dir))
+      .count(_.contains("In(bprefix,")) >= 2,
+      "both current-layout segments' scans must push the bprefix IN")
+    // the next compact rewrites the legacy segment into the one layout
+    DedupIndex.compact(spark, dir)
+    assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).segments.head}")
+    assert(bandRows(DedupIndex.readBands(spark, dir)) == bandRows(DedupIndex.readBands(spark, ref)))
   }
 
   test("selfPairs edge inputs: exact twins pair, null-text and disjoint docs contribute nothing") {

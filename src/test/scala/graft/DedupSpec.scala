@@ -457,7 +457,9 @@ class DedupSpec extends SparkSpec {
       spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
       val plan = DedupIndex.query(bigProbe, "doc_id", "text", dir, keyPushdownCap = cap)
         .queryExecution.executedPlan.toString
-      val pushedIns = "PushedFilters: \\[[^\\]]*In\\(bkey".r
+      // one scan renders on one line; its pushed list also names the
+      // bprefix IN, whose value list closes with its own "]"
+      val pushedIns = "PushedFilters: \\[[^\n]*?In\\(bkey".r
         .findAllIn(plan).size
       assert(pushedIns >= 2,
         s"expected ≥2 union branches with pushed bkey INs, got $pushedIns:\n${plan.take(1500)}")

@@ -1,8 +1,6 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AnnStore, DedupIndex, GenerationCache, Similarity}
@@ -16,67 +14,46 @@ class GenerationCacheSpec extends SparkSpec {
   private lazy val emb = Tables(spark, sf, "embeddings")
     .select(col("vec_id"), col("embedding"))
 
-  /** Descriptions of the partition-discovery ("Listing leaf files") jobs
-    * `f` launches, with every multi-directory listing forced onto the
-    * cluster (the default threshold lists up to 32 directories on the
-    * driver, which would hide a spec-sized store's listings). Listener
-    * events arrive asynchronously, in order, so a marker job run after
-    * `f` is seen only once every earlier job start has been delivered. */
-  private def listingJobs(f: => Unit): Seq[String] = {
-    val marker = s"listing-drain-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach { d =>
-            if (d == marker) drained.countDown()
-            else if (d.startsWith("Listing leaf files")) seen.add(d)
-          }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    spark.conf.set(threshold, "1")
-    try {
-      f
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the marker job")
-      seen.asScala.toSeq
-    } finally {
-      spark.conf.unset(threshold)
-      sc.removeSparkListener(listener)
-    }
+  /** Files listed while `f` runs, driver-side and parallel listings
+    * alike: every file-index listing adds what it found to Spark's
+    * `filesDiscovered` metric. */
+  private def filesListed(f: => Unit): Long = {
+    val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    f
+    HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
   }
+
+  /** What listing `dir` alone costs: an uncached read always lists it. */
+  private def listingOf(dir: String): Long = filesListed(spark.read.parquet(dir))
 
   test("after an append, re-resolving either store lists none of its older segments") {
     import spark.implicits._
     val dix = tempDir("graft_gc_dix")
     DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dix)
     val base = DedupIndex.readManifest(dix).segments
-    // the listener does see listing jobs: the first resolve of the
-    // prefix-layout segment discovers its partition directories
-    val cold = listingJobs(DedupIndex.readBands(spark, dix))
-    assert(cold.exists(d => base.exists(d.contains)),
-      s"a cold resolve must list the base segment: $cold")
+    // the metric does see the listings: the first resolve lists the
+    // base segment (one directory, listed on the driver)
+    val cold = filesListed(DedupIndex.readBands(spark, dix))
+    assert(cold > 0 && cold == base.map(s => listingOf(s"$dix/$s")).sum,
+      s"a cold resolve must list the base segment: $cold files")
     DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dix)
-    val warm = listingJobs(DedupIndex.readBands(spark, dix).count())
-    assert(!warm.exists(d => base.exists(d.contains)),
-      s"re-resolve after an append re-listed an older segment: $warm")
+    val added = DedupIndex.readManifest(dix).segments.filterNot(base.contains)
+    val warm = filesListed(DedupIndex.readBands(spark, dix).count())
+    assert(warm == added.map(s => listingOf(s"$dix/$s")).sum,
+      s"re-resolve after an append must list only the new segment, listed $warm files")
 
     val ivf = tempDir("graft_gc_ivf")
     Similarity.buildIvfIndex(emb.filter($"vec_id" % 10 =!= 0), ivf,
       cellCap = Some(256)).count()
     val annBase = AnnStore.read(ivf).segments
-    val annCold = listingJobs(AnnStore.postings(spark, ivf).count())
-    assert(annCold.exists(d => annBase.exists(d.contains)),
-      s"a cold resolve must list the base segment: $annCold")
+    val annCold = filesListed(AnnStore.postings(spark, ivf).count())
+    assert(annCold > 0 && annCold == annBase.map(s => listingOf(s"$ivf/$s")).sum,
+      s"a cold resolve must list the base segment: $annCold files")
     Similarity.appendToIvfIndex(emb.filter($"vec_id" % 10 === 0), ivf).count()
-    val annWarm = listingJobs(AnnStore.postings(spark, ivf).count())
-    assert(!annWarm.exists(d => annBase.exists(d.contains)),
-      s"re-resolve after an ANN append re-listed an older segment: $annWarm")
+    val annAdded = AnnStore.read(ivf).segments.filterNot(annBase.contains)
+    val annWarm = filesListed(AnnStore.postings(spark, ivf).count())
+    assert(annWarm == annAdded.map(s => listingOf(s"$ivf/$s")).sum,
+      s"re-resolve after an ANN append must list only the new segment, listed $annWarm files")
   }
 
   test("entries are keyed per session: a second session resolves its own relations") {

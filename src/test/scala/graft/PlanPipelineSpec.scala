@@ -215,6 +215,44 @@ class PlanPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(jobsLaunched(assert(c.incr() == 6L)) == 2)
   }
 
+  /** WARN-or-worse log events emitted while `f` runs, seen through an
+    * appender on the root logger (the session logs at WARN). */
+  private def warnings(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender(s"warn-capture-${System.nanoTime()}",
+        null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try f
+    finally { root.removeAppender(appender); appender.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("counter: a fresh counter's first get reads 0 with no WARN and at most one job") {
+    val path = tempDir("graft_counter_fresh") + "/c"
+    // control: the capture does see the WARN a plain read of the absent
+    // path logs, so an empty capture below means none was logged
+    val control = warnings {
+      try spark.read.schema("value BIGINT").parquet(path).collect()
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
+    }
+    assert(control.nonEmpty, "the capture must see Spark's missing-path WARN")
+    val c = new Counter(spark, path)
+    var jobs = -1
+    val logged = warnings { jobs = jobsLaunched(assert(c.get() == 0L)) }
+    assert(logged.isEmpty, s"a fresh counter's get logged: $logged")
+    assert(jobs <= 1, s"a fresh counter's get ran $jobs jobs")
+  }
+
   test("counter: concurrent incr through two handles on one path loses no update") {
     val path = tempDir("graft_counter_mt") + "/c"
     // the second handle spells the same path as a URI: one lock per qualified path

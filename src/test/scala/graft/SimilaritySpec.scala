@@ -290,7 +290,8 @@ class SimilaritySpec extends SparkSpec {
     // rests on)
     val v = corpus.select(col("vec_id"), col("embedding"),
       VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"))
-    val cand = Similarity.pqCandidatesIndexed(corpus, dirB, 4)
+    val cand = Similarity.pqCandidatesIndexed(corpus, dirB, 4,
+      graft.operators.AnnStore.read(dirB))
     val checked = cand
       .join(v.select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn")), "qid")
