@@ -21,11 +21,11 @@ import org.apache.spark.sql.functions._
   *     the former layout's in-place `postings/` appends and
   *     dynamic-partition delete rewrites, which were atomic only per
   *     file and raced readers that listed partitions mid-mutation.
-  *   - `seg_<v>_<hex>/cell=<c>/…` — posting segments, partitioned by cell:
-  *     the partition-pruning layout is unchanged, it just lives under
-  *     per-commit segment roots. A multi-segment read is ONE parquet
-  *     relation over the segment roots (one scan node; pruning by
-  *     `cell` applies per root).
+  *   - `seg_<v>_<hex>/` — posting segments in the one [[Segments]]
+  *     layout: plain files sorted by (`cell`, `vec_id`), each cell in
+  *     exactly one file, `cell` a plain last column. Segments written in
+  *     the former `cell=<c>/` layout resolve to the same columns and
+  *     stay readable without a reader branch until the next compact.
   *   - `cent_<v>_<hex>/` — centroid-table generations (cell, centroid, cnorm,
   *     nshards, n_vectors). Appends and deletes refresh the counts by
   *     writing a new generation, never by overwriting the live one
@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *   - `cb_<v>_<hex>/` — PQ codebook generations (immutable after build —
   *     appends reuse them bit-identically).
   *   - `del_<v>_<hex>/` — tombstones: one `vec_id` column, the ids a delete
-  *     removed. Readers drop them with a broadcast anti-join (skipped
+  *     removed, in the same [[Segments]] layout. Readers drop them with a broadcast anti-join (skipped
   *     entirely when no tombstones exist, keeping the fresh-index plan
   *     byte-identical to the pre-manifest one); [[Similarity
   *     .compactIvfIndex]] materializes them and clears the list.
@@ -152,18 +152,17 @@ object AnnStore {
     GenerationCache.directory(spark, s"$dir/$cb")
   }
 
-  /** The live posting view: a union of the manifest's segment scans
-    * (one relation per segment root — Spark's partition discovery
-    * requires per-root reads; pruning on `cell` pushes through the
-    * union into every scan), minus tombstoned ids via a broadcast
-    * anti-join that disappears entirely when no delete is outstanding.
+  /** The live posting view: a union by name of the manifest's segment
+    * relations (one per segment directory, whatever its layout), minus
+    * tombstoned ids via a broadcast anti-join that disappears entirely
+    * when no delete is outstanding.
     * A fresh single-segment index therefore reads with a plan
     * byte-identical to the pre-manifest layout. Resolved from ONE
     * manifest read, so a DataFrame built here keeps seeing the
     * generation it opened even if a compact/append publishes a newer
     * one mid-query. Each segment and tombstone directory is write-once
     * (UUID'd, committed by manifest swap), so its resolved relation —
-    * the cell-partition discovery included — is cached per directory
+    * its file listing — is cached per directory
     * ([[GenerationCache.directory]]): after an append, a reader lists
     * only the appended segment. Queries still scan the bytes. */
   def postings(spark: SparkSession, dir: String): DataFrame =

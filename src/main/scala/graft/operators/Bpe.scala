@@ -19,14 +19,13 @@ import org.apache.spark.sql.functions._
   *     pair statistics are per-word-occurrence, so the word table plus
   *     `freq` is a lossless sufficient statistic, and it is orders of
   *     magnitude smaller than the corpus (the one corpus-scale shuffle).
-  *   - Each word starts as its sequence of UTF-16 code units (Scala
-  *     `Char`s), so a supplementary character (a surrogate pair, e.g.
-  *     most emoji) starts as TWO symbols. The distributed and driver-side
-  *     training branches and encoding all split this way, so they agree;
-  *     a merge may join the pair back into one symbol. (The Python
-  *     cross-oracle splits into code points instead; the fixture text is
-  *     ASCII, so its cross-check never reaches the difference.) Per
-  *     merge round:
+  *   - Each word starts as its sequence of code points ([[symbols]]),
+  *     so a supplementary character (a surrogate pair in UTF-16, e.g.
+  *     most emoji) is ONE symbol and every symbol is valid UTF-8 — a
+  *     half pair would store as "?" in a Spark string column and split
+  *     the distributed branch from the driver one. Both training
+  *     branches, encoding and the Python cross-oracle split this way.
+  *     Per merge round:
   *     count all ADJACENT symbol pairs (overlapping — "aaa" contributes
   *     (a,a) twice), weighted by word freq; the winner is the
   *     lexicographically-least most-frequent pair (count desc, left
@@ -50,12 +49,16 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** Character split as a UDF rather than `split(w, "")`: Java's regex
-    * split keeps a trailing empty match under Spark's limit=-1, and the
-    * word table this runs over is tiny relative to the corpus. It splits
-    * into UTF-16 code units (a surrogate pair becomes two symbols), the
-    * same split `trainOnDriver` and encoding use. */
-  private val initSyms = udf { (w: String) => w.map(_.toString) }
+  /** A word's initial symbols: one per code point, never half a
+    * surrogate pair — the split training (both branches) and encoding
+    * share. */
+  private[graft] def symbols(w: String): IndexedSeq[String] =
+    w.codePoints.toArray.toIndexedSeq.map((cp: Int) => Character.toString(cp))
+
+  /** [[symbols]] as a UDF rather than `split(w, "")`: Java's regex split
+    * keeps a trailing empty match under Spark's limit=-1, and the word
+    * table this runs over is tiny relative to the corpus. */
+  private val initSyms = udf { (w: String) => symbols(w) }
 
   /** One greedy left-to-right non-overlapping rewrite of (left, right)
     * → left+right — the shared training/encoding pass. */
@@ -128,7 +131,7 @@ object Bpe {
       words: Array[(String, Long)],
       nMerges: Int,
       minPairCount: Long): (ArrayBuffer[(Int, String, String, Long)], Array[IndexedSeq[String]]) = {
-    val syms: Array[IndexedSeq[String]] = words.map(_._1.map(_.toString))
+    val syms: Array[IndexedSeq[String]] = words.map(w => symbols(w._1))
     val merges = new ArrayBuffer[(Int, String, String, Long)]
     var rank = 0
     var done = false
@@ -291,7 +294,7 @@ object Bpe {
             val cached = memo.getOrDefault(w, -1L)
             if (cached >= 0L) pieces += cached
             else {
-              var syms: IndexedSeq[String] = w.map(_.toString)
+              var syms = symbols(w)
               val ms = bc.value
               var m = 0
               while (m < ms.length && syms.length > 1) {

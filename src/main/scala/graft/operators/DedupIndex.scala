@@ -28,23 +28,17 @@ import org.apache.spark.sql.functions._
   *     row (the l6 lesson: carry the comparison payload on the band
   *     shuffle — joining a separate signature table would re-shuffle
   *     the corpus per query). Every writer (build, append, the
-  *     [[ingestFold]] appends, compact) writes ONE layout
-  *     ([[writeBandRows]]): parquet files sorted by (`bprefix`, `bkey`)
-  *     with `bprefix` a plain column, one file per coalesced
-  *     `repartition(bprefix)` shuffle partition, so each prefix lands in
-  *     exactly one file of its segment. A batch-sized append is one
-  *     file; a corpus-sized build or compact keeps several parallel
-  *     writers. Metadata is proportional to the data: 1 MB row groups,
-  *     each with a `bkey` bloom filter sized to the keys it holds
-  *     ([[BloomMaxBytes]]). A probe's `bprefix IN` / `bkey IN` filters
-  *     reach the files as pushed data filters, and row-group min/max
-  *     stats plus the bloom filters skip the groups holding none of the
-  *     probe's keys. Segments written in the former PREFIX layout
-  *     (partitioned by `bprefix`, one file per `bprefix=` directory)
-  *     stay readable: readers never branch on the layout (the same
-  *     filters are partition filters there), and the next [[compact]]
-  *     rewrites them.
-  *   - `del_<v>_<hex>/` — tombstone segments: one `doc_id` column.
+  *     [[ingestFold]] appends, compact) writes the one [[Segments]]
+  *     layout keyed by (`bprefix`, `bkey`): plain files, each prefix in
+  *     exactly one file of its segment, 1 MB row groups, each with a
+  *     `bkey` bloom filter sized to the keys it holds. A probe's
+  *     `bprefix IN` / `bkey IN` filters reach the files as pushed data
+  *     filters, and row-group min/max stats plus the bloom filters skip
+  *     the groups holding none of the probe's keys. Segments written in
+  *     the former PREFIX layout (partitioned by `bprefix`) stay
+  *     readable without a reader branch until the next [[compact]].
+  *   - `del_<v>_<hex>/` — tombstone segments: one `doc_id` column, in
+  *     the same [[Segments]] layout.
   *     [[delete]] is O(|deleted ids|): it writes ids, not data, and
   *     readers drop tombstoned docs with a broadcast anti-join.
   *     [[compact]] materializes the deletions and clears the list.
@@ -290,8 +284,8 @@ object DedupIndex {
     * anti-join's semantics. */
   def delete(ids: DataFrame, idCol: String, dir: String): Unit = {
     val del = ManifestCommit.uniqueName("del", readManifest(dir).version + 1)
-    ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$del")
+    Segments.write(ids.select(col(idCol).cast("long").as("doc_id")).distinct(),
+      s"$dir/$del", Seq("doc_id"))
     // batchId = None: the delete itself is no ingest batch, but the
     // commit CARRIES the existing stamp forward (mergeStamp) — a
     // redelivered micro-batch after a weekly delete must still skip
@@ -736,44 +730,10 @@ object DedupIndex {
         .reduce(_ unionByName _)
   }
 
-  /** Bloom-filter bound per `bkey` column chunk, in bytes. Every band
-    * row carries at least its 8-byte bkey and its k-long signature, so
-    * a 1 MB row group holds at most 2²⁰ / (8 + 8·k) distinct keys:
-    * 3 971 at the default k = 32, 7 710 at k = 16. A 1 %-false-positive
-    * split-block filter needs ~1.21 B per key (4.7 KB, 9.3 KB), rounded
-    * up to a power of two: 16 KB covers every k ≥ 16. A smaller k can
-    * overfill it — the filter's false-positive rate rises, and it never
-    * drops a key. */
-  private[graft] val BloomMaxBytes = 16 * 1024
-
   /** Sink for prepared band rows `(doc_id, sig, band, bkey, bprefix)` —
     * shared by build, append, [[ingestFold]]'s probe-row reuse path and
-    * [[compact]]. Always writes a FRESH segment directory in the one
-    * layout of the object doc; visibility comes from the caller's
-    * manifest swap, never from files appearing in a listed directory. */
+    * [[compact]]: the one [[Segments]] layout keyed by (bprefix, bkey),
+    * with a `bkey` bloom filter per row group. */
   private def writeBandRows(rows: DataFrame, segDir: String): Unit =
-    // each prefix lands in exactly one writer task; AQE coalesces the
-    // shuffle to the data size, so a batch-sized append is one file
-    rows.repartition(col("bprefix"))
-      // sorted, every 1 MB row group covers a NARROW key range, so a
-      // probe's pushed `bprefix IN` / `bkey IN` filters skip groups by
-      // min/max stats (unsorted, each group spans the whole hash space).
-      // The claim is cold-IO proportionality at object-store scale;
-      // locally a warm page cache serves a whole 10⁶-doc table in
-      // ~0.5 s (BENCH_LOCAL round-12)
-      .sortWithinPartitions(col("bprefix"), col("bkey"))
-      .write.option("parquet.block.size", 1024 * 1024)
-      // per-row-group bkey BLOOM FILTER: the pushed or-of-Eq a ≤512-key
-      // IN becomes consults it, so a group whose [min,max] spans a probe
-      // key but holds none skips anyway. ADAPTIVE (a writer-wide key;
-      // only bkey has a filter): every key enters each of 5 candidates,
-      // 16 KB halved down to 1 KB — the smallest Parquet builds — and
-      // the footer keeps the smallest that meets 1 % for the keys the
-      // group holds. A fixed expected ndv sized every group's filter
-      // alike (256 KB at the former 131 072 keys)
-      .option("parquet.bloom.filter.enabled#bkey", "true")
-      .option("parquet.bloom.filter.adaptive.enabled", "true")
-      .option("parquet.bloom.filter.candidates.number#bkey", "5")
-      .option("parquet.bloom.filter.max.bytes", BloomMaxBytes.toString)
-      .parquet(segDir)
+    Segments.write(rows, segDir, Seq("bprefix", "bkey"), Some("bkey"))
 }

@@ -967,7 +967,7 @@ object LlmQueries {
   /** L: the persisted ANN index tier, build side — centroids (with
     * per-cell posting counts and hot-cell shard widths) + INT8 postings
     * (1 B/elem codes + scale/norm scalars, ~4× smaller than the float
-    * corpus) partitioned by cell, materialized once at ingest (at
+    * corpus) sorted by cell, materialized once at ingest (at
     * 100 TB the index IS the product; per-run recompute is the honest
     * bench cost, never the deployment shape). Stride-centroid argmax
     * assignment is not reasonably SQL-expressible, so the DECLARED form
@@ -1031,8 +1031,8 @@ object LlmQueries {
 
   /** L: the asymmetric SERVING shape — |Q| ≪ |C| (every 20th vector as
     * the query batch) against the l29 index. This is the regime the
-    * persisted tier exists for: the corpus cost is a partition-pruned
-    * postings scan + an output-sized exact re-rank, not a per-run
+    * persisted tier exists for: the corpus cost is one postings scan
+    * + an output-sized exact re-rank, not a per-run
     * re-index, and the probe fanout touches nprobe cells per query. The
     * self-join ANN queries (l13/l14/l22) cover the corpus×corpus
     * regime; this covers retrieval. Row-identical to [[Similarity
@@ -1059,7 +1059,7 @@ object LlmQueries {
 
   /** L: incremental index maintenance — build the index on the base
     * corpus (vec_id % 10 ≠ 0), APPEND the held-out batch (centroids
-    * fixed, only touched cell partitions gain files), and declare the
+    * fixed, the batch lands in one fresh segment), and declare the
     * post-append integrity invariant (bench returns the refreshed
     * per-cell histogram). The read path after the append is
     * row-identical to a fresh rebuild over the full corpus at the same
@@ -1442,8 +1442,8 @@ object LlmQueries {
     * ingest batch; survivors are batch docs with no indexed
     * near-duplicate (shared LSH band + signature agreement ≥ 0.5 —
     * exactly l2's pair rule restricted to probe×index). Only the batch
-    * is re-banded; the corpus side is a partition-pruned scan of the
-    * probe's own band prefixes. Deterministic end to end → value-checked
+    * is re-banded; the corpus side is a scan filtered to the probe's
+    * own band prefixes. Deterministic end to end → value-checked
     * by the Python cross-oracle (tools/check_oracle.py). */
   val l42DedupIndexQuery = Q(
     "l42_dedup_index_query",
@@ -1637,7 +1637,7 @@ object LlmQueries {
     * labels) + (delta edges incident to the batch) instead of re-running
     * the corpus×corpus pair join and full closure. Delta pairs come
     * from [[DedupIndex.pairsWithNew]] (the batch RE-BANDED row-locally,
-    * broadcast against a partition-pruned corpus scan — l42's probe
+    * broadcast against a prefix-filtered corpus scan — l42's probe
     * shape, emitting pairs; one index scan total) and the merge is [[Dedup.incrementalComponents]]
     * (contract old components to their min-id reps, close the
     * touched-comps + batch graph, propagate through ONE broadcast
@@ -1858,8 +1858,8 @@ object LlmQueries {
 
   /** Post-delete ANN index pair for l58, session-cached: `_1` = the
     * full-corpus int8 index with the vec_id % 10 == 7 slice DELETED
-    * ([[Similarity.deleteFromIvfIndex]] — touched cell partitions
-    * rewritten, centroids/widths fixed); `_2` = the reference index
+    * ([[Similarity.deleteFromIvfIndex]] — a tombstone segment, no
+    * posting rewritten, centroids/widths fixed); `_2` = the reference index
     * built FRESH over the surviving corpus at the deleted index's own
     * centroids (`centroidsFrom`) — the rebuild the deletion law is
     * stated against. */
@@ -1883,9 +1883,9 @@ object LlmQueries {
 
   /** L: ANN index DELETION, gated by the deletion law — build the int8
     * index over the full corpus, delete the vec_id % 10 == 7 slice
-    * ([[Similarity.deleteFromIvfIndex]]: only touched cell partitions
-    * rewritten via broadcast anti-join + dynamic partition overwrite,
-    * centroid bookkeeping refreshed, emptied cells dropped), then serve
+    * ([[Similarity.deleteFromIvfIndex]]: a tombstone segment the
+    * readers anti-join, centroid bookkeeping refreshed, emptied cells
+    * read empty), then serve
     * a query batch from it. The DECLARED form is [[topKParity]] of the
     * post-delete serve path against the same serve from a FRESH index
     * built over the surviving corpus at the same centroids — l43's

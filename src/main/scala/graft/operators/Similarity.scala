@@ -916,24 +916,26 @@ object Similarity {
     *     is Σ n_vectors over nlist rows) and the hot-cell probe fanout
     *     has its input without a count job.
     *   - `postings` (`seg_<v>` segments): (vec_id, codes BINARY, cdot, m, nrm, shard, cell),
-    *     PARTITIONED BY cell — the INT8 tier made durable: 1 byte per
+    *     in the one [[Segments]] layout keyed by (cell, vec_id) — each
+    *     cell in exactly one file — the INT8 tier made durable: 1 byte per
     *     element ([[graft.functions.Int8PackExpr]] codes) + three
     *     scalars, ~4× smaller than float or quantize3 postings. Scoring
     *     from the index runs in code space with the sound
     *     Cauchy–Schwarz margin and re-ranks survivors against exact
     *     vectors ([[ivfTopKIndexed]]) — compression never changes
     *     results, only candidate screening.
-    * Partitioning by cell is the pruning layout: a query batch probing
-    * few distinct cells prunes posting partitions statically (filter)
-    * or dynamically (DPP through the cell join at scale). Cell geometry
-    * is the int8 code view (matching [[ivfTopKInt8]] — the l22 parity
-    * anchor); `cellCap` persists the hot-cell shard guard: cells larger
+    * A probe joins the postings on (cell, shard) and the scan is not
+    * pruned by cell, so a serve reads every posting once, at d (int8)
+    * or m (PQ) bytes a row. Cell geometry is the int8 code view
+    * (matching [[ivfTopKInt8]] — the l22 parity anchor); `cellCap`
+    * persists the hot-cell shard guard: cells larger
     * than the cap get `nshards = ceil(s/cap)` id-hash shards, and
     * probes replicate across them (result-identical, see
     * [[shardHotCells]]).
     *
-    * `centroidsFrom`: reuse the centroid set (and shard widths) of an
-    * existing index instead of deriving from this corpus — the
+    * `centroidsFrom`: reuse the centroid set of an existing index
+    * instead of deriving from this corpus (shard widths still follow
+    * this build's counts and `cellCap`) — the
     * fixed-centroids rebuild that [[appendToIvfIndex]]'s parity
     * contract is stated against.
     * `refineIters`: deterministic Lloyd passes over the seed centroids
@@ -947,101 +949,12 @@ object Similarity {
       nlistOpt: Option[Int] = None,
       cellCap: Option[Int] = None,
       centroidsFrom: Option[String] = None,
-      refineIters: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
-    val sc = spark.sparkContext
-    val n = sc.defaultParallelism
-    // fresh-build commit target: the next version over whatever (if
-    // anything) is committed at dir, all data in fresh unique dirs
-    val bv = ManifestCommit.currentVersion(dir) + 1
-    val segName = ManifestCommit.uniqueName("seg", bv)
-    val centName = ManifestCommit.uniqueName("cent", bv)
-    val view = corpus.select(col("vec_id"), col("embedding"))
-    val (centroids, cnorms) = centroidsFrom match {
-      case Some(src) =>
-        val rows = centroidRows(spark, src, AnnStore.read(src))
-        (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
-      case None =>
-        val total = view.count()
-        val nlist = nlistOpt.getOrElse(
-          math.max(16, math.ceil(math.sqrt(total.toDouble)).toInt))
-        val stride = math.max(1L, total / nlist)
-        deriveCentroids(view.withColumn("geom", int8GeomCol(col("embedding"))),
-          "geom", nlist, stride, refineIters)
-    }
-    val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
-
-    // one pack+assign pass, pinned: the counts aggregation and the
-    // posting write both read it (at warehouse scale this would be a
-    // persist(DISK_ONLY) staging table instead)
-    val rows = view.repartition(n, col("vec_id"))
-      .withColumn("pk", VectorFunctions.int8Pack(col("embedding")))
-      .select(
-        col("vec_id"),
-        col("pk.codes").as("codes"), col("pk.cdot").as("cdot"),
-        col("pk.m").as("m"),
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
-        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell"))
-      .localCheckpoint()
-    // per-cell counts drive BOTH the persisted metadata and the shard
-    // widths; ≤ nlist rows, broadcast back onto the posting stream
-    val counts = rows.groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
-    val widths = cellCap match {
-      case Some(cap) =>
-        require(cap > 0, s"cellCap must be positive, got $cap")
-        counts.withColumn("nshards",
-          greatest(ceil(col("n_vectors") / cap.toDouble).cast("int"), lit(1)))
-      case None => counts.withColumn("nshards", lit(1))
-    }
-    val cellMeta = widths.collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getInt(2))).toMap
-
-    rows
-      .join(broadcast(widths.select(col("cell"), col("nshards"))), "cell")
-      // id hash, not content hash: exact-duplicate masses share codes
-      // and must still spread across shards (probe replication covers
-      // every shard, so placement is free to be uniform)
-      .withColumn("shard",
-        pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int"))
-      .select(col("vec_id"), col("codes"), col("cdot"), col("m"), col("nrm"),
-        col("shard"), col("cell"))
-      .repartition(n, col("cell")) // ~nlist/n cells per writer, not n files per cell
-      // zstd, not the snappy default: write-once read-many is the
-      // regime where a better ratio costs nothing. The win is MODEST
-      // by measurement — 4% at 20k vectors (layout-identical A/B) —
-      // because the int8 codes are ~2/3 of the bytes and random codes
-      // compress under nothing; the metadata columns are what shrink
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("cell").parquet(s"$dir/$segName")
-
-    // the pack+assign staging table is fully consumed (counts collected,
-    // postings written) — free its blocks before returning instead of
-    // letting per-build generations pile up in the storage pool
-    rows.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-    import spark.implicits._
-    centroids.zip(cnorms).zipWithIndex.map { case ((c, nm), i) =>
-      val (nv, ns) = cellMeta.getOrElse(i, (0L, 1))
-      (i, c.toSeq, nm, ns, nv)
-    }.toSeq
-      .toDF("cell", "centroid", "cnorm", "nshards", "n_vectors")
-      .write.mode("overwrite").parquet(s"$dir/$centName")
-    // fresh-build commit: everything above went into fresh directories;
-    // this swap is the moment the index EXISTS for readers. A build
-    // REPLACES the index wholesale — CommitConflict on a racing writer
-    // (no merge is meaningful), fresh dirs age out via vacuum.
-    AnnStore.publish(dir,
-      AnnStore.Manifest(bv, centName, None, Seq(segName), Nil))
-
-    AnnStore.centroids(spark, dir)
-      .filter(col("n_vectors") > 0)
-      .select(col("cell"), col("n_vectors")).orderBy(col("cell"))
-  }
+      refineIters: Int = 0): DataFrame =
+    buildIndex(corpus, dir, nlistOpt, cellCap, centroidsFrom, refineIters)(
+      (_, _) => (Int8Postings, None))
 
   /** Appends a vector batch into an EXISTING index — centroids fixed,
-    * the batch lands in a FRESH cell-partitioned segment directory and
+    * the batch lands in ONE fresh segment directory ([[Segments]]) and
     * becomes visible in one [[AnnStore]] manifest swap (existing
     * segments are never rewritten or read; a reader mid-append sees
     * either the old segment list or the new one, never a partially
@@ -1063,54 +976,170 @@ object Similarity {
     * Returns per-cell APPENDED counts (cell, n_appended). */
   def appendToIvfIndex(
       batch: DataFrame, dir: String,
-      batchId: Option[Long] = None): DataFrame = {
+      batchId: Option[Long] = None): DataFrame =
+    appendToIndex(batch, dir, batchId, "appendToIvfIndex")(_ => Int8Postings)
+
+  /** One ANN tier's per-vector encode — the only part of the build and
+    * append pipelines that differs by tier: `stage` adds the tier's
+    * working columns over (vec_id, embedding), and `payload` projects
+    * its posting columns from them. */
+  private final case class PostingEncode(
+      stage: DataFrame => DataFrame, payload: Seq[org.apache.spark.sql.Column])
+
+  /** The int8 tier: 1 B/elem codes plus their dot and scale
+    * ([[graft.functions.Int8PackExpr]]). */
+  private val Int8Postings = PostingEncode(
+    _.withColumn("pk", VectorFunctions.int8Pack(col("embedding"))),
+    Seq(col("pk.codes").as("codes"), col("pk.cdot").as("cdot"), col("pk.m").as("m")))
+
+  /** The PQ tier: m codeword bytes plus the inflated residual norm,
+    * encoded with broadcast codebooks. */
+  private def pqPostings(
+      cbBc: org.apache.spark.broadcast.Broadcast[graft.functions.PqCodebooks]) =
+    PostingEncode(
+      _.withColumn("qv", VectorFunctions.quantize3(col("embedding")))
+        .withColumn("enc", pqEncodeUdf(cbBc)(col("qv"))),
+      Seq(col("enc._1").as("pqc"), col("enc._2").as("rn")))
+
+  /** The posting segment key: each cell lands in exactly one file of
+    * its segment, sorted by (cell, vec_id) ([[Segments]]). */
+  private val PostingKeys = Seq("cell", "vec_id")
+
+  private def centroidMatrix(centRows: Array[Row]): CentroidMatrix =
+    CentroidMatrix(centRows.map(_.getSeq[Double](1).toArray), centRows.map(_.getDouble(2)))
+
+  /** The build both tiers share. Derive the centroids (or reuse
+    * `centroidsFrom`'s), let `tier` prepare its encode from the view
+    * and the build version (PQ trains and writes its codebook
+    * generation there and names it), encode and assign once, size each
+    * cell's shard width from its count, then write the posting
+    * segment and the centroid generation and publish. Returns the
+    * non-empty cells' counts (cell, n_vectors). */
+  private def buildIndex(
+      corpus: DataFrame,
+      dir: String,
+      nlistOpt: Option[Int],
+      cellCap: Option[Int],
+      centroidsFrom: Option[String],
+      refineIters: Int)(
+      tier: (DataFrame, Long) => (PostingEncode, Option[String])): DataFrame = {
+    cellCap.foreach(cap => require(cap > 0, s"cellCap must be positive, got $cap"))
+    val spark = corpus.sparkSession
+    // fresh-build commit target: the next version over whatever (if
+    // anything) is committed at dir, all data in fresh unique dirs
+    val bv = ManifestCommit.currentVersion(dir) + 1
+    val view = corpus.select(col("vec_id"), col("embedding"))
+    val (centroids, cnorms) = centroidsFrom match {
+      case Some(src) =>
+        val rows = centroidRows(spark, src, AnnStore.read(src))
+        (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
+      case None =>
+        val total = view.count()
+        val nlist = nlistOpt.getOrElse(
+          math.max(16, math.ceil(math.sqrt(total.toDouble)).toInt))
+        val stride = math.max(1L, total / nlist)
+        deriveCentroids(view.withColumn("geom", int8GeomCol(col("embedding"))),
+          "geom", nlist, stride, refineIters)
+    }
+    val (encode, codebooks) = tier(view, bv)
+    val (rows, counts) = encodePostings(view, CentroidMatrix(centroids, cnorms), encode)
+    // per-cell counts drive BOTH the persisted metadata and the shard widths
+    val widths = counts.map { case (c, nv) =>
+      c -> cellCap.fold(1)(cap => math.max(1, math.ceil(nv / cap.toDouble).toInt))
+    }
+    val seg = ManifestCommit.uniqueName("seg", bv)
+    writePostings(rows, widths, s"$dir/$seg")
+    val cent = ManifestCommit.uniqueName("cent", bv)
+    writeCentroids(spark, centroids.zip(cnorms).zipWithIndex.map { case ((c, nm), i) =>
+      (i, c.toSeq, nm, widths.getOrElse(i, 1), counts.getOrElse(i, 0L))
+    }.toSeq, s"$dir/$cent")
+    // fresh-build commit: everything above went into fresh directories;
+    // this swap is the moment the index EXISTS for readers. A build
+    // REPLACES the index wholesale — CommitConflict on a racing writer
+    // (no merge is meaningful), fresh dirs age out via vacuum.
+    AnnStore.publish(dir, AnnStore.Manifest(bv, cent, codebooks, Seq(seg), Nil))
+    AnnStore.centroids(spark, dir)
+      .filter(col("n_vectors") > 0)
+      .select(col("cell"), col("n_vectors")).orderBy(col("cell"))
+  }
+
+  /** The append both tiers share: centroids, shard widths and (PQ)
+    * codebooks stay fixed, so the batch encodes and assigns exactly as
+    * a fixed-centroid rebuild would. One commit = one fresh segment +
+    * one refreshed centroid generation + one pointer swap (never an
+    * in-place write). The segment is written ONCE (its content depends
+    * only on the fixed centroids/widths); the count-refreshed centroid
+    * generation and the manifest retry through [[commitWithCounts]]
+    * when a concurrent writer claims the version first — append deltas
+    * commute. Returns per-cell APPENDED counts (cell, n_appended). */
+  private def appendToIndex(
+      batch: DataFrame, dir: String, batchId: Option[Long], op: String)(
+      encode: AnnStore.Manifest => PostingEncode): DataFrame = {
     val spark = batch.sparkSession
-    val sc = spark.sparkContext
-    val n = sc.defaultParallelism
     val man = AnnStore.read(dir)
-    assertNotTombstoned(batch, dir, man, "appendToIvfIndex")
+    assertNotTombstoned(batch, dir, man, op)
     val centRows = centroidRows(spark, dir, man)
-    val centroids = centRows.map(_.getSeq[Double](1).toArray)
-    val cnorms = centRows.map(_.getDouble(2))
-    val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
-
-    import spark.implicits._
-    val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
-      .toDF("cell", "nshards")
-    val rows = batch.select(col("vec_id"), col("embedding"))
-      .repartition(n, col("vec_id"))
-      .withColumn("pk", VectorFunctions.int8Pack(col("embedding")))
-      .select(
-        col("vec_id"),
-        col("pk.codes").as("codes"), col("pk.cdot").as("cdot"),
-        col("pk.m").as("m"),
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
-        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell"))
-      .join(broadcast(widths), "cell")
-      .withColumn("shard",
-        pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int"))
-      .select(col("vec_id"), col("codes"), col("cdot"), col("m"), col("nrm"),
-        col("shard"), col("cell"))
-      .localCheckpoint() // one pack+assign pass feeds count and write
-    val appended = rows.groupBy(col("cell")).agg(count(lit(1)).as("n_appended"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
+    val (rows, appended) = encodePostings(batch, centroidMatrix(centRows), encode(man))
     if (appended.nonEmpty) {
-      // one commit = one fresh segment + one refreshed centroid
-      // generation + one pointer swap (never an in-place write). The
-      // segment is written ONCE (its content depends only on the fixed
-      // centroids/widths); the count-refreshed centroid generation and
-      // the manifest retry through commitWithCounts when a concurrent
-      // writer claims the version first — append deltas commute.
       val seg = ManifestCommit.uniqueName("seg", man.version + 1)
-      rows.repartition(math.min(n, math.max(1, appended.size)), col("cell"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cell").parquet(s"$dir/$seg")
+      writePostings(rows, centRows.map(r => r.getInt(0) -> r.getInt(3)).toMap, s"$dir/$seg")
       commitWithCounts(spark, dir, man, centRows, seg = Some(seg),
         delta = appended, batchId = batchId)
     }
-
+    import spark.implicits._
     appended.toSeq.sortBy(_._1).toDF("cell", "n_appended")
+  }
+
+  /** One encode + assign pass over `vectors`, pinned: the per-cell
+    * counts and the posting write both read it (at warehouse scale this
+    * would be a persist(DISK_ONLY) staging table instead). Returns the
+    * rows (vec_id, payload…, nrm, cell) and the per-cell counts, an
+    * nlist-bounded collect. */
+  private def encodePostings(
+      vectors: DataFrame,
+      mat: CentroidMatrix,
+      encode: PostingEncode): (DataFrame, Map[Int, Long]) = {
+    val sc = vectors.sparkSession.sparkContext
+    val matBc = sc.broadcast(mat)
+    val rows = encode.stage(vectors.select(col("vec_id"), col("embedding"))
+        .repartition(sc.defaultParallelism, col("vec_id")))
+      .select((col("vec_id") +: encode.payload) ++ Seq(
+        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
+        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell")): _*)
+      .localCheckpoint()
+    val counts = rows.groupBy(col("cell")).agg(count(lit(1)))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    (rows, counts)
+  }
+
+  /** Write [[encodePostings]]' rows as one fresh posting segment, then
+    * free their pinned blocks instead of letting per-write generations
+    * pile up in the storage pool. Each row's shard is an id hash within
+    * its cell's width — id, not content: exact-duplicate masses share
+    * codes and must still spread across shards (probe replication
+    * covers every shard, so placement is free to be uniform). `cell`
+    * stays the last posting column. */
+  private def writePostings(rows: DataFrame, widths: Map[Int, Int], segDir: String): Unit = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val cols = rows.columns.filterNot(_ == "cell").map(col).toSeq
+    Segments.write(
+      rows.join(broadcast(widths.toSeq.toDF("cell", "nshards")), "cell")
+        .withColumn("shard",
+          pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int"))
+        .select(cols ++ Seq(col("shard"), col("cell")): _*),
+      segDir, PostingKeys)
+    rows.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Write one centroid generation (cell, centroid, cnorm, nshards, n_vectors). */
+  private def writeCentroids(
+      spark: SparkSession, rows: Seq[(Int, Seq[Double], Double, Int, Long)], path: String): Unit = {
+    import spark.implicits._
+    rows.toDF("cell", "centroid", "cnorm", "nshards", "n_vectors")
+      .write.mode("overwrite").parquet(path)
   }
 
   /** The centroid table of `m`'s generation as driver rows, ordered by
@@ -1142,16 +1171,12 @@ object Similarity {
       tomb: Option[String],
       delta: Map[Int, Long],
       batchId: Option[Long] = None): Unit = {
-    import spark.implicits._
     val cent = ManifestCommit.uniqueName("cent", base.version + 1)
-    baseRows
-      .map { r =>
-        val cell = r.getInt(0)
-        (cell, r.getSeq[Double](1), r.getDouble(2), r.getInt(3),
-          r.getLong(4) + delta.getOrElse(cell, 0L))
-      }.toSeq
-      .toDF("cell", "centroid", "cnorm", "nshards", "n_vectors")
-      .write.mode("overwrite").parquet(s"$dir/$cent")
+    writeCentroids(spark, baseRows.map { r =>
+      val cell = r.getInt(0)
+      (cell, r.getSeq[Double](1), r.getDouble(2), r.getInt(3),
+        r.getLong(4) + delta.getOrElse(cell, 0L))
+    }.toSeq, s"$dir/$cent")
     AnnStore.publish(dir, base.copy(version = base.version + 1,
       cent = cent,
       segments = base.segments ++ seg.toSeq,
@@ -1224,8 +1249,8 @@ object Similarity {
     * in write volume: the delete writes a TOMBSTONE segment (the ids
     * actually present, one column) plus a refreshed centroid
     * generation, and publishes both in one [[AnnStore]] manifest swap —
-    * no posting data is rewritten, no partition directory is touched,
-    * and a reader mid-delete sees either the old state or the new one.
+    * no posting data is rewritten, and a reader mid-delete sees either
+    * the old state or the new one.
     * Readers drop tombstoned ids with a broadcast anti-join
     * ([[AnnStore.postings]]); [[compactIvfIndex]] materializes the
     * tombstones and clears the list. Centroids and shard widths stay
@@ -1234,8 +1259,8 @@ object Similarity {
     * result-identical to a fresh [[buildIvfIndex]] over the surviving
     * corpus at the same centroids (the deletion law; SimilaritySpec
     * pins it and l58 gates it per query). An emptied cell simply has no
-    * live rows: probes of it match nothing, and its files fall out at
-    * the next compact+vacuum. Finding the per-cell removed counts costs
+    * live rows: probes of it match nothing, and its rows fall out at
+    * the next compact. Finding the per-cell removed counts costs
     * one postings scan (output nlist-bounded) — the id→cell map is
     * content-derived, not stored; a deployment deleting daily would
     * persist that map at ingest to skip the scan.
@@ -1272,8 +1297,8 @@ object Similarity {
       if (removed.isEmpty) committed = true
       else {
         val tomb = ManifestCommit.uniqueName("del", man.version + 1)
-        present.select(col("vec_id")).distinct()
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/$tomb")
+        Segments.write(present.select(col("vec_id")).distinct(), s"$dir/$tomb",
+          Seq("vec_id"))
         try {
           publishWithCounts(spark, dir, man, centroidRows(spark, dir, man),
             seg = None, tomb = Some(tomb),
@@ -1303,13 +1328,9 @@ object Similarity {
     * centroid generation is carried over unchanged — append/delete
     * already keep its counts current. */
   def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
-    val n = spark.sparkContext.defaultParallelism
     val man = AnnStore.read(dir)
     val seg = ManifestCommit.uniqueName("seg", man.version + 1)
-    AnnStore.postings(spark, dir, man)
-      .repartition(n, col("cell"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("cell").parquet(s"$dir/$seg")
+    Segments.write(AnnStore.postings(spark, dir, man), s"$dir/$seg", PostingKeys)
     // A compact's segment list REPLACES the state it read — but its
     // delta still COMMUTES with the mergeable mutations (round-14;
     // maintenance must not block ingest): an append's segment or a
@@ -1371,10 +1392,8 @@ object Similarity {
     val n = sc.defaultParallelism
     val man = AnnStore.read(indexDir) // ONE pointer resolve per query
     val centRows = centroidRows(spark, indexDir, man)
-    val centroids = centRows.map(_.getSeq[Double](1).toArray)
-    val cnorms = centRows.map(_.getDouble(2))
     val totalN = centRows.map(_.getLong(4)).sum
-    val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
+    val matBc = sc.broadcast(centroidMatrix(centRows))
 
     import spark.implicits._
     val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
@@ -1455,115 +1474,45 @@ object Similarity {
       ks: Int = 256,
       sampleN: Int = 16384,
       trainIters: Int = 6,
-      codebooksFrom: Option[String] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    val sc = spark.sparkContext
-    val n = sc.defaultParallelism
-    // fresh-build commit target (same discipline as buildIvfIndex)
-    val bv = ManifestCommit.currentVersion(dir) + 1
-    val segName = ManifestCommit.uniqueName("seg", bv)
-    val centName = ManifestCommit.uniqueName("cent", bv)
-    val cbName = ManifestCommit.uniqueName("cb", bv)
-    val view = corpus.select(col("vec_id"), col("embedding"))
-    val (centroids, cnorms) = centroidsFrom match {
-      case Some(src) =>
-        val rows = centroidRows(spark, src, AnnStore.read(src))
-        (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
-      case None =>
-        val total = view.count()
-        val nlist = nlistOpt.getOrElse(
-          math.max(16, math.ceil(math.sqrt(total.toDouble)).toInt))
-        val stride = math.max(1L, total / nlist)
-        deriveCentroids(view.withColumn("geom", int8GeomCol(col("embedding"))),
-          "geom", nlist, stride, refineIters)
-    }
-    val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
-
-    // codebooksFrom: reuse an existing index's trained codebooks
-    // bit-identically (the fixed-codebooks rebuild that
-    // [[appendToPqIndex]]'s parity contract is stated against — a fresh
-    // training run over a different corpus sample would encode
-    // different bytes). Otherwise train on a TOTAL-deterministic-order
-    // sample (hash, then id — ties impossible in practice but the order
-    // must not depend on them), bounded collect documented above.
-    val cb = codebooksFrom match {
-      case Some(src) => loadPqCodebooks(spark, src, AnnStore.read(src))
-      case None =>
-        val sample = view
-          .select(col("vec_id"), VectorFunctions.quantize3(col("embedding")).as("qv"))
-          .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-          .limit(sampleN)
-          .select(col("qv")).collect().map(_.getSeq[Int](0).toArray)
-        graft.functions.PqCodebooks.train(sample, m, ks, trainIters)
-    }
-    val cbBc = sc.broadcast(cb)
-
-    // one quantize+assign+encode pass, pinned (counts + write both read
-    // it) — the same staging discipline as buildIvfIndex
-    val rows = view.repartition(n, col("vec_id"))
-      .withColumn("qv", VectorFunctions.quantize3(col("embedding")))
-      .withColumn("enc", pqEncodeUdf(cbBc)(col("qv")))
-      .select(
-        col("vec_id"),
-        col("enc._1").as("pqc"), col("enc._2").as("rn"),
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
-        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell"))
-      .localCheckpoint()
-    val counts = rows.groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
-    val widths = cellCap match {
-      case Some(cap) =>
-        require(cap > 0, s"cellCap must be positive, got $cap")
-        counts.withColumn("nshards",
-          greatest(ceil(col("n_vectors") / cap.toDouble).cast("int"), lit(1)))
-      case None => counts.withColumn("nshards", lit(1))
-    }
-    val cellMeta = widths.collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getInt(2))).toMap
-
-    rows
-      .join(broadcast(widths.select(col("cell"), col("nshards"))), "cell")
-      .withColumn("shard",
-        pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int"))
-      .select(col("vec_id"), col("pqc"), col("rn"), col("nrm"),
-        col("shard"), col("cell"))
-      .repartition(n, col("cell"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("cell").parquet(s"$dir/$segName")
-
-    rows.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-    import spark.implicits._
-    // m·ks rows of dsub doubles — the whole table is ~128 KB at the
-    // defaults; serving collects it once per session
-    (0 until cb.m).flatMap { sub =>
-      (0 until cb.ks).map { code =>
-        (sub, code, (0 until cb.dsub).map(j => cb.cw(sub, code, j)))
+      codebooksFrom: Option[String] = None): DataFrame =
+    buildIndex(corpus, dir, nlistOpt, cellCap, centroidsFrom, refineIters) { (view, bv) =>
+      val spark = view.sparkSession
+      // codebooksFrom: reuse an existing index's trained codebooks
+      // bit-identically (the fixed-codebooks rebuild that
+      // [[appendToPqIndex]]'s parity contract is stated against — a fresh
+      // training run over a different corpus sample would encode
+      // different bytes). Otherwise train on a TOTAL-deterministic-order
+      // sample (hash, then id — ties impossible in practice but the order
+      // must not depend on them), bounded collect documented above.
+      val cb = codebooksFrom match {
+        case Some(src) => loadPqCodebooks(spark, src, AnnStore.read(src))
+        case None =>
+          val sample = view
+            .select(col("vec_id"), VectorFunctions.quantize3(col("embedding")).as("qv"))
+            .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+            .limit(sampleN)
+            .select(col("qv")).collect().map(_.getSeq[Int](0).toArray)
+          graft.functions.PqCodebooks.train(sample, m, ks, trainIters)
       }
-    }.toDF("sub", "code", "cw")
-      .write.mode("overwrite").parquet(s"$dir/$cbName")
-
-    centroids.zip(cnorms).zipWithIndex.map { case ((c, nm), i) =>
-      val (nv, ns) = cellMeta.getOrElse(i, (0L, 1))
-      (i, c.toSeq, nm, ns, nv)
-    }.toSeq
-      .toDF("cell", "centroid", "cnorm", "nshards", "n_vectors")
-      .write.mode("overwrite").parquet(s"$dir/$centName")
-    AnnStore.publish(dir,
-      AnnStore.Manifest(bv, centName, Some(cbName), Seq(segName), Nil))
-
-    AnnStore.centroids(spark, dir)
-      .filter(col("n_vectors") > 0)
-      .select(col("cell"), col("n_vectors")).orderBy(col("cell"))
-  }
+      import spark.implicits._
+      // m·ks rows of dsub doubles — the whole table is ~128 KB at the
+      // defaults; serving collects it once per session
+      val cbName = ManifestCommit.uniqueName("cb", bv)
+      (0 until cb.m).flatMap { sub =>
+        (0 until cb.ks).map { code =>
+          (sub, code, (0 until cb.dsub).map(j => cb.cw(sub, code, j)))
+        }
+      }.toDF("sub", "code", "cw")
+        .write.mode("overwrite").parquet(s"$dir/$cbName")
+      (pqPostings(spark.sparkContext.broadcast(cb)), Some(cbName))
+    }
 
   /** Appends a vector batch into an EXISTING PQ index —
     * [[appendToIvfIndex]] for the PQ tier: centroids AND codebooks stay
     * fixed (the batch encodes with the persisted codebooks
     * bit-identically — training is never re-run, so existing postings
     * and new ones live in one code space), the encoded batch lands in a
-    * fresh cell-partitioned segment, the centroid generation refreshes
+    * fresh segment, the centroid generation refreshes
     * its counts, and one [[AnnStore]] manifest swap publishes both. The
     * parity contract mirrors the int8 tier's: the read path after an
     * append is ROW-IDENTICAL to a fresh [[buildPqIndex]] over the full
@@ -1572,50 +1521,10 @@ object Similarity {
     * invariant per run). Returns per-cell appended counts. */
   def appendToPqIndex(
       batch: DataFrame, dir: String,
-      batchId: Option[Long] = None): DataFrame = {
-    val spark = batch.sparkSession
-    val sc = spark.sparkContext
-    val n = sc.defaultParallelism
-    val man = AnnStore.read(dir)
-    assertNotTombstoned(batch, dir, man, "appendToPqIndex")
-    val centRows = centroidRows(spark, dir, man)
-    val centroids = centRows.map(_.getSeq[Double](1).toArray)
-    val cnorms = centRows.map(_.getDouble(2))
-    val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
-    val cbBc = sc.broadcast(loadPqCodebooks(spark, dir, man))
-
-    import spark.implicits._
-    val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
-      .toDF("cell", "nshards")
-    val rows = batch.select(col("vec_id"), col("embedding"))
-      .repartition(n, col("vec_id"))
-      .withColumn("qv", VectorFunctions.quantize3(col("embedding")))
-      .withColumn("enc", pqEncodeUdf(cbBc)(col("qv")))
-      .select(
-        col("vec_id"),
-        col("enc._1").as("pqc"), col("enc._2").as("rn"),
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
-        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell"))
-      .join(broadcast(widths), "cell")
-      .withColumn("shard",
-        pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int"))
-      .select(col("vec_id"), col("pqc"), col("rn"), col("nrm"),
-        col("shard"), col("cell"))
-      .localCheckpoint() // one quantize+encode+assign pass feeds count and write
-    val appended = rows.groupBy(col("cell")).agg(count(lit(1)).as("n_appended"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-    if (appended.nonEmpty) {
-      val seg = ManifestCommit.uniqueName("seg", man.version + 1)
-      rows.repartition(math.min(n, math.max(1, appended.size)), col("cell"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("cell").parquet(s"$dir/$seg")
-      commitWithCounts(spark, dir, man, centRows, seg = Some(seg),
-        delta = appended, batchId = batchId)
-    }
-
-    appended.toSeq.sortBy(_._1).toDF("cell", "n_appended")
-  }
+      batchId: Option[Long] = None): DataFrame =
+    appendToIndex(batch, dir, batchId, "appendToPqIndex")(man =>
+      pqPostings(batch.sparkSession.sparkContext.broadcast(
+        loadPqCodebooks(batch.sparkSession, dir, man))))
 
   /** Reconstruct the persisted codebook table into the flat-array
     * [[graft.functions.PqCodebooks]] the encode/ADC primitives run on —
@@ -1704,9 +1613,7 @@ object Similarity {
     val sc = spark.sparkContext
     val n = sc.defaultParallelism
     val centRows = centroidRows(spark, indexDir, man)
-    val centroids = centRows.map(_.getSeq[Double](1).toArray)
-    val cnorms = centRows.map(_.getDouble(2))
-    val matBc = sc.broadcast(CentroidMatrix(centroids, cnorms))
+    val matBc = sc.broadcast(centroidMatrix(centRows))
     val cbBc = sc.broadcast(loadPqCodebooks(spark, indexDir, man))
 
     import spark.implicits._

@@ -84,21 +84,41 @@ class BpeSpec extends SparkSpec {
     } finally spark.conf.unset(Bpe.DriverTrainCapKey)
   }
 
-  test("a supplementary character starts as two symbols, its UTF-16 surrogate pair") {
+  test("a supplementary character starts as one symbol, its code point") {
     // tools/check_oracle.py self-checks its Python twin on the same word
     val word = "a\uD83D\uDE00b"
     val docs = Seq((1L, word)).toDF("doc_id", "text")
     def stats(merges: Seq[(String, String)]) =
       Bpe.bpeEncodeStats(docs, "doc_id", "text", merges)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(stats(Nil) === Seq((1L, 1L, 4L)))
-    assert(stats(Seq(("\uD83D", "\uDE00"))) === Seq((1L, 1L, 3L)))
-    // training's first merge (every pair counts 2; the halves store as
-    // "?", which sorts first) rejoins the pair into one symbol
+    assert(stats(Nil) === Seq((1L, 1L, 3L)))
+    assert(stats(Seq(("a", "\uD83D\uDE00"))) === Seq((1L, 1L, 2L)))
+    // both pairs count 2; "a" sorts before the emoji in UTF-8 order
     val twice = Seq((1L, s"$word $word")).toDF("doc_id", "text")
     val (_, vocab) = Bpe.bpeTrainFull(twice, "text", nMerges = 1, minPairCount = 1)
     assert(vocab.collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toSeq ===
-      Seq(word -> Seq("a", "\uD83D\uDE00", "b")))
+      Seq(word -> Seq("a\uD83D\uDE00", "b")))
+  }
+
+  test("non-BMP text: driver ≡ distributed training, and encoding ≡ the driver vocab") {
+    val e = "\uD83D\uDE00"
+    val docs = (Seq.fill(3)(s"a${e}b") ++ Seq.fill(2)(s"a${e}c")).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def run(): (Seq[(Int, String, String, Long)], Map[String, Seq[String]]) = {
+      val (m, v) = Bpe.bpeTrainFull(docs, "text", nMerges = 3, minPairCount = 2)
+      (m.orderBy(col("rank")).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq,
+        v.collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap)
+    }
+    val driver = run()
+    assert(driver._1 === Seq((0, "a", e, 5L), (1, s"a$e", "b", 3L), (2, s"a$e", "c", 2L)))
+    spark.conf.set(Bpe.DriverTrainCapKey, "0")
+    try assert(run() === driver)
+    finally spark.conf.unset(Bpe.DriverTrainCapKey)
+    val pieces = Bpe.bpeEncodeSelf(docs, "doc_id", "text", nMerges = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val text = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(pieces == text.map { case (id, w) => id -> driver._2(w).length.toLong })
   }
 
   test("null and empty text: zero stats, row survives") {

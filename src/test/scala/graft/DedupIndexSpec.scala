@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{Dedup, DedupIndex, LlmQueries, ManifestCommit}
+import graft.operators.{Dedup, DedupIndex, LlmQueries, ManifestCommit, Segments}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -17,25 +17,6 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def prefixDirs(segDir: String): Seq[java.io.File] =
     new java.io.File(segDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bprefix=")).toSeq
-
-  /** The one segment layout: no `bprefix=` directories, every file
-    * sorted by (bprefix, bkey), and each prefix in exactly one file.
-    * Returns the segment's files. */
-  private def assertOneLayout(segDir: String): Seq[java.io.File] = {
-    import spark.implicits._
-    val files = parquetFiles(new java.io.File(segDir))
-    assert(prefixDirs(segDir).isEmpty && files.nonEmpty,
-      s"$segDir must hold plain parquet files and no prefix directories")
-    val perFile = files.map { f =>
-      spark.read.parquet(f.getAbsolutePath).select($"bprefix", $"bkey")
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    }
-    perFile.foreach(rows => assert(rows == rows.sorted, "a segment file must be (bprefix, bkey)-sorted"))
-    val prefixSets = perFile.map(_.map(_._1).toSet)
-    assert(prefixSets.map(_.size).sum == prefixSets.reduce(_ ++ _).size,
-      "every prefix must land in exactly one file of its segment")
-    files
-  }
 
   /** The pushed-down data filters of every index scan in `df`'s plan. */
   private def pushedFilters(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -163,7 +144,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "probe-row-reuse append wrote different band rows than the recompute path")
     // the fold's seed build and its appends all write the one layout,
     // and the grown generation holds exactly a fresh build's band rows
-    DedupIndex.readManifest(foldDir).segments.foreach(s => assertOneLayout(s"$foldDir/$s"))
+    DedupIndex.readManifest(foldDir).segments.foreach(s => assertOneLayout(s"$foldDir/$s", "bprefix", "bkey"))
     val freshDir = tempDir("dix_fold_fresh")
     DedupIndex.build(docs.join(fold.keys.toSeq.toDF("doc_id"), "doc_id"),
       "doc_id", "text", freshDir)
@@ -191,7 +172,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(m.segments.size == 1 && m.tombstones.isEmpty,
       s"compaction must publish exactly one segment, got $m")
     // every prefix lands in exactly one (bprefix, bkey)-sorted file
-    assertOneLayout(s"$dir/${m.segments.head}")
+    assertOneLayout(s"$dir/${m.segments.head}", "bprefix", "bkey")
     val rowsAfter = DedupIndex.readBands(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(rowsAfter == rowsBefore, "compaction must not change row content")
@@ -217,6 +198,9 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     DedupIndex.build(docs, "doc_id", "text", dir)
     val deleted = docs.filter($"doc_id" % 5 === 2).select($"doc_id")
     DedupIndex.delete(deleted, "doc_id", dir)
+    // a tombstone set is a segment too: one batch-sized, doc_id-sorted file
+    assert(assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).tombstones.head}",
+      "doc_id").size == 1)
     val refDir = tempDir("dix_del_ref")
     DedupIndex.build(docs.filter($"doc_id" % 5 =!= 2), "doc_id", "text", refDir)
 
@@ -306,7 +290,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // a batch-sized append (~167 docs) writes one file
     DedupIndex.append(docs.filter($"doc_id" % 3 === 1), "doc_id", "text", dir)
     val Seq(seg, delta) = DedupIndex.readManifest(dir).segments
-    assert(assertOneLayout(s"$dir/$delta").size == 1,
+    assert(assertOneLayout(s"$dir/$delta", "bprefix", "bkey").size == 1,
       "a batch-sized append must write ONE file")
     val conf = spark.sparkContext.hadoopConfiguration
     def assertBloom(pfile: java.io.File): Unit = {
@@ -339,14 +323,14 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
             "every key a row group holds must hit its bloom filter")
           // sized to the group: within the bound, and within ~4× the
           // ~1.21 B per distinct key a 1 % filter needs (1 KB floor)
-          assert(bf.getBitsetSize <= DedupIndex.BloomMaxBytes,
-            s"filter ${bf.getBitsetSize} B exceeds the ${DedupIndex.BloomMaxBytes} B bound")
+          assert(bf.getBitsetSize <= Segments.BloomMaxBytes,
+            s"filter ${bf.getBitsetSize} B exceeds the ${Segments.BloomMaxBytes} B bound")
           assert(bf.getBitsetSize <= math.max(1024, 5 * groupKeys.distinct.size),
             s"filter ${bf.getBitsetSize} B for ${groupKeys.distinct.size} keys is not sized to its group")
         }
       } finally reader.close()
     }
-    assertOneLayout(s"$dir/$seg").foreach(assertBloom)
+    assertOneLayout(s"$dir/$seg", "bprefix", "bkey").foreach(assertBloom)
     parquetFiles(new java.io.File(s"$dir/$delta")).foreach(assertBloom)
   }
 
@@ -365,7 +349,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try DedupIndex.append(batch, "doc_id", "text", dir)
     finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    val files = assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).segments.last}")
+    val files = assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).segments.last}", "bprefix", "bkey")
     assert(files.size > 1, s"a large append must write several files, got ${files.size}")
     val ref = tempDir("dix_big_ref")
     DedupIndex.build(docs, "doc_id", "text", ref)
@@ -403,7 +387,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     DedupIndex.append(batch, "doc_id", "text", dir)
     val segs = DedupIndex.readManifest(dir).segments
     assert(segs.size == 3 && segs(1) == legacy, s"got $segs")
-    Seq(segs(0), segs(2)).foreach(s => assertOneLayout(s"$dir/$s"))
+    Seq(segs(0), segs(2)).foreach(s => assertOneLayout(s"$dir/$s", "bprefix", "bkey"))
     val ref = tempDir("dix_mixed_ref")
     DedupIndex.build(docs.filter($"doc_id" % 4 =!= 3), "doc_id", "text", ref)
     val refV1 = tempDir("dix_mixed_ref_v1")
@@ -434,7 +418,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "both current-layout segments' scans must push the bprefix IN")
     // the next compact rewrites the legacy segment into the one layout
     DedupIndex.compact(spark, dir)
-    assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).segments.head}")
+    assertOneLayout(s"$dir/${DedupIndex.readManifest(dir).segments.head}", "bprefix", "bkey")
     assert(bandRows(DedupIndex.readBands(spark, dir)) == bandRows(DedupIndex.readBands(spark, ref)))
   }
 

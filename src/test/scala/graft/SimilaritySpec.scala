@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.VectorFunctions
-import graft.operators.{LlmQueries, Similarity, TextAnalysis}
+import graft.operators.{AnnStore, LlmQueries, ManifestCommit, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -217,6 +217,8 @@ class SimilaritySpec extends SparkSpec {
     // persisted metadata agrees (the read path's corpus size comes from
     // the centroid table, never a postings scan)
     assert(counts.agg(sum(col("n_vectors"))).head().getLong(0) == emb.count())
+    // the one segment layout: plain files, each cell in exactly one
+    assertOneLayout(s"$dir/${AnnStore.read(dir).segments.head}", "cell", "vec_id")
     // the postings ARE the int8 tier: 1 B/elem codes + three scalars
     val post = Similarity.indexPostings(spark, dir)
     assert(post.columns.toSet ==
@@ -269,6 +271,7 @@ class SimilaritySpec extends SparkSpec {
       centroidsFrom = Some(dirA))
     // completeness: every corpus vector posted exactly once
     assert(counts.agg(sum(col("n_vectors"))).head().getLong(0) == emb.count())
+    assertOneLayout(s"$dirB/${AnnStore.read(dirB).segments.head}", "cell", "vec_id")
     // the postings ARE the PQ tier: m one-byte codes + two scalars
     val post = Similarity.indexPostings(spark, dirB)
     assert(post.columns.toSet ==
@@ -376,6 +379,10 @@ class SimilaritySpec extends SparkSpec {
       batch.select(col("vec_id"), col("embedding")), dir1)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(appended.values.sum == batch.count())
+    // both segments in the one layout; the batch-sized append is ONE file
+    val segs = AnnStore.read(dir1).segments
+    assertOneLayout(s"$dir1/${segs.head}", "cell", "vec_id")
+    assert(assertOneLayout(s"$dir1/${segs.last}", "cell", "vec_id").size == 1)
     // metadata refresh: centroid table counts now cover the full corpus
     val meta = Similarity.indexCentroids(spark, dir1)
     assert(meta.agg(sum(col("n_vectors"))).head().getLong(0) == emb.count())
@@ -396,6 +403,7 @@ class SimilaritySpec extends SparkSpec {
     val removed = Similarity.deleteFromIvfIndex(delIds, dir1)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(removed.values.sum == delIds.count(), "every id must be removed once")
+    assert(assertOneLayout(s"$dir1/${AnnStore.read(dir1).tombstones.head}", "vec_id").size == 1)
     // bookkeeping refresh: counts cover exactly the survivors, and the
     // LIVE posting view agrees (tombstoned rows are invisible to every
     // reader even though no posting file was rewritten)
@@ -417,7 +425,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.deleteFromIvfIndex(delIds, dir1).count() == 0)
     // emptied-cell handling: delete EVERYTHING in some cell — the LIVE
     // view shows no rows for it, and a compact (which materializes the
-    // tombstones) + vacuum physically drops its partition directory
+    // tombstones) physically drops its rows
     val firstCell = Similarity.indexPostings(spark, dir1)
       .select(col("cell")).orderBy(col("cell")).head().getInt(0)
     val cellIds = Similarity.indexPostings(spark, dir1)
@@ -433,14 +441,14 @@ class SimilaritySpec extends SparkSpec {
     val preCompact = stableRows()
     Similarity.compactIvfIndex(spark, dir1)
     graft.operators.AnnStore.vacuum(dir1)
-    // post-compact: one segment, zero tombstones, row-identical view,
-    // and the emptied cell's files are GONE from disk
+    // post-compact: one segment in the one layout, zero tombstones,
+    // row-identical view, and the emptied cell's rows are GONE from disk
     val man = graft.operators.AnnStore.read(dir1)
     assert(man.segments.size == 1 && man.tombstones.isEmpty)
     assert(stableRows().sameElements(preCompact))
-    assert(!new java.io.File(
-      s"$dir1/${man.segments.head}/cell=$firstCell").exists(),
-      "an emptied cell's partition directory must be dropped by compact")
+    assert(assertOneLayout(s"$dir1/${man.segments.head}", "cell", "vec_id")
+      .forall(f => spark.read.parquet(f.getAbsolutePath).filter(col("cell") === firstCell).isEmpty),
+      "no file of the compacted segment may hold a row of the emptied cell")
   }
 
   test("PQ index append: serve after append ≡ fixed-centroid+codebook rebuild; delete law holds on the PQ tier") {
@@ -453,6 +461,8 @@ class SimilaritySpec extends SparkSpec {
     val appended = Similarity.appendToPqIndex(batch, dir1)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(appended.values.sum == batch.count())
+    assert(assertOneLayout(s"$dir1/${AnnStore.read(dir1).segments.last}",
+      "cell", "vec_id").size == 1)
     // metadata refresh covers the full corpus
     assert(Similarity.indexCentroids(spark, dir1)
       .agg(sum(col("n_vectors"))).head().getLong(0) == corpus.count())
@@ -485,6 +495,69 @@ class SimilaritySpec extends SparkSpec {
       centroidsFrom = Some(dir1), codebooksFrom = Some(dir1)).count()
     assert(sorted(Similarity.pqTopKIndexed(remaining, remaining, dir1, 3))
       .sameElements(sorted(Similarity.pqTopKIndexed(remaining, remaining, dir3, 3))))
+  }
+
+  test("mixed-layout ANN generations: a legacy cell-partitioned segment reads ≡ a fresh build; compact rewrites it") {
+    val corpus = emb.select(col("vec_id"), col("embedding"))
+    val live = corpus.filter(col("vec_id") % 4 =!= 3)
+    // binary codes hexed, so row equality is value equality
+    def stable(df: DataFrame): Set[Seq[Any]] =
+      df.select(df.schema.fields.map(f =>
+        if (f.dataType == org.apache.spark.sql.types.BinaryType) hex(col(f.name)).as(f.name)
+        else col(f.name)).toSeq: _*).collect().map(_.toSeq).toSet
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString)
+    val ivf = tempDir("graft_mixed_ivf")
+    val pq = tempDir("graft_mixed_pq")
+    Similarity.buildIvfIndex(corpus.filter(col("vec_id") % 4 === 0), ivf).count()
+    Similarity.buildPqIndex(corpus.filter(col("vec_id") % 4 === 0), pq,
+      centroidsFrom = Some(ivf)).count()
+    val ivfRef = tempDir("graft_mixed_ivf_ref")
+    val pqRef = tempDir("graft_mixed_pq_ref")
+    for ((dir, append) <- Seq[(String, (DataFrame, String, Option[Long]) => DataFrame)](
+        ivf -> Similarity.appendToIvfIndex, pq -> Similarity.appendToPqIndex)) {
+      // a current-layout append, re-committed in the LEGACY layout
+      // (partitioned by cell, as every ANN writer wrote before) in place
+      // of its current-layout copy, then a current-layout append on top
+      append(corpus.filter(col("vec_id") % 4 === 2), dir, None).count()
+      val m = AnnStore.read(dir)
+      val legacy = ManifestCommit.uniqueName("seg", m.version + 1)
+      spark.read.parquet(s"$dir/${m.segments(1)}").repartition(col("cell"))
+        .sortWithinPartitions(col("cell"), col("vec_id"))
+        .write.partitionBy("cell").parquet(s"$dir/$legacy")
+      assert(new java.io.File(s"$dir/$legacy").listFiles().exists(_.getName.startsWith("cell=")))
+      val v = m.version + 1
+      ManifestCommit.commit(dir, v, Seq(v.toString, AnnStore.FormatTag, m.cent,
+        m.codebooks.getOrElse("-"), Seq(m.segments.head, legacy).mkString(","), "", "-"))
+      append(corpus.filter(col("vec_id") % 4 === 1), dir, None).count()
+      assert(AnnStore.read(dir).segments.size == 3)
+    }
+    // fresh fixed-centroid (and fixed-codebook) builds over the same rows
+    Similarity.buildIvfIndex(live, ivfRef, centroidsFrom = Some(ivf)).count()
+    Similarity.buildPqIndex(live, pqRef, centroidsFrom = Some(pq),
+      codebooksFrom = Some(pq)).count()
+    def assertReadsLikeRef(): Unit = {
+      for ((dir, ref) <- Seq(ivf -> ivfRef, pq -> pqRef)) {
+        val got = Similarity.indexPostings(spark, dir)
+        assert(got.columns.toSeq == Similarity.indexPostings(spark, ref).columns.toSeq)
+        assert(got.columns.last == "cell")
+        assert(stable(got) == stable(Similarity.indexPostings(spark, ref)))
+        assert(stable(spark.sql(s"SELECT * FROM graft_ann_postings('$dir')")) ==
+          stable(spark.sql(s"SELECT * FROM graft_ann_postings('$ref')")))
+      }
+      assert(sorted(Similarity.ivfTopKIndexed(live, live, ivf, 3))
+        .sameElements(sorted(Similarity.ivfTopKIndexed(live, live, ivfRef, 3))))
+      assert(sorted(Similarity.pqTopKIndexed(live, live, pq, 3))
+        .sameElements(sorted(Similarity.pqTopKIndexed(live, live, pqRef, 3))))
+    }
+    assertReadsLikeRef()
+    // compact rewrites the legacy segment into the one layout
+    Seq(ivf, pq).foreach { dir =>
+      Similarity.compactIvfIndex(spark, dir)
+      val segs = AnnStore.read(dir).segments
+      assert(segs.size == 1)
+      segs.foreach(s => assertOneLayout(s"$dir/$s", "cell", "vec_id"))
+    }
+    assertReadsLikeRef()
   }
 
   test("ANN manifest commits: mid-compact reader keeps its generation; vacuum reclaims only garbage") {

@@ -27,6 +27,28 @@ abstract class SparkSpec extends AnyFunSuite {
     p.toString
   }
 
+  /** The one segment layout ([[graft.operators.Segments]]): `segDir`
+    * holds plain parquet files and no `<column>=<value>` directory,
+    * every file is sorted by `sortCols`, and each value of the first
+    * sort column lands in exactly one file. Returns the segment's files. */
+  def assertOneLayout(segDir: String, sortCols: String*): Seq[java.io.File] = {
+    val entries = new java.io.File(segDir).listFiles().toSeq
+    val files = entries.filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty && !entries.exists(f => f.isDirectory && f.getName.contains("=")),
+      s"$segDir must hold plain parquet files and no partition directories")
+    val keys = sortCols.map(org.apache.spark.sql.functions.col)
+    val perFile = files.map { f =>
+      val df = spark.read.parquet(f.getAbsolutePath).select(keys: _*)
+      val rows = df.collect().toSeq
+      assert(rows == df.orderBy(keys: _*).collect().toSeq,
+        s"$f must be sorted by (${sortCols.mkString(", ")})")
+      rows.map(_.get(0)).toSet
+    }
+    assert(perFile.map(_.size).sum == perFile.reduce(_ ++ _).size,
+      s"every ${sortCols.head} must land in exactly one file of $segDir")
+    files
+  }
+
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
     finally Iterator.continually(tempDirs.poll()).takeWhile(_ != null)

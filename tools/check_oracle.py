@@ -437,16 +437,10 @@ def bpe_merge_pass(syms, l, r):         # Bpe.mergePass: one greedy
     return out
 
 
-def jvm_str(s):  # a JVM string of these code units as Spark stores it:
-    # a whole surrogate pair is one character, a lone half encodes as "?"
-    t = s.encode("utf-16-le", "surrogatepass").decode("utf-16-le", "surrogatepass")
-    return "".join("?" if 0xD800 <= ord(c) <= 0xDFFF else c for c in t)
-
-
 def bpe_train_py(docs, n_merges=24, min_pair_count=2):   # Bpe.bpeTrainFull
     # overlapping adjacent-pair counts weighted by word freq; winner =
-    # (count desc, left asc, right asc) in the UTF-8 binary order of the
-    # symbols as the engine stores them; the merge table holds them so
+    # (count desc, left asc, right asc) — Python's code-point string
+    # order is the engine's UTF-8 binary order
     from collections import Counter
     freq = Counter()
     for _, t in docs:
@@ -455,9 +449,8 @@ def bpe_train_py(docs, n_merges=24, min_pair_count=2):   # Bpe.bpeTrainFull
         for w in t.split(" "):
             if w:
                 freq[w] += 1
-    # Bpe.scala's word split: UTF-16 code units, so a surrogate pair
-    # starts as two symbols
-    vocab = {w: [chr(u) for u in utf16_units(w)] for w in freq}
+    # Bpe.symbols: one symbol per code point
+    vocab = {w: list(w) for w in freq}
     merges = []
     for rank in range(n_merges):
         pc = Counter()
@@ -467,11 +460,10 @@ def bpe_train_py(docs, n_merges=24, min_pair_count=2):   # Bpe.bpeTrainFull
                 pc[(a, b)] += f
         if not pc:
             break
-        (l, r), c = min(pc.items(), key=lambda kv: (
-            -kv[1], jvm_str(kv[0][0]).encode("utf-8"), jvm_str(kv[0][1]).encode("utf-8")))
+        (l, r), c = min(pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
         if c < min_pair_count:
             break
-        merges.append((rank, jvm_str(l), jvm_str(r), c))
+        merges.append((rank, l, r, c))
         for w in vocab:
             vocab[w] = bpe_merge_pass(vocab[w], l, r)
     return merges, vocab
@@ -486,7 +478,7 @@ def bpe_encode_py(docs, merges):        # Bpe.bpeEncodeStats
         toks = [w for w in t.split(" ") if w]
         pieces = 0
         for w in toks:
-            syms = [chr(u) for u in utf16_units(w)]
+            syms = list(w)
             for _, l, r, _ in merges:
                 if len(syms) <= 1:
                     break
@@ -496,15 +488,12 @@ def bpe_encode_py(docs, merges):        # Bpe.bpeEncodeStats
     return rows
 
 
-# self-check: a supplementary character starts as two symbols (its UTF-16
-# surrogate pair), and merging the pair rejoins it (BpeSpec pins the same)
+# self-check: a supplementary character starts as one symbol, its code
+# point, as in Bpe.symbols (BpeSpec pins the same word)
 _W = "a\U0001F600b"
-assert [chr(u) for u in utf16_units(_W)] == ["a", "\ud83d", "\ude00", "b"]
-assert bpe_encode_py([(1, _W)], []) == [(1, 1, 4)]
-assert bpe_encode_py([(1, _W)], [(0, "\ud83d", "\ude00", 1)]) == [(1, 1, 3)]
-assert jvm_str("\ud83d" + "\ude00") == "\U0001F600" and jvm_str("\ud83d") == "?"
-assert [jvm_str(x) for x in bpe_train_py([(1, _W + " " + _W)], 1, 1)[1][_W]] == \
-    ["a", "\U0001F600", "b"]
+assert bpe_encode_py([(1, _W)], []) == [(1, 1, 3)]
+assert bpe_encode_py([(1, _W)], [(0, "a", "\U0001F600", 1)]) == [(1, 1, 2)]
+assert bpe_train_py([(1, _W + " " + _W)], 1, 1)[1][_W] == ["a\U0001F600", "b"]
 
 
 CDC_GEAR = [splitmix_mix((0x9E6C63D0A2849B1F + i * GOLD) & M64) for i in range(256)]
