@@ -9,27 +9,26 @@ import org.apache.spark.sql.functions._
   * their append/delete/compact maintenance ops).
   *
   * Layout under an index `dir`:
-  *   - `MANIFEST` — one small text file naming the CURRENT state: a
-  *     version, the live centroid generation, the optional codebook
-  *     generation (PQ), the live posting SEGMENT directories, and the
-  *     live TOMBSTONE directories. Every mutation writes its data into
-  *     FRESH directories and then swaps the manifest in one atomic
-  *     rename — a reader resolves the pointer once and sees exactly one
-  *     generation, never a half-written mix. This is the object-store
-  *     commit shape (Iceberg/Delta-style pointer swap; on S3 the rename
-  *     becomes a conditional PUT of the pointer object) and it replaces
-  *     the former layout's in-place `postings/` appends and
-  *     dynamic-partition delete rewrites, which were atomic only per
-  *     file and raced readers that listed partitions mid-mutation.
+  *   - `MANIFEST` — one small text file naming the CURRENT state, in
+  *     the one [[ManifestCommit.Record]] codec (`store=ann-index`): the
+  *     version, the `cent=` centroid generation, the optional
+  *     `codebooks=` generation (PQ), the live posting SEGMENT and
+  *     TOMBSTONE directories, the per-cell vector counts (`counts=`,
+  *     `cell:n` pairs) and the ingest stamp. Every mutation writes its
+  *     data into FRESH directories and then swaps the manifest in one
+  *     atomic rename — a reader resolves the pointer once and sees
+  *     exactly one generation, never a half-written mix (the
+  *     object-store commit shape: Iceberg/Delta-style pointer swap; on
+  *     S3 the rename becomes a conditional PUT of the pointer object).
   *   - `seg_<v>_<hex>/` — posting segments in the one [[Segments]]
   *     layout: plain files sorted by (`cell`, `vec_id`), each cell in
   *     exactly one file, `cell` a plain last column. Segments written in
   *     the former `cell=<c>/` layout resolve to the same columns and
   *     stay readable without a reader branch until the next compact.
-  *   - `cent_<v>_<hex>/` — centroid-table generations (cell, centroid, cnorm,
-  *     nshards, n_vectors). Appends and deletes refresh the counts by
-  *     writing a new generation, never by overwriting the live one
-  *     under a reader.
+  *   - `cent_<v>_<hex>/` — the centroid table (cell, centroid, cnorm,
+  *     nshards), written once by the build. Every column is fixed for
+  *     the index's life; the counts that appends and deletes change
+  *     ride the manifest instead, so no mutation rewrites this table.
   *   - `cb_<v>_<hex>/` — PQ codebook generations (immutable after build —
   *     appends reuse them bit-identically).
   *   - `del_<v>_<hex>/` — tombstones: one `vec_id` column, the ids a delete
@@ -38,68 +37,51 @@ import org.apache.spark.sql.functions._
   *     byte-identical to the pre-manifest one); [[Similarity
   *     .compactIvfIndex]] materializes them and clears the list.
   *
-  * Concurrency (round-13, same discipline as [[DedupIndex]]): append
-  * and delete deltas commute — [[Similarity]]'s maintenance paths
-  * retry a lost version claim by re-deriving the count-refreshed
-  * centroid generation against the winner's base (two interleaved
-  * appends both land with posting-exact counts, spec-pinned with real
-  * threads); compact and build throw
-  * [[ManifestCommit.CommitConflict]] on a race (their segment lists
-  * REPLACE — no merge exists). A tombstoned id stays suppressed until
-  * a compact clears the tombstone list, so re-ingesting a previously
-  * deleted id requires a compact first — ENFORCED by the appends'
-  * tombstone-intersection guard, not just documented. */
+  * Concurrency (same discipline as [[DedupIndex]]): append deltas
+  * commute — a segment joins the list and its per-cell counts add, and
+  * a lost version claim re-applies the same delta to the winner
+  * ([[ManifestCommit.commitDelta]]; two interleaved appends both land
+  * with posting-exact counts, spec-pinned with real threads). A delete
+  * recomputes its tombstone and counts against the winner, and a
+  * compact merges a racing append or delete
+  * ([[ManifestCommit.commitCompact]]); a build throws
+  * [[ManifestCommit.CommitConflict]] on a race. A tombstoned id stays
+  * suppressed until a compact clears the tombstone list, so re-ingesting
+  * a previously deleted id requires a compact first — ENFORCED by the
+  * appends' tombstone-intersection guard, not just documented. */
 object AnnStore {
 
-  /** `batchId` (round-14): the exactly-once ingest stamp the other two
-    * persisted tiers already carry — the highest ingest batch APPLIED,
-    * riding the same atomic manifest swap as the batch's effects, so a
-    * streaming embedding sink skips a redelivered batch via
-    * [[lastBatchId]] with no state-written-but-not-marked window.
-    * Monotone under max; carried forward through unstamped mutations
-    * (delete, compact) — their effects never un-apply a batch. */
+  /** `counts`: live vectors per cell (cells with none are absent).
+    * `batchId`: the exactly-once ingest stamp — the highest ingest batch
+    * APPLIED, riding the same atomic manifest swap as the batch's
+    * effects, so a streaming embedding sink skips a redelivered batch
+    * via [[lastBatchId]]; carried forward through unstamped mutations
+    * (delete, compact). */
   final case class Manifest(
       version: Long,
       cent: String,
       codebooks: Option[String],
       segments: Seq[String],
       tombstones: Seq[String],
-      batchId: Option[Long] = None)
+      batchId: Option[Long] = None,
+      counts: Map[Int, Long] = Map.empty) {
+    private[graft] def record = ManifestCommit.Record(version, Store,
+      Map("cent" -> cent) ++ codebooks.map("codebooks" -> _),
+      segments, tombstones, counts, batchId)
+  }
+
+  private[operators] val Store = "ann-index"
+
+  private def manifest(r: ManifestCommit.Record): Manifest =
+    Manifest(r.version, r("cent"), r.own.get("codebooks"), r.segments,
+      r.tombstones, r.batchId, r.counts)
 
   /** Does `dir` hold a committed index? (One pointer-file stat.) */
   def exists(dir: String): Boolean = ManifestCommit.exists(dir)
 
-  /** Layout version tag, line 1 of every manifest (line 0 stays the
-    * commit version — the protocol-wide convention). A future layout
-    * change bumps the tag so old stores fail LOUDLY at parse instead of
-    * being misread silently. Stores written before tagging shipped (no
-    * tag line; fields one position earlier, no batch stamp) are still
-    * readable — a centroid-generation name can never collide with the
-    * `graft-ann-index/` prefix, so the legacy layout is unambiguous; a
-    * DIFFERENT tag under the prefix is the only loud-fail case. */
-  private[graft] val FormatTag = "graft-ann-index/1"
-  private val TagPrefix = "graft-ann-index/"
-
-  private def parse(lines: Array[String]): Manifest = {
-    def list(s: String): Seq[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    def at(i: Int): String = if (lines.length > i) lines(i).trim else ""
-    def opt(s: String): Option[String] = Option(s).filter(x => x.nonEmpty && x != "-")
-    if (at(1) == FormatTag)
-      Manifest(at(0).toLong, at(2), opt(at(3)), list(at(4)), list(at(5)),
-        opt(at(6)).map(_.toLong))
-    else if (at(1).startsWith(TagPrefix))
-      throw new IllegalArgumentException(
-        s"unrecognized ann-index manifest format '${at(1)}' — this reader " +
-          s"understands $FormatTag (layout change?)")
-    else // pre-tag legacy layout: version, cent, codebooks, segments, tombstones
-      Manifest(at(0).toLong, at(1), opt(at(2)), list(at(3)), list(at(4)), None)
-  }
-
   /** Resolve the current manifest — one small driver-side read; the
     * 100 TB analog is one GET of the pointer object. */
-  def read(dir: String): Manifest =
-    parse(ManifestCommit.readPointer(dir))
+  def read(dir: String): Manifest = manifest(ManifestCommit.read(dir, Store))
 
   /** Resolve a PAST committed state (snapshot read / time travel) —
     * every publish also writes an immutable `MANIFEST.v<N>`, so any
@@ -107,42 +89,26 @@ object AnnStore {
     * reproducibility hook for pinning the index snapshot a serving or
     * eval run used. */
   def readAt(dir: String, version: Long): Manifest =
-    parse(ManifestCommit.readVersioned(dir, version))
+    manifest(ManifestCommit.readAt(dir, version, Store))
 
-  private def serialize(m: Manifest): Seq[String] = Seq(
-    m.version.toString, FormatTag, m.cent, m.codebooks.getOrElse("-"),
-    m.segments.mkString(","), m.tombstones.mkString(","),
-    m.batchId.map(_.toString).getOrElse("-"))
+  /** The highest ingest batch id any committed mutation applied
+    * ([[ManifestCommit.lastBatchId]]) — survives interleaved unstamped
+    * mutations (delete, compact). */
+  def lastBatchId(dir: String): Option[Long] = ManifestCommit.lastBatchId(dir, Store)
 
-  /** The highest ingest batch id any committed mutation applied — the
-    * exactly-once predicate for a streaming embedding-ingest sink: skip
-    * a redelivered batch iff `lastBatchId(dir).exists(_ >= bid)` (batch
-    * ids are monotone). Survives interleaved unstamped mutations
-    * (delete, compact) — see [[Manifest.batchId]]. */
-  def lastBatchId(dir: String): Option[Long] =
-    if (!exists(dir)) None else read(dir).batchId
-
-  /** Publish a new index state at exactly `m.version`: write the
-    * immutable versioned manifest (an atomic no-overwrite claim), then
-    * swap the pointer. A reader resolves either the old pointer or the
-    * new one — never a mix. Throws [[ManifestCommit.CommitConflict]]
-    * when another writer claimed the version first — the mutation was
-    * computed against a stale base; [[Similarity]]'s append/delete
-    * paths catch it and retry against the fresh base (their deltas
-    * commute — segment/tombstone lists union, centroid counts re-add),
-    * compact aborts (its segment list REPLACES, no merge exists). */
-  private[operators] def publish(dir: String, m: Manifest): Unit =
-    ManifestCommit.commit(dir, m.version, serialize(m))
-
-  /** The live centroid table of the manifest's current generation. */
+  /** The live centroid table: the build's (cell, centroid, cnorm,
+    * nshards) rows with `n_vectors` from the manifest's counts (0 for a
+    * cell with no live vector). */
   def centroids(spark: SparkSession, dir: String): DataFrame =
     centroids(spark, dir, read(dir))
 
   private[graft] def centroids(
-      spark: SparkSession, dir: String, m: Manifest): DataFrame =
-    // centroid generations are write-once (mutations publish a fresh
-    // `cent_<v>_<hex>` dir) — resolve once per generation per session
+      spark: SparkSession, dir: String, m: Manifest): DataFrame = {
+    import spark.implicits._
     GenerationCache.directory(spark, s"$dir/${m.cent}")
+      .join(broadcast(m.counts.toSeq.toDF("cell", "n_vectors")), Seq("cell"), "left")
+      .na.fill(0L, Seq("n_vectors"))
+  }
 
   /** The live PQ codebook table (build-immutable). */
   def codebooks(spark: SparkSession, dir: String): DataFrame = {
@@ -203,10 +169,5 @@ object AnnStore {
       dir: String,
       retainVersions: Int = 0,
       minAgeMs: Long = ManifestCommit.DefaultVacuumMinAgeMs): Unit =
-    ManifestCommit.vacuum(dir,
-      lines => {
-        val m = parse(lines)
-        m.segments ++ m.tombstones ++ m.codebooks.toSeq :+ m.cent
-      },
-      Set.empty, retainVersions, minAgeMs)
+    ManifestCommit.vacuum(dir, Store, retainVersions, minAgeMs)
 }

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * Layout under `dir` (commits via [[ManifestCommit]] — the shared
   * Hadoop-FileSystem module, so the index runs against `file://`,
   * `hdfs://`, or any registered scheme):
-  *   - `MANIFEST` — one small text file naming the CURRENT state: a
-  *     version number, the list of live band SEGMENT directories, and
-  *     the list of live TOMBSTONE directories. Every mutation (build /
+  *   - `MANIFEST` — one small text file naming the CURRENT state, in
+  *     the one [[ManifestCommit.Record]] codec (`store=dedup-index`):
+  *     the version, the `meta=` generation, the live band SEGMENT and
+  *     TOMBSTONE directories and the ingest stamp. Every mutation (build /
   *     append / delete / compact) writes its data into a FRESH
   *     uniquely-named directory, CLAIMS the immutable `MANIFEST.v<N>`
   *     (no-overwrite rename — the Delta-shaped put-if-absent) and then
@@ -52,15 +53,17 @@ import org.apache.spark.sql.functions._
   *     the still-live segments were not built with — queries would have
   *     computed wrong band keys silently.
   *
-  * Concurrency (round-13: OPTIMISTIC, no external lock needed for the
-  * mergeable mutations): append and delete commute — on a lost version
-  * claim they retry-merge against the winner's committed manifest
-  * ([[ManifestCommit.commitLoop]]; two interleaved appends both land,
-  * spec-pinned with real threads). Whole-state rewrites (build,
-  * compact) have no valid merge and throw
-  * [[ManifestCommit.CommitConflict]] on a race instead of silently
-  * dropping the other writer. Vacuum's in-flight age guard keeps a
-  * concurrent writer's not-yet-committed segment safe.
+  * Concurrency (OPTIMISTIC, no external lock needed for the mergeable
+  * mutations): append and delete commute — on a lost version claim they
+  * retry-merge against the winner's committed manifest
+  * ([[ManifestCommit.commitDelta]]; two interleaved appends both land,
+  * spec-pinned with real threads). A compact merges a racing append or
+  * delete on top of its compacted segment
+  * ([[ManifestCommit.commitCompact]]); a build, or a compact racing a
+  * build or compact, has no valid merge and throws
+  * [[ManifestCommit.CommitConflict]] instead of silently dropping the
+  * other writer. Vacuum's in-flight age guard keeps a concurrent
+  * writer's not-yet-committed segment safe.
   *
   * Determinism: signatures are seeded splitmix64 minima over FNV
   * shingle hashes ([[graft.functions.MinHashSigExpr]]) and band keys
@@ -86,47 +89,23 @@ object DedupIndex {
 
   /** The resolved state of an index: the parameterization (meta)
     * generation, which segment directories are live, which tombstone
-    * directories apply, and (when the last mutation was a stamped
-    * ingest append) the micro-batch id that produced it — the
-    * exactly-once stamp riding the commit itself. */
+    * directories apply, and the ingest stamp — the highest micro-batch
+    * id any committed mutation applied, riding the commit itself. */
   final case class Manifest(
       version: Long, meta: String, segments: Seq[String],
-      tombstones: Seq[String], batchId: Option[Long] = None)
-
-  /** Layout version tag, line 1 of every manifest (line 0 stays the
-    * commit version — the protocol-wide convention). A future layout
-    * change bumps the tag so old stores fail LOUDLY at parse instead of
-    * being misread silently. Stores written before tagging shipped
-    * (layout /1: no tag line, fields one position earlier, meta in the
-    * fixed `meta/` directory instead of a manifest-referenced
-    * generation) are still READABLE — a segment-list line can never
-    * collide with the `graft-dedup-index/` prefix, so the legacy layout
-    * is unambiguous; a DIFFERENT tag under the prefix (a future layout)
-    * is the only loud-fail case. The first post-upgrade MUTATION
-    * re-serializes in the current layout. */
-  private[graft] val FormatTag = "graft-dedup-index/2"
-  private val TagPrefix = "graft-dedup-index/"
-
-  private def parseManifest(lines: Array[String]): Manifest = {
-    def list(s: String): Seq[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    def at(i: Int): String = if (lines.length > i) lines(i).trim else ""
-    def opt(s: String): Option[Long] =
-      Option(s).filter(v => v.nonEmpty && v != "-").map(_.toLong)
-    if (at(1) == FormatTag)
-      Manifest(lines(0).trim.toLong, at(2), list(at(3)), list(at(4)), opt(at(5)))
-    else if (at(1).startsWith(TagPrefix))
-      throw new IllegalArgumentException(
-        s"unrecognized dedup-index manifest format '${at(1)}' — this " +
-          s"reader understands $FormatTag (layout change?)")
-    else // legacy /1: version, segments, tombstones, batchId; meta/ fixed dir
-      Manifest(lines(0).trim.toLong, "meta", list(at(1)), list(at(2)), opt(at(3)))
+      tombstones: Seq[String], batchId: Option[Long] = None) {
+    private[graft] def record = ManifestCommit.Record(
+      version, Store, Map("meta" -> meta), segments, tombstones, batchId = batchId)
   }
+
+  private val Store = "dedup-index"
+
+  private def manifest(r: ManifestCommit.Record): Manifest =
+    Manifest(r.version, r("meta"), r.segments, r.tombstones, r.batchId)
 
   /** Resolve the current manifest. One small driver-side read — the
     * 100 TB analog is one GET of the pointer object. */
-  def readManifest(dir: String): Manifest =
-    parseManifest(ManifestCommit.readPointer(dir))
+  def readManifest(dir: String): Manifest = manifest(ManifestCommit.read(dir, Store))
 
   /** Resolve a PAST committed state (snapshot read / time travel):
     * every publish also writes an immutable `MANIFEST.v<N>`, so any
@@ -135,42 +114,7 @@ object DedupIndex {
     * Throws if the version was never published or its manifest file was
     * vacuumed away. */
   def readManifestAt(dir: String, version: Long): Manifest =
-    parseManifest(ManifestCommit.readVersioned(dir, version))
-
-  private def serialize(m: Manifest): Seq[String] = Seq(
-    m.version.toString, FormatTag, m.meta,
-    m.segments.mkString(","), m.tombstones.mkString(","),
-    m.batchId.map(_.toString).getOrElse("-"))
-
-  /** Stamp = the highest ingest batch APPLIED to the index — monotone
-    * under the max, carried forward through unstamped mutations
-    * (delete, compact, a manual append): their effects never un-apply
-    * a batch, and clearing the stamp would let a redelivered batch
-    * through [[lastBatchId]]'s `exists(_ >= bid)` guard and re-append
-    * its band rows (query+append is explicitly non-idempotent). */
-  private def mergeStamp(base: Option[Long], supplied: Option[Long]): Option[Long] =
-    (base.toSeq ++ supplied.toSeq).reduceOption(_ max _)
-
-  /** Optimistic append-style commit: merge this mutation's delta into
-    * whatever base manifest is current at claim time (appends and
-    * deletes commute — segment/tombstone list unions), retrying via
-    * [[ManifestCommit.commitLoop]] when another writer claims the
-    * version first. Two interleaved appends both land, in either
-    * serialization. */
-  private def commitDelta(
-      dir: String,
-      newSegments: Seq[String],
-      newTombstones: Seq[String],
-      batchId: Option[Long]): Unit = {
-    ManifestCommit.commitLoop(dir) { (v, baseLines) =>
-      val m = parseManifest(baseLines.getOrElse(sys.error(
-        s"dedup index at $dir has no manifest — build it first")))
-      serialize(m.copy(version = v,
-        segments = m.segments ++ newSegments,
-        tombstones = m.tombstones ++ newTombstones,
-        batchId = mergeStamp(m.batchId, batchId)))
-    }: Unit
-  }
+    manifest(ManifestCommit.readAt(dir, version, Store))
 
   /** The live band table: union of the manifest's segments minus its
     * tombstoned docs. Resolved from ONE manifest read, so a DataFrame
@@ -235,8 +179,7 @@ object DedupIndex {
     // a build REPLACES the index wholesale — no merge with a concurrent
     // writer is meaningful, so claim exactly one version (CommitConflict
     // on a race; the fresh directories age out via vacuum)
-    ManifestCommit.commit(dir, v,
-      serialize(Manifest(v, metaDir, Seq(seg), Nil, batchId)))
+    ManifestCommit.publish(dir, Manifest(v, metaDir, Seq(seg), Nil, batchId).record)
   }
 
   /** Append a new batch's band rows to an existing index (reads the
@@ -257,22 +200,16 @@ object DedupIndex {
     val (k, bands, shingleN) = meta(docs, dir)
     val seg = ManifestCommit.uniqueName("seg", readManifest(dir).version + 1)
     writeBands(docs, idCol, textCol, dir, shingleN, k, bands, seg)
-    commitDelta(dir, Seq(seg), Nil, batchId)
+    ManifestCommit.commitDelta(dir, Store, segments = Seq(seg), batchId = batchId): Unit
   }
 
   /** The highest ingest batch id any committed mutation has applied
-    * (None before the index exists or before any stamped ingest). The
-    * exactly-once predicate for a streaming ingest sink: skip a
-    * redelivered batch iff `lastBatchId(dir).exists(_ >= bid)` — the
-    * stamp rode the same atomic manifest swap that published the
-    * batch's effects, so there is no state-written-but-not-marked
-    * window (the separate marker-file shape had exactly that window).
-    * The stamp SURVIVES interleaved unstamped mutations — a weekly
-    * delete/compact between two micro-batches must not reopen the
-    * redelivery window (see [[mergeStamp]]). */
-  def lastBatchId(dir: String): Option[Long] =
-    if (!ManifestCommit.exists(dir)) None
-    else readManifest(dir).batchId
+    * (None before the index exists or before any stamped ingest) — the
+    * exactly-once predicate for a streaming ingest sink
+    * ([[ManifestCommit.lastBatchId]]). The stamp SURVIVES interleaved
+    * unstamped mutations: a weekly delete/compact between two
+    * micro-batches must not reopen the redelivery window. */
+  def lastBatchId(dir: String): Option[Long] = ManifestCommit.lastBatchId(dir, Store)
 
   /** Delete docs from the index — the takedown/opt-out maintenance op a
     * 100 TB corpus runs weekly. O(|ids|): writes ONE tombstone segment
@@ -286,10 +223,10 @@ object DedupIndex {
     val del = ManifestCommit.uniqueName("del", readManifest(dir).version + 1)
     Segments.write(ids.select(col(idCol).cast("long").as("doc_id")).distinct(),
       s"$dir/$del", Seq("doc_id"))
-    // batchId = None: the delete itself is no ingest batch, but the
-    // commit CARRIES the existing stamp forward (mergeStamp) — a
-    // redelivered micro-batch after a weekly delete must still skip
-    commitDelta(dir, Nil, Seq(del), None)
+    // no stamp: the delete is no ingest batch, but the commit CARRIES
+    // the existing stamp forward — a redelivered micro-batch after a
+    // weekly delete must still skip
+    ManifestCommit.commitDelta(dir, Store, tombstones = Seq(del)): Unit
   }
 
   /** Survivors of `incoming` against the indexed corpus: drops every
@@ -420,7 +357,7 @@ object DedupIndex {
             s"$dir/$seg")
           // batch ordinal rides the swap — the fold's appends carry the
           // same atomic exactly-once stamp the streaming sink checks
-          commitDelta(dir, Seq(seg), Nil, Some(i.toLong))
+          ManifestCommit.commitDelta(dir, Store, segments = Seq(seg), batchId = Some(i.toLong))
           s
         }
       kept.select(col(idCol), lit(i).as("ingest_batch"))
@@ -566,39 +503,11 @@ object DedupIndex {
     val m = readManifest(dir)
     val seg = ManifestCommit.uniqueName("seg", m.version + 1)
     writeBandRows(readBands(spark, dir, m), s"$dir/$seg")
-    // A compact's segment list REPLACES the state it read — but its
-    // delta still COMMUTES with the mergeable mutations (round-14;
-    // maintenance must not block ingest): an append's segment or a
-    // delete's tombstone committed while we were rewriting applies ON
-    // TOP of the compacted generation, because the compacted segment
-    // materializes exactly the base's rows-minus-tombstones and later
-    // tombstones anti-join it like any other segment. The merged
-    // manifest is the sequentially-consistent "compact at its read
-    // point, then the winner's deltas": compacted segment + the
-    // winner's NEW segments, the winner's NEW tombstones only (the
-    // base's are materialized). Only a concurrent whole-state rewrite
-    // (build/compact — the winner's lists no longer contain our base's)
-    // has no merge and still aborts with CommitConflict.
-    var base = m
-    var done = false
-    while (!done) {
-      try {
-        ManifestCommit.commit(dir, base.version + 1, serialize(Manifest(
-          base.version + 1, base.meta,
-          seg +: base.segments.filterNot(m.segments.contains),
-          base.tombstones.filterNot(m.tombstones.contains),
-          base.batchId)))
-        done = true
-      } catch {
-        case e: ManifestCommit.CommitConflict =>
-          val w = readManifest(dir)
-          val mergeable = w.meta == m.meta &&
-            m.segments.forall(w.segments.contains) &&
-            m.tombstones.forall(w.tombstones.contains)
-          if (!mergeable) throw e
-          base = w
-      }
-    }
+    // the compacted segment REPLACES the lists it read; an append or
+    // delete that won the race applies on top of it
+    // ([[ManifestCommit.commitCompact]]), a racing rebuild or compact
+    // aborts with CommitConflict
+    ManifestCommit.commitCompact(dir, m.record, seg)
   }
 
   /** Remove directories and snapshot manifests outside the retention
@@ -617,11 +526,7 @@ object DedupIndex {
       dir: String,
       retainVersions: Int = 0,
       minAgeMs: Long = ManifestCommit.DefaultVacuumMinAgeMs): Unit =
-    ManifestCommit.vacuum(dir,
-      lines => {
-        val m = parseManifest(lines); m.meta +: (m.segments ++ m.tombstones)
-      },
-      Set.empty, retainVersions, minAgeMs)
+    ManifestCommit.vacuum(dir, Store, retainVersions, minAgeMs)
 
   private def meta(df: DataFrame, dir: String): (Int, Int, Int) =
     metaAt(df.sparkSession, dir, readManifest(dir).meta)

@@ -61,6 +61,14 @@ import org.apache.spark.sql.SparkSession
   * the instance is private ([[FileSystem.newInstance]]) so the setting
   * never leaks into Spark's own cached FileSystem.
   *
+  * The three stores write ONE manifest codec ([[Record]]: version,
+  * [[FormatTag]], then `key=value` fields with a `store=` kind) and
+  * share its merges: the commuting append/delete delta
+  * ([[commitDelta]]), the compact merge ([[commitCompact]]) and the
+  * ingest-stamp rule ([[mergeStamp]]). The raw line API below
+  * ([[readPointer]], [[tryCommit]], [[commitLoop]]) is the protocol the
+  * codec runs on.
+  *
   * [[vacuum]] distinguishes three kinds of non-live entry:
   *   - manifests/directories REFERENCED by some on-disk manifest
   *     version outside the retention window — published garbage,
@@ -545,6 +553,165 @@ object ManifestCommit {
     sys.error(s"commit loop at $dir failed to converge after $guard rounds")
   }
 
+  // ------------------------------------------------------------------
+  // The manifest codec — one format for every store
+  // ------------------------------------------------------------------
+
+  /** Line 1 of every store manifest. Line 0 stays the commit version
+    * (what [[currentVersion]], [[commitLoop]] and [[vacuum]] read); the
+    * lines after the tag are `key=value`, one of them `store=<kind>`. A
+    * layout change bumps the tag, so a reader fails loudly on a layout
+    * it does not know instead of misreading it. */
+  private[graft] val FormatTag = "graft-manifest/1"
+
+  /** One store manifest, as the codec reads and writes it. The fields
+    * the stores share are typed here, so the merges below own them once:
+    * the live segment and tombstone directories, the per-cell vector
+    * counts (ANN) and the ingest stamp — the highest batch applied.
+    * `own` holds the store's other fields, each the name of a
+    * generation directory the manifest references (dedup `meta`, ANN
+    * `cent`/`codebooks`, state-table `gen`). On disk a list is
+    * comma-joined, counts are `cell:count` pairs, and an empty list,
+    * empty map or absent value writes no line. */
+  final case class Record(
+      version: Long,
+      store: String,
+      own: Map[String, String],
+      segments: Seq[String] = Nil,
+      tombstones: Seq[String] = Nil,
+      counts: Map[Int, Long] = Map.empty,
+      batchId: Option[Long] = None) {
+    /** A required `own` field — a manifest without it fails loudly. */
+    def apply(key: String): String = own.getOrElse(key,
+      throw new IllegalArgumentException(s"$store manifest v$version has no '$key' field"))
+  }
+
+  private val SharedKeys = Set("store", "segments", "tombstones", "counts", "batch")
+
+  private[graft] def encode(r: Record): Seq[String] = {
+    val fields = r.own ++ Map(
+      "segments" -> r.segments.mkString(","),
+      "tombstones" -> r.tombstones.mkString(","),
+      "counts" -> r.counts.toSeq.sorted.map { case (c, n) => s"$c:$n" }.mkString(","),
+      "batch" -> r.batchId.fold("")(_.toString))
+    Seq(r.version.toString, FormatTag, s"store=${r.store}") ++
+      fields.toSeq.filter(_._2.nonEmpty).sorted.map { case (k, v) => s"$k=$v" }
+  }
+
+  private def decode(dir: String, store: String)(lines: Array[String]): Record = {
+    val tag = lines.lift(1).fold("")(_.trim)
+    if (tag != FormatTag)
+      throw new IllegalArgumentException(s"unrecognized manifest format '$tag' at " +
+        s"$dir — this reader understands $FormatTag (layout change?)")
+    val fields = lines.drop(2).map(_.trim).filter(_.nonEmpty).map { l =>
+      val i = l.indexOf('=')
+      if (i <= 0) throw new IllegalArgumentException(s"malformed manifest line '$l' at $dir")
+      l.take(i) -> l.drop(i + 1)
+    }.toMap
+    val found = fields.getOrElse("store", "")
+    if (found != store)
+      throw new IllegalArgumentException(s"$dir holds a '$found' manifest, not a '$store' one")
+    def list(k: String): Seq[String] = fields.get(k).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+    Record(lines(0).trim.toLong, store, fields -- SharedKeys,
+      list("segments"), list("tombstones"),
+      list("counts").map { e =>
+        val i = e.indexOf(':'); e.take(i).toInt -> e.drop(i + 1).toLong
+      }.toMap,
+      fields.get("batch").map(_.toLong))
+  }
+
+  /** The current manifest of the `store` at `dir` — one small
+    * driver-side read through the self-healing [[readPointer]]. */
+  def read(dir: String, store: String): Record = decode(dir, store)(readPointer(dir))
+
+  /** The manifest committed as `version` (snapshot read / time travel).
+    * Throws FileNotFoundException if never published or vacuumed away. */
+  def readAt(dir: String, version: Long, store: String): Record =
+    decode(dir, store)(readVersioned(dir, version))
+
+  /** The highest ingest batch id any committed mutation applied (None
+    * before the store exists or before any stamped mutation) — the
+    * exactly-once predicate of a streaming sink: skip a redelivered
+    * batch iff `lastBatchId(dir, store).exists(_ >= bid)`. The stamp
+    * rode the same manifest swap that published the batch's effects, so
+    * there is no state-written-but-not-marked window. */
+  def lastBatchId(dir: String, store: String): Option[Long] =
+    if (exists(dir)) read(dir, store).batchId else None
+
+  /** The stamp rule: the highest batch APPLIED — monotone under max and
+    * carried through unstamped mutations (delete, compact, a manual
+    * publish). Their effects never un-apply a batch, and clearing the
+    * stamp would let a redelivered batch through [[lastBatchId]]'s
+    * guard and apply it twice. */
+  def mergeStamp(base: Option[Long], supplied: Option[Long]): Option[Long] =
+    (base.toSeq ++ supplied.toSeq).reduceOption(_ max _)
+
+  /** Single-shot commit of `r` at exactly `r.version` ([[commit]]) —
+    * builds and whole-state publishes; throws [[CommitConflict]]. */
+  def publish(dir: String, r: Record): Unit = commit(dir, r.version, encode(r))
+
+  /** [[publish]] that returns false instead of throwing on a lost claim. */
+  def tryPublish(dir: String, r: Record): Boolean = tryCommit(dir, r.version, encode(r))
+
+  /** `base` with a mergeable delta applied, as version `v`: segment and
+    * tombstone lists append, per-cell counts add (a cell that reaches 0
+    * leaves the map) and the stamp merges ([[mergeStamp]]). */
+  def withDelta(
+      base: Record,
+      v: Long,
+      segments: Seq[String] = Nil,
+      tombstones: Seq[String] = Nil,
+      counts: Map[Int, Long] = Map.empty,
+      batchId: Option[Long] = None): Record =
+    base.copy(version = v,
+      segments = base.segments ++ segments,
+      tombstones = base.tombstones ++ tombstones,
+      counts = (base.counts.keySet ++ counts.keySet).iterator
+        .map(c => c -> (base.counts.getOrElse(c, 0L) + counts.getOrElse(c, 0L)))
+        .filter(_._2 != 0L).toMap,
+      batchId = mergeStamp(base.batchId, batchId))
+
+  /** Commit a delta that commutes with any concurrent commit — an
+    * append's segment and count delta, a dedup delete's tombstone: on a
+    * lost claim the loop applies the same delta to the winner's
+    * manifest and retries ([[commitLoop]]), so two interleaved appends
+    * both land, in either order, with counts that add up. A delta that
+    * is a function of the base's live view (the ANN delete's counts)
+    * must recompute against the winner instead. Returns the version. */
+  def commitDelta(
+      dir: String,
+      store: String,
+      segments: Seq[String] = Nil,
+      tombstones: Seq[String] = Nil,
+      counts: Map[Int, Long] = Map.empty,
+      batchId: Option[Long] = None): Long =
+    commitLoop(dir) { (v, base) =>
+      val b = base.getOrElse(throw new java.io.FileNotFoundException(
+        s"no $store at $dir — build it first"))
+      encode(withDelta(decode(dir, store)(b), v, segments, tombstones, counts, batchId))
+    }
+
+  /** Commit a compaction of `from`: one fresh `segment` holding `from`'s
+    * live rows replaces its segments and materializes its tombstones.
+    * It commutes with the deltas — on a lost claim the winner's NEW
+    * segments and tombstones apply on top of the compacted segment (the
+    * serialization "compact at its read point, then the winner"), and
+    * the winner's counts and stamp carry over. A winner with another
+    * build identity (`own`), or one that dropped part of `from`'s lists
+    * (a rebuild or another compact), has no merge: [[CommitConflict]]. */
+  def commitCompact(dir: String, from: Record, segment: String): Unit = {
+    var base = from
+    while (!tryPublish(dir, base.copy(version = base.version + 1,
+        segments = segment +: base.segments.filterNot(from.segments.contains),
+        tombstones = base.tombstones.filterNot(from.tombstones.contains)))) {
+      base = read(dir, from.store)
+      if (base.own != from.own || !from.segments.forall(base.segments.contains) ||
+          !from.tombstones.forall(base.tombstones.contains))
+        throw new CommitConflict(s"$dir was rebuilt or compacted since version " +
+          s"${from.version} — re-run the compact")
+    }
+  }
+
   /** Reclaim entries outside the retention window. `refsOf` maps a
     * store's manifest lines to the data-directory names it references;
     * `keepAlways` names store-level entries outside the manifest
@@ -608,4 +775,11 @@ object ManifestCommit {
         swapPointerLocked(f, base, curV, cur.toSeq)
       }
   }
+
+  /** [[vacuum]] for a codec store: a manifest references its segments,
+    * its tombstones and every `own` generation. */
+  def vacuum(dir: String, store: String, retainVersions: Int, minAgeMs: Long): Unit =
+    vacuum(dir, lines => {
+      val r = decode(dir, store)(lines); r.own.values.toSeq ++ r.segments ++ r.tombstones
+    }, Set.empty, retainVersions, minAgeMs)
 }

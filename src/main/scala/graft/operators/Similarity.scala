@@ -909,12 +909,12 @@ object Similarity {
     * [[AnnStore]] manifest generations (atomic pointer swap — the
     * object-store commit shape; every mutation writes fresh
     * directories and publishes, readers resolve the pointer once):
-    *   - `centroids` (a `cent_<v>` generation): (cell, centroid array<double>, cnorm, nshards,
-    *     n_vectors) — nlist rows. Carrying the per-cell posting count
-    *     and shard width HERE means the read path never scans postings
-    *     for bookkeeping (the corpus size for the top-k strategy switch
-    *     is Σ n_vectors over nlist rows) and the hot-cell probe fanout
-    *     has its input without a count job.
+    *   - `centroids` (a `cent_<v>` generation): (cell, centroid array<double>, cnorm,
+    *     nshards) — nlist rows, written once. The per-cell posting
+    *     counts ride the manifest (`counts=`) and the shard widths this
+    *     table, so the read path never scans postings for bookkeeping
+    *     (the corpus size for the top-k strategy switch is Σ counts) and
+    *     the hot-cell probe fanout has its input without a count job.
     *   - `postings` (`seg_<v>` segments): (vec_id, codes BINARY, cdot, m, nrm, shard, cell),
     *     in the one [[Segments]] layout keyed by (cell, vec_id) — each
     *     cell in exactly one file — the INT8 tier made durable: 1 byte per
@@ -967,8 +967,8 @@ object Similarity {
     * existing [0, nshards) range, so probe replication still covers
     * every member); a cell that outgrows its width only loosens the
     * skew bound — rebuild (or re-cap) to restore it, exactly like
-    * re-bucketing a table. The centroid table's n_vectors is refreshed
-    * (nlist driver-side rows), keeping the read path scan-free.
+    * re-bucketing a table. The batch's per-cell counts add to the
+    * manifest's in the same commit, keeping the read path scan-free.
     * `batchId`: optional exactly-once ingest stamp — rides the manifest
     * swap ([[AnnStore.lastBatchId]]), so a streaming embedding sink
     * skips a redelivered batch with no state-written-but-not-marked
@@ -1013,8 +1013,8 @@ object Similarity {
     * and the build version (PQ trains and writes its codebook
     * generation there and names it), encode and assign once, size each
     * cell's shard width from its count, then write the posting
-    * segment and the centroid generation and publish. Returns the
-    * non-empty cells' counts (cell, n_vectors). */
+    * segment and the centroid generation and publish them with the
+    * counts. Returns the non-empty cells' counts (cell, n_vectors). */
   private def buildIndex(
       corpus: DataFrame,
       dir: String,
@@ -1050,28 +1050,33 @@ object Similarity {
     val seg = ManifestCommit.uniqueName("seg", bv)
     writePostings(rows, widths, s"$dir/$seg")
     val cent = ManifestCommit.uniqueName("cent", bv)
-    writeCentroids(spark, centroids.zip(cnorms).zipWithIndex.map { case ((c, nm), i) =>
-      (i, c.toSeq, nm, widths.getOrElse(i, 1), counts.getOrElse(i, 0L))
-    }.toSeq, s"$dir/$cent")
+    import spark.implicits._
+    centroids.zip(cnorms).zipWithIndex.map { case ((c, nm), i) =>
+      (i, c.toSeq, nm, widths.getOrElse(i, 1))
+    }.toSeq.toDF("cell", "centroid", "cnorm", "nshards")
+      .write.mode("overwrite").parquet(s"$dir/$cent")
     // fresh-build commit: everything above went into fresh directories;
     // this swap is the moment the index EXISTS for readers. A build
     // REPLACES the index wholesale — CommitConflict on a racing writer
     // (no merge is meaningful), fresh dirs age out via vacuum.
-    AnnStore.publish(dir, AnnStore.Manifest(bv, cent, codebooks, Seq(seg), Nil))
-    AnnStore.centroids(spark, dir)
-      .filter(col("n_vectors") > 0)
-      .select(col("cell"), col("n_vectors")).orderBy(col("cell"))
+    ManifestCommit.publish(dir,
+      AnnStore.Manifest(bv, cent, codebooks, Seq(seg), Nil, counts = counts).record)
+    counts.toSeq.sorted.toDF("cell", "n_vectors")
   }
 
   /** The append both tiers share: centroids, shard widths and (PQ)
     * codebooks stay fixed, so the batch encodes and assigns exactly as
     * a fixed-centroid rebuild would. One commit = one fresh segment +
-    * one refreshed centroid generation + one pointer swap (never an
-    * in-place write). The segment is written ONCE (its content depends
-    * only on the fixed centroids/widths); the count-refreshed centroid
-    * generation and the manifest retry through [[commitWithCounts]]
-    * when a concurrent writer claims the version first — append deltas
-    * commute. Returns per-cell APPENDED counts (cell, n_appended). */
+    * one pointer swap whose manifest adds the batch's per-cell counts
+    * (never an in-place write, and no centroid rewrite). The segment is
+    * written ONCE (its content depends only on the fixed
+    * centroids/widths); when a concurrent writer claims the version
+    * first, [[ManifestCommit.commitDelta]] re-applies the same delta to
+    * the winner — an append's rows are new ids, disjoint by
+    * construction from anything a concurrent writer appended or
+    * tombstoned (a racing delete only tombstones ids present in its
+    * base), so its counts stay exact against any winner. Returns
+    * per-cell APPENDED counts (cell, n_appended). */
   private def appendToIndex(
       batch: DataFrame, dir: String, batchId: Option[Long], op: String)(
       encode: AnnStore.Manifest => PostingEncode): DataFrame = {
@@ -1083,8 +1088,8 @@ object Similarity {
     if (appended.nonEmpty) {
       val seg = ManifestCommit.uniqueName("seg", man.version + 1)
       writePostings(rows, centRows.map(r => r.getInt(0) -> r.getInt(3)).toMap, s"$dir/$seg")
-      commitWithCounts(spark, dir, man, centRows, seg = Some(seg),
-        delta = appended, batchId = batchId)
+      ManifestCommit.commitDelta(dir, AnnStore.Store, segments = Seq(seg),
+        counts = appended, batchId = batchId)
     }
     import spark.implicits._
     appended.toSeq.sortBy(_._1).toDF("cell", "n_appended")
@@ -1134,98 +1139,22 @@ object Similarity {
     }.foreach(_.unpersist(blocking = false))
   }
 
-  /** Write one centroid generation (cell, centroid, cnorm, nshards, n_vectors). */
-  private def writeCentroids(
-      spark: SparkSession, rows: Seq[(Int, Seq[Double], Double, Int, Long)], path: String): Unit = {
-    import spark.implicits._
-    rows.toDF("cell", "centroid", "cnorm", "nshards", "n_vectors")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** The centroid table of `m`'s generation as driver rows, ordered by
-    * cell (nlist rows — the bounded collect every append, probe and
-    * count refresh reads). A centroid generation is write-once, so its
-    * rows are decoded once per generation per session
+  /** The centroid table of `m`'s generation as driver rows (cell,
+    * centroid, cnorm, nshards), ordered by cell — the nlist-bounded
+    * collect every append and probe reads. Every column is fixed at
+    * build, so the rows are decoded once per generation per session
     * ([[GenerationCache.scalar]], as [[loadPqCodebooks]]) — an index
-    * parameter, not a query result: every commit publishes a fresh
-    * `cent_<v>_<hex>`, so the first read after a write misses. */
+    * parameter, not a query result — and the cache outlives appends and
+    * deletes. The counts those change come from the manifest on every
+    * call (`m.counts`), never from this cache. */
   private def centroidRows(
       spark: SparkSession, dir: String, m: AnnStore.Manifest): Array[Row] =
     GenerationCache.scalar(spark, s"centrows|$dir/${m.cent}")(
-      AnnStore.centroids(spark, dir, m).orderBy(col("cell")).collect())
-
-  /** Single-shot count-refreshed publish against an EXACT base: write a
-    * fresh centroid generation carrying `base + delta` counts and claim
-    * `base.version + 1`. `baseRows` are [[centroidRows]] of `base` — an
-    * append passes the rows it just assigned against instead of
-    * collecting the same generation again. Throws
-    * [[ManifestCommit.CommitConflict]] when another writer got there
-    * first — the caller decides how to retry, because the right retry
-    * differs by mutation (see below). */
-  private def publishWithCounts(
-      spark: SparkSession,
-      dir: String,
-      base: AnnStore.Manifest,
-      baseRows: Array[Row],
-      seg: Option[String],
-      tomb: Option[String],
-      delta: Map[Int, Long],
-      batchId: Option[Long] = None): Unit = {
-    val cent = ManifestCommit.uniqueName("cent", base.version + 1)
-    writeCentroids(spark, baseRows.map { r =>
-      val cell = r.getInt(0)
-      (cell, r.getSeq[Double](1), r.getDouble(2), r.getInt(3),
-        r.getLong(4) + delta.getOrElse(cell, 0L))
-    }.toSeq, s"$dir/$cent")
-    AnnStore.publish(dir, base.copy(version = base.version + 1,
-      cent = cent,
-      segments = base.segments ++ seg.toSeq,
-      tombstones = base.tombstones ++ tomb.toSeq,
-      // stamp = highest batch APPLIED, carried through unstamped
-      // mutations (the DedupIndex/StateTable exactly-once discipline)
-      batchId = (base.batchId.toSeq ++ batchId.toSeq).reduceOption(_ max _)))
-  }
-
-  /** The optimistic-concurrency commit for APPENDS (a fresh segment +
-    * a positive per-cell count delta): on a lost claim, re-read the
-    * winner's committed base, re-derive the counts from IT (centroids
-    * and shard widths are FIXED across append/delete, so only the
-    * counts differ) and retry with the SAME delta — an append's rows
-    * are new ids, disjoint by construction from anything a concurrent
-    * writer appended or tombstoned (a racing delete can only tombstone
-    * ids PRESENT in its base, which never includes our uncommitted
-    * segment), so the original delta stays exact against any winner.
-    * Two interleaved appends both land, in either serialization, with
-    * counts that add up. DELETES must NOT use this loop: re-applying a
-    * delete's original delta against a winner that tombstoned an
-    * overlapping id double-decrements — [[deleteFromIvfIndex]] owns its
-    * retry and recomputes both tombstone and delta against the winner. */
-  private def commitWithCounts(
-      spark: SparkSession,
-      dir: String,
-      base0: AnnStore.Manifest,
-      rows0: Array[Row],
-      seg: Option[String],
-      delta: Map[Int, Long],
-      batchId: Option[Long] = None): Unit = {
-    var base = base0
-    var rows = rows0
-    var committed = false
-    while (!committed) {
-      try {
-        publishWithCounts(spark, dir, base, rows, seg, tomb = None, delta, batchId)
-        committed = true
-      } catch {
-        case _: ManifestCommit.CommitConflict =>
-          base = AnnStore.read(dir)
-          rows = centroidRows(spark, dir, base)
-      }
-    }
-  }
+      GenerationCache.directory(spark, s"$dir/${m.cent}").orderBy(col("cell")).collect())
 
   /** Guard against re-ingesting a tombstoned id: until a compact
     * materializes the deletes, the read path's anti-join would HIDE the
-    * re-appended row while the centroid counts grew — permanently
+    * re-appended row while the manifest counts grew — permanently
     * diverging `sum(n_vectors)` from the live posting view (the
     * integrity invariant and the top-k strategy-switch input). The
     * "compact first" contract is now enforced, not just documented:
@@ -1241,15 +1170,15 @@ object Similarity {
         s"$op: $clash batch id(s) are tombstoned in $dir — run " +
           "compactIvfIndex first; re-ingesting a deleted id before the " +
           "compact would stay hidden behind the tombstone anti-join " +
-          "while inflating the centroid counts")
+          "while inflating the cell counts")
     }
 
   /** Deletes vectors from an EXISTING index — the takedown/opt-out
     * maintenance op, [[appendToIvfIndex]]'s inverse, O(|deleted ids|)
     * in write volume: the delete writes a TOMBSTONE segment (the ids
-    * actually present, one column) plus a refreshed centroid
-    * generation, and publishes both in one [[AnnStore]] manifest swap —
-    * no posting data is rewritten, and a reader mid-delete sees either
+    * actually present, one column) and publishes it with the decremented
+    * per-cell counts in one [[AnnStore]] manifest swap — no posting or
+    * centroid data is rewritten, and a reader mid-delete sees either
     * the old state or the new one.
     * Readers drop tombstoned ids with a broadcast anti-join
     * ([[AnnStore.postings]]); [[compactIvfIndex]] materializes the
@@ -1270,13 +1199,13 @@ object Similarity {
     import spark.implicits._
     val del = ids.select(col("vec_id")).distinct()
     // The delete OWNS its commit retry, unlike the appends'
-    // commitWithCounts loop: a delete's tombstone AND count delta are
-    // functions of the base's LIVE view, so on a lost claim both must
-    // be recomputed against the winner — re-applying the original delta
-    // when the winner tombstoned an overlapping id would decrement the
-    // same posting twice (the read path dedups tombstones via distinct,
-    // so sum(n_vectors) would diverge from the live view permanently —
-    // the exact invariant the tombstone guard protects). Recomputing
+    // commitDelta: a delete's tombstone AND count delta are functions of
+    // the base's LIVE view, so on a lost claim both must be recomputed
+    // against the winner — re-applying the original delta when the
+    // winner tombstoned an overlapping id would decrement the same
+    // posting twice (the read path dedups tombstones via distinct, so
+    // sum(n_vectors) would diverge from the live view permanently — the
+    // exact invariant the tombstone guard protects). Recomputing
     // `present` against the winner's manifest makes overlapping ids
     // contribute 0, whatever the serialization.
     var man = AnnStore.read(dir)
@@ -1294,22 +1223,17 @@ object Similarity {
       removed = present
         .groupBy(col("cell")).agg(count(lit(1)).as("n_removed"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      if (removed.isEmpty) committed = true
-      else {
+      committed = removed.isEmpty || {
         val tomb = ManifestCommit.uniqueName("del", man.version + 1)
         Segments.write(present.select(col("vec_id")).distinct(), s"$dir/$tomb",
           Seq("vec_id"))
-        try {
-          publishWithCounts(spark, dir, man, centroidRows(spark, dir, man),
-            seg = None, tomb = Some(tomb),
-            delta = removed.map { case (c, n) => c -> -n })
-          committed = true
-        } catch {
-          // lost the claim — re-derive everything against the winner
-          // (the orphan tombstone dir ages out via vacuum)
-          case _: ManifestCommit.CommitConflict => man = AnnStore.read(dir)
-        }
+        ManifestCommit.tryPublish(dir, ManifestCommit.withDelta(man.record,
+          man.version + 1, tombstones = Seq(tomb),
+          counts = removed.map { case (c, n) => c -> -n }))
       }
+      // lost the claim — re-derive everything against the winner (the
+      // orphan tombstone dir ages out via vacuum)
+      if (!committed) man = AnnStore.read(dir)
     }
     removed.toSeq.sortBy(_._1).toDF("cell", "n_removed")
   }
@@ -1325,41 +1249,17 @@ object Similarity {
     * reader arriving after the swap sees exactly the new one. Row
     * content is untouched modulo tombstones: a post-compaction read is
     * row-identical (spec-pinned), only the file layout changes. The
-    * centroid generation is carried over unchanged — append/delete
-    * already keep its counts current. */
+    * centroid generation and the manifest counts carry over unchanged —
+    * append/delete already keep the counts current. */
   def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
     val man = AnnStore.read(dir)
     val seg = ManifestCommit.uniqueName("seg", man.version + 1)
     Segments.write(AnnStore.postings(spark, dir, man), s"$dir/$seg", PostingKeys)
-    // A compact's segment list REPLACES the state it read — but its
-    // delta still COMMUTES with the mergeable mutations (round-14;
-    // maintenance must not block ingest): an append's segment or a
-    // delete's tombstone committed while we were rewriting applies ON
-    // TOP of the compacted generation (the compacted segment holds
-    // exactly the base's live rows; later tombstones anti-join it like
-    // any other segment, and the WINNER's centroid generation already
-    // carries the count delta its mutation applied). Merged manifest =
-    // compacted segment + the winner's NEW segments, the winner's NEW
-    // tombstones only, the winner's centroid generation. A concurrent
-    // whole-state rewrite (build/compact) has no merge — still aborts.
-    var base = man
-    var done = false
-    while (!done) {
-      try {
-        AnnStore.publish(dir, base.copy(version = base.version + 1,
-          segments = seg +: base.segments.filterNot(man.segments.contains),
-          tombstones = base.tombstones.filterNot(man.tombstones.contains)))
-        done = true
-      } catch {
-        case e: ManifestCommit.CommitConflict =>
-          val w = AnnStore.read(dir)
-          val mergeable = w.codebooks == man.codebooks &&
-            man.segments.forall(w.segments.contains) &&
-            man.tombstones.forall(w.tombstones.contains)
-          if (!mergeable) throw e
-          base = w
-      }
-    }
+    // the compacted segment REPLACES the lists it read; an append or
+    // delete that won the race applies on top of it, its counts already
+    // in the winner's manifest ([[ManifestCommit.commitCompact]]); a
+    // racing rebuild or compact aborts with CommitConflict
+    ManifestCommit.commitCompact(dir, man.record, seg)
   }
 
   /** IVF top-k answered FROM the persisted index: probe cells come from
@@ -1392,7 +1292,7 @@ object Similarity {
     val n = sc.defaultParallelism
     val man = AnnStore.read(indexDir) // ONE pointer resolve per query
     val centRows = centroidRows(spark, indexDir, man)
-    val totalN = centRows.map(_.getLong(4)).sum
+    val totalN = man.counts.values.sum
     val matBc = sc.broadcast(centroidMatrix(centRows))
 
     import spark.implicits._
@@ -1512,8 +1412,8 @@ object Similarity {
     * fixed (the batch encodes with the persisted codebooks
     * bit-identically — training is never re-run, so existing postings
     * and new ones live in one code space), the encoded batch lands in a
-    * fresh segment, the centroid generation refreshes
-    * its counts, and one [[AnnStore]] manifest swap publishes both. The
+    * fresh segment, and one [[AnnStore]] manifest swap publishes it with
+    * the batch's per-cell counts added. The
     * parity contract mirrors the int8 tier's: the read path after an
     * append is ROW-IDENTICAL to a fresh [[buildPqIndex]] over the full
     * corpus at the same centroids and codebooks (`centroidsFrom` +
@@ -1695,7 +1595,7 @@ object Similarity {
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val man = AnnStore.read(indexDir) // ONE pointer resolve per query
-    val totalN = centroidRows(spark, indexDir, man).map(_.getLong(4)).sum
+    val totalN = man.counts.values.sum
     val cand = pqCandidatesIndexed(queries, indexDir, nprobe, man)
 
     import org.apache.spark.sql.graftbridge.ColumnBridge

@@ -29,6 +29,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `MANIFEST.v<N>` + retention-vacuum scheme as [[DedupIndex]] and
   *     [[AnnStore]].
   *
+  * The manifest is the one [[ManifestCommit.Record]] codec:
+  * `store=state-table`, the generation as `gen=`, and the stamp.
+  *
   * This is the [[DedupIndex]]/[[AnnStore]] commit discipline with a
   * whole-table generation instead of segment lists — right for state
   * that each fold REWRITES (merged sketch tables are cell-grained and
@@ -43,55 +46,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * conflict path never fires there. */
 object StateTable {
 
-  final case class Manifest(version: Long, gen: String, batchId: Option[Long])
-
-  /** Layout version tag, line 1 of every manifest (line 0 stays the
-    * commit version — the protocol-wide convention [[ManifestCommit]]
-    * readers depend on). A future layout change bumps the tag, so old
-    * stores fail LOUDLY at parse instead of being misread silently.
-    * Stores written before tagging shipped (no tag line; fields one
-    * position earlier) are still readable: a generation name can never
-    * collide with the `graft-state-table/` prefix, so the legacy layout
-    * is unambiguous — a DIFFERENT tag under the prefix (a future
-    * layout) is the only loud-fail case. */
-  private[graft] val FormatTag = "graft-state-table/1"
-  private val TagPrefix = "graft-state-table/"
-
-  private def parse(lines: Array[String]): Manifest = {
-    def opt(s: String): Option[Long] =
-      Option(s.trim).filter(x => x.nonEmpty && x != "-").map(_.toLong)
-    val tag = if (lines.length > 1) lines(1).trim else ""
-    if (tag == FormatTag)
-      Manifest(lines(0).trim.toLong, lines(2).trim,
-        if (lines.length > 3) opt(lines(3)) else None)
-    else if (tag.startsWith(TagPrefix))
-      throw new IllegalArgumentException(
-        s"unrecognized state-table manifest format '$tag' — this reader " +
-          s"understands $FormatTag (layout change?)")
-    else // pre-tag legacy layout: version, gen, batchId
-      Manifest(lines(0).trim.toLong, lines(1).trim,
-        if (lines.length > 2) opt(lines(2)) else None)
+  final case class Manifest(version: Long, gen: String, batchId: Option[Long]) {
+    private[graft] def record =
+      ManifestCommit.Record(version, Store, Map("gen" -> gen), batchId = batchId)
   }
 
-  private def serialize(m: Manifest): Seq[String] = Seq(
-    m.version.toString, FormatTag, m.gen,
-    m.batchId.map(_.toString).getOrElse("-"))
+  private val Store = "state-table"
+
+  private def manifest(r: ManifestCommit.Record): Manifest =
+    Manifest(r.version, r("gen"), r.batchId)
 
   def exists(dir: String): Boolean = ManifestCommit.exists(dir)
 
-  def readManifest(dir: String): Manifest =
-    parse(ManifestCommit.readPointer(dir))
+  def readManifest(dir: String): Manifest = manifest(ManifestCommit.read(dir, Store))
 
   /** Snapshot manifest of a past publish (retention permitting). */
   def readManifestAt(dir: String, version: Long): Manifest =
-    parse(ManifestCommit.readVersioned(dir, version))
+    manifest(ManifestCommit.readAt(dir, version, Store))
 
   /** The highest batch id any committed publish has applied — the
     * exactly-once check: a foreachBatch sink skips a redelivered batch
     * iff `lastBatchId(dir).exists(_ >= bid)` (batch ids are monotone).
     * Survives unstamped publishes in between (see the object doc). */
-  def lastBatchId(dir: String): Option[Long] =
-    if (!exists(dir)) None else readManifest(dir).batchId
+  def lastBatchId(dir: String): Option[Long] = ManifestCommit.lastBatchId(dir, Store)
 
   /** The current state. One pointer resolve — the DataFrame keeps
     * seeing its generation even if a publish lands mid-query. */
@@ -133,9 +110,8 @@ object StateTable {
     val gen = ManifestCommit.uniqueName("gen", v)
     state.write.mode("overwrite").parquet(s"$dir/$gen")
     // stamp = highest batch applied; carried through unstamped publishes
-    val stamp = (cur.flatMap(_.batchId).toSeq ++ batchId.toSeq)
-      .reduceOption(_ max _)
-    ManifestCommit.commit(dir, v, serialize(Manifest(v, gen, stamp)))
+    ManifestCommit.publish(dir,
+      Manifest(v, gen, ManifestCommit.mergeStamp(cur.flatMap(_.batchId), batchId)).record)
     v
   }
 
@@ -147,6 +123,5 @@ object StateTable {
       dir: String,
       retainVersions: Int = 0,
       minAgeMs: Long = ManifestCommit.DefaultVacuumMinAgeMs): Unit =
-    ManifestCommit.vacuum(dir, lines => Seq(parse(lines).gen),
-      Set.empty, retainVersions, minAgeMs)
+    ManifestCommit.vacuum(dir, Store, retainVersions, minAgeMs)
 }

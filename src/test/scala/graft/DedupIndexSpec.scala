@@ -381,8 +381,8 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(prefixDirs(s"$dir/$legacy").nonEmpty &&
       prefixDirs(s"$dir/$legacy").forall(parquetFiles(_).size == 1))
     val v1 = base.version + 1
-    ManifestCommit.commit(dir, v1, Seq(v1.toString, DedupIndex.FormatTag, base.meta,
-      (base.segments :+ legacy).mkString(","), "", "-"))
+    ManifestCommit.publish(dir,
+      base.copy(version = v1, segments = base.segments :+ legacy, tombstones = Nil, batchId = None).record)
     val batch = docs.filter($"doc_id" % 4 === 1)
     DedupIndex.append(batch, "doc_id", "text", dir)
     val segs = DedupIndex.readManifest(dir).segments

@@ -178,9 +178,7 @@ class ManifestCommitSpec extends SparkSpec {
     // pose as a racing writer: claim the NEXT version with a manifest
     // that re-commits the current state (valid, just version-bumped) —
     // the append's first commit attempt must lose and retry on top
-    assert(ManifestCommit.tryCommit(dir, man.version + 1, Seq(
-      (man.version + 1).toString, AnnStore.FormatTag, man.cent, "-",
-      man.segments.mkString(","), man.tombstones.mkString(","))))
+    assert(ManifestCommit.tryPublish(dir, man.copy(version = man.version + 1).record))
     Similarity.appendToIvfIndex(emb.filter($"vec_id" % 2 =!= 0), dir).count()
     val after = AnnStore.read(dir)
     assert(after.version == man.version + 2,
@@ -432,53 +430,6 @@ class ManifestCommitSpec extends SparkSpec {
     // identity-mapped schemes keep resolving to the hard-link owner (the
     // probe is once-per-scheme and must not break the default path)
     assert(ManifestCommit.ownerFor("file:" + tmp("ident")).name == "hard-link")
-  }
-
-  test("legacy (pre-tag) manifests stay readable on all three stores; future tags still fail loudly") {
-    import spark.implicits._
-    // StateTable: a store written by the pre-round-14 binary — no tag
-    // line, fields one position earlier. Publish normally, then rewrite
-    // both manifest files in the legacy layout; reads must resolve the
-    // same generation and stamp.
-    val st = "file:" + tmp("legacy_st")
-    StateTable.publish((1 to 4).map(i => (i, "x")).toDF("k", "v"), st, Some(7L))
-    val m = StateTable.readManifest(st)
-    val local = st.stripPrefix("file:")
-    for (name <- Seq("MANIFEST", "MANIFEST.v1")) {
-      val w = new java.io.FileWriter(new java.io.File(local, name))
-      w.write(s"1\n${m.gen}\n7\n"); w.close()
-    }
-    assert(StateTable.readManifest(st) == m,
-      "legacy state-table layout must parse to the identical manifest")
-    assert(StateTable.read(spark, st).count() == 4)
-    assert(StateTable.lastBatchId(st).contains(7L))
-    // the first post-upgrade mutation re-serializes in the current layout
-    StateTable.publish((1 to 2).map(i => (i, "y")).toDF("k", "v"), st, Some(8L))
-    assert(ManifestCommit.readPointer(st)(1) == "graft-state-table/1")
-    // AnnStore legacy: version, cent, codebooks, segments, tombstones
-    val ann = "file:" + tmp("legacy_ann")
-    assert(ManifestCommit.tryCommit(ann, 1L,
-      Seq("1", "cent_1_aa", "-", "seg_1_aa,seg_2_bb", "")))
-    val am = AnnStore.read(ann)
-    assert(am == AnnStore.Manifest(1L, "cent_1_aa", None,
-      Seq("seg_1_aa", "seg_2_bb"), Nil, None), s"got $am")
-    // DedupIndex legacy: version, segments, tombstones, batchId — meta
-    // lived in the fixed meta/ directory
-    val dix = "file:" + tmp("legacy_dix")
-    assert(ManifestCommit.tryCommit(dix, 1L, Seq("1", "seg_1_cc", "", "3")))
-    val dm = DedupIndex.readManifest(dix)
-    assert(dm.meta == "meta" && dm.segments == Seq("seg_1_cc") &&
-      dm.tombstones.isEmpty && dm.batchId.contains(3L), s"got $dm")
-    // future layouts on the OTHER two stores fail loudly too (StateTable
-    // is pinned by the existing format-tag test)
-    val annF = "file:" + tmp("future_ann")
-    ManifestCommit.tryCommit(annF, 1L, Seq("1", "graft-ann-index/999", "c", "-", "", ""))
-    assert(intercept[IllegalArgumentException](AnnStore.read(annF))
-      .getMessage.contains("graft-ann-index/999"))
-    val dixF = "file:" + tmp("future_dix")
-    ManifestCommit.tryCommit(dixF, 1L, Seq("1", "graft-dedup-index/999", "m", "", "", "-"))
-    assert(intercept[IllegalArgumentException](DedupIndex.readManifest(dixF))
-      .getMessage.contains("graft-dedup-index/999"))
   }
 
   test("metrics: lost claims, pointer heals, and swap IO contention are counted (observable, not stderr-only)") {

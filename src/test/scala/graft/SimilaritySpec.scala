@@ -526,8 +526,8 @@ class SimilaritySpec extends SparkSpec {
         .write.partitionBy("cell").parquet(s"$dir/$legacy")
       assert(new java.io.File(s"$dir/$legacy").listFiles().exists(_.getName.startsWith("cell=")))
       val v = m.version + 1
-      ManifestCommit.commit(dir, v, Seq(v.toString, AnnStore.FormatTag, m.cent,
-        m.codebooks.getOrElse("-"), Seq(m.segments.head, legacy).mkString(","), "", "-"))
+      ManifestCommit.publish(dir, m.copy(version = v, segments = Seq(m.segments.head, legacy),
+        tombstones = Nil, batchId = None).record)
       append(corpus.filter(col("vec_id") % 4 === 1), dir, None).count()
       assert(AnnStore.read(dir).segments.size == 3)
     }
@@ -589,6 +589,51 @@ class SimilaritySpec extends SparkSpec {
     // snapshot read: the current version reads back through its
     // immutable versioned manifest even after the vacuum
     assert(graft.operators.AnnStore.readAt(dir, man.version) == man)
+  }
+
+  test("ANN cell counts ride the manifest: append, delete, compact write no centroids") {
+    val corpus = emb.select(col("vec_id"), col("embedding"))
+    val base = corpus.filter(col("vec_id") % 10 =!= 0)
+    val batch = corpus.filter(col("vec_id") % 10 === 0)
+    val dead = corpus.filter(col("vec_id") % 10 === 7).select(col("vec_id"))
+    def centDirs(d: String): Set[String] =
+      new java.io.File(d).listFiles().map(_.getName).filter(_.startsWith("cent_")).toSet
+    def postingCounts(d: String): Map[Int, Long] =
+      AnnStore.postings(spark, d).groupBy(col("cell")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    for ((tier, dir) <- Seq("ivf" -> tempDir("graft_counts_ivf"), "pq" -> tempDir("graft_counts_pq"))) {
+      if (tier == "ivf") Similarity.buildIvfIndex(base, dir, cellCap = Some(256)).count()
+      else Similarity.buildPqIndex(base, dir, cellCap = Some(256)).count()
+      val built = AnnStore.read(dir)
+      val cent = centDirs(dir)
+      assert(cent == Set(built.cent), s"$tier: the build writes one centroid generation")
+      assert(built.counts == postingCounts(dir), s"$tier: build counts")
+      val steps = Seq[(String, () => Unit)](
+        "append" -> (() =>
+          (if (tier == "ivf") Similarity.appendToIvfIndex(batch, dir)
+           else Similarity.appendToPqIndex(batch, dir)).count(): Unit),
+        "delete" -> (() => Similarity.deleteFromIvfIndex(dead, dir).count(): Unit),
+        "compact" -> (() => Similarity.compactIvfIndex(spark, dir)))
+      steps.foreach { case (step, run) =>
+        val before = AnnStore.read(dir)
+        run()
+        val m = AnnStore.read(dir)
+        assert(m.version == before.version + 1, s"$tier $step: one commit")
+        assert(centDirs(dir) == cent && m.cent == built.cent,
+          s"$tier $step must write no centroid generation: ${centDirs(dir)}")
+        assert(m.counts == postingCounts(dir), s"$tier $step: counts ≠ live postings per cell")
+        assert(AnnStore.readAt(dir, m.version - 1).counts == before.counts,
+          s"$tier $step: the previous version keeps its counts")
+        // the centroid table keeps its columns; n_vectors is the manifest's
+        val c = AnnStore.centroids(spark, dir)
+        assert(c.columns.toSeq == Seq("cell", "centroid", "cnorm", "nshards", "n_vectors"))
+        assert(c.filter(col("n_vectors") > 0).collect()
+          .map(r => r.getInt(0) -> r.getLong(4)).toMap == m.counts)
+      }
+      assert(AnnStore.read(dir).counts.values.sum == corpus.count() - dead.count())
+      AnnStore.vacuum(dir, retainVersions = 0, minAgeMs = 0L)
+      assert(centDirs(dir) == cent, s"$tier: vacuum leaves exactly the one centroid generation")
+    }
   }
 
   test("IVF hot-cell guard: sharding is result-identical and bounds the join bucket") {
