@@ -64,6 +64,13 @@ object Checkpoints {
     evicted.flatten.foreach(_.unpersist(blocking = false))
   }
 
+  /** The ids of every checkpoint RDD still registered, under any key —
+    * a call that registered a new generation changes this set. */
+  private[graft] def liveIds: Set[Int] = live.synchronized {
+    live.values().toArray(Array.empty[List[Seq[org.apache.spark.rdd.RDD[_]]]])
+      .iterator.flatMap(_.flatten).map(_.id).toSet
+  }
+
   /** Eagerly checkpoint `df`; evict generations beyond `depth` under
     * `key`. See the [[DefaultDepth]] caller contract. */
   def rotate(key: String, df: DataFrame, depth: Int = DefaultDepth): DataFrame =

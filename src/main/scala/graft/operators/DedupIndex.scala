@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
 
 /** Persisted MinHash/LSH dedup index for the TEXT tier — the analog of
   * the ANN index tier (l29–l32) for near-duplicate detection: at 100 TB
@@ -232,7 +233,13 @@ object DedupIndex {
   /** Survivors of `incoming` against the indexed corpus: drops every
     * doc with an indexed near-duplicate (shared band + agreement ≥
     * `threshold`). The corpus side is a scan filtered to the probe's
-    * own band prefixes; only the batch is ever re-banded. */
+    * own band prefixes (and, up to `keyPushdownCap` keys, its band
+    * keys); only the batch is ever re-banded. A batch of at most
+    * [[DriverBatch.Floor]] docs — every serving request — is banded on
+    * the driver and probes as a local relation, so the call costs the
+    * final action's jobs alone (≤ 4: the probe broadcast, the hit
+    * distinct, the hit broadcast and the result); a larger batch runs
+    * the distributed probe (see [[surviveAgainst]]). */
   def query(
       incoming: DataFrame,
       idCol: String,
@@ -243,10 +250,18 @@ object DedupIndex {
     surviveAgainst(incoming, idCol, textCol, dir, threshold, keyPushdownCap)._2
 
   /** The probe/survive core shared by [[query]] and [[ingestFold]]:
-    * returns BOTH the checkpointed probe band rows (`__qid, __qsig,
-    * band, bkey, bprefix`) and the survivor frame, so the fold can
-    * reuse the probe rows for its append instead of recomputing every
-    * survivor's signature a second time. */
+    * returns BOTH the probe band rows (`__qid, __qsig, band, bkey,
+    * bprefix`) and the survivor frame, so the fold can reuse the probe
+    * rows for its append instead of recomputing every survivor's
+    * signature a second time.
+    *
+    * Below the floor the probe rows, their prefix list, distinct keys
+    * and band-row count are all computed on the driver ([[driverProbe]])
+    * and the survivors are the collected batch minus a broadcast hit
+    * set: no checkpoint, no scalar collect. Above it the probe rows are
+    * checkpointed once — the prefix-count collect and the key collect
+    * both execute them, and without it the signature pass would run
+    * again for the join (the l31/l35 probe-side lesson). */
   private def surviveAgainst(
       incoming: DataFrame,
       idCol: String,
@@ -256,51 +271,98 @@ object DedupIndex {
       keyPushdownCap: Int = 512): (DataFrame, DataFrame) = {
     val spark = incoming.sparkSession
     val (k, bands, shingleN) = meta(incoming, dir)
-    val n = spark.sparkContext.defaultParallelism
-    // materialize the probe's band rows once: the prefix-pruning list
-    // below executes the frame, and without this the signature pass
-    // would run again for the join (the l31/l35 probe-side lesson)
-    val probe = graft.Checkpoints.rotate("dedup_index_probe",
-      incoming.repartition(n, col(idCol))
-        .select(col(idCol).as("__qid"),
-          Dedup.minhashSignature(col(textCol), k, shingleN).as("__qsig"))
-        .select(col("__qid"), col("__qsig"),
-          posexplode(Dedup.lshBandKeys(col("__qsig"), bands, k / bands))
-            .as(Seq("band", "bkey")))
-        .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int")))
-    // ≤ 256 groups by construction — driver-bounded. One job yields
-    // BOTH probe-side scalars the serving path needs: the prefix list
-    // for the pushed prefix filter AND the total probe band-row count the
-    // broadcast decision below reads (round-15: the count was its own
-    // job over the same checkpointed blocks — fused, one scan fewer
-    // per probe).
-    val prefixCounts = probe.groupBy(col("bprefix"))
-      .agg(count(lit(1)).as("n")).collect()
-    val prefixes = prefixCounts.map(r => Integer.valueOf(r.getInt(0))).toSeq
-    val probeBands = prefixCounts.map(_.getLong(1)).sum
-    val index = withProbeKeys(probe, keyPushdownCap,
-      readBands(spark, dir).where(col("bprefix").isin(prefixes: _*)))
+    val small = DriverBatch.gather(incoming)
+    val probe = small match {
+      case Some(batch) => driverProbe(batch, col(idCol), "__qid", textCol, "__qsig", k, bands, shingleN)
+      case None =>
+        val n = spark.sparkContext.defaultParallelism
+        val rows = graft.Checkpoints.rotate("dedup_index_probe",
+          bandRows(incoming.repartition(n, col(idCol)), col(idCol), "__qid", textCol, "__qsig",
+            k, bands, shingleN))
+        // ≤ 256 groups by construction — driver-bounded. One job
+        // yields BOTH probe-side scalars: the prefix list for the
+        // pushed prefix filter AND the probe band-row count the
+        // broadcast decision below reads
+        val prefixCounts = rows.groupBy(col("bprefix"))
+          .agg(count(lit(1)).as("n")).collect()
+        BandProbe(rows, prefixCounts.map(_.getInt(0)).toSeq, prefixCounts.map(_.getLong(1)).sum,
+          () => probeKeys(rows, keyPushdownCap))
+    }
+    val index = withProbeKeys(probe.keys, keyPushdownCap,
+      readBands(spark, dir).where(col("bprefix").isin(probe.prefixes.map(Integer.valueOf): _*)))
     // SERVING-SHAPE JOIN SIDE (round-15, root-caused at 10⁷): the probe
     // must be the BROADCAST side whenever it is batch-sized, or the
     // plan sort-merges — shuffling the ENTIRE index scan (the 10⁷ sweep
     // measured a ~26 GB band-table shuffle + sort spill for a 50-doc
     // probe before AQE's late BHJ conversion could help: the big side's
     // shuffle write already happened; at 10⁶ it fit in page cache and
-    // hid). The probe's exact row count rode the prefix-collect job
-    // above — broadcast below the bound (~250 B/row ⇒ ≤ ~256 MB
+    // hid). Broadcast below the bound (~250 B/row ⇒ ≤ ~256 MB
     // payload, the serving and daily-ingest shapes), and above it keep
     // the planner's shuffle: a corpus-sized probe genuinely needs one,
     // and broadcasting gigabytes to every executor would be worse.
     val broadcastCap = spark.conf
       .get(BroadcastProbeCapKey, BroadcastProbeMaxRows.toString).toLong
     val probeSide =
-      if (probeBands <= broadcastCap) broadcast(probe) else probe
+      if (probe.bandRows <= broadcastCap) broadcast(probe.rows) else probe.rows
     val hit = probeSide.join(index, Seq("bprefix", "band", "bkey"))
       .where(col("doc_id") =!= col("__qid"))
       .where(Dedup.estJaccard(col("__qsig"), col("sig"), k) >= threshold)
       .select(col("__qid").as(idCol)).distinct()
-    (probe, incoming.join(hit, Seq(idCol), "left_anti"))
+    // a driver-held batch is the plan's own local relation, and its
+    // hit set (≤ one row per batch doc) is broadcast into the
+    // anti-join instead of shuffling both sides
+    (probe.rows, small.fold(incoming.join(hit, Seq(idCol), "left_anti"))(
+      _.join(broadcast(hit), Seq(idCol), "left_anti")))
   }
+
+  /** A batch's probe band rows with the driver-side scalars a probe
+    * needs: the distinct band prefixes (≤ 256), the band-row count
+    * and, on demand, up to a cap's worth of distinct band keys. */
+  private final case class BandProbe(
+      rows: DataFrame, prefixes: Seq[Int], bandRows: Long, keys: () => Array[Long])
+
+  /** The band rows of a driver-held batch, computed on the driver: the
+    * signature and band-key expressions are [[bandRows]]' own, evaluated
+    * over the local relation ([[DriverBatch.eval]]); only the posexplode
+    * and the `pmod` prefix run in Scala. The rows become a local
+    * relation, and every probe scalar comes from them without a job. */
+  private def driverProbe(
+      batch: DataFrame, id: Column, idAs: String, textCol: String, sigAs: String,
+      k: Int, bands: Int, shingleN: Int): BandProbe = {
+    val (docs, schema) = DriverBatch.eval(
+      signatures(batch, id, idAs, textCol, sigAs, k, shingleN), col(idAs), col(sigAs),
+      Dedup.lshBandKeys(col(sigAs), bands, k / bands).as("bkeys"))
+    val rows = docs.toSeq.flatMap { d =>
+      Option(d.getSeq[Long](2)).toSeq.flatMap(_.zipWithIndex.map { case (bkey, band) =>
+        Row(d.get(0), d.get(1), band, bkey, Math.floorMod(bkey, 256L).toInt)
+      })
+    }
+    val keyType = schema("bkeys").dataType.asInstanceOf[ArrayType]
+    BandProbe(
+      DriverBatch.relation(batch.sparkSession, rows, StructType(Seq(
+        schema(idAs), schema(sigAs), StructField("band", IntegerType, nullable = false),
+        StructField("bkey", keyType.elementType, keyType.containsNull),
+        StructField("bprefix", IntegerType, keyType.containsNull)))),
+      rows.map(_.getInt(4)).distinct, rows.length.toLong,
+      () => rows.map(_.getLong(3)).distinct.toArray)
+  }
+
+  /** `(idAs, sigAs)`: each doc's id and MinHash signature. */
+  private def signatures(
+      docs: DataFrame, id: Column, idAs: String, textCol: String, sigAs: String,
+      k: Int, shingleN: Int): DataFrame =
+    docs.select(id.as(idAs), Dedup.minhashSignature(col(textCol), k, shingleN).as(sigAs))
+
+  /** The band rows of `docs`: one row `(idAs, sigAs, band, bkey,
+    * bprefix)` per (doc, band), `bprefix = pmod(bkey, 256)`. A null
+    * text has no signature and yields no rows. */
+  private def bandRows(
+      docs: DataFrame, id: Column, idAs: String, textCol: String, sigAs: String,
+      k: Int, bands: Int, shingleN: Int): DataFrame =
+    signatures(docs, id, idAs, textCol, sigAs, k, shingleN)
+      .select(col(idAs), col(sigAs),
+        posexplode(Dedup.lshBandKeys(col(sigAs), bands, k / bands)).as(Seq("band", "bkey")))
+      .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int"))
 
   /** Fold time-ordered ingest batches through the persisted index —
     * the loop a growing deployment runs daily, composed from the three
@@ -325,8 +387,9 @@ object DedupIndex {
     * would see a bigger index than existed when its batch arrived.
     * Scale shape: per batch this is l42's probe (batch-sized re-band +
     * prefix-filtered scan) + l43's append (row-local) — the corpus is
-    * never re-banded, and the append REUSES the probe's checkpointed
-    * band rows (a semi-join on survivor ids) instead of computing every
+    * never re-banded, and the append REUSES the probe's band rows (a
+    * local relation for a batch at or below [[DriverBatch.Floor]], a
+    * checkpoint above it; a semi-join on survivor ids) instead of computing every
     * survivor's signature a second time: band rows are a deterministic
     * row-local function of the text, so the reused rows are identical
     * to what a fresh `append` would write (the spec pins the fold
@@ -452,23 +515,25 @@ object DedupIndex {
       threshold: Double = 0.5,
       keyPushdownCap: Int = 512): DataFrame = {
     val (k, bands, shingleN) = meta(batch, dir)
-    val n = spark.sparkContext.defaultParallelism
-    // batch-sized probe, materialized once (prefix list + join probe —
-    // the surviveAgainst discipline)
-    val nb = graft.Checkpoints.rotate("dedup_index_delta_probe",
-      batch.repartition(n, col(idCol))
-        .select(col(idCol).cast("long").as("id_a"),
-          Dedup.minhashSignature(col(textCol), k, shingleN).as("sig_a"))
-        .select(col("id_a"), col("sig_a"),
-          posexplode(Dedup.lshBandKeys(col("sig_a"), bands, k / bands))
-            .as(Seq("band", "bkey")))
-        .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int")))
-    // ≤ 256 distinct values by construction — driver-bounded (the same
-    // pruning discipline as query's probe)
-    val prefixes = nb.select(col("bprefix")).distinct()
-      .collect().map(r => Integer.valueOf(r.getInt(0))).toSeq
-    val corpus = withProbeKeys(nb, keyPushdownCap,
-      readBands(spark, dir).where(col("bprefix").isin(prefixes: _*)))
+    val id = col(idCol).cast("long")
+    val probe = DriverBatch.gather(batch) match {
+      case Some(local) => driverProbe(local, id, "id_a", textCol, "sig_a", k, bands, shingleN)
+      case None =>
+        // batch-sized probe, materialized once (prefix list + join
+        // probe — the surviveAgainst discipline)
+        val n = spark.sparkContext.defaultParallelism
+        val nb = graft.Checkpoints.rotate("dedup_index_delta_probe",
+          bandRows(batch.repartition(n, col(idCol)), id, "id_a", textCol, "sig_a",
+            k, bands, shingleN))
+        // ≤ 256 distinct values by construction — driver-bounded (the
+        // same pruning discipline as query's probe); the delta probe
+        // always broadcasts, so its band-row count is never needed
+        BandProbe(nb, nb.select(col("bprefix")).distinct().collect().map(_.getInt(0)).toSeq,
+          -1L, () => probeKeys(nb, keyPushdownCap))
+    }
+    val nb = probe.rows
+    val corpus = withProbeKeys(probe.keys, keyPushdownCap,
+      readBands(spark, dir).where(col("bprefix").isin(probe.prefixes.map(Integer.valueOf): _*)))
       .select(col("band"), col("bkey"),
         col("doc_id").as("id_b"), col("sig").as("sig_b"))
     broadcast(nb.drop("bprefix")).join(corpus, Seq("band", "bkey"))
@@ -553,13 +618,8 @@ object DedupIndex {
     writeBandRows(
       // explicit-count repartition: signature compute must spread over
       // the cores even when the input is one parquet row group
-      docs.repartition(n, col(idCol))
-        .select(col(idCol).as("doc_id"),
-          Dedup.minhashSignature(col(textCol), k, shingleN).as("sig"))
-        .select(col("doc_id"), col("sig"),
-          posexplode(Dedup.lshBandKeys(col("sig"), bands, k / bands))
-            .as(Seq("band", "bkey")))
-        .withColumn("bprefix", pmod(col("bkey"), lit(256L)).cast("int")),
+      bandRows(docs.repartition(n, col(idCol)), col(idCol), "doc_id", textCol, "sig",
+        k, bands, shingleN),
       s"$dir/$segment")
   }
 
@@ -618,22 +678,26 @@ object DedupIndex {
     *     dominates (warm cache, nothing to skip), and the honest
     *     default for a mid-size probe is the plain prefix-pruned scan.
     * Above `cap` (or > 512 at the default cap) the plain prefix-pruned
-    * scan runs. The probe is already materialized (checkpoint), so the
-    * distinct-key collect is one batch-sized column read, `cap+1` rows
-    * max (8 B each). */
+    * scan runs. `keys` is called only when `cap > 0`: a driver-built
+    * probe hands over its distinct keys directly, a distributed one
+    * collects them from its checkpoint ([[probeKeys]] — one batch-sized
+    * column read, `cap+1` rows max, 8 B each). */
   private def withProbeKeys(
-      probe: DataFrame, cap: Int, index: DataFrame): DataFrame = {
+      keys: () => Array[Long], cap: Int, index: DataFrame): DataFrame = {
     if (cap <= 0) return index
-    val keys = probe.select(col("bkey")).distinct()
-      .limit(cap + 1).collect().map(_.getLong(0))
-    if (keys.isEmpty || keys.length > cap) index
-    else if (keys.length <= InKeyCap)
-      index.where(col("bkey").isin(keys.map(java.lang.Long.valueOf).toSeq: _*))
+    val ks = keys()
+    if (ks.isEmpty || ks.length > cap) index
+    else if (ks.length <= InKeyCap)
+      index.where(col("bkey").isin(ks.map(java.lang.Long.valueOf).toSeq: _*))
     else
-      keys.sorted.grouped(InKeyCap).map(run =>
+      ks.sorted.grouped(InKeyCap).map(run =>
         index.where(col("bkey").isin(run.map(java.lang.Long.valueOf).toSeq: _*)))
         .reduce(_ unionByName _)
   }
+
+  /** Up to `cap + 1` distinct band keys of a distributed probe. */
+  private def probeKeys(probe: DataFrame, cap: Int): Array[Long] =
+    probe.select(col("bkey")).distinct().limit(cap + 1).collect().map(_.getLong(0))
 
   /** Sink for prepared band rows `(doc_id, sig, band, bkey, bprefix)` —
     * shared by build, append, [[ingestFold]]'s probe-row reuse path and

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session-scoped METADATA cache for immutable store directories — the
   * manifest-table answer to repeated directory listings (optimization
@@ -63,9 +64,20 @@ private[graft] object GenerationCache {
     org.apache.spark.sql.graftbridge.SessionBridge.uuid(spark)
 
   /** The resolved relation of ONE immutable directory — a segment,
-    * tombstone, centroid or codebook generation. */
+    * tombstone, centroid or codebook generation. A directory this
+    * session wrote resolves with the schema its writer recorded
+    * ([[written]]): parquet schema inference reads a footer in a Spark
+    * job, which the first read after every commit would otherwise pay. */
   def directory(spark: SparkSession, path: String): DataFrame =
-    cached(frames, spark, path)(spark.read.parquet(path))
+    cached(frames, spark, path) {
+      val schema = scalars.synchronized(Option(scalars.get(key(spark, s"schema|$path"))))
+      schema.fold(spark.read)(s => spark.read.schema(s.asInstanceOf[StructType])).parquet(path)
+    }
+
+  /** Record the file schema of the fresh directory `path`, just written
+    * by this session ([[Segments.write]]). */
+  def written(spark: SparkSession, path: String, schema: StructType): Unit =
+    scalar(spark, s"schema|$path")(schema): Unit
 
   /** A small driver-side value derived from an immutable generation set
     * (a row count for wave sizing, a decoded parameter table). Same
@@ -73,8 +85,10 @@ private[graft] object GenerationCache {
   def scalar[T <: AnyRef](spark: SparkSession, key: String)(make: => T): T =
     cached(scalars, spark, key)(make).asInstanceOf[T]
 
-  private def cached[V](lru: Lru[V], spark: SparkSession, key: String)(make: => V): V = {
-    val k = sessionKey(spark) + "|" + key
+  private def key(spark: SparkSession, k: String): String = sessionKey(spark) + "|" + k
+
+  private def cached[V](lru: Lru[V], spark: SparkSession, k0: String)(make: => V): V = {
+    val k = key(spark, k0)
     lru.synchronized { Option(lru.get(k)) } match {
       case Some(v) => v
       case None =>

@@ -713,9 +713,8 @@ object ManifestCommit {
   }
 
   /** Reclaim entries outside the retention window. `refsOf` maps a
-    * store's manifest lines to the data-directory names it references;
-    * `keepAlways` names store-level entries outside the manifest
-    * scheme. Retention keeps `retainVersions` versions BEFORE the
+    * store's manifest lines to the data-directory names it references.
+    * Retention keeps `retainVersions` versions BEFORE the
     * current one readable. Versions NEWER than the resolved current one
     * (a commit racing this vacuum) are live unconditionally. See the
     * object scaladoc for the three-way classification (published
@@ -723,7 +722,6 @@ object ManifestCommit {
   def vacuum(
       dir: String,
       refsOf: Array[String] => Seq[String],
-      keepAlways: Set[String],
       retainVersions: Int,
       minAgeMs: Long): Unit = {
     val (f, base) = fsFor(dir)
@@ -750,7 +748,7 @@ object ManifestCommit {
         newer.values
     val live = retainedManifests.flatMap(refsOf).toSet ++
       retained.map(v => s"MANIFEST.v$v") ++
-      newer.keys.map(v => s"MANIFEST.v$v") ++ keepAlways + "MANIFEST"
+      newer.keys.map(v => s"MANIFEST.v$v") + "MANIFEST"
     // referenced by ANY manifest still on disk → was published → its
     // age is irrelevant, only liveness matters
     val published = onDisk.values.flatMap(refsOf).toSet ++ refsOf(cur)
@@ -781,5 +779,5 @@ object ManifestCommit {
   def vacuum(dir: String, store: String, retainVersions: Int, minAgeMs: Long): Unit =
     vacuum(dir, lines => {
       val r = decode(dir, store)(lines); r.own.values.toSeq ++ r.segments ++ r.tombstones
-    }, Set.empty, retainVersions, minAgeMs)
+    }, retainVersions, minAgeMs)
 }

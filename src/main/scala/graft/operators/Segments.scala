@@ -39,7 +39,9 @@ private[graft] object Segments {
   private[graft] val BloomMaxBytes = 16 * 1024
 
   /** Write `rows` into the fresh directory `dir` in the one layout,
-    * sorted by `sortCols` (the first is the file key). `bloomCol` adds
+    * sorted by `sortCols` (the first is the file key), and record the
+    * schema written, so this session's readers skip inferring it
+    * ([[GenerationCache.directory]]). `bloomCol` adds
     * a per-row-group bloom filter on that column: the pushed or-of-Eq
     * a ≤512-value IN becomes consults it, so a group whose [min, max]
     * spans a probed value but holds none skips anyway. ADAPTIVE (a
@@ -62,5 +64,6 @@ private[graft] object Segments {
       .option(s"parquet.bloom.filter.candidates.number#$c", "5")
       .option("parquet.bloom.filter.max.bytes", BloomMaxBytes.toString))
       .parquet(dir)
+    GenerationCache.written(rows.sparkSession, dir, rows.schema)
   }
 }

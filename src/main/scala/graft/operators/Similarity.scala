@@ -4,6 +4,7 @@ import graft.functions.{CentroidMatrix, TopKByScore, VectorFunctions}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (SURVEY §2b L — similarity search).
@@ -979,16 +980,17 @@ object Similarity {
       batchId: Option[Long] = None): DataFrame =
     appendToIndex(batch, dir, batchId, "appendToIvfIndex")(_ => Int8Postings)
 
-  /** One ANN tier's per-vector encode — the only part of the build and
-    * append pipelines that differs by tier: `stage` adds the tier's
-    * working columns over (vec_id, embedding), and `payload` projects
-    * its posting columns from them. */
-  private final case class PostingEncode(
+  /** One ANN tier's per-vector encode — the only part of the build,
+    * append and driver-built probe pipelines that differs by tier:
+    * `stage` adds the tier's working columns over (vec_id, embedding),
+    * and `payload` projects its posting (or probe-row) columns from
+    * them. */
+  private final case class VectorEncode(
       stage: DataFrame => DataFrame, payload: Seq[org.apache.spark.sql.Column])
 
   /** The int8 tier: 1 B/elem codes plus their dot and scale
     * ([[graft.functions.Int8PackExpr]]). */
-  private val Int8Postings = PostingEncode(
+  private val Int8Postings = VectorEncode(
     _.withColumn("pk", VectorFunctions.int8Pack(col("embedding"))),
     Seq(col("pk.codes").as("codes"), col("pk.cdot").as("cdot"), col("pk.m").as("m")))
 
@@ -996,7 +998,7 @@ object Similarity {
     * encoded with broadcast codebooks. */
   private def pqPostings(
       cbBc: org.apache.spark.broadcast.Broadcast[graft.functions.PqCodebooks]) =
-    PostingEncode(
+    VectorEncode(
       _.withColumn("qv", VectorFunctions.quantize3(col("embedding")))
         .withColumn("enc", pqEncodeUdf(cbBc)(col("qv"))),
       Seq(col("enc._1").as("pqc"), col("enc._2").as("rn")))
@@ -1022,7 +1024,7 @@ object Similarity {
       cellCap: Option[Int],
       centroidsFrom: Option[String],
       refineIters: Int)(
-      tier: (DataFrame, Long) => (PostingEncode, Option[String])): DataFrame = {
+      tier: (DataFrame, Long) => (VectorEncode, Option[String])): DataFrame = {
     cellCap.foreach(cap => require(cap > 0, s"cellCap must be positive, got $cap"))
     val spark = corpus.sparkSession
     // fresh-build commit target: the next version over whatever (if
@@ -1079,18 +1081,28 @@ object Similarity {
     * per-cell APPENDED counts (cell, n_appended). */
   private def appendToIndex(
       batch: DataFrame, dir: String, batchId: Option[Long], op: String)(
-      encode: AnnStore.Manifest => PostingEncode): DataFrame = {
+      encode: AnnStore.Manifest => VectorEncode): DataFrame = {
     val spark = batch.sparkSession
     val man = AnnStore.read(dir)
-    assertNotTombstoned(batch, dir, man, op)
+    val small = DriverBatch.gather(batch)
+    assertNotTombstoned(small.getOrElse(batch), dir, man, op, small.isDefined)
     val centRows = centroidRows(spark, dir, man)
-    val (rows, appended) = encodePostings(batch, centroidMatrix(centRows), encode(man))
-    if (appended.nonEmpty) {
-      val seg = ManifestCommit.uniqueName("seg", man.version + 1)
-      writePostings(rows, centRows.map(r => r.getInt(0) -> r.getInt(3)).toMap, s"$dir/$seg")
+    val mat = centroidMatrix(centRows)
+    val widths = centRows.map(r => r.getInt(0) -> r.getInt(3)).toMap
+    val seg = ManifestCommit.uniqueName("seg", man.version + 1)
+    val appended = small match {
+      case Some(local) =>
+        val (rows, counts) = driverPostings(local, mat, widths, encode(man))
+        if (counts.nonEmpty) Segments.write(rows, s"$dir/$seg", PostingKeys)
+        counts
+      case None =>
+        val (rows, counts) = encodePostings(batch, mat, encode(man))
+        if (counts.nonEmpty) writePostings(rows, widths, s"$dir/$seg")
+        counts
+    }
+    if (appended.nonEmpty)
       ManifestCommit.commitDelta(dir, AnnStore.Store, segments = Seq(seg),
         counts = appended, batchId = batchId)
-    }
     import spark.implicits._
     appended.toSeq.sortBy(_._1).toDF("cell", "n_appended")
   }
@@ -1103,41 +1115,77 @@ object Similarity {
   private def encodePostings(
       vectors: DataFrame,
       mat: CentroidMatrix,
-      encode: PostingEncode): (DataFrame, Map[Int, Long]) = {
+      encode: VectorEncode): (DataFrame, Map[Int, Long]) = {
     val sc = vectors.sparkSession.sparkContext
-    val matBc = sc.broadcast(mat)
-    val rows = encode.stage(vectors.select(col("vec_id"), col("embedding"))
-        .repartition(sc.defaultParallelism, col("vec_id")))
-      .select((col("vec_id") +: encode.payload) ++ Seq(
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
-        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell")): _*)
+    val rows = postingRows(vectors.select(col("vec_id"), col("embedding"))
+        .repartition(sc.defaultParallelism, col("vec_id")), sc.broadcast(mat), encode)
       .localCheckpoint()
     val counts = rows.groupBy(col("cell")).agg(count(lit(1)))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     (rows, counts)
   }
 
+  /** The posting projection both append paths run: `encode`'s payload,
+    * the exact q3 norm² and the nearest cell, over (vec_id, embedding). */
+  private def postingRows(
+      vectors: DataFrame,
+      matBc: org.apache.spark.broadcast.Broadcast[CentroidMatrix],
+      encode: VectorEncode): DataFrame =
+    encode.stage(vectors)
+      .select((col("vec_id") +: encode.payload) ++ Seq(
+        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("nrm"),
+        nearestCellsCol(matBc, int8GeomCol(col("embedding")), 1).as("cell")): _*)
+
+  /** [[encodePostings]] and [[writePostings]]' shard column for a
+    * driver-held batch, computed on the driver: the posting projection
+    * and the shard hash are the distributed path's own expressions,
+    * evaluated over the local relation ([[DriverBatch.eval]]), and the
+    * per-cell counts and widths are looked up in Scala — no checkpoint
+    * and no count job. Returns the segment rows (vec_id, payload…, nrm,
+    * shard, cell) as a local relation, and the per-cell counts. */
+  private def driverPostings(
+      local: DataFrame,
+      mat: CentroidMatrix,
+      widths: Map[Int, Int],
+      encode: VectorEncode): (DataFrame, Map[Int, Long]) = {
+    val spark = local.sparkSession
+    val (enc, schema) = DriverBatch.eval(postingRows(
+      local.select(col("vec_id"), col("embedding")), spark.sparkContext.broadcast(mat), encode),
+      col("*"))
+    val cell = schema.fieldIndex("cell")
+    val sized = enc.toSeq.flatMap(r =>
+      widths.get(r.getInt(cell)).map(w => Row.fromSeq(r.toSeq :+ w)))
+    val (rows, rowSchema) = DriverBatch.eval(
+      DriverBatch.relation(spark, sized, schema.add("nshards", IntegerType, nullable = false)),
+      withShard(schema.fieldNames.toSeq): _*)
+    (DriverBatch.relation(spark, rows.toSeq, rowSchema),
+      sized.groupBy(_.getInt(cell)).map { case (c, rs) => c -> rs.size.toLong })
+  }
+
   /** Write [[encodePostings]]' rows as one fresh posting segment, then
     * free their pinned blocks instead of letting per-write generations
-    * pile up in the storage pool. Each row's shard is an id hash within
-    * its cell's width — id, not content: exact-duplicate masses share
-    * codes and must still spread across shards (probe replication
-    * covers every shard, so placement is free to be uniform). `cell`
-    * stays the last posting column. */
+    * pile up in the storage pool. */
   private def writePostings(rows: DataFrame, widths: Map[Int, Int], segDir: String): Unit = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val cols = rows.columns.filterNot(_ == "cell").map(col).toSeq
     Segments.write(
       rows.join(broadcast(widths.toSeq.toDF("cell", "nshards")), "cell")
-        .withColumn("shard",
-          pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int"))
-        .select(cols ++ Seq(col("shard"), col("cell")): _*),
+        .select(withShard(rows.columns.toSeq): _*),
       segDir, PostingKeys)
     rows.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
   }
+
+  /** The posting columns `cols` with their shard: an id hash within the
+    * row's cell width `nshards` — id, not content: exact-duplicate
+    * masses share codes and must still spread across shards (probe
+    * replication covers every shard, so placement is free to be
+    * uniform). `cell` stays the last posting column. */
+  private def withShard(cols: Seq[String]): Seq[org.apache.spark.sql.Column] =
+    cols.filterNot(_ == "cell").map(col) ++ Seq(
+      pmod(xxhash64(col("vec_id")), col("nshards").cast("long")).cast("int").as("shard"),
+      col("cell"))
 
   /** The centroid table of `m`'s generation as driver rows (cell,
     * centroid, cnorm, nshards), ordered by cell — the nlist-bounded
@@ -1159,13 +1207,18 @@ object Similarity {
     * integrity invariant and the top-k strategy-switch input). The
     * "compact first" contract is now enforced, not just documented:
     * one broadcast semi-join against the (small) tombstone set, skipped
-    * entirely when no delete is outstanding. */
+    * entirely when no delete is outstanding. A driver-held batch
+    * (`local`) instead pushes its own ids into the tombstone scan. */
   private def assertNotTombstoned(
       batch: DataFrame, dir: String, man: AnnStore.Manifest,
-      op: String): Unit =
+      op: String, local: Boolean): Unit =
     AnnStore.tombstoned(batch.sparkSession, dir, man).foreach { dead =>
-      val clash = batch.select(col("vec_id"))
-        .join(broadcast(dead), Seq("vec_id"), "left_semi").count()
+      val clash =
+        if (local) dead.where(col("vec_id").isin(
+          batch.select(col("vec_id")).collect().map(_.get(0)).distinct.toIndexedSeq: _*))
+          .collect().length.toLong
+        else batch.select(col("vec_id"))
+          .join(broadcast(dead), Seq("vec_id"), "left_semi").count()
       require(clash == 0,
         s"$op: $clash batch id(s) are tombstoned in $dir — run " +
           "compactIvfIndex first; re-ingesting a deleted id before the " +
@@ -1280,67 +1333,190 @@ object Similarity {
     * same nlist (same int8 cell geometry, same first-max assignment,
     * sound screen ⇒ no true top-k member pruned; the spec pins the
     * parity). Probe rows replicate across hot-cell shards from the
-    * persisted widths — result-identical, see [[shardHotCells]]. */
+    * persisted widths — result-identical, see [[shardHotCells]].
+    *
+    * A batch of at most [[DriverBatch.Floor]] queries — every serving
+    * request — builds its probe rows on the driver ([[driverProbeJoin]]):
+    * codes, nearest cells and the shard fan-out become a local
+    * relation, the postings scan reads only the probed cells, and the
+    * call costs the final action's jobs alone (≤ 3 when the probed
+    * cells hold at most [[oneTaskProbePairs]] candidates). A larger
+    * batch runs the distributed probe. */
   def ivfTopKIndexed(
       queries: DataFrame,
       corpusExact: DataFrame,
       indexDir: String,
       k: Int,
-      nprobe: Int = 4): DataFrame = {
+      nprobe: Int = 4): DataFrame =
+    indexedTopK(queries, corpusExact, indexDir, k)(ivfCandidatesIndexed(_, indexDir, nprobe, _, _))
+
+  /** Int8 candidate pairs with their sound code-space screen interval
+    * `(qid, nid, lb, ub)` — [[pqCandidatesIndexed]] for the int8 tier.
+    * `local`: `queries` is a driver-held batch ([[driverProbeJoin]]);
+    * when its ids are unique the pairs also carry each query's exact q3
+    * vector and norm² (`__qv`, `__qn`). */
+  private def ivfCandidatesIndexed(
+      queries: DataFrame,
+      indexDir: String,
+      nprobe: Int,
+      man: AnnStore.Manifest,
+      local: Boolean): DataFrame = {
     val spark = queries.sparkSession
     val sc = spark.sparkContext
-    val n = sc.defaultParallelism
-    val man = AnnStore.read(indexDir) // ONE pointer resolve per query
     val centRows = centroidRows(spark, indexDir, man)
-    val totalN = man.counts.values.sum
     val matBc = sc.broadcast(centroidMatrix(centRows))
-
-    import spark.implicits._
-    val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
-      .toDF("cell", "nshards")
-    val q = queries.repartition(n, col("vec_id"))
-      .withColumn("pk", VectorFunctions.int8Pack(col("embedding")))
-      .select(
-        col("vec_id").as("qid"), col("pk.codes").as("ca"),
-        col("pk.cdot").as("cda"), col("pk.m").as("ma"),
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("na"),
-        explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
-          .as("cell"))
-      .join(broadcast(widths), "cell")
-      .withColumn("shard",
-        explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
-      .drop("nshards")
     val postings = AnnStore.postings(spark, indexDir, man).select(
       col("vec_id").as("nid"), col("codes").as("cb"), col("cdot").as("cdb"),
       col("m").as("mb"), col("nrm").as("nb"), col("shard"), col("cell"))
-
+    val joined =
+      if (local) driverProbeJoin(queries, man, centRows, matBc, nprobe, Int8Probe, postings)
+      else {
+        import spark.implicits._
+        val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
+          .toDF("cell", "nshards")
+        val q = Int8Probe.stage(queries.repartition(sc.defaultParallelism, col("vec_id")))
+          .select((col("vec_id").as("qid") +: Int8Probe.payload) :+
+            explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
+              .as("cell"): _*)
+          .join(broadcast(widths), "cell")
+          .withColumn("shard",
+            explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
+          .drop("nshards")
+        q.join(postings, Seq("cell", "shard"))
+      }
     val ra = screenResid(col("ca"), col("ma"), col("na"))
     val rb = screenResid(col("cb"), col("mb"), col("nb"))
     val cosCode = screenCosCode(col("ca"), col("cda"), col("cb"), col("cdb"))
     val margin = lit(2.0) * (ra + rb) + lit(4.0) * ra * rb
-    val cand = q.join(postings, Seq("cell", "shard"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (cosCode - margin).as("lb"), (cosCode + margin).as("ub"))
+    joined.filter(col("qid") =!= col("nid"))
+      .select(Seq(col("qid"), col("nid"),
+        (cosCode - margin).as("lb"), (cosCode + margin).as("ub")) ++ carried(joined): _*)
+  }
 
+  /** The int8 tier's probe row: the query's codes, their dot and scale
+    * ([[graft.functions.Int8PackExpr]]) and its q3 norm². */
+  private val Int8Probe = VectorEncode(
+    _.withColumn("pk", VectorFunctions.int8Pack(col("embedding"))),
+    Seq(col("pk.codes").as("ca"), col("pk.cdot").as("cda"), col("pk.m").as("ma"),
+      VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("na")))
+
+  /** The query-side columns a driver-built probe carries through the
+    * screen to the exact re-rank ([[indexedTopK]]), when it has them. */
+  private def carried(probe: DataFrame): Seq[org.apache.spark.sql.Column] =
+    Seq("__qv", "__qn").filter(probe.columns.contains).map(col)
+
+  /** Candidate pairs — over every query of a driver-built probe, the
+    * live postings of its probed cells — up to which the probe streams
+    * in ONE partition against broadcast postings. One
+    * partition needs no shuffle before the per-query screen aggregate
+    * or the re-rank window, so the probe costs the broadcasts and the
+    * result job; the bound keeps both the broadcast scan (≤ 2¹⁶
+    * postings, ~7 MB of int8 rows at d = 64) and the single task's
+    * screen work small. Above it the probe is the broadcast side and
+    * the postings stream in parallel. Scoped, so a spec can force the
+    * parallel orientation at fixture scale. */
+  private[graft] val oneTaskProbePairs = new scala.util.DynamicVariable(1L << 16)
+
+  /** The probe side of an index query over a driver-held batch, joined
+    * to the postings. Each query's screen columns (`probe`), its exact
+    * q3 vector and norm² for the re-rank (`__qv`, `__qn`) and its
+    * `nprobe` nearest cells are evaluated on the driver
+    * ([[DriverBatch.eval]] — the distributed probe's own expressions),
+    * and the cell × shard fan-out runs in Scala from the persisted
+    * widths: no repartition, no checkpoint, no scalar collect. The
+    * postings scan reads only the probed cells (a pushed `cell IN (…)`,
+    * so row-group statistics on the (cell, vec_id)-sorted files skip
+    * the rest), and the exact candidate count — Σ n(cell) over the
+    * probed cells of every query, from the manifest counts — picks the
+    * join orientation ([[oneTaskProbePairs]]). */
+  private def driverProbeJoin(
+      queries: DataFrame,
+      man: AnnStore.Manifest,
+      centRows: Array[Row],
+      matBc: org.apache.spark.broadcast.Broadcast[CentroidMatrix],
+      nprobe: Int,
+      probe: VectorEncode,
+      postings: DataFrame): DataFrame = {
+    val e = col("embedding")
+    val (evaluated, fullSchema) = DriverBatch.eval(probe.stage(queries.select(col("vec_id"), e)),
+      (col("vec_id").as("qid") +: probe.payload) ++ Seq(
+        VectorFunctions.quantize3(e).as("__qv"),
+        VectorFunctions.dotScaledFast(e, e).as("__qn"),
+        nearestCellsCol(matBc, int8GeomCol(e), nprobe).as("cells")): _*)
+    // the exact q3 vector rides the probe only when it is a function of
+    // the query id (see [[indexedTopK]])
+    val ids = evaluated.map(_.get(0))
+    val keep = fullSchema.fieldNames.indices.filterNot(i =>
+      ids.distinct.length < ids.length && fullSchema(i).name.startsWith("__"))
+    val schema = StructType(keep.map(fullSchema(_)))
+    val qs = evaluated.map(r => Row.fromSeq(keep.map(r.get)))
+    val widths = centRows.map(r => r.getInt(0) -> r.getInt(3)).toMap
+    val cellsOf = qs.map(_.get(schema.length - 1) match {
+      case c: Int => Seq(c)
+      case cs: scala.collection.Seq[_] => cs.map(_.asInstanceOf[Int]).toSeq
+    })
+    val rows = qs.toSeq.zip(cellsOf).flatMap { case (q, cells) =>
+      cells.flatMap(c => widths.get(c).toSeq.flatMap(w =>
+        (0 until math.max(w, 1)).map(sh => Row.fromSeq(q.toSeq.init ++ Seq(c, sh)))))
+    }
+    val probeRows = DriverBatch.relation(queries.sparkSession, rows, StructType(schema.init ++ Seq(
+      StructField("cell", IntegerType, nullable = false),
+      StructField("shard", IntegerType, nullable = false))))
+    val scan = postings.where(
+      col("cell").isin(cellsOf.flatten.distinct.map(Integer.valueOf).toSeq: _*))
+    val pairs = cellsOf.map(_.map(c => man.counts.getOrElse(c, 0L)).sum).sum
+    if (pairs <= oneTaskProbePairs.value)
+      probeRows.coalesce(1).join(broadcast(scan), Seq("cell", "shard"))
+    else broadcast(probeRows).join(scan, Seq("cell", "shard"))
+  }
+
+  /** The read path both index tiers share: resolve the manifest once,
+    * gather a batch-sized query set to the driver ([[DriverBatch]]),
+    * build the tier's candidate pairs (`candidates(queries, manifest,
+    * local)`), then screen and re-rank. [[graft.functions
+    * .TopKScreenAgg]] keeps, per query, the candidates whose sound
+    * interval could still reach the top k, and only those re-attach
+    * exact vectors: the corpus side from `corpusExact`, the query side
+    * from `queries` — or, for a driver-built probe with unique query
+    * ids, from the q3 vector and norm² the probe rows carried through
+    * the screen (grouped with the id they depend on), which saves the
+    * query-side join. Duplicate ids keep the join, so every path
+    * scores each (query row, survivor) pair the same way. */
+  private def indexedTopK(
+      queries: DataFrame,
+      corpusExact: DataFrame,
+      indexDir: String,
+      k: Int)(
+      candidates: (DataFrame, AnnStore.Manifest, Boolean) => DataFrame): DataFrame = {
+    val man = AnnStore.read(indexDir) // ONE pointer resolve per query
+    val small = DriverBatch.gather(queries)
+    val q = small.getOrElse(queries)
+    val cand = candidates(q, man, small.isDefined)
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val screen = ColumnBridge.column(graft.functions.TopKScreenAgg(
       ColumnBridge.expression(col("nid")), ColumnBridge.expression(col("lb")),
       ColumnBridge.expression(col("ub")), k).toAggregateExpression())
-    val surv = cand.groupBy(col("qid")).agg(screen.as("cands"))
-      .select(col("qid"), explode(col("cands")).as("nid"))
-
     val dotF = VectorFunctions.dotScaledFast _
-    val qv = queries.select(col("vec_id").as("qid"),
-      VectorFunctions.quantize3(col("embedding")).as("qv"),
-      dotF(col("embedding"), col("embedding")).as("qn"))
+    val withQuery =
+      if (cand.columns.contains("__qv"))
+        cand.groupBy(col("qid"), col("__qv").as("qv"), col("__qn").as("qn"))
+          .agg(screen.as("cands"))
+          .select(col("qid"), col("qv"), col("qn"), explode(col("cands")).as("nid"))
+      else {
+        val surv = cand.groupBy(col("qid")).agg(screen.as("cands"))
+          .select(col("qid"), explode(col("cands")).as("nid"))
+        val qv = q.select(col("vec_id").as("qid"),
+          VectorFunctions.quantize3(col("embedding")).as("qv"),
+          dotF(col("embedding"), col("embedding")).as("qn"))
+        surv.join(qv, "qid")
+      }
     val cv = corpusExact.select(col("vec_id").as("nid"),
       VectorFunctions.quantize3(col("embedding")).as("nv"),
       dotF(col("embedding"), col("embedding")).as("nn"))
-    val scored = surv.join(qv, "qid").join(cv, "nid")
+    val scored = withQuery.join(cv, "nid")
       .withColumn("cos", cosCol(col("qv"), col("nv"), col("qn"), col("nn")))
       .select(col("qid"), col("nid"), col("cos"))
-    rankTopK(scored, k, totalN)
+    rankTopK(scored, k, man.counts.values.sum)
   }
 
   /** Builds the PRODUCT-QUANTIZED postings tier: same cell layout,
@@ -1503,50 +1679,60 @@ object Similarity {
     * exact q3 cosine). Bound: cos = q̃·a/(‖q̃‖‖a‖) and
     * |q̃·a − adc| ≤ ‖q̃‖·‖a − x̂‖ ≤ ‖q̃‖·rn (Cauchy–Schwarz; rn stored
     * inflated at encode), so cos ∈ adc/√(qn·nn) ± rn/√nn. Zero-norm
-    * rows collapse to [0, 0] — exactly the downstream exact score. */
+    * rows collapse to [0, 0] — exactly the downstream exact score.
+    * `local`: `queries` is a driver-held batch, and each query's LUT is
+    * built once on the driver ([[driverProbeJoin]]); when its ids are
+    * unique the pairs also carry each query's exact q3 vector and norm²
+    * (`__qv`, `__qn`). */
   private[graft] def pqCandidatesIndexed(
       queries: DataFrame,
       indexDir: String,
       nprobe: Int,
-      man: AnnStore.Manifest): DataFrame = {
+      man: AnnStore.Manifest,
+      local: Boolean = false): DataFrame = {
     val spark = queries.sparkSession
     val sc = spark.sparkContext
-    val n = sc.defaultParallelism
     val centRows = centroidRows(spark, indexDir, man)
     val matBc = sc.broadcast(centroidMatrix(centRows))
     val cbBc = sc.broadcast(loadPqCodebooks(spark, indexDir, man))
-
-    import spark.implicits._
-    val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
-      .toDF("cell", "nshards")
-    val q = queries.repartition(n, col("vec_id"))
-      .select(
-        col("vec_id").as("qid"),
-        VectorFunctions.quantize3(col("embedding")).as("qv"),
-        VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("qn"),
-        explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
-          .as("cell"))
-      .join(broadcast(widths), "cell")
-      .withColumn("shard",
-        explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
-      // LUT computed on the replicated probe row (|Q|·nprobe·shards
-      // small in the serving regime this tier exists for) and the q3
-      // vector dropped — the join payload is the 16 KB table + a scalar
-      .withColumn("lut", pqLutUdf(cbBc)(col("qv")))
-      .select(col("qid"), col("qn"), col("cell"), col("shard"), col("lut"))
-    // MATERIALIZE the probe side before the candidate join: without
-    // this, CollapseProject folds the LUT UDF into the post-join
-    // projection and the m·ks·dsub table is rebuilt (boxed, allocated)
-    // once per OCCURRENCE per CANDIDATE row instead of once per probe
-    // row — measured 24 s of a 26 s serve pass at 10⁵ corpus /
-    // 88-query batch, vs 1.6 s for the join itself (stages timed
-    // in isolation). Probe rows are |Q|·nprobe·shards ≈ thousands in the
-    // serving regime, ~16 KB each — a bounded, rotation-managed
-    // checkpoint, same discipline as the banded-guard materialization.
-    val qm = graft.Checkpoints.rotate("similarity.pqProbe", q)
     val postings = AnnStore.postings(spark, indexDir, man).select(
       col("vec_id").as("nid"), col("pqc"), col("rn"), col("nrm").as("nb"),
       col("shard"), col("cell"))
+    val lut = pqLutUdf(cbBc)(col("qv")).as("lut")
+    val joined =
+      if (local)
+        driverProbeJoin(queries, man, centRows, matBc, nprobe, VectorEncode(
+          _.withColumn("qv", VectorFunctions.quantize3(col("embedding"))),
+          Seq(VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("qn"), lut)),
+          postings)
+      else {
+        import spark.implicits._
+        val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
+          .toDF("cell", "nshards")
+        val q = queries.repartition(sc.defaultParallelism, col("vec_id"))
+          .select(
+            col("vec_id").as("qid"),
+            VectorFunctions.quantize3(col("embedding")).as("qv"),
+            VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("qn"),
+            explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
+              .as("cell"))
+          .join(broadcast(widths), "cell")
+          .withColumn("shard",
+            explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
+          // LUT computed on the replicated probe row (|Q|·nprobe·shards
+          // small in the serving regime this tier exists for) and the q3
+          // vector dropped — the join payload is the 16 KB table + a scalar
+          .select(col("qid"), col("qn"), col("cell"), col("shard"), lut)
+        // MATERIALIZE the probe side before the candidate join: without
+        // this, CollapseProject folds the LUT UDF into the post-join
+        // projection and the m·ks·dsub table is rebuilt (boxed,
+        // allocated) once per OCCURRENCE per CANDIDATE row instead of
+        // once per probe row — measured 24 s of a 26 s serve pass at
+        // 10⁵ corpus / 88-query batch, vs 1.6 s for the join itself
+        // (stages timed in isolation). A driver-built probe needs no
+        // checkpoint: its LUTs are data in a local relation.
+        graft.Checkpoints.rotate("similarity.pqProbe", q).join(postings, Seq("cell", "shard"))
+      }
 
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val adc = ColumnBridge.column(graft.functions.PqAdcExpr(
@@ -1555,13 +1741,12 @@ object Similarity {
     // bound as cosCol
     val base = adc / sqrt((col("qn") * col("nb")).cast("double"))
     val marg = col("rn") / sqrt(col("nb").cast("double"))
-    qm.join(postings, Seq("cell", "shard"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
+    joined.filter(col("qid") =!= col("nid"))
+      .select(Seq(col("qid"), col("nid"),
         when(col("qn") === 0 || col("nb") === 0, lit(0.0))
           .otherwise(base - marg).as("lb"),
         when(col("qn") === 0 || col("nb") === 0, lit(0.0))
-          .otherwise(base + marg).as("ub"))
+          .otherwise(base + marg).as("ub")) ++ carried(joined): _*)
   }
 
   /** ANN top-k answered FROM the persisted PQ index — the read path of
@@ -1592,31 +1777,8 @@ object Similarity {
       corpusExact: DataFrame,
       indexDir: String,
       k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val man = AnnStore.read(indexDir) // ONE pointer resolve per query
-    val totalN = man.counts.values.sum
-    val cand = pqCandidatesIndexed(queries, indexDir, nprobe, man)
-
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val screen = ColumnBridge.column(graft.functions.TopKScreenAgg(
-      ColumnBridge.expression(col("nid")), ColumnBridge.expression(col("lb")),
-      ColumnBridge.expression(col("ub")), k).toAggregateExpression())
-    val surv = cand.groupBy(col("qid")).agg(screen.as("cands"))
-      .select(col("qid"), explode(col("cands")).as("nid"))
-
-    val dotF = VectorFunctions.dotScaledFast _
-    val qv = queries.select(col("vec_id").as("qid"),
-      VectorFunctions.quantize3(col("embedding")).as("qv"),
-      dotF(col("embedding"), col("embedding")).as("qn"))
-    val cv = corpusExact.select(col("vec_id").as("nid"),
-      VectorFunctions.quantize3(col("embedding")).as("nv"),
-      dotF(col("embedding"), col("embedding")).as("nn"))
-    val scored = surv.join(qv, "qid").join(cv, "nid")
-      .withColumn("cos", cosCol(col("qv"), col("nv"), col("qn"), col("nn")))
-      .select(col("qid"), col("nid"), col("cos"))
-    rankTopK(scored, k, totalN)
-  }
+      nprobe: Int = 4): DataFrame =
+    indexedTopK(queries, corpusExact, indexDir, k)(pqCandidatesIndexed(_, indexDir, nprobe, _, _))
 
   /** IVF candidate pairs, ids only — the SimilaritySpec instrument for
     * the per-query candidate bound (≤ c·nprobe·sqrt(n)). Same candidate

@@ -92,4 +92,25 @@ class GenerationCacheSpec extends SparkSpec {
     assert(cold.zip(warm).forall { case (a, b) => a eq b },
       "re-reading every directory in the same order must hit the cache")
   }
+
+  test("a directory this session wrote resolves with its written schema: no inference job") {
+    import spark.implicits._
+    val dix = tempDir("graft_gc_schema")
+    DedupIndex.build(docs.filter($"doc_id" % 4 === 0), "doc_id", "text", dix)
+    val ivf = tempDir("graft_gc_schema_ivf")
+    Similarity.buildIvfIndex(emb.filter($"vec_id" % 10 =!= 0), ivf).count()
+    DedupIndex.append(docs.filter($"doc_id" % 4 === 2), "doc_id", "text", dix)
+    Similarity.appendToIvfIndex(emb.filter($"vec_id" % 10 === 0), ivf).count()
+    val fresh = Seq(s"$dix/${DedupIndex.readManifest(dix).segments.last}",
+      s"$ivf/${AnnStore.read(ivf).segments.last}")
+    val other = spark.newSession()
+    fresh.foreach { d =>
+      assert(jobsLaunched(GenerationCache.directory(spark, d)) == 0,
+        s"$d: the writing session must not infer the schema it wrote")
+      assert(jobsLaunched(GenerationCache.directory(other, d)) == 1,
+        s"$d: another session infers the schema in one job")
+      assert(GenerationCache.directory(spark, d).schema == GenerationCache.directory(other, d).schema)
+      assert(GenerationCache.directory(spark, d).count() == spark.read.parquet(d).count())
+    }
+  }
 }

@@ -385,7 +385,7 @@ class ManifestCommitSpec extends SparkSpec {
     val wp = new java.io.FileWriter(new java.io.File(local, "MANIFEST"))
     wp.write("2\nd2\n"); wp.close()
     ManifestCommit.vacuum(dir, lines => lines.drop(1).toSeq,
-      Set.empty, retainVersions = 0, minAgeMs = 0L)
+      retainVersions = 0, minAgeMs = 0L)
     val left = new java.io.File(local).listFiles().map(_.getName).toSet
     assert(left.contains("MANIFEST.v3") && left.contains("d3"),
       s"a committed version newer than the pointer must survive vacuum: $left")

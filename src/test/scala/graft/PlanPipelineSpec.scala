@@ -1,12 +1,10 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import graft.plans.{Counter, PlanPipeline}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -47,36 +45,6 @@ class PlanPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Option(r.getAs[java.lang.Long]("gid")).map(_.longValue), r.getAs[String]("title"),
       Option(r.getAs[java.lang.Long]("mask")).map(_.longValue),
       r.getAs[Long]("n_plans"), r.getAs[String]("plan_titles")))
-
-  /** Jobs `f` launches from this thread, counted by a listener. Listener
-    * events arrive in order, so a marker job run after `f` drains them. */
-  private def jobsLaunched(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"plan-spec-${System.nanoTime()}"
-    val marker = "drain"
-    val seen = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("graft.spec.tag") == tag).foreach { p =>
-          if (p.getProperty("spark.job.description") == marker) drained.countDown()
-          else seen.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      f
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
-      seen.get
-    } finally {
-      sc.setJobDescription(null)
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("bitmask pipeline edge cases: bits 0/30/31/63, zero mask, missing plan, order") {
     import spark.implicits._

@@ -3,9 +3,11 @@ package graft
 import graft.functions.VectorFunctions
 import graft.operators.{AnnStore, LlmQueries, ManifestCommit, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val emb = Tables(spark, sf, "embeddings")
 
@@ -209,6 +211,14 @@ class SimilaritySpec extends SparkSpec {
     assert(again == survivors)
   }
 
+  /** The pushed filters of every postings-segment scan in the AQE-final
+    * plan of an executed `df`. */
+  private def postingsPushed(df: DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName.startsWith("seg_")) =>
+        s.metadata.getOrElse("PushedFilters", "")
+    }
+
   test("persisted int8 IVF index: complete, parity with l22's direct path, single postings scan") {
     val dir = tempDir("graft_idx_spec")
     val counts = Similarity.buildIvfIndex(
@@ -235,8 +245,8 @@ class SimilaritySpec extends SparkSpec {
     // serving regime (|Q| ≪ |C|, the l31 shape): same parity against
     // the direct path restricted to the query batch
     val qb = emb.filter(col("vec_id") % 20 === 0)
-    val serve = Similarity.ivfTopKIndexed(qb, emb, dir, 3)
-      .collect().map(_.toSeq).sortBy(_.toString)
+    val serveDf = Similarity.ivfTopKIndexed(qb, emb, dir, 3)
+    val serve = serveDf.collect().map(_.toSeq).sortBy(_.toString)
     val serveWant = Similarity.ivfTopKInt8(qb, emb, 3)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(serve.sameElements(serveWant))
@@ -260,6 +270,18 @@ class SimilaritySpec extends SparkSpec {
     val q3 = occurrences("quantize3expr")
     assert(q3 >= 1 && q3 <= 2,
       s"quantize3 outside the re-rank inputs:\n${p.take(1500)}")
+    // the serving batch's probe is built on the driver: its plan reads
+    // the postings once, filtered to the probed cells, and carries no
+    // assignment at all
+    val sp = serveDf.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head.toLowerCase
+    assert(sp.linesIterator.count(l => l.contains("scan") && l.contains("seg_")) == 1,
+      s"serve path must scan the postings segments exactly once:\n${sp.take(1500)}")
+    assert("nearestcellsexpr".r.findAllIn(sp).isEmpty && "scalaudf".r.findAllIn(sp).isEmpty,
+      s"per-row probe work in the serve plan:\n${sp.take(1500)}")
+    val pushed = postingsPushed(serveDf)
+    assert(pushed.nonEmpty && pushed.forall(_.contains("In(cell,")),
+      s"the probed cells must reach the postings scan as a pushed filter: $pushed")
   }
 
   test("persisted PQ index: m-byte postings, serve parity with the int8 tier, sound ADC bounds") {
@@ -321,11 +343,11 @@ class SimilaritySpec extends SparkSpec {
       .sameElements(sorted(Similarity.ivfTopKIndexed(qb, corpus, dirA, 3))))
     // plan gates, on the AQE-final section (same discipline as the int8
     // index test): exactly ONE postings scan, and ZERO assignment
-    // probes anywhere in the serve plan — the probe side (cells, LUTs)
-    // is materialized once before the candidate join (the
-    // CollapseProject fix: without it the LUT UDF re-evaluated per
-    // candidate row, 24 s of a 26 s pass at 10⁵), so the executed plan
-    // carries neither a corpus-side nor a query-side per-row recompute
+    // probes anywhere in the serve plan — the serving batch's probe side
+    // (cells, LUTs) is built once on the driver before the candidate
+    // join (a LUT UDF left in the plan re-evaluated per candidate row,
+    // 24 s of a 26 s pass at 10⁵), so the executed plan carries neither
+    // a corpus-side nor a query-side per-row recompute
     val p = pqServe.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head.toLowerCase
     assert(p.linesIterator.count(l => l.contains("scan") && l.contains("seg_")) == 1,
@@ -334,6 +356,9 @@ class SimilaritySpec extends SparkSpec {
       s"per-row assignment recompute in the serve plan:\n${p.take(1500)}")
     assert(!p.contains("pqludf") && "scalaudf".r.findAllIn(p).isEmpty,
       s"LUT UDF leaked into the per-candidate serve plan:\n${p.take(1500)}")
+    val pushed = postingsPushed(pqServe)
+    assert(pushed.nonEmpty && pushed.forall(_.contains("In(cell,")),
+      s"the probed cells must reach the PQ postings scan as a pushed filter: $pushed")
   }
 
   test("PQ codebooks: bit-identical rebuild, ks self-caps on a tiny corpus") {

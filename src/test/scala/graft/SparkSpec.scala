@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,6 +50,36 @@ abstract class SparkSpec extends AnyFunSuite {
     assert(perFile.map(_.size).sum == perFile.reduce(_ ++ _).size,
       s"every ${sortCols.head} must land in exactly one file of $segDir")
     files
+  }
+
+  /** Jobs `f` launches from this thread, counted by a listener. Listener
+    * events arrive in order, so a marker job run after `f` drains them. */
+  def jobsLaunched(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"spec-${System.nanoTime()}"
+    val marker = "drain"
+    val seen = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("graft.spec.tag") == tag).foreach { p =>
+          if (p.getProperty("spark.job.description") == marker) drained.countDown()
+          else seen.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      f
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
+      seen.get
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   override def withFixture(test: NoArgTest): Outcome =
