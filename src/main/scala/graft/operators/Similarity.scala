@@ -1339,9 +1339,8 @@ object Similarity {
     * request — builds its probe rows on the driver ([[driverProbeJoin]]):
     * codes, nearest cells and the shard fan-out become a local
     * relation, the postings scan reads only the probed cells, and the
-    * call costs the final action's jobs alone (≤ 3 when the probed
-    * cells hold at most [[oneTaskProbePairs]] candidates). A larger
-    * batch runs the distributed probe. */
+    * call costs the final action's jobs alone (≤ 3). A larger batch
+    * runs the distributed probe. */
   def ivfTopKIndexed(
       queries: DataFrame,
       corpusExact: DataFrame,
@@ -1361,29 +1360,10 @@ object Similarity {
       nprobe: Int,
       man: AnnStore.Manifest,
       local: Boolean): DataFrame = {
-    val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val centRows = centroidRows(spark, indexDir, man)
-    val matBc = sc.broadcast(centroidMatrix(centRows))
-    val postings = AnnStore.postings(spark, indexDir, man).select(
+    val postings = AnnStore.postings(queries.sparkSession, indexDir, man).select(
       col("vec_id").as("nid"), col("codes").as("cb"), col("cdot").as("cdb"),
       col("m").as("mb"), col("nrm").as("nb"), col("shard"), col("cell"))
-    val joined =
-      if (local) driverProbeJoin(queries, man, centRows, matBc, nprobe, Int8Probe, postings)
-      else {
-        import spark.implicits._
-        val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
-          .toDF("cell", "nshards")
-        val q = Int8Probe.stage(queries.repartition(sc.defaultParallelism, col("vec_id")))
-          .select((col("vec_id").as("qid") +: Int8Probe.payload) :+
-            explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
-              .as("cell"): _*)
-          .join(broadcast(widths), "cell")
-          .withColumn("shard",
-            explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
-          .drop("nshards")
-        q.join(postings, Seq("cell", "shard"))
-      }
+    val joined = probeJoin(queries, indexDir, man, nprobe, Int8Probe, postings, local)
     val ra = screenResid(col("ca"), col("ma"), col("na"))
     val rb = screenResid(col("cb"), col("mb"), col("nb"))
     val cosCode = screenCosCode(col("ca"), col("cda"), col("cb"), col("cdb"))
@@ -1405,18 +1385,6 @@ object Similarity {
   private def carried(probe: DataFrame): Seq[org.apache.spark.sql.Column] =
     Seq("__qv", "__qn").filter(probe.columns.contains).map(col)
 
-  /** Candidate pairs — over every query of a driver-built probe, the
-    * live postings of its probed cells — up to which the probe streams
-    * in ONE partition against broadcast postings. One
-    * partition needs no shuffle before the per-query screen aggregate
-    * or the re-rank window, so the probe costs the broadcasts and the
-    * result job; the bound keeps both the broadcast scan (≤ 2¹⁶
-    * postings, ~7 MB of int8 rows at d = 64) and the single task's
-    * screen work small. Above it the probe is the broadcast side and
-    * the postings stream in parallel. Scoped, so a spec can force the
-    * parallel orientation at fixture scale. */
-  private[graft] val oneTaskProbePairs = new scala.util.DynamicVariable(1L << 16)
-
   /** The probe side of an index query over a driver-held batch, joined
     * to the postings. Each query's screen columns (`probe`), its exact
     * q3 vector and norm² for the re-rank (`__qv`, `__qn`) and its
@@ -1426,12 +1394,16 @@ object Similarity {
     * widths: no repartition, no checkpoint, no scalar collect. The
     * postings scan reads only the probed cells (a pushed `cell IN (…)`,
     * so row-group statistics on the (cell, vec_id)-sorted files skip
-    * the rest), and the exact candidate count — Σ n(cell) over the
-    * probed cells of every query, from the manifest counts — picks the
-    * join orientation ([[oneTaskProbePairs]]). */
+    * the rest) and is broadcast to the probe, which streams in ONE
+    * partition: the screen aggregate and the re-rank window need no
+    * shuffle, and the call costs the broadcasts and the result job.
+    * The floor bounds that broadcast to the postings of at most
+    * [[DriverBatch.Floor]]·nprobe cells; SCALE.md ("Batch-sized probes
+    * on the driver") measures it at 10⁶ vectors against the probe
+    * broadcast over streamed postings and against the distributed
+    * probe. */
   private def driverProbeJoin(
       queries: DataFrame,
-      man: AnnStore.Manifest,
       centRows: Array[Row],
       matBc: org.apache.spark.broadcast.Broadcast[CentroidMatrix],
       nprobe: Int,
@@ -1464,10 +1436,44 @@ object Similarity {
       StructField("shard", IntegerType, nullable = false))))
     val scan = postings.where(
       col("cell").isin(cellsOf.flatten.distinct.map(Integer.valueOf).toSeq: _*))
-    val pairs = cellsOf.map(_.map(c => man.counts.getOrElse(c, 0L)).sum).sum
-    if (pairs <= oneTaskProbePairs.value)
-      probeRows.coalesce(1).join(broadcast(scan), Seq("cell", "shard"))
-    else broadcast(probeRows).join(scan, Seq("cell", "shard"))
+    probeRows.coalesce(1).join(broadcast(scan), Seq("cell", "shard"))
+  }
+
+  /** The probe side of an index query joined to the postings, shared by
+    * both tiers: the tier's probe columns (`probe`) per query, fanned
+    * out to its `nprobe` nearest cells and to every shard of each cell
+    * (the persisted widths). A driver-held batch (`local`) is built on
+    * the driver ([[driverProbeJoin]]); any other batch is repartitioned
+    * and probed in parallel, and `materialize` runs on its probe rows
+    * before the join (the PQ tier's checkpoint). */
+  private def probeJoin(
+      queries: DataFrame,
+      indexDir: String,
+      man: AnnStore.Manifest,
+      nprobe: Int,
+      probe: VectorEncode,
+      postings: DataFrame,
+      local: Boolean,
+      materialize: DataFrame => DataFrame = identity): DataFrame = {
+    val spark = queries.sparkSession
+    val sc = spark.sparkContext
+    val centRows = centroidRows(spark, indexDir, man)
+    val matBc = sc.broadcast(centroidMatrix(centRows))
+    if (local) driverProbeJoin(queries, centRows, matBc, nprobe, probe, postings)
+    else {
+      import spark.implicits._
+      val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
+        .toDF("cell", "nshards")
+      val q = probe.stage(queries.repartition(sc.defaultParallelism, col("vec_id")))
+        .select((col("vec_id").as("qid") +: probe.payload) :+
+          explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
+            .as("cell"): _*)
+        .join(broadcast(widths), "cell")
+        .withColumn("shard",
+          explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
+        .drop("nshards")
+      materialize(q).join(postings, Seq("cell", "shard"))
+    }
   }
 
   /** The read path both index tiers share: resolve the manifest once,
@@ -1643,6 +1649,16 @@ object Similarity {
       else graft.functions.PqCodebooks.encode(cbBc.value, v.toArray)
     }
 
+  /** The PQ tier's probe row: the query's q3 norm² and its ADC table
+    * ([[pqLutUdf]]) — the q3 vector itself stays out of the join
+    * payload, which is the 16 KB table and a scalar. */
+  private def pqProbe(
+      cbBc: org.apache.spark.broadcast.Broadcast[graft.functions.PqCodebooks]) =
+    VectorEncode(
+      _.withColumn("qv", VectorFunctions.quantize3(col("embedding"))),
+      Seq(VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("qn"),
+        pqLutUdf(cbBc)(col("qv")).as("lut")))
+
   /** q3 query vector → the m·ks ADC table lut[sub·ks + code] =
     * q̃_sub · codeword(sub, code): one m·ks·dsub pass per QUERY row, so
     * every candidate pair downstream costs m lookups
@@ -1691,48 +1707,20 @@ object Similarity {
       man: AnnStore.Manifest,
       local: Boolean = false): DataFrame = {
     val spark = queries.sparkSession
-    val sc = spark.sparkContext
-    val centRows = centroidRows(spark, indexDir, man)
-    val matBc = sc.broadcast(centroidMatrix(centRows))
-    val cbBc = sc.broadcast(loadPqCodebooks(spark, indexDir, man))
+    val cbBc = spark.sparkContext.broadcast(loadPqCodebooks(spark, indexDir, man))
     val postings = AnnStore.postings(spark, indexDir, man).select(
       col("vec_id").as("nid"), col("pqc"), col("rn"), col("nrm").as("nb"),
       col("shard"), col("cell"))
-    val lut = pqLutUdf(cbBc)(col("qv")).as("lut")
-    val joined =
-      if (local)
-        driverProbeJoin(queries, man, centRows, matBc, nprobe, VectorEncode(
-          _.withColumn("qv", VectorFunctions.quantize3(col("embedding"))),
-          Seq(VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("qn"), lut)),
-          postings)
-      else {
-        import spark.implicits._
-        val widths = centRows.map(r => (r.getInt(0), r.getInt(3))).toSeq
-          .toDF("cell", "nshards")
-        val q = queries.repartition(sc.defaultParallelism, col("vec_id"))
-          .select(
-            col("vec_id").as("qid"),
-            VectorFunctions.quantize3(col("embedding")).as("qv"),
-            VectorFunctions.dotScaledFast(col("embedding"), col("embedding")).as("qn"),
-            explode(nearestCellsCol(matBc, int8GeomCol(col("embedding")), nprobe))
-              .as("cell"))
-          .join(broadcast(widths), "cell")
-          .withColumn("shard",
-            explode(sequence(lit(0), greatest(col("nshards"), lit(1)) - 1)))
-          // LUT computed on the replicated probe row (|Q|·nprobe·shards
-          // small in the serving regime this tier exists for) and the q3
-          // vector dropped — the join payload is the 16 KB table + a scalar
-          .select(col("qid"), col("qn"), col("cell"), col("shard"), lut)
-        // MATERIALIZE the probe side before the candidate join: without
-        // this, CollapseProject folds the LUT UDF into the post-join
-        // projection and the m·ks·dsub table is rebuilt (boxed,
-        // allocated) once per OCCURRENCE per CANDIDATE row instead of
-        // once per probe row — measured 24 s of a 26 s serve pass at
-        // 10⁵ corpus / 88-query batch, vs 1.6 s for the join itself
-        // (stages timed in isolation). A driver-built probe needs no
-        // checkpoint: its LUTs are data in a local relation.
-        graft.Checkpoints.rotate("similarity.pqProbe", q).join(postings, Seq("cell", "shard"))
-      }
+    // MATERIALIZE a distributed probe side before the candidate join:
+    // without it, CollapseProject folds the LUT UDF into the post-join
+    // projection and the m·ks·dsub table is rebuilt (boxed, allocated)
+    // once per OCCURRENCE per CANDIDATE row instead of once per probe
+    // row — measured 24 s of a 26 s serve pass at 10⁵ corpus / 88-query
+    // batch, vs 1.6 s for the join itself (stages timed in isolation).
+    // A driver-built probe needs no checkpoint: its LUTs are data in a
+    // local relation.
+    val joined = probeJoin(queries, indexDir, man, nprobe, pqProbe(cbBc), postings, local,
+      graft.Checkpoints.rotate("similarity.pqProbe", _))
 
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val adc = ColumnBridge.column(graft.functions.PqAdcExpr(

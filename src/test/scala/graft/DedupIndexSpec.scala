@@ -2,9 +2,11 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{Dedup, DedupIndex, LlmQueries, ManifestCommit, Segments}
+import graft.operators.{Dedup, DedupIndex, DriverBatch, LlmQueries, ManifestCommit, Segments}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -74,11 +76,36 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "self-query must drop exactly the docs with a DISTINCT near-dup partner")
     // the serving claim: the probe's band prefixes and its band keys
     // reach the index scan as pushed data filters (row-group skipping,
-    // not a full-table scan)
+    // not a full-table scan) — on the driver-built probe a 3-doc batch
+    // takes, and on the distributed probe (floor 0), whose prefixes and
+    // keys are collected from its checkpoint
     val tiny = docs.filter($"doc_id" % 2 =!= 0).limit(3)
-    val pushed = pushedFilters(DedupIndex.query(tiny, "doc_id", "text", dir))
-    assert(pushed.exists(f => f.contains("In(bprefix,") && f.contains("In(bkey,")),
-      s"expected bprefix IN and bkey IN among the index scan's pushed filters: $pushed")
+    for (floor <- Seq(DriverBatch.Floor, 0)) {
+      val pushed = DriverBatch.withFloor(floor)(
+        pushedFilters(DedupIndex.query(tiny, "doc_id", "text", dir)))
+      assert(pushed.exists(f => f.contains("In(bprefix,") && f.contains("In(bkey,")),
+        s"floor $floor: expected bprefix IN and bkey IN among the index scan's pushed filters: $pushed")
+    }
+  }
+
+  /** Whether every index join in `df`'s plan (the one keyed on `bkey`)
+    * is a broadcast hash join whose BUILD side is the probe (`__qid`).
+    * Planned with size-based broadcasts off, as at 10⁷ where the index
+    * is far too big and the probe's size unknown: at fixture scale the
+    * planner would broadcast the probe without being told to. */
+  private def probeIsBroadcast(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val plan = try df.select(df.columns.map(col): _*).queryExecution.executedPlan
+    finally spark.conf.set(key, prev)
+    val joins = collect(plan) {
+      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "bkey")) => j
+    }
+    joins.nonEmpty && joins.forall { j =>
+      val build = if (j.buildSide == BuildLeft) j.left else j.right
+      build.output.exists(_.name == "__qid")
+    }
   }
 
   test("query broadcasts a batch-sized probe; shuffle branch is result-identical") {
@@ -89,21 +116,29 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // after the big side's shuffle write). Pin (a) the default plan
     // broadcasts the probe, (b) forcing the over-cap branch through the
     // session conf yields the identical survivor set.
+    // Both probe paths are pinned: the driver-built probe this 250-doc
+    // batch takes, and the checkpointed distributed probe (floor 0) the
+    // 10⁷ fix was made on.
     val dir = tempDir("dix_bcast")
     val corpus = docs.filter($"doc_id" % 2 === 0)
     val incoming = docs.filter($"doc_id" % 2 =!= 0)
     DedupIndex.build(corpus, "doc_id", "text", dir)
-    val q = DedupIndex.query(incoming, "doc_id", "text", dir)
-    assert(q.queryExecution.executedPlan.toString.contains("Broadcast"),
-      "batch-sized probe must be the broadcast side of the index join")
-    val broadcast = q.select($"doc_id").collect().map(_.getLong(0)).toSet
-    spark.conf.set(DedupIndex.BroadcastProbeCapKey, "-1")
-    try {
-      val shuffled = DedupIndex.query(incoming, "doc_id", "text", dir)
-        .select($"doc_id").collect().map(_.getLong(0)).toSet
-      assert(shuffled == broadcast,
-        "shuffle-branch survivors diverged from the broadcast branch")
-    } finally spark.conf.unset(DedupIndex.BroadcastProbeCapKey)
+    val survivors = Seq(DriverBatch.Floor, 0).map { floor =>
+      val q = DriverBatch.withFloor(floor)(DedupIndex.query(incoming, "doc_id", "text", dir))
+      assert(probeIsBroadcast(q),
+        s"floor $floor: batch-sized probe must be the broadcast side of the index join:\n" +
+          q.queryExecution.executedPlan)
+      val broadcast = q.select($"doc_id").collect().map(_.getLong(0)).toSet
+      spark.conf.set(DedupIndex.BroadcastProbeCapKey, "-1")
+      try {
+        val shuffled = DriverBatch.withFloor(floor)(DedupIndex.query(incoming, "doc_id", "text", dir))
+          .select($"doc_id").collect().map(_.getLong(0)).toSet
+        assert(shuffled == broadcast,
+          s"floor $floor: shuffle-branch survivors diverged from the broadcast branch")
+      } finally spark.conf.unset(DedupIndex.BroadcastProbeCapKey)
+      broadcast
+    }
+    assert(survivors.distinct.length == 1, "driver-built and distributed probes diverged")
   }
 
   test("ingestFold ≡ naive query+append composition; probe-row reuse writes identical bands") {

@@ -115,13 +115,6 @@ class DriverBatchSpec extends SparkSpec {
       val pqDist = rows(distributed(Similarity.pqTopKIndexed(batch, emb, pq, 3)))
       assert(rows(ivfSmall) == ivfDist, s"$name: IVF driver-built probe diverged")
       assert(rows(pqSmall) == pqDist, s"$name: PQ driver-built probe diverged")
-      // the parallel orientation: the probe broadcast, the postings streamed
-      Similarity.oneTaskProbePairs.withValue(0L) {
-        assert(rows(Similarity.ivfTopKIndexed(batch, emb, ivf, 3)) == ivfDist,
-          s"$name: IVF broadcast-probe orientation diverged")
-        assert(rows(Similarity.pqTopKIndexed(batch, emb, pq, 3)) == pqDist,
-          s"$name: PQ broadcast-probe orientation diverged")
-      }
       // the branch rule: the driver builds the probe (no assignment in
       // the plan) up to the floor, the distributed probe above it
       val plan = ivfSmall.queryExecution.executedPlan.toString.toLowerCase

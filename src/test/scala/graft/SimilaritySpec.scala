@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.VectorFunctions
-import graft.operators.{AnnStore, LlmQueries, ManifestCommit, Similarity, TextAnalysis}
+import graft.operators.{AnnStore, DriverBatch, LlmQueries, ManifestCommit, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -343,19 +343,26 @@ class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .sameElements(sorted(Similarity.ivfTopKIndexed(qb, corpus, dirA, 3))))
     // plan gates, on the AQE-final section (same discipline as the int8
     // index test): exactly ONE postings scan, and ZERO assignment
-    // probes anywhere in the serve plan — the serving batch's probe side
-    // (cells, LUTs) is built once on the driver before the candidate
-    // join (a LUT UDF left in the plan re-evaluated per candidate row,
-    // 24 s of a 26 s pass at 10⁵), so the executed plan carries neither
-    // a corpus-side nor a query-side per-row recompute
-    val p = pqServe.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head.toLowerCase
-    assert(p.linesIterator.count(l => l.contains("scan") && l.contains("seg_")) == 1,
-      s"PQ read path must scan the postings segments exactly once:\n${p.take(1500)}")
-    assert("nearestcellsexpr".r.findAllIn(p).isEmpty,
-      s"per-row assignment recompute in the serve plan:\n${p.take(1500)}")
-    assert(!p.contains("pqludf") && "scalaudf".r.findAllIn(p).isEmpty,
-      s"LUT UDF leaked into the per-candidate serve plan:\n${p.take(1500)}")
+    // probes anywhere in the serve plan — the probe side (cells, LUTs)
+    // is built once before the candidate join (a LUT UDF left in the
+    // plan re-evaluated per candidate row, 24 s of a 26 s pass at 10⁵),
+    // so the executed plan carries neither a corpus-side nor a
+    // query-side per-row recompute. Both probe paths: the driver-built
+    // one this 25-query batch takes, whose LUTs are local-relation data,
+    // and the distributed one (floor 0), whose checkpoint keeps
+    // CollapseProject from folding the LUT into the candidate projection
+    val pqServeDist = DriverBatch.withFloor(0)(Similarity.pqTopKIndexed(qb, corpus, dirB, 3))
+    assert(sorted(pqServeDist).sameElements(sorted(pqServe)))
+    for ((served, path) <- Seq(pqServe -> "driver-built", pqServeDist -> "distributed")) {
+      val p = served.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head.toLowerCase
+      assert(p.linesIterator.count(l => l.contains("scan") && l.contains("seg_")) == 1,
+        s"$path: PQ read path must scan the postings segments exactly once:\n${p.take(1500)}")
+      assert("nearestcellsexpr".r.findAllIn(p).isEmpty,
+        s"$path: per-row assignment recompute in the serve plan:\n${p.take(1500)}")
+      assert(!p.contains("pqludf") && !p.contains("udf(") && "scalaudf".r.findAllIn(p).isEmpty,
+        s"$path: LUT UDF leaked into the per-candidate serve plan:\n${p.take(1500)}")
+    }
     val pushed = postingsPushed(pqServe)
     assert(pushed.nonEmpty && pushed.forall(_.contains("In(cell,")),
       s"the probed cells must reach the PQ postings scan as a pushed filter: $pushed")
