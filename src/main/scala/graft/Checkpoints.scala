@@ -83,8 +83,18 @@ object Checkpoints {
     * but must hand its final labels to the caller). See the
     * [[DefaultDepth]] caller contract. */
   def adopt(key: String, ck: DataFrame, depth: Int = DefaultDepth): DataFrame = {
-    push(key, ck.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd },
-      depth)
+    push(key, leaves(ck), depth)
     ck
   }
+
+  /** Free the blocks of the checkpoint `df` reads, once no frame that
+    * reads it will run again — for checkpoints an operator manages
+    * itself (per-round loop tables, a written segment's encode). */
+  def free(df: DataFrame): Unit = leaves(df).foreach(_.unpersist(blocking = false))
+
+  /** The checkpoint RDDs under `df`: the Dataset API has no public
+    * handle for them, so reach through the analyzed plan's LogicalRDD
+    * leaves (public in org.apache.spark.sql.execution). */
+  private def leaves(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 }

@@ -99,12 +99,10 @@ object Bpe {
     * distributed rounds run unchanged — this is a bounded-transfer
     * floor, not a local-mode tune. 2^17 words ≈ a few MB collected;
     * 24 rounds × 10⁵ words × ~15 symbols is millisecond-scale driver
-    * arithmetic vs ~48 scheduled jobs. */
-  private[graft] val DriverTrainMaxWords = 131072L
-
-  /** Session-conf key overriding [[DriverTrainMaxWords]] (0 forces the
-    * distributed path — the seam the branch-equality spec uses). */
-  private[graft] val DriverTrainCapKey = "graft.bpe.driverTrainMaxWords"
+    * arithmetic vs ~48 scheduled jobs. The branch is
+    * [[DriverBatch.rows]]; its `withFloor(0)` seam forces the
+    * distributed rounds in the branch-equality spec. */
+  private[graft] val DriverTrainMaxWords = 131072
 
   /** Spark/DuckDB/Python-compatible string order: UTF8 BINARY bytes
     * (= code-point order), NOT Java's UTF-16 `compareTo`, which sorts
@@ -196,20 +194,16 @@ object Bpe {
 
     var vocab = graft.Checkpoints.rotate("bpe.vocab", vocabTable(docs, textCol))
 
-    // SUB-FLOOR SKIP (round-15, guide §1.2): one bounded limit(cap+1)
-    // fetch decides the branch AND carries the whole working set — at
-    // or under the cap the 2-jobs-per-round distributed loop (~48
-    // scheduled jobs at the nMerges=24 default) collapses to driver
-    // arithmetic over the SAME sufficient statistic, with the rewrite
-    // pass shared (mergePass) and the argmax tie-break in the same
-    // UTF8-binary order. Above the cap the sample is discarded and the
+    // SUB-FLOOR SKIP (round-15, guide §1.2): one bounded fetch
+    // ([[DriverBatch.rows]]) decides the branch AND carries the whole
+    // working set — at or under the cap the 2-jobs-per-round
+    // distributed loop (~48 scheduled jobs at the nMerges=24 default)
+    // collapses to driver arithmetic over the SAME sufficient
+    // statistic, with the rewrite pass shared (mergePass) and the
+    // argmax tie-break in the same UTF8-binary order. Above the cap the
     // distributed rounds below run unchanged.
-    val cap = spark.conf
-      .get(DriverTrainCapKey, DriverTrainMaxWords.toString).toLong
-    if (cap > 0 && cap < Int.MaxValue - 1) {
-      val sample = vocab.select(col("w"), col("freq"))
-        .limit(cap.toInt + 1).collect()
-      if (sample.length <= cap) {
+    DriverBatch.rows(vocab.select(col("w"), col("freq")), DriverTrainMaxWords) match {
+      case Some(sample) =>
         val words = sample.map(r => (r.getString(0), r.getLong(1)))
         val (merges, syms) = trainOnDriver(words, nMerges, minPairCount)
         val freshVocab = words.zip(syms)
@@ -217,7 +211,7 @@ object Bpe {
           .toDF("w", "syms", "freq")
         return (merges.toSeq.toDF("rank", "left", "right", "pair_count"),
           graft.Checkpoints.rotate("bpe.vocab", freshVocab))
-      }
+      case None =>
     }
 
     val merges = new ArrayBuffer[(Int, String, String, Long)]

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline (SURVEY §2b L).
@@ -819,25 +819,19 @@ object Dedup {
     * rows instead of distributed star contraction — a BOUNDED transfer
     * (≤ cap × 16 B ≈ 64 KB) that replaces 2-4 rounds of shuffled aggs
     * with one collect on any deployment, local or cluster. Shared by
-    * [[connectedComponentsStars]] and [[incrementalComponents]];
-    * session-overridable via [[DriverUnionFindCapKey]] (the seam the
-    * branch-equality specs force each side with). */
-  private[graft] val DriverUnionFindMaxEdges = 4096L
+    * [[connectedComponentsStars]] and [[incrementalComponents]] through
+    * [[DriverBatch.rows]] (whose `withFloor` seam the branch-equality
+    * specs force each side with). */
+  private[graft] val DriverUnionFindMaxEdges = 4096
 
-  /** Session-conf key overriding [[DriverUnionFindMaxEdges]]. */
-  private[graft] val DriverUnionFindCapKey =
-    "graft.components.driverUnionFindMaxEdges"
-
-  private def driverUnionFindCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get(DriverUnionFindCapKey, DriverUnionFindMaxEdges.toString).toLong
-
-  /** Min-id union-find over a collected edge list — the driver-side
-    * closure both sub-floor branches run: returns the component label
-    * (= smallest member id, the star forest's center convention) for
-    * every edge endpoint. Path-compressing find; union roots keep the
-    * MINIMUM, so labels match [[connectedComponentsStars]] exactly
-    * (DedupSpec pins the equality on shared inputs). */
-  private def unionFindMinLabels(es: Array[(Long, Long)]): Long => Long = {
+  /** Min-id union-find over a collected edge list (rows of two longs) —
+    * the driver-side closure both sub-floor branches run: returns
+    * (id, comp) for every edge endpoint, comp = smallest member id, the
+    * star forest's center convention. Path-compressing find; union
+    * roots keep the MINIMUM, so labels match [[connectedComponentsStars]]
+    * exactly (DedupSpec pins the equality on shared inputs). */
+  private def driverComponents(spark: SparkSession, edges: Array[Row]): DataFrame = {
+    val es = edges.map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -852,7 +846,8 @@ object Dedup {
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
-    find
+    import spark.implicits._
+    es.flatMap(e => Seq(e._1, e._2)).distinct.toSeq.map(nd => (nd, find(nd))).toDF("id", "comp")
   }
 
   /** Connected components over undirected near-dup pairs — the step
@@ -941,28 +936,13 @@ object Dedup {
     // driver-side union-find over the ALREADY-MATERIALIZED checkpoint
     // rows produces the min-id labels by the same definition (provably
     // identical output, not a heuristic; DedupSpec pins both branches
-    // on one input). Count and fetch are ONE bounded job — limit(cap+1)
-    // over the checkpoint: a result of ≤ cap rows IS the complete edge
-    // list (limit dropped nothing, so which-rows nondeterminism never
-    // arises); cap+1 rows means "over the floor", the sample is
-    // discarded and the distributed closure runs (round-15 job fusion —
-    // the former count()+collect() pair was two scans of the blocks).
-    val spark = deltaEdges.sparkSession
-    val cap = driverUnionFindCap(spark)
-    val sample =
-      if (cap < Int.MaxValue - 1) edges.limit(cap.toInt + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val relabel =
-      if (sample.length <= cap && sample.nonEmpty) {
-        val es = sample.map(r => (r.getLong(0), r.getLong(1)))
-        val labelOf = unionFindMinLabels(es)
-        val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
-        import spark.implicits._
-        nodes.map(nd => (nd, labelOf(nd))).toSeq.toDF("id", "comp")
-      } else if (sample.isEmpty && cap < Int.MaxValue - 1 && cap > 0) {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("id", "comp")
-      } else connectedComponents(edges, "u", "v")
+    // on one input). Count and fetch are ONE bounded job over the
+    // checkpoint ([[DriverBatch.rows]], round-15 job fusion — the former
+    // count()+collect() pair was two scans of the blocks).
+    val relabel = DriverBatch.rows(edges, DriverUnionFindMaxEdges) match {
+      case Some(es) => driverComponents(deltaEdges.sparkSession, es)
+      case None => connectedComponents(edges, "u", "v")
+    }
     // 3a. contracted nodes that never had a label emit their own rows
     val rawNodes = contracted.filter(col("u_raw")).select(col("u").as("id"))
       .unionAll(contracted.filter(col("v_raw")).select(col("v").as("id")))
@@ -1047,14 +1027,6 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 15): DataFrame = {
-    // free a no-longer-referenced localCheckpoint's blocks: the Dataset
-    // API has no public handle for this, so reach through the analyzed
-    // plan's LogicalRDD leaf (public in org.apache.spark.sql.execution)
-    def freeCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
-
     // materialize the PAIR INPUT once before symmetrizing: the union's
     // two branches are separate scans of `pairs`, and Spark does not
     // dedupe common subtrees inside a plan — with an expensive producer
@@ -1082,7 +1054,7 @@ object Dedup {
           (coalesce(col("nmin"), col("comp")) < col("comp")).as("chg"))
         .localCheckpoint() // eager: one job materializes labels AND flags
       converged = next.filter(col("chg")).isEmpty
-      freeCheckpoint(labels)
+      graft.Checkpoints.free(labels)
       labels = next.select(col("id"), col("comp"))
       iter += 1
     }
@@ -1090,7 +1062,7 @@ object Dedup {
       s"connectedComponentsProp did not converge in $maxIter rounds — the " +
         "pair graph has a longer diameter than a dedup workload should; " +
         "raise maxIter or switch to star-contraction for chain graphs")
-    freeCheckpoint(sym)
+    graft.Checkpoints.free(sym)
     // the final labels checkpoint must outlive this call (the caller's
     // plan reads it), so it rotates: the next invocation frees this
     // generation's blocks instead of letting bench loops accumulate them
@@ -1146,11 +1118,6 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 15): DataFrame = {
-    def freeCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
-
     // materialize the pair input once (see connectedComponents: the
     // symmetrizing union's branches would re-execute the producer)
     val p0 = graft.Checkpoints.rotate("dedup.connectedComponentsStars.pairs",
@@ -1186,11 +1153,11 @@ object Dedup {
     // equality on one input; the union-find's min-root rule IS the
     // star forest's center convention). At 100 TB the pair graph is
     // orders past the cap and the distributed path runs unchanged —
-    // the cap is a bounded-transfer floor, not a local-mode tune
-    // (session-overridable via [[DriverUnionFindCapKey]]; the
-    // branch-equality spec forces each side with it). Non-integral id
-    // types (never produced by the declared operators) keep the
-    // distributed path — the driver map is keyed on Long.
+    // the cap is a bounded-transfer floor, not a local-mode tune. An
+    // empty edge list takes the driver branch too: every node labels
+    // itself. Non-integral id types (never produced by the declared
+    // operators) keep the distributed path — the driver map is keyed
+    // on Long.
     val integralIds = Seq(edges.schema("u").dataType, edges.schema("v").dataType)
       .forall {
         case org.apache.spark.sql.types.LongType |
@@ -1199,80 +1166,67 @@ object Dedup {
              org.apache.spark.sql.types.ByteType => true
         case _ => false
       }
-    val spark = pairs.sparkSession
-    val cap = driverUnionFindCap(spark)
-    // branch decision and edge fetch fused into ONE bounded job (see
-    // incrementalComponents): ≤ cap rows back means limit dropped
-    // nothing — the sample IS the complete canonical edge list; cap+1
-    // rows means over the floor, sample discarded, distributed path
-    val sample =
-      if (integralIds && cap > 0 && cap < Int.MaxValue - 1)
-        edges.select(col("u").cast("long"), col("v").cast("long"))
-          .limit(cap.toInt + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (sample.nonEmpty && sample.length <= cap) {
-      val es = sample.map(r => (r.getLong(0), r.getLong(1)))
-      freeCheckpoint(edges)
-      val labelOf = unionFindMinLabels(es)
-      import spark.implicits._
-      val lmap = es.flatMap(e => Seq(e._1, e._2)).distinct.toSeq
-        .map(nd => (nd, labelOf(nd))).toDF("__lid", "__lcomp")
-      val idType = nodes.schema("id").dataType
-      // one broadcast join labels every node; edge-free nodes (self-pair
-      // endpoints) miss the map and label themselves, same as the
-      // distributed branch's left-join coalesce
-      val labels = nodes
-        .join(broadcast(lmap), col("id").cast("long") === col("__lid"), "left")
-        .select(col("id"),
-          coalesce(col("__lcomp").cast(idType), col("id")).as("comp"))
-        .localCheckpoint()
-      return graft.Checkpoints.adopt("dedup.connectedComponentsStars.labels", labels)
+    // branch decision and edge fetch fused into ONE bounded job
+    // ([[DriverBatch.rows]], as in incrementalComponents)
+    val small =
+      if (integralIds) DriverBatch.rows(
+        edges.select(col("u").cast("long"), col("v").cast("long")), DriverUnionFindMaxEdges)
+      else None
+    // the star forest as (member u, center v) rows
+    val forest = small match {
+      case Some(es) =>
+        // the union-find labels, broadcast; a center's row maps it to itself
+        broadcast(driverComponents(pairs.sparkSession, es).select(
+          col("id").cast(edges.schema("u").dataType).as("u"),
+          col("comp").cast(edges.schema("v").dataType).as("v")))
+      case None =>
+        var nEdges = edges.count()
+        var iter = 0
+        var converged = nEdges == 0L
+        while (!converged && iter < maxIter) {
+          // large-star over full neighborhoods (symmetrize to see both sides)
+          val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
+          val mins = sym.groupBy(col("u"))
+            .agg(min(col("v")).as("mn"))
+            .select(col("u"), least(col("mn"), col("u")).as("m"))
+          val ls = sym.join(mins, "u")
+            .filter(col("v") > col("u"))
+            .select(col("v").as("u"), col("m").as("v"))
+            .filter(col("u") =!= col("v"))
+            .distinct()
+          // small-star over the (already canonical u > v) large-star output
+          val mins2 = ls.groupBy(col("u")).agg(min(col("v")).as("mn"))
+          val ss = ls.join(mins2, "u")
+            .select(explode(array(
+              struct(col("v").as("a"), col("mn").as("b")),
+              struct(col("u").as("a"), col("mn").as("b")))).as("e"))
+            .select(greatest(col("e.a"), col("e.b")).as("u"),
+              least(col("e.a"), col("e.b")).as("v"))
+            .filter(col("u") =!= col("v"))
+            .distinct()
+            .localCheckpoint()
+          val nNew = ss.count()
+          converged = nNew == nEdges &&
+            ss.join(edges, Seq("u", "v"), "left_anti").isEmpty
+          graft.Checkpoints.free(edges)
+          edges = ss
+          nEdges = nNew
+          iter += 1
+        }
+        require(converged,
+          s"connectedComponentsStars did not converge in $maxIter rounds — " +
+            "star contraction needs O(log n) alternations on any graph, so " +
+            "exhausting a budget this size means the input is degenerate; " +
+            "raise maxIter only after inspecting the pair graph")
+        edges
     }
-    var nEdges = edges.count()
-    var iter = 0
-    var converged = nEdges == 0L
-    while (!converged && iter < maxIter) {
-      // large-star over full neighborhoods (symmetrize to see both sides)
-      val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy(col("u"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val ls = sym.join(mins, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // small-star over the (already canonical u > v) large-star output
-      val mins2 = ls.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      val ss = ls.join(mins2, "u")
-        .select(explode(array(
-          struct(col("v").as("a"), col("mn").as("b")),
-          struct(col("u").as("a"), col("mn").as("b")))).as("e"))
-        .select(greatest(col("e.a"), col("e.b")).as("u"),
-          least(col("e.a"), col("e.b")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-      val nNew = ss.count()
-      converged = nNew == nEdges &&
-        ss.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      freeCheckpoint(edges)
-      edges = ss
-      nEdges = nNew
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponentsStars did not converge in $maxIter rounds — " +
-        "star contraction needs O(log n) alternations on any graph, so " +
-        "exhausting a budget this size means the input is degenerate; " +
-        "raise maxIter only after inspecting the pair graph")
     // star forest ⇒ every edge is (member, center); centers and
     // singleton nodes label themselves
     val labels = nodes
-      .join(edges.select(col("u").as("id"), col("v").as("c")), Seq("id"), "left")
+      .join(forest.select(col("u").as("id"), col("v").as("c")), Seq("id"), "left")
       .select(col("id"), coalesce(col("c"), col("id")).as("comp"))
       .localCheckpoint()
-    freeCheckpoint(edges)
+    graft.Checkpoints.free(edges)
     graft.Checkpoints.adopt("dedup.connectedComponentsStars.labels", labels)
   }
 }

@@ -4,19 +4,28 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.StructType
 
-/** Batch-sized inputs built on the driver — the serving half of the
-  * persisted stores. A probe of the dedup index or of an ANN index, and
-  * an append to an ANN index, used to run the eager prefix built for a
-  * corpus-sized input: a repartition, a checkpoint and one or two
-  * scalar collects, each its own Spark job. For a request-sized batch
-  * that prefix was most of the call (Dremel, VLDB 2020: interactive
-  * latency is per-query scheduling and planning work). Below [[Floor]]
-  * the batch is collected once; its signatures, band keys, cells, LUTs
-  * or posting codes are computed on the driver with the same native
-  * expressions the distributed path runs ([[eval]]), and the probe side
-  * enters the plan as a local relation. Above the floor the sample is
-  * dropped and the caller runs its distributed path unchanged — the
-  * `limit(cap + 1)` branch rule of [[Dedup.incrementalComponents]]. */
+/** The one sub-floor rule: an input of at most `floor` rows is finished
+  * on the driver; above it the caller's distributed path runs unchanged.
+  * [[rows]] decides the branch and fetches the input in one step — a
+  * local relation (a request payload) is its own answer and runs no
+  * query; any other frame is sampled with one `limit(floor + 1)`
+  * collect, and a sample of at most `floor` rows IS the whole input
+  * (the limit dropped nothing), while `floor + 1` rows means "above the
+  * floor" and the sample is dropped. For a small input the distributed
+  * path is mostly fixed per-job overhead (Dremel, VLDB 2020: interactive
+  * latency is per-query scheduling and planning work), and the driver
+  * result is the same by construction. The users and their floors:
+  *
+  *   - the dedup probe and the ANN probes and append ([[gather]],
+  *     [[Floor]] = 256 batch rows): signatures, band keys, cells, LUTs
+  *     or posting codes are computed on the driver with the same native
+  *     expressions the distributed path runs ([[eval]]), and the probe
+  *     side enters the plan as a local relation;
+  *   - the component closure, full and incremental
+  *     ([[Dedup.DriverUnionFindMaxEdges]] = 4 096 canonical edges): a
+  *     min-id union-find replaces the star-contraction rounds;
+  *   - BPE training ([[Bpe.DriverTrainMaxWords]] = 131 072 distinct
+  *     words): the merge rounds run over the collected word table. */
 private[graft] object DriverBatch {
 
   /** Batch rows at or below which a probe or an ANN append is built on
@@ -30,23 +39,28 @@ private[graft] object DriverBatch {
 
   private val forced = new scala.util.DynamicVariable[Option[Int]](None)
 
-  /** Run `f` with the floor at `n` on this thread — the seam the branch
+  /** Run `f` with every floor at `n` on this thread — the seam the branch
     * parity specs use to force either path (0: always distributed). */
   private[graft] def withFloor[T](n: Int)(f: => T): T = forced.withValue(Some(n))(f)
 
-  /** `df`'s rows as a local relation when it holds at most the floor,
-    * None above it. A local relation (a request payload) is its own
-    * answer and runs no query; any other frame is sampled with one
-    * `limit(floor + 1)` collect — one job. */
-  def gather(df: DataFrame): Option[DataFrame] = {
-    val floor = forced.value.getOrElse(Floor)
+  /** `df`'s rows when it holds at most `floor` rows, None above it: no
+    * query for a local relation, one `limit(floor + 1)` collect — one
+    * job — for any other frame. */
+  def rows(df: DataFrame, floor: Int): Option[Array[Row]] = {
+    val n = forced.value.getOrElse(floor)
     df.queryExecution.analyzed match {
-      case l: LocalRelation => Some(df).filter(_ => l.data.length <= floor)
-      case _ =>
-        val rows = df.limit(floor + 1).collect()
-        if (rows.length > floor) None
-        else Some(relation(df.sparkSession, rows.toSeq, df.schema))
+      case l: LocalRelation => if (l.data.length <= n) Some(df.collect()) else None
+      case _ => Some(df.limit(n + 1).collect()).filter(_.length <= n)
     }
+  }
+
+  /** `df` as a local relation when it holds at most [[Floor]] rows, None
+    * above it — the probe and append batches' [[rows]]. A local relation
+    * is returned as it is: collecting and rebuilding it costs ~4.5 ms of
+    * driver time per probe for the same rows. */
+  def gather(df: DataFrame): Option[DataFrame] = df.queryExecution.analyzed match {
+    case l: LocalRelation => Some(df).filter(_ => l.data.length <= forced.value.getOrElse(Floor))
+    case _ => rows(df, Floor).map(rs => relation(df.sparkSession, rs.toSeq, df.schema))
   }
 
   /** `cols` evaluated over the local relation `local` on the driver, with

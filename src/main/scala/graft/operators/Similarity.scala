@@ -1172,9 +1172,7 @@ object Similarity {
       rows.join(broadcast(widths.toSeq.toDF("cell", "nshards")), "cell")
         .select(withShard(rows.columns.toSeq): _*),
       segDir, PostingKeys)
-    rows.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    graft.Checkpoints.free(rows)
   }
 
   /** The posting columns `cols` with their shard: an id hash within the

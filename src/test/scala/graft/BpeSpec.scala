@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Bpe
+import graft.operators.{Bpe, DriverBatch}
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
@@ -63,7 +63,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("driver and distributed training branches are identical (sub-floor law)") {
-    // default cap ≫ fixture vocab → driver loop; cap 0 forces the
+    // default cap ≫ fixture vocab → driver loop; floor 0 forces the
     // distributed per-round jobs. Merges AND final vocab must agree
     // exactly — the same branch-equality pin the dedup closures carry.
     val docs = Tables(spark, sf, "documents").limit(150)
@@ -75,13 +75,10 @@ class BpeSpec extends SparkSpec {
           (r.getString(0), r.getSeq[String](1).toSeq, r.getLong(2))).toSet)
     }
     val fast = run()
-    spark.conf.set(Bpe.DriverTrainCapKey, "0")
-    try {
-      val dist = run()
-      assert(fast._1 === dist._1)
-      assert(fast._2 === dist._2)
-      assert(fast._1.nonEmpty)
-    } finally spark.conf.unset(Bpe.DriverTrainCapKey)
+    val dist = DriverBatch.withFloor(0)(run())
+    assert(fast._1 === dist._1)
+    assert(fast._2 === dist._2)
+    assert(fast._1.nonEmpty)
   }
 
   test("a supplementary character starts as one symbol, its code point") {
@@ -112,9 +109,7 @@ class BpeSpec extends SparkSpec {
     }
     val driver = run()
     assert(driver._1 === Seq((0, "a", e, 5L), (1, s"a$e", "b", 3L), (2, s"a$e", "c", 2L)))
-    spark.conf.set(Bpe.DriverTrainCapKey, "0")
-    try assert(run() === driver)
-    finally spark.conf.unset(Bpe.DriverTrainCapKey)
+    assert(DriverBatch.withFloor(0)(run()) === driver)
     val pieces = Bpe.bpeEncodeSelf(docs, "doc_id", "text", nMerges = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val text = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, LlmQueries}
+import graft.operators.{Dedup, DriverBatch, LlmQueries}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -226,10 +226,9 @@ class DedupSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     // force the DISTRIBUTED branch (499 edges would take the sub-floor
     // driver union-find, which has no round budget to exhaust)
-    spark.conf.set(graft.operators.Dedup.DriverUnionFindCapKey, "0")
-    try intercept[IllegalArgumentException] {
+    DriverBatch.withFloor(0)(intercept[IllegalArgumentException] {
       graft.operators.Dedup.connectedComponents(longChain, "id_a", "id_b", maxIter = 1)
-    } finally spark.conf.unset(graft.operators.Dedup.DriverUnionFindCapKey)
+    })
     // ...and the same chain converges with the default budget
     val full = graft.operators.Dedup.connectedComponents(chain, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -282,7 +281,19 @@ class DedupSpec extends SparkSpec {
     // every shape above runs the ≤4096-edge driver branch by default
     // (round-15 sub-floor skip); this spec pins the branch-equality law
     // the skip rests on — the SAME input closed by both branches, the
-    // conf seam forcing each side (the BroadcastProbeCap discipline)
+    // DriverBatch floor seam forcing each side (the BroadcastProbeCap
+    // discipline)
+    // `n` distinct canonical (u > v) edges over 3 000 ids, half of them
+    // given in the other order
+    def canonical(n: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(11)
+      Iterator.continually((rnd.nextInt(3000).toLong, rnd.nextInt(3000).toLong))
+        .collect { case (a, b) if a != b => (a max b, a min b) }
+        .distinct.take(n).toSeq.zipWithIndex
+        .map { case ((a, b), i) => if (i % 2 == 0) (a, b) else (b, a) }
+    }
+    // an empty canonical edge list: self-pairs only
+    val selfOnly = Seq((7L, 7L), (8L, 8L), (7L, 7L))
     val shapes = Seq(
       // chain + clique + singleton-ish mixture
       Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
@@ -293,19 +304,30 @@ class DedupSpec extends SparkSpec {
         case ((a, _), i) =>
           val rnd = new scala.util.Random(i)
           (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong)
-      })
+      },
+      // the floor and one edge over it: the default takes the driver
+      // branch on the first and the distributed one on the second
+      canonical(Dedup.DriverUnionFindMaxEdges),
+      canonical(Dedup.DriverUnionFindMaxEdges + 1),
+      selfOnly)
+    def close(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      Dedup.connectedComponentsStars(df, "id_a", "id_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (edges <- shapes) {
       val df = edges.toDF("id_a", "id_b")
-      val byDriver = Dedup.connectedComponentsStars(df, "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.set(Dedup.DriverUnionFindCapKey, "0")
-      val byStars =
-        try Dedup.connectedComponentsStars(df, "id_a", "id_b")
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        finally spark.conf.unset(Dedup.DriverUnionFindCapKey)
+      val byDefault = close(df)
+      val byDriver = DriverBatch.withFloor(Dedup.DriverUnionFindMaxEdges + 1)(close(df))
+      val byStars = DriverBatch.withFloor(0)(close(df))
       assert(byDriver == byStars,
         "driver union-find labels must equal the distributed closure's")
+      assert(byDefault == byStars)
     }
+    assert(close(selfOnly.toDF("id_a", "id_b")) == Map(7L -> 7L, 8L -> 8L))
+    // the empty edge list takes the driver branch: no edge count() job
+    // and no broadcast of the empty edge checkpoint (7 jobs when it took
+    // the distributed branch)
+    val jobs = jobsLaunched(close(selfOnly.toDF("id_a", "id_b")))
+    assert(jobs <= 5, s"the empty-edge closure ran $jobs jobs")
   }
 
   test("incremental CC: labels + delta edges ≡ full closure, on random splits") {

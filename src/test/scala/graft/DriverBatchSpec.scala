@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 /** Batch-sized probes and appends built on the driver ([[DriverBatch]]):
   * at or below the floor the dedup, IVF and PQ probes and the ANN append
   * are row-identical to the distributed path and to the reference, run
-  * a fixed handful of Spark jobs, and register no checkpoint. */
+  * a fixed handful of Spark jobs, and register no checkpoint; and no
+  * main source takes a sub-floor branch sample of its own. */
 class DriverBatchSpec extends SparkSpec {
 
   private lazy val docs = Tables(spark, sf, "documents")
@@ -207,5 +208,36 @@ class DriverBatchSpec extends SparkSpec {
       pool.awaitTermination(1, TimeUnit.MINUTES)
     }
     assert(Checkpoints.liveIds == before, "a driver-built probe registered a checkpoint")
+  }
+
+  /** The chains of `text` that take a `limit(n + 1)` branch sample by hand. */
+  private def handSamplers(text: String): Seq[String] = {
+    val sample = """\.limit\((?:[^()]|\([^()]*\))*\+\s*1\)\.collect\(\)""".r
+    SourceCheck.chains(text).filter(sample.findFirstIn(_).isDefined)
+  }
+
+  test("one sub-floor sampler: no main source hand-rolls a limit(n + 1) branch or a floor conf key") {
+    val bad = Seq(
+      """val sample = edges.select(col("u").cast("long"), col("v").cast("long"))
+        |  .limit(cap.toInt + 1).collect()""".stripMargin,
+      """vocab.limit(DriverTrainMaxWords + 1).collect()""")
+    bad.foreach(src => assert(handSamplers(src).size == 1, src))
+    val fine = Seq(
+      """// edges.limit(cap + 1).collect() in a comment""",
+      """best.orderBy(col("c").desc).limit(1).collect()""")
+    fine.foreach(src => assert(handSamplers(src).isEmpty, src))
+    val found = SourceCheck.mainSources.flatMap { case (f, text) => handSamplers(text).map(f -> _) }
+    val operators = java.nio.file.Paths.get("scala", "graft", "operators")
+    // DedupIndex.probeKeys caps how many band keys are pushed down to the
+    // index scan; it takes no branch
+    assert(found.map(_._1).sorted == Seq(
+      operators.resolve("DedupIndex.scala").toString,
+      operators.resolve("DriverBatch.scala").toString), found)
+    assert(found.exists { case (f, c) =>
+      f.endsWith("DedupIndex.scala") && c.contains("""select(col("bkey")).distinct()""")
+    }, found)
+    val floorKey = """"graft\.(components|bpe)\.""".r
+    val keyed = SourceCheck.mainSources.collect { case (f, t) if floorKey.findFirstIn(t).isDefined => f }
+    assert(keyed.isEmpty, keyed)
   }
 }

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
-import scala.jdk.CollectionConverters._
-
+import graft.SourceCheck.{chains, mainSources}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One segment writer: every persisted-store segment and tombstone set
@@ -14,19 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[EngineProfileSpec]]'s single session builder. */
 class SegmentWriterSpec extends AnyFunSuite {
 
-  /** Method chains of a source text, one per element: comments dropped,
-    * and every line that starts with `.` joined onto the line it
-    * continues. */
-  private def chains(text: String): Seq[String] = {
-    val code = text.linesIterator
-      .map(_.replaceAll("""(^|\s)//.*$""", ""))
-      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
-      .map(_.trim).filter(_.nonEmpty).toSeq
-    code.foldLeft(Vector.empty[String]) { (acc, l) =>
-      if (l.startsWith(".") && acc.nonEmpty) acc.init :+ (acc.last + l) else acc :+ l
-    }
-  }
-
   private val writerPartitionBy = """\.write\b.*\.partitionBy\(""".r
   private val coalescedStoreWrite =
     """\.coalesce\(1\).*\.write\b.*\.parquet\([^)]*\b(seg|del|tomb)""".r
@@ -35,15 +21,6 @@ class SegmentWriterSpec extends AnyFunSuite {
   private def violations(text: String): Seq[String] =
     chains(text).filter(c =>
       writerPartitionBy.findFirstIn(c).isDefined || coalescedStoreWrite.findFirstIn(c).isDefined)
-
-  private def mainSources: Seq[(String, String)] = {
-    val main = Paths.get("src", "main")
-    assert(Files.isDirectory(main), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
-    val walk = Files.walk(main)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .map(p => main.relativize(p).toString -> Files.readString(p)).toSeq.sortBy(_._1)
-    finally walk.close()
-  }
 
   test("the check sees hand-picked layouts and ignores window partitioning") {
     val bad = Seq(
