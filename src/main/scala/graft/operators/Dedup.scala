@@ -824,6 +824,13 @@ object Dedup {
     * specs force each side with). */
   private[graft] val DriverUnionFindMaxEdges = 4096
 
+  /** Id types the driver union-find keys on (as Long). */
+  private def integral(t: org.apache.spark.sql.types.DataType): Boolean = t match {
+    case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
+         org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
+    case _ => false
+  }
+
   /** Min-id union-find over a collected edge list (rows of two longs) —
     * the driver-side closure both sub-floor branches run: returns
     * (id, comp) for every edge endpoint, comp = smallest member id, the
@@ -1118,10 +1125,25 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 15): DataFrame = {
+    val uv = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+    // a local pair relation at or under the floor (a request-sized
+    // batch) is its own edge list: it closes on the driver with no job
+    // (no pair rotation, no edge checkpoint, no sample). Its self-pairs
+    // enter the union-find too, so their nodes label themselves. Any
+    // other input, or one with a null id, takes the path below.
+    val idType = uv.select(col("u")).unionAll(uv.select(col("v").as("u"))).schema("u").dataType
+    val localPairs =
+      if (!integral(idType)) None
+      else DriverBatch.localRows(uv.select(col("u").cast("long"), col("v").cast("long")),
+        DriverUnionFindMaxEdges).filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    localPairs match {
+      case Some(es) => return driverComponents(pairs.sparkSession, es)
+        .select(col("id").cast(idType).as("id"), col("comp").cast(idType).as("comp"))
+      case None =>
+    }
     // materialize the pair input once (see connectedComponents: the
     // symmetrizing union's branches would re-execute the producer)
-    val p0 = graft.Checkpoints.rotate("dedup.connectedComponentsStars.pairs",
-      pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    val p0 = graft.Checkpoints.rotate("dedup.connectedComponentsStars.pairs", uv)
     // the every-endpoint output contract survives contraction via this
     // node set, not via the edge list (contraction keeps every node,
     // but nodes from degenerate self-pairs (u == v) leave it). NOT
@@ -1158,14 +1180,7 @@ object Dedup {
     // itself. Non-integral id types (never produced by the declared
     // operators) keep the distributed path — the driver map is keyed
     // on Long.
-    val integralIds = Seq(edges.schema("u").dataType, edges.schema("v").dataType)
-      .forall {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.ByteType => true
-        case _ => false
-      }
+    val integralIds = integral(edges.schema("u").dataType) && integral(edges.schema("v").dataType)
     // branch decision and edge fetch fused into ONE bounded job
     // ([[DriverBatch.rows]], as in incrementalComponents)
     val small =

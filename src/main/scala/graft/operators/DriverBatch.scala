@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.types.StructType
 
 /** The one sub-floor rule: an input of at most `floor` rows is finished
@@ -23,7 +23,9 @@ import org.apache.spark.sql.types.StructType
   *     side enters the plan as a local relation;
   *   - the component closure, full and incremental
   *     ([[Dedup.DriverUnionFindMaxEdges]] = 4 096 canonical edges): a
-  *     min-id union-find replaces the star-contraction rounds;
+  *     min-id union-find replaces the star-contraction rounds, and a
+  *     local pair relation at or under the floor closes with no job
+  *     ([[localRows]]);
   *   - BPE training ([[Bpe.DriverTrainMaxWords]] = 131 072 distinct
   *     words): the merge rounds run over the collected word table. */
 private[graft] object DriverBatch {
@@ -44,14 +46,33 @@ private[graft] object DriverBatch {
   private[graft] def withFloor[T](n: Int)(f: => T): T = forced.withValue(Some(n))(f)
 
   /** `df`'s rows when it holds at most `floor` rows, None above it: no
-    * query for a local relation, one `limit(floor + 1)` collect — one
+    * job for a local relation, one `limit(floor + 1)` collect — one
     * job — for any other frame. */
   def rows(df: DataFrame, floor: Int): Option[Array[Row]] = {
     val n = forced.value.getOrElse(floor)
-    df.queryExecution.analyzed match {
-      case l: LocalRelation => if (l.data.length <= n) Some(df.collect()) else None
-      case _ => Some(df.limit(n + 1).collect()).filter(_.length <= n)
+    local(df) match {
+      case Some(l) => if (l.data.length <= n) Some(df.collect()) else None
+      case None => Some(df.limit(n + 1).collect()).filter(_.length <= n)
     }
+  }
+
+  /** [[rows]] of a local relation; None, running nothing, for any other
+    * frame — for a caller whose other inputs keep a path with no
+    * sample. */
+  def localRows(df: DataFrame, floor: Int): Option[Array[Row]] =
+    local(df).flatMap(_ => rows(df, floor))
+
+  /** The local relation `df` reads: the relation itself, or under a
+    * chain of projections (`toDF(names)`, a column select), which the
+    * optimizer folds into a new local relation (`ConvertToLocalRelation`),
+    * so collecting it launches no job. */
+  private def local(df: DataFrame): Option[LocalRelation] = {
+    def walk(p: LogicalPlan): Option[LocalRelation] = p match {
+      case l: LocalRelation => Some(l)
+      case Project(_, child) => walk(child)
+      case _ => None
+    }
+    walk(df.queryExecution.analyzed)
   }
 
   /** `df` as a local relation when it holds at most [[Floor]] rows, None

@@ -2,14 +2,17 @@ package graft.operators
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** THE manifest-commit primitive shared by every persisted tier
-  * ([[DedupIndex]], [[AnnStore]], [[StateTable]]) — one implementation
-  * of the pointer-swap commit protocol, on the Hadoop [[FileSystem]] /
-  * [[FileContext]] API so the SAME code runs against `file://`,
+  * ([[DedupIndex]], [[AnnStore]], [[StateTable]], and the plan counter
+  * [[graft.plans.Counter]], whose whole state is one manifest field) —
+  * one implementation of the pointer-swap commit protocol, on the Hadoop
+  * [[FileSystem]] / [[FileContext]] API so the SAME code runs against `file://`,
   * `hdfs://`, or any other registered scheme (the former per-store
   * `java.nio` copies could only open local paths — on the tier whose
   * entire rationale is the object store).
@@ -59,11 +62,16 @@ import org.apache.spark.sql.SparkSession
   * the default `ChecksumFileSystem` would strew `.crc` sidecars through
   * the store directory (object stores and HDFS have no such sidecar);
   * the instance is private ([[FileSystem.newInstance]]) so the setting
-  * never leaks into Spark's own cached FileSystem.
+  * never leaks into Spark's own cached FileSystem. On the local schemes
+  * the hard-link claim already maps to OS paths, manifest writes, the
+  * pointer rename and the version listing go to the OS directly
+  * ([[osPath]]): the same operations, without the process the local
+  * FileSystem forks per file when Hadoop's native library is absent.
   *
-  * The three stores write ONE manifest codec ([[Record]]: version,
+  * The stores write ONE manifest codec ([[Record]]: version,
   * [[FormatTag]], then `key=value` fields with a `store=` kind) and
-  * share its merges: the commuting append/delete delta
+  * share its merges: the compare-and-swap of a record built from the
+  * current one ([[commitRecord]]), the commuting append/delete delta
   * ([[commitDelta]]), the compact merge ([[commitCompact]]) and the
   * ingest-stamp rule ([[mergeStamp]]). The raw line API below
   * ([[readPointer]], [[tryCommit]], [[commitLoop]]) is the protocol the
@@ -231,8 +239,12 @@ object ManifestCommit {
   }
 
   // schemes whose URI-path → OS-path mapping has been probe-verified
-  // as 1:1 (what LinkOwner's toUri.getPath conversion assumes)
+  // as 1:1 (what LinkOwner's toUri.getPath conversion assumes), by
+  // `scheme://authority`
   private val linkSafe = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+
+  private def authorityKey(p: Path): String =
+    s"${Option(p.toUri.getScheme).getOrElse("file")}://${Option(p.toUri.getAuthority).getOrElse("")}"
 
   /** LinkOwner converts Hadoop paths to OS paths via `toUri.getPath` —
     * correct only when the local-backed wrapper maps URI paths 1:1 to OS
@@ -263,8 +275,7 @@ object ManifestCommit {
     val scheme = Option(base.toUri.getScheme).getOrElse("file")
     owners.getOrElse(scheme,
       if (isLocalBacked(f)) {
-        val key = s"$scheme://${Option(base.toUri.getAuthority).getOrElse("")}"
-        if (!linkSafe.getOrElseUpdate(key, verifyIdentityMapping(f, base)))
+        if (!linkSafe.getOrElseUpdate(authorityKey(base), verifyIdentityMapping(f, base)))
           throw new IllegalStateException(
             s"scheme '$scheme' is local-backed but does not map URI paths " +
               "1:1 to OS paths — the hard-link claim would land at the " +
@@ -309,7 +320,7 @@ object ManifestCommit {
   private val fsCache = new java.util.concurrent.ConcurrentHashMap[
     Configuration, scala.collection.concurrent.TrieMap[String, FileSystem]]()
 
-  private[operators] def fsFor(dir: String): (FileSystem, Path) = {
+  private[graft] def fsFor(dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     val conf = hadoopConf
     val uri = p.toUri
@@ -344,17 +355,20 @@ object ManifestCommit {
     * the base also holds every segment/tombstone/generation directory,
     * so a full listing makes each pointer read O(#entries) (a paginated
     * LIST per read on an object store with thousands of segments —
-    * round-14 ADVICE). Exposed for [[Catalog.history]]-style walks over
-    * the RETAINED versions only. */
+    * round-14 ADVICE). On a local OS path ([[osPath]]) the names come
+    * from one directory read with no per-entry stat. Exposed for
+    * [[Catalog.history]]-style walks over the RETAINED versions only. */
   private[operators] def versionsOnDisk(f: FileSystem, base: Path): Seq[Long] =
     try {
       val vPat = "MANIFEST\\.v(\\d+)".r
-      Option(f.globStatus(new Path(base, "MANIFEST.v*")))
-        .getOrElse(Array.empty).iterator.flatMap(e =>
-          e.getPath.getName match {
-            case vPat(n) => Some(n.toLong)
-            case _ => None
-          }).toSeq
+      val names = osPath(f, base) match {
+        case Some(o) =>
+          val ds = java.nio.file.Files.newDirectoryStream(o, "MANIFEST.v*")
+          try ds.iterator().asScala.map(_.getFileName.toString).toList finally ds.close()
+        case None =>
+          Option(f.globStatus(new Path(base, "MANIFEST.v*"))).toSeq.flatten.map(_.getPath.getName)
+      }
+      names.collect { case vPat(n) => n.toLong }
     } catch { case _: java.io.IOException => Seq.empty }
 
   /** Retained committed versions of a store, ascending — the manifest
@@ -374,10 +388,26 @@ object ManifestCommit {
     finally in.close()
   }
 
+  /** `p` as an OS path when its scheme is local-backed and its URI paths
+    * are probe-verified to be OS paths (the [[LinkOwner]] schemes), None
+    * on any other scheme. Manifest writes and the pointer rename go
+    * straight to the OS there: without Hadoop's native library the local
+    * FileSystem forks a process per file for both — `chmod` in `create`,
+    * `readlink` in each link-status check of `FileContext.rename` — about
+    * 4 ms each, six of them per commit. */
+  private def osPath(f: FileSystem, p: Path): Option[java.nio.file.Path] =
+    if (isLocalBacked(f) && linkSafe.get(authorityKey(p)).contains(true))
+      Some(java.nio.file.Paths.get(p.toUri.getPath))
+    else None
+
   private def writeLines(f: FileSystem, p: Path, lines: Seq[String]): Unit = {
-    val out = f.create(p, true)
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    val bytes = lines.mkString("", "\n", "\n").getBytes("UTF-8")
+    osPath(f, p) match {
+      case Some(o) => java.nio.file.Files.write(o, bytes): Unit
+      case None =>
+        val out = f.create(p, true)
+        try out.write(bytes) finally out.close()
+    }
   }
 
   /** The raw pointer file's version, 0 when absent/unreadable. */
@@ -437,10 +467,6 @@ object ManifestCommit {
     val (f, base) = fsFor(dir)
     f.mkdirs(base)
     val versioned = new Path(base, s"MANIFEST.v$v")
-    if (f.exists(versioned)) { // cheap fast-path, not the claim
-      metrics.inc("claims_lost")
-      return false
-    }
     val owner = ownerFor(dir)
     // claim + swap under the store's JVM stripe: in-process writers
     // serialize here (metadata-file IO only — data writes happen before
@@ -448,6 +474,15 @@ object ManifestCommit {
     // in-JVM; cross-process atomicity comes from the owner's claim and
     // the self-healing reads.
     stripeFor(base).synchronized {
+      // v or a later version on disk means the caller's base is stale.
+      // Checking the newest version, not just v, keeps a stale writer
+      // from re-claiming a version [[vacuum]] already reclaimed: that
+      // now takes the other writers' whole retention window of commits
+      // landing between this listing and the claim below.
+      if (latestVersionOnDisk(f, base).exists(_ >= v)) {
+        metrics.inc("claims_lost")
+        return false
+      }
       val tmp = new Path(base, s"MANIFEST.tmp.${UUID.randomUUID()}")
       writeLines(f, tmp, lines)
       val claimed = owner.putIfAbsent(f, base, tmp, versioned)
@@ -480,12 +515,16 @@ object ManifestCommit {
       val ptmp = new Path(base, s"MANIFEST.tmp.${UUID.randomUUID()}")
       try {
         writeLines(f, ptmp, content)
-        // FileSystem.rename first (one atomic overwriting rename(2) on
-        // POSIX-backed schemes); the FileContext OVERWRITE form for
-        // schemes whose FileSystem.rename refuses an existing
+        // one atomic overwriting rename(2) on a local OS path; else
+        // FileSystem.rename first, then the FileContext OVERWRITE form
+        // for schemes whose FileSystem.rename refuses an existing
         // destination (HDFS implements atomic overwrite-rename there).
-        if (!f.rename(ptmp, pointer(base)))
-          fcFor(base).rename(ptmp, pointer(base), Options.Rename.OVERWRITE)
+        osPath(f, ptmp) match {
+          case Some(o) => java.nio.file.Files.move(o, osPath(f, pointer(base)).get,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+          case None => if (!f.rename(ptmp, pointer(base)))
+            fcFor(base).rename(ptmp, pointer(base), Options.Rename.OVERWRITE)
+        }
       } catch {
         // racing cross-process swap (FileAlreadyExists from the local
         // FileContext's delete+rename decomposition, or a FNF gap) —
@@ -531,23 +570,26 @@ object ManifestCommit {
     * segment, add a tombstone — deltas that commute with any concurrent
     * commit): `make(v, baseLines)` builds the manifest for version `v`
     * from the base state (None when the store is empty); on a lost
-    * claim the loop reads the winner's committed `MANIFEST.v<N>` —
-    * complete by construction, the claim publishes whole files — and
-    * retries against it. This is the conditional-PUT loop the
-    * single-writer contract previously delegated to "an external lock";
-    * two interleaved appends now both land, in either order. */
+    * claim the loop re-reads the newest committed state — the winner's
+    * `MANIFEST.v<N>` or a later one, complete by construction, the
+    * claim publishes whole files — and retries against it. This is the
+    * conditional-PUT loop the single-writer contract previously
+    * delegated to "an external lock"; two interleaved appends now both
+    * land, in either order. */
   def commitLoop(dir: String)(
       make: (Long, Option[Array[String]]) => Seq[String]): Long = {
-    var base: (Long, Option[Array[String]]) =
+    def current(): (Long, Option[Array[String]]) =
       if (exists(dir)) {
         val l = readPointer(dir); (l(0).trim.toLong, Some(l))
       } else (0L, None)
+    var base = current()
     var guard = 0
     while (guard < 10000) {
       val v = base._1 + 1
       if (tryCommit(dir, v, make(v, base._2))) return v
-      // lost the claim: the winner's versioned manifest is the new base
-      base = (v, Some(readVersioned(dir, v)))
+      // lost the claim: the self-healing read resolves at least the
+      // winner's version, even once a vacuum reclaimed that version
+      base = current()
       guard += 1
     }
     sys.error(s"commit loop at $dir failed to converge after $guard rounds")
@@ -567,12 +609,14 @@ object ManifestCommit {
   /** One store manifest, as the codec reads and writes it. The fields
     * the stores share are typed here, so the merges below own them once:
     * the live segment and tombstone directories, the per-cell vector
-    * counts (ANN) and the ingest stamp — the highest batch applied.
-    * `own` holds the store's other fields, each the name of a
-    * generation directory the manifest references (dedup `meta`, ANN
-    * `cent`/`codebooks`, state-table `gen`). On disk a list is
-    * comma-joined, counts are `cell:count` pairs, and an empty list,
-    * empty map or absent value writes no line. */
+    * counts (ANN), the ingest stamp — the highest batch applied — and
+    * the scalar `value` of a store that is just a number (the plan
+    * counter, `store=counter`). `own` holds the store's other fields,
+    * each the name of a generation directory the manifest references
+    * (dedup `meta`, ANN `cent`/`codebooks`, state-table `gen`), which is
+    * what [[vacuum]] keeps alive. On disk a list is comma-joined, counts
+    * are `cell:count` pairs, and an empty list, empty map or absent
+    * value writes no line. */
   final case class Record(
       version: Long,
       store: String,
@@ -580,20 +624,22 @@ object ManifestCommit {
       segments: Seq[String] = Nil,
       tombstones: Seq[String] = Nil,
       counts: Map[Int, Long] = Map.empty,
-      batchId: Option[Long] = None) {
+      batchId: Option[Long] = None,
+      value: Option[Long] = None) {
     /** A required `own` field — a manifest without it fails loudly. */
     def apply(key: String): String = own.getOrElse(key,
       throw new IllegalArgumentException(s"$store manifest v$version has no '$key' field"))
   }
 
-  private val SharedKeys = Set("store", "segments", "tombstones", "counts", "batch")
+  private val SharedKeys = Set("store", "segments", "tombstones", "counts", "batch", "value")
 
   private[graft] def encode(r: Record): Seq[String] = {
     val fields = r.own ++ Map(
       "segments" -> r.segments.mkString(","),
       "tombstones" -> r.tombstones.mkString(","),
       "counts" -> r.counts.toSeq.sorted.map { case (c, n) => s"$c:$n" }.mkString(","),
-      "batch" -> r.batchId.fold("")(_.toString))
+      "batch" -> r.batchId.fold("")(_.toString),
+      "value" -> r.value.fold("")(_.toString))
     Seq(r.version.toString, FormatTag, s"store=${r.store}") ++
       fields.toSeq.filter(_._2.nonEmpty).sorted.map { case (k, v) => s"$k=$v" }
   }
@@ -617,7 +663,8 @@ object ManifestCommit {
       list("counts").map { e =>
         val i = e.indexOf(':'); e.take(i).toInt -> e.drop(i + 1).toLong
       }.toMap,
-      fields.get("batch").map(_.toLong))
+      fields.get("batch").map(_.toLong),
+      fields.get("value").map(_.toLong))
   }
 
   /** The current manifest of the `store` at `dir` — one small
@@ -671,10 +718,24 @@ object ManifestCommit {
         .filter(_._2 != 0L).toMap,
       batchId = mergeStamp(base.batchId, batchId))
 
+  /** [[commitLoop]] over codec records: `next(v, base)` builds version
+    * `v` from the current record (None when the store is empty), and a
+    * lost claim calls it again on the winner's record. Returns the
+    * record that committed. */
+  def commitRecord(dir: String, store: String)(
+      next: (Long, Option[Record]) => Record): Record = {
+    var out: Record = null
+    commitLoop(dir) { (v, base) =>
+      out = next(v, base.map(decode(dir, store)))
+      encode(out)
+    }
+    out
+  }
+
   /** Commit a delta that commutes with any concurrent commit — an
     * append's segment and count delta, a dedup delete's tombstone: on a
     * lost claim the loop applies the same delta to the winner's
-    * manifest and retries ([[commitLoop]]), so two interleaved appends
+    * manifest and retries ([[commitRecord]]), so two interleaved appends
     * both land, in either order, with counts that add up. A delta that
     * is a function of the base's live view (the ANN delete's counts)
     * must recompute against the winner instead. Returns the version. */
@@ -685,11 +746,11 @@ object ManifestCommit {
       tombstones: Seq[String] = Nil,
       counts: Map[Int, Long] = Map.empty,
       batchId: Option[Long] = None): Long =
-    commitLoop(dir) { (v, base) =>
+    commitRecord(dir, store) { (v, base) =>
       val b = base.getOrElse(throw new java.io.FileNotFoundException(
         s"no $store at $dir — build it first"))
-      encode(withDelta(decode(dir, store)(b), v, segments, tombstones, counts, batchId))
-    }
+      withDelta(b, v, segments, tombstones, counts, batchId)
+    }.version
 
   /** Commit a compaction of `from`: one fresh `segment` holding `from`'s
     * live rows replaces its segments and materializes its tombstones.

@@ -1,56 +1,97 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.operators.ManifestCommit
+import graft.operators.ManifestCommit.Record
+import org.apache.spark.sql.SparkSession
 
 /** The reference's mutable scalar counter (`plan-joined-count`,
-  * `/root/reference/src/plan-server.ts:50-83`) as a 1-row snapshot table:
-  * INCR/DECR/SET are read-modify-overwrite, GET defaults a missing table
-  * to 0 (matching `plan-server.ts:80-82`).
+  * `/root/reference/src/plan-server.ts:50-83`) as a `store=counter`
+  * record on the manifest commit log the persisted stores share
+  * ([[ManifestCommit]]). INCR/DECR/SET are one compare-and-swap each: a
+  * [[ManifestCommit.commitRecord]] claim of the next version carrying
+  * the new value, where a lost claim re-reads the winner's value and
+  * retries. So every update is atomic across threads, handles and
+  * processes, as the reference's Redis INCR/DECR are, with no lock of
+  * its own: the version claim is the lock. GET is one pointer read, and
+  * an absent counter reads 0 (`plan-server.ts:80-82`). No operation
+  * launches a Spark job.
   *
-  * Within one process every operation is atomic, as the reference's
-  * Redis INCR/DECR are: get/set/incr/decr hold one lock per qualified
-  * path, shared by every `Counter` handle on that path, so concurrent
-  * increments are never lost and a get never sees `set`'s overwrite
-  * half done. Updates from different processes are NOT synchronized.
+  * A path that holds entries but no manifest (the one-row parquet
+  * snapshot earlier versions wrote there) fails on every operation
+  * rather than reading as 0.
+  *
+  * Every update publishes one version, so every update also vacuums
+  * the log down to the last [[Counter.RetainVersions]] versions before
+  * the current one. The value has its own codec field
+  * ([[Record.value]]), so the codec's vacuum sees no directory
+  * references in a counter manifest. The vacuum keeps its default age
+  * guard: a `MANIFEST.tmp.*` file may be another process's claim in
+  * flight.
+  *
+  * The session argument is the caller's context only: the log is read
+  * and written on the driver through [[ManifestCommit]], which resolves
+  * its filesystems with the active session's Hadoop configuration, or a
+  * default one in a process with no session (`new Counter(path)`).
   *
   * This is the batch form (§2a rows 10–11); the streaming form — a
   * running aggregate over a ±1 event stream — lives in
-  * [[graft.streaming.StreamingOps.runningCounter]] and is the shape that
-  * scales (the snapshot overwrite here is inherently serial, which is
-  * exactly what the reference's Redis counter was).
+  * [[graft.streaming.StreamingOps.runningCounter]].
   */
-final class Counter(spark: SparkSession, path: String) {
+final class Counter(path: String) {
 
-  private val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val qualified = fs.makeQualified(new Path(path))
-  private val lock = Counter.locks.computeIfAbsent(qualified.toString, _ => new Object)
+  def this(spark: SparkSession, path: String) = this(path)
 
-  /** One job: the table is always the single row `set` wrote, read with
-    * its fixed schema (no footer-inference job, no aggregation). An
-    * absent table reads as 0 with no job: the path is checked first, so
-    * Spark never logs its missing-path WARN and stack trace. */
-  def get(): Long = lock.synchronized {
-    import spark.implicits._
-    if (!fs.exists(qualified)) 0L
-    else try spark.read.schema("value BIGINT").parquet(path)
-      .as[Long].collect().headOption.getOrElse(0L)
-    // deleted by another process between the check and the read
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+  import Counter._
+
+  def get(): Long =
+    if (ManifestCommit.exists(path)) valueOf(ManifestCommit.read(path, Store))
+    else { requireFresh(); 0L }
+
+  def set(v: Long): Long = update(_ => v)
+  def incr(): Long = update(_ + 1)
+  def decr(): Long = update(_ - 1)
+
+  private def update(f: Long => Long): Long = {
+    val r = ManifestCommit.commitRecord(path, Store) { (v, base) =>
+      val cur = base match {
+        case Some(b) => valueOf(b)
+        case None => requireFresh(); 0L
+      }
+      Record(v, Store, Map.empty, value = Some(f(cur)))
+    }
+    ManifestCommit.vacuum(path, Store, RetainVersions, ManifestCommit.DefaultVacuumMinAgeMs)
+    r.value.get
   }
 
-  def set(v: Long): Long = lock.synchronized {
-    import spark.implicits._
-    Seq(v).toDF("value").coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
-    v
-  }
+  private def valueOf(r: Record): Long = r.value.getOrElse(
+    throw new IllegalStateException(s"counter manifest v${r.version} at $path has no value"))
 
-  def incr(): Long = lock.synchronized(set(get() + 1))
-  def decr(): Long = lock.synchronized(set(get() - 1))
+  /** No manifest yet: an absent or empty path is a fresh counter. Any
+    * other visible entry (a parquet part file, `_SUCCESS`) means the
+    * path holds something else, and the op fails. Dot-prefixed entries
+    * (checksums, a claim's link probe) and `MANIFEST*` files (an
+    * in-flight first claim) are not counted. */
+  private def requireFresh(): Unit = {
+    val (fs, base) = ManifestCommit.fsFor(path)
+    val foreign =
+      try fs.listStatus(base).map(_.getPath.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("MANIFEST"))
+      catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+    if (foreign.nonEmpty)
+      throw new IllegalStateException(s"$path holds no counter manifest but " +
+        s"${foreign.sorted.take(3).mkString(", ")} — a parquet counter snapshot? " +
+        "Move it aside; the counter starts at 0 on an absent path")
+  }
 }
 
 object Counter {
-  private val locks = new ConcurrentHashMap[String, AnyRef]()
+  private val Store = "counter"
+
+  /** Versions kept readable before the current one. Versions past it
+    * are reclaimed on the next update. A writer whose base went stale
+    * loses its claim and retries on the newest value; a writer stalled
+    * between its last check and its claim for this many other commits
+    * could re-claim a reclaimed version number, so the window is kept
+    * well above the number of writers contending on one counter. */
+  private[graft] val RetainVersions = 8
 }

@@ -21,7 +21,9 @@ import graft.operators.ManifestCommit
   *     names the newest version (interleaved swaps self-correct), and
   *     the versioned log is contiguous and complete;
   *   - accounting closes: wins + sum(per-process claims_lost) =
-  *     total attempts.
+  *     total attempts;
+  *   - counter increments: every `incr` from every process lands once
+  *     and returns its own value, with each process vacuuming the log.
   */
 class CrossProcessCommitSpec extends SparkSpec {
 
@@ -162,5 +164,18 @@ class CrossProcessCommitSpec extends SparkSpec {
         s"${writers * rounds} attempts")
     // reads resolve the newest committed version
     assert(ManifestCommit.currentVersion(dir) == rounds.toLong)
+  }
+
+  test("cross-process counter: 4 JVMs × 25 incr — final value 100, the returned values are exactly 1..100") {
+    val dir = "file:" + tmp("counter")
+    val writers = 4; val rounds = 25
+    val outs = run("counter", dir, writers, rounds)
+    val returned = outs.flatMap(_.linesIterator.filter(_.startsWith("WON "))
+      .map(_.stripPrefix("WON ").trim.toLong))
+    assert(returned.sorted == (1L to (writers * rounds).toLong),
+      s"every increment must return its own value: ${returned.sorted}")
+    assert(new graft.plans.Counter(dir).get() == (writers * rounds).toLong)
+    assert(ManifestCommit.retainedVersions(dir).size <= graft.plans.Counter.RetainVersions + 1,
+      s"the per-update vacuum must bound the log: ${ManifestCommit.retainedVersions(dir)}")
   }
 }

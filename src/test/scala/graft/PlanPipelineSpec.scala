@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import graft.operators.ManifestCommit
 import graft.plans.{Counter, PlanPipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -176,11 +177,42 @@ class PlanPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(c2.get() == 41L)
   }
 
-  test("counter: get runs one job, incr two") {
+  test("counter: get, set, incr and decr each run no Spark job") {
     val c = new Counter(spark, tempDir("graft_counter_jobs") + "/c")
-    c.set(5L)
-    assert(jobsLaunched(assert(c.get() == 5L)) == 1)
-    assert(jobsLaunched(assert(c.incr() == 6L)) == 2)
+    assert(jobsLaunched(assert(c.set(5L) == 5L)) == 0)
+    assert(jobsLaunched(assert(c.get() == 5L)) == 0)
+    assert(jobsLaunched(assert(c.incr() == 6L)) == 0)
+    assert(jobsLaunched(assert(c.decr() == 5L)) == 0)
+  }
+
+  test("counter: after 1 000 ops at most RetainVersions + 1 manifest versions remain, and the value is right") {
+    val path = tempDir("graft_counter_vacuum") + "/c"
+    val c = new Counter(spark, path)
+    var want = 0L
+    (1 to 1000).foreach { i =>
+      if (i % 100 == 0) { want = i.toLong; assert(c.set(want) == want) }
+      else if (i % 4 == 0) { want -= 1; assert(c.decr() == want) }
+      else { want += 1; assert(c.incr() == want) }
+    }
+    assert(c.get() == want && new Counter(spark, path).get() == want)
+    val versions = new java.io.File(path).listFiles().map(_.getName)
+      .filter(_.matches("MANIFEST\\.v\\d+"))
+    assert(versions.length <= Counter.RetainVersions + 1,
+      s"the per-update vacuum must bound the log: ${versions.sorted.mkString(", ")}")
+    assert(ManifestCommit.currentVersion(path) == 1000L)
+  }
+
+  test("counter: a path holding the old one-row parquet snapshot fails on every op, never reads 0") {
+    import spark.implicits._
+    val path = tempDir("graft_counter_parquet") + "/c"
+    Seq(41L).toDF("value").coalesce(1).write.parquet(path)
+    val c = new Counter(spark, path)
+    for ((name, op) <- Seq[(String, () => Long)]("get" -> (() => c.get()),
+        "set" -> (() => c.set(1L)), "incr" -> (() => c.incr()), "decr" -> (() => c.decr()))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("no counter manifest"), s"$name: ${e.getMessage}")
+    }
+    assert(!ManifestCommit.exists(path), "a failed op must not commit into the snapshot")
   }
 
   /** WARN-or-worse log events emitted while `f` runs, seen through an
@@ -205,7 +237,7 @@ class PlanPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     seen.asScala.toSeq
   }
 
-  test("counter: a fresh counter's first get reads 0 with no WARN and at most one job") {
+  test("counter: a fresh counter's first get reads 0 with no WARN and no job") {
     val path = tempDir("graft_counter_fresh") + "/c"
     // control: the capture does see the WARN a plain read of the absent
     // path logs, so an empty capture below means none was logged
@@ -218,12 +250,12 @@ class PlanPipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     var jobs = -1
     val logged = warnings { jobs = jobsLaunched(assert(c.get() == 0L)) }
     assert(logged.isEmpty, s"a fresh counter's get logged: $logged")
-    assert(jobs <= 1, s"a fresh counter's get ran $jobs jobs")
+    assert(jobs == 0, s"a fresh counter's get ran $jobs jobs")
   }
 
   test("counter: concurrent incr through two handles on one path loses no update") {
     val path = tempDir("graft_counter_mt") + "/c"
-    // the second handle spells the same path as a URI: one lock per qualified path
+    // the second handle spells the same path as a URI: both commit on one log
     val handles = Seq(new Counter(spark, path), new Counter(spark, s"file:$path"))
     val pool = Executors.newFixedThreadPool(4)
     val results = new ConcurrentLinkedQueue[java.lang.Long]

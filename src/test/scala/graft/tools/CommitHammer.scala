@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.operators.ManifestCommit
+import graft.plans.Counter
 
 /** Child-process entry point for CrossProcessCommitSpec: a SEPARATE JVM
   * hammering one shared `file://` store through [[ManifestCommit]], so
@@ -21,10 +22,14 @@ import graft.operators.ManifestCommit
   *   - mode "claim": `rounds` × [[ManifestCommit.tryCommit]] at FIXED
   *     versions 1..rounds with payload `w<id>` — the raw
   *     exactly-one-winner-per-version property, cross-process.
+  *   - mode "counter": `rounds` × [[Counter.incr]] on a counter at
+  *     `dir` — atomic increments across processes, with the counter's
+  *     per-update vacuum racing the other processes' claims.
   * Prints `READY`, waits for `goFile` to appear (the start barrier that
   * gets every JVM past startup before contention begins), hammers, then
-  * prints `WON <v>` per claimed version and `LOST <n>` with its
-  * claims_lost counter. Exit 0 on success. */
+  * prints `WON <v>` per claimed version (per returned value in counter
+  * mode) and `LOST <n>` with its claims_lost counter. Exit 0 on
+  * success. */
 object CommitHammer {
   def main(args: Array[String]): Unit = {
     val Array(mode, dir, writerId, roundsS, goFile) = args
@@ -52,6 +57,9 @@ object CommitHammer {
           if (ManifestCommit.tryCommit(dir, v, Seq(v.toString, s"w$writerId")))
             won += v
         }
+      case "counter" =>
+        val c = new Counter(dir)
+        (1 to rounds).foreach(_ => won += c.incr())
       case other => sys.error(s"unknown mode $other")
     }
     won.foreach(v => println(s"WON $v"))
