@@ -3,23 +3,24 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Manifest-pointer commits for the persisted ANN index tier — the
+/** Versioned-manifest commits for the persisted ANN index tier — the
   * [[DedupIndex]] commit discipline applied to the vector indexes
   * ([[Similarity.buildIvfIndex]] / [[Similarity.buildPqIndex]] and
   * their append/delete/compact maintenance ops).
   *
   * Layout under an index `dir`:
-  *   - `MANIFEST` — one small text file naming the CURRENT state, in
-  *     the one [[ManifestCommit.Record]] codec (`store=ann-index`): the
-  *     version, the `cent=` centroid generation, the optional
-  *     `codebooks=` generation (PQ), the live posting SEGMENT and
-  *     TOMBSTONE directories, the per-cell vector counts (`counts=`,
-  *     `cell:n` pairs) and the ingest stamp. Every mutation writes its
-  *     data into FRESH directories and then swaps the manifest in one
-  *     atomic rename — a reader resolves the pointer once and sees
-  *     exactly one generation, never a half-written mix (the
-  *     object-store commit shape: Iceberg/Delta-style pointer swap; on
-  *     S3 the rename becomes a conditional PUT of the pointer object).
+  *   - `MANIFEST.v<N>` — one small immutable text file per committed
+  *     version, in the one [[ManifestCommit.Record]] codec
+  *     (`store=ann-index`): the version, the `cent=` centroid
+  *     generation, the optional `codebooks=` generation (PQ), the live
+  *     posting SEGMENT and TOMBSTONE directories, the per-cell vector
+  *     counts (`counts=`, `cell:n` pairs) and the ingest stamp. The
+  *     newest one is the CURRENT state. Every mutation writes its data
+  *     into FRESH directories and then claims the next version in one
+  *     atomic put-if-absent — a reader resolves the manifest once and
+  *     sees exactly one generation, never a half-written mix (the
+  *     object-store commit shape: the Delta log; on S3 the claim is a
+  *     conditional PUT of the version object).
   *   - `seg_<v>_<hex>/` — posting segments in the one [[Segments]]
   *     layout: plain files sorted by (`cell`, `vec_id`), each cell in
   *     exactly one file, `cell` a plain last column. Segments written in
@@ -53,7 +54,7 @@ object AnnStore {
 
   /** `counts`: live vectors per cell (cells with none are absent).
     * `batchId`: the exactly-once ingest stamp — the highest ingest batch
-    * APPLIED, riding the same atomic manifest swap as the batch's
+    * APPLIED, riding the same atomic version claim as the batch's
     * effects, so a streaming embedding sink skips a redelivered batch
     * via [[lastBatchId]]; carried forward through unstamped mutations
     * (delete, compact). */
@@ -76,11 +77,11 @@ object AnnStore {
     Manifest(r.version, r("cent"), r.own.get("codebooks"), r.segments,
       r.tombstones, r.batchId, r.counts)
 
-  /** Does `dir` hold a committed index? (One pointer-file stat.) */
+  /** Does `dir` hold a committed index? (One listing.) */
   def exists(dir: String): Boolean = ManifestCommit.exists(dir)
 
   /** Resolve the current manifest — one small driver-side read; the
-    * 100 TB analog is one GET of the pointer object. */
+    * 100 TB analog is one LIST of the manifest prefix and one GET. */
   def read(dir: String): Manifest = manifest(ManifestCommit.read(dir, Store))
 
   /** Resolve a PAST committed state (snapshot read / time travel) —
@@ -127,7 +128,7 @@ object AnnStore {
     * manifest read, so a DataFrame built here keeps seeing the
     * generation it opened even if a compact/append publishes a newer
     * one mid-query. Each segment and tombstone directory is write-once
-    * (UUID'd, committed by manifest swap), so its resolved relation —
+    * (UUID'd, committed by a version claim), so its resolved relation —
     * its file listing — is cached per directory
     * ([[GenerationCache.directory]]): after an append, a reader lists
     * only the appended segment. Queries still scan the bytes. */

@@ -41,15 +41,6 @@ object Dedup {
       ColumnBridge.expression(tokens), n, keepPartial))
   }
 
-  /** k seeded minhashes of a shingle array: min over shingles of
-    * xxhash64(shingle, seed). Pure-built-ins reference form — correct but
-    * interpreted (k × |shingles| boxed lambda evals per row); the hot
-    * path uses [[minhashSignature]]. */
-  def minhashSignatureHof(sh: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      s => array_min(transform(sh, x => xxhash64(x, s))))
-
   /** Native minhash signature ([[graft.functions.MinHashSigExpr]]):
     * rolled-FNV shingle hashes + k splitmix64 seed-mix minima in one
     * codegen call per row — no boxed Seq[String], no ScalaUDF

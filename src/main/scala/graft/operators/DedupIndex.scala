@@ -15,15 +15,15 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructTy
   * Layout under `dir` (commits via [[ManifestCommit]] — the shared
   * Hadoop-FileSystem module, so the index runs against `file://`,
   * `hdfs://`, or any registered scheme):
-  *   - `MANIFEST` — one small text file naming the CURRENT state, in
-  *     the one [[ManifestCommit.Record]] codec (`store=dedup-index`):
-  *     the version, the `meta=` generation, the live band SEGMENT and
-  *     TOMBSTONE directories and the ingest stamp. Every mutation (build /
+  *   - `MANIFEST.v<N>` — one small immutable text file per committed
+  *     version, in the one [[ManifestCommit.Record]] codec
+  *     (`store=dedup-index`): the version, the `meta=` generation, the
+  *     live band SEGMENT and TOMBSTONE directories and the ingest stamp.
+  *     The newest one is the CURRENT state. Every mutation (build /
   *     append / delete / compact) writes its data into a FRESH
-  *     uniquely-named directory, CLAIMS the immutable `MANIFEST.v<N>`
-  *     (no-overwrite rename — the Delta-shaped put-if-absent) and then
-  *     swaps the pointer — readers resolve the manifest once and see
-  *     exactly one generation, never a half-written mix.
+  *     uniquely-named directory, then CLAIMS the next `MANIFEST.v<N>`
+  *     (the Delta-shaped put-if-absent) — readers resolve the manifest
+  *     once and see exactly one generation, never a half-written mix.
   *   - `seg_<v>_<hex>/` — band segments: one row per (doc, band):
   *     `(doc_id LONG, sig ARRAY<LONG>, band INT, bkey LONG, bprefix INT)`
   *     with `bprefix = pmod(bkey, 256)`. The signature rides the band
@@ -105,7 +105,7 @@ object DedupIndex {
     Manifest(r.version, r("meta"), r.segments, r.tombstones, r.batchId)
 
   /** Resolve the current manifest. One small driver-side read — the
-    * 100 TB analog is one GET of the pointer object. */
+    * 100 TB analog is one LIST of the manifest prefix and one GET. */
   def readManifest(dir: String): Manifest = manifest(ManifestCommit.read(dir, Store))
 
   /** Resolve a PAST committed state (snapshot read / time travel):
@@ -188,7 +188,7 @@ object DedupIndex {
     * banded with different constants than the corpus it joins). The
     * batch lands in its own segment directory — one file when it is
     * batch-sized (see the object doc) — and becomes visible in one
-    * manifest swap; post-append
+    * version claim; post-append
     * the index is row-identical to a fresh build over the union,
     * because band rows are row-local per doc — no global state to
     * refresh (DedupIndexSpec pins the equivalence). */
@@ -214,7 +214,7 @@ object DedupIndex {
 
   /** Delete docs from the index — the takedown/opt-out maintenance op a
     * 100 TB corpus runs weekly. O(|ids|): writes ONE tombstone segment
-    * of doc_ids and swaps the manifest; no band data is rewritten
+    * of doc_ids and claims the next manifest version; no band data is rewritten
     * (that's [[compact]]'s job). Every read path honors tombstones via
     * [[readBands]], so post-delete results are row-identical to a fresh
     * build without the deleted docs (the parity law, spec-pinned and
@@ -418,7 +418,7 @@ object DedupIndex {
               .select(col("__qid").as("doc_id"), col("__qsig").as("sig"),
                 col("band"), col("bkey"), col("bprefix")),
             s"$dir/$seg")
-          // batch ordinal rides the swap — the fold's appends carry the
+          // batch ordinal rides the claim — the fold's appends carry the
           // same atomic exactly-once stamp the streaming sink checks
           ManifestCommit.commitDelta(dir, Store, segments = Seq(seg), batchId = Some(i.toLong))
           s
@@ -556,9 +556,9 @@ object DedupIndex {
     * the current generation, writes it into a fresh segment (the one
     * layout of [[writeBandRows]], which also rewrites any legacy
     * prefix-layout segment) and publishes a manifest naming ONLY that segment with an
-    * empty tombstone list — one atomic pointer swap; a reader that
+    * empty tombstone list — one atomic version claim; a reader that
     * resolved the old manifest keeps its old segments (they are not
-    * touched), a reader arriving after the swap sees exactly the new
+    * touched), a reader arriving after the claim sees exactly the new
     * one. Unreferenced directories are reclaimed by [[vacuum]], kept
     * separate deliberately so in-flight readers of the old generation
     * survive a concurrent compact. Row content is untouched modulo
@@ -577,7 +577,7 @@ object DedupIndex {
 
   /** Remove directories and snapshot manifests outside the retention
     * window (post-compact garbage). Separate from [[compact]] so the
-    * old generation outlives the swap for readers that already resolved
+    * old generation outlives the commit for readers that already resolved
     * it — run vacuum when those are known drained (the deployment
     * analog: object-store lifecycle rules on unreferenced prefixes).
     * `retainVersions` keeps that many versions BEFORE the current one

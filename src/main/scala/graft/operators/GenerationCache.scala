@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
   * commit protocol's own contract: segments, tombstones, meta, centroid
   * and codebook generations are written once under UUID-suffixed names
   * and never modified (mutations commit fresh directories plus a
-  * manifest swap).
+  * manifest commit).
   *
   * Keys are PER DIRECTORY ([[directory]]): each segment or tombstone
   * directory resolves once, under its own path, and the stores union

@@ -1555,7 +1555,7 @@ object LlmQueries {
   /** Full-corpus band index with a DELETE applied — the l57 substrate:
     * build over all documents, then tombstone the doc_id % 5 == 2
     * slice ([[DedupIndex.delete]] — one id-list write + a manifest
-    * swap, no band data rewritten). Session-cached like the other index
+    * commit, no band data rewritten). Session-cached like the other index
     * dirs; separate from [[dedupIndexFull]] so l55's index is never
     * mutated. */
   private def dedupIndexDeleted(s: org.apache.spark.sql.SparkSession, dir: String): String =
@@ -1571,7 +1571,7 @@ object LlmQueries {
   /** L: dedup groups from the index AFTER A DELETE — the takedown
     * maintenance shape ([[DedupIndex.delete]]): the doc_id % 5 == 2
     * slice is tombstoned (an O(|ids|) id-list write + one atomic
-    * manifest swap; no band data rewritten) and every read path drops
+    * manifest commit; no band data rewritten) and every read path drops
     * tombstoned docs with a broadcast anti-join. The parity LAW — post-
     * delete results ≡ a fresh build without the deleted docs — holds by
     * construction because band rows are row-local per doc, and

@@ -5,19 +5,19 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** THE manifest-commit primitive shared by every persisted tier
   * ([[DedupIndex]], [[AnnStore]], [[StateTable]], and the plan counter
   * [[graft.plans.Counter]], whose whole state is one manifest field) —
-  * one implementation of the pointer-swap commit protocol, on the Hadoop
-  * [[FileSystem]] / [[FileContext]] API so the SAME code runs against `file://`,
-  * `hdfs://`, or any other registered scheme (the former per-store
-  * `java.nio` copies could only open local paths — on the tier whose
-  * entire rationale is the object store).
+  * one implementation of the versioned-log commit protocol, on the
+  * Hadoop [[FileSystem]] / [[FileContext]] API so the SAME code runs
+  * against `file://`, `hdfs://`, or any other registered scheme (the
+  * former per-store `java.nio` copies could only open local paths — on
+  * the tier whose entire rationale is the object store).
   *
-  * Protocol (Delta/Iceberg-shaped, two files per commit):
+  * Protocol (the Delta Lake log: claim = commit):
   *
   *   1. The writer prepares its DATA in fresh, uniquely-named
   *      directories ([[uniqueName]] — a random suffix so two concurrent
@@ -39,23 +39,21 @@ import org.apache.spark.sql.SparkSession
   *      via [[registerOwner]]; nothing silently falls back to a
   *      non-atomic rename. Because the claim publishes a COMPLETE file,
   *      a version that exists is always fully readable — the loser of a
-  *      race reads `MANIFEST.v<N>` to learn the winner's state and
-  *      retries at N+1 with a merged manifest ([[commitLoop]]).
-  *   3. The `MANIFEST` pointer — the current-state cache — is swapped
-  *      by a rename WITH overwrite. The versioned log is the source of
-  *      truth; the swap always targets the NEWEST version on disk and
-  *      re-verifies after renaming, so a stalled early writer cannot
-  *      leave a regressed pointer in place (the round-13 race: an old
-  *      writer's swap clobbering a newer one's between its read and its
-  *      rename). Readers are regression-proof regardless:
-  *      [[readPointer]] takes max(pointer, latest-on-disk).
+  *      race reads the newest version to learn the winner's state and
+  *      retries above it with a merged manifest ([[commitLoop]]).
+  *
+  * The claim IS the commit: the current state is the newest
+  * `MANIFEST.v<N>` a prefix listing finds ([[readCurrent]]). There is no
+  * second copy of it to keep in step, so there is nothing a crashed or
+  * stalled writer can leave behind that a reader must repair, and no
+  * step that needs an overwriting rename (which a conditional-PUT store
+  * does not have).
   *
   * In-process writers additionally serialize per store through a
-  * striped JVM lock around claim+swap (the Delta local-LogStore
-  * pattern) — cheap (metadata-file IO only; all Spark jobs writing
-  * data run OUTSIDE the lock), and it makes the pointer read-check-swap
-  * atomic within the JVM on every scheme. Cross-process safety comes
-  * from the atomic claim + the self-healing reads above.
+  * striped JVM lock around the claim (the Delta local-LogStore pattern)
+  * — cheap (metadata-file IO only; all Spark jobs writing data run
+  * OUTSIDE the lock). Cross-process safety comes from the atomic claim
+  * alone.
   *
   * Write path detail: manifests are written through a PRIVATE
   * FileSystem instance with checksums disabled — on the local scheme
@@ -63,10 +61,10 @@ import org.apache.spark.sql.SparkSession
   * the store directory (object stores and HDFS have no such sidecar);
   * the instance is private ([[FileSystem.newInstance]]) so the setting
   * never leaks into Spark's own cached FileSystem. On the local schemes
-  * the hard-link claim already maps to OS paths, manifest writes, the
-  * pointer rename and the version listing go to the OS directly
-  * ([[osPath]]): the same operations, without the process the local
-  * FileSystem forks per file when Hadoop's native library is absent.
+  * the hard-link claim already maps to OS paths, manifest writes and the
+  * version listing go to the OS directly ([[osPath]]): the same
+  * operations, without the process the local FileSystem forks per file
+  * when Hadoop's native library is absent.
   *
   * The stores write ONE manifest codec ([[Record]]: version,
   * [[FormatTag]], then `key=value` fields with a `store=` kind) and
@@ -74,23 +72,23 @@ import org.apache.spark.sql.SparkSession
   * current one ([[commitRecord]]), the commuting append/delete delta
   * ([[commitDelta]]), the compact merge ([[commitCompact]]) and the
   * ingest-stamp rule ([[mergeStamp]]). The raw line API below
-  * ([[readPointer]], [[tryCommit]], [[commitLoop]]) is the protocol the
+  * ([[readCurrent]], [[tryCommit]], [[commitLoop]]) is the protocol the
   * codec runs on.
   *
   * [[vacuum]] distinguishes three kinds of non-live entry:
   *   - manifests/directories REFERENCED by some on-disk manifest
   *     version outside the retention window — published garbage,
   *     reclaimed immediately;
-  *   - directories referenced by NO manifest at all — either an
-  *     in-flight writer's not-yet-committed data or a crashed writer's
-  *     orphan: reclaimed only past [[DefaultVacuumMinAgeMs]] (the age
-  *     guard; a vacuum racing a live append must not eat the segment
-  *     the append is about to commit);
+  *   - entries referenced by NO manifest at all — an in-flight writer's
+  *     not-yet-committed data or claim, or a crashed writer's orphan:
+  *     reclaimed only past [[DefaultVacuumMinAgeMs]] (the age guard; a
+  *     vacuum racing a live append must not eat the segment the append
+  *     is about to commit);
   *   - hidden (dot-prefixed) entries — never touched.
-  * Versions NEWER than the pointer the vacuum resolved (a claim landing
-  * mid-vacuum, or a lagging swap) are treated as LIVE — their manifests
-  * and every directory they reference survive unconditionally (a vacuum
-  * racing a commit must never destroy a fully committed version).
+  * The current version is the newest one in the vacuum's own listing. A
+  * version claimed after that listing is not in it, so the vacuum never
+  * touches it; the directories it adds are unreferenced in the listing
+  * and fall under the age guard.
   */
 object ManifestCommit {
 
@@ -125,7 +123,7 @@ object ManifestCommit {
     def name: String
   }
 
-  /** HDFS-style claim: `FileContext.rename` with [[Options.Rename.NONE]]
+  /** HDFS-style claim: `FileContext.rename` with `Options.Rename.NONE`
     * — atomic no-overwrite rename at the namenode. NOT safe on
     * local-backed schemes (RawLocalFileSystem pre-checks existence —
     * TOCTOU) — those resolve to [[LinkOwner]] instead. */
@@ -162,18 +160,12 @@ object ManifestCommit {
 
   // ------------------------------------------------------------------
   // Observability — cross-process contention is invisible in logs-only
-  // form (the round-14 verdict: the swap-non-convergence warning went to
-  // stderr and nothing else). Monotone process-lifetime counters a
-  // metrics exporter (or a spec) can read and diff.
+  // form. Monotone process-lifetime counters a metrics exporter (or a
+  // spec) can read and diff.
   // ------------------------------------------------------------------
 
   /** Named monotone counters: `claims_lost` (a tryCommit that lost its
-    * version claim — cross-writer contention), `pointer_swap_io_errors`
-    * (an IOException inside one swap iteration — racing swaps or a
-    * failing pointer write), `pointer_swap_nonconverged` (a swap that
-    * gave up after its retry budget; readers self-heal, but production
-    * wants to SEE it), `pointer_heals` (a readPointer that resolved the
-    * versioned log PAST a stale/absent pointer). */
+    * version claim — cross-writer contention). */
   object metrics {
     private val counters = scala.collection.concurrent.TrieMap
       .empty[String, java.util.concurrent.atomic.AtomicLong]
@@ -286,7 +278,7 @@ object ManifestCommit {
   }
 
   // ------------------------------------------------------------------
-  // Per-store in-JVM serialization (claim + pointer swap only)
+  // Per-store in-JVM serialization (the claim only)
   // ------------------------------------------------------------------
 
   private val stripes = Array.fill(64)(new Object)
@@ -339,28 +331,25 @@ object ManifestCommit {
   private def fcFor(p: Path): FileContext =
     FileContext.getFileContext(p.toUri, hadoopConf)
 
-  private def pointer(base: Path): Path = new Path(base, "MANIFEST")
+  private def versionPath(base: Path, v: Long): Path = new Path(base, s"MANIFEST.v$v")
+  private val VersionName = "MANIFEST\\.v(\\d+)".r
 
-  /** Does the store at `dir` have a committed state? One pointer stat,
-    * falling back to the versioned log (the pointer is a cache; a
-    * racing swap may leave it momentarily absent on schemes whose
-    * overwrite-rename is not one atomic operation). */
+  /** Does the store at `dir` have a committed state? One listing. */
   def exists(dir: String): Boolean = {
     val (f, base) = fsFor(dir)
-    f.exists(pointer(base)) || latestVersionOnDisk(f, base).isDefined
+    latestVersionOnDisk(f, base).isDefined
   }
 
   /** All committed versions on disk, by a PREFIX-SCOPED listing:
     * `globStatus("MANIFEST.v*")`, not a listStatus of the whole base —
     * the base also holds every segment/tombstone/generation directory,
-    * so a full listing makes each pointer read O(#entries) (a paginated
+    * so a full listing makes each read O(#entries) (a paginated
     * LIST per read on an object store with thousands of segments —
     * round-14 ADVICE). On a local OS path ([[osPath]]) the names come
     * from one directory read with no per-entry stat. Exposed for
     * [[Catalog.history]]-style walks over the RETAINED versions only. */
   private[operators] def versionsOnDisk(f: FileSystem, base: Path): Seq[Long] =
     try {
-      val vPat = "MANIFEST\\.v(\\d+)".r
       val names = osPath(f, base) match {
         case Some(o) =>
           val ds = java.nio.file.Files.newDirectoryStream(o, "MANIFEST.v*")
@@ -368,8 +357,12 @@ object ManifestCommit {
         case None =>
           Option(f.globStatus(new Path(base, "MANIFEST.v*"))).toSeq.flatten.map(_.getPath.getName)
       }
-      names.collect { case vPat(n) => n.toLong }
-    } catch { case _: java.io.IOException => Seq.empty }
+      names.collect { case VersionName(n) => n.toLong }
+    } catch {
+      // no directory yet is an empty store; any other listing failure
+      // propagates, since an empty answer would read as "no state"
+      case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException => Seq.empty
+    }
 
   /** Retained committed versions of a store, ascending — the manifest
     * versions a snapshot read ([[readVersioned]]) can still resolve. */
@@ -390,11 +383,10 @@ object ManifestCommit {
 
   /** `p` as an OS path when its scheme is local-backed and its URI paths
     * are probe-verified to be OS paths (the [[LinkOwner]] schemes), None
-    * on any other scheme. Manifest writes and the pointer rename go
+    * on any other scheme. Manifest writes and the version listing go
     * straight to the OS there: without Hadoop's native library the local
-    * FileSystem forks a process per file for both — `chmod` in `create`,
-    * `readlink` in each link-status check of `FileContext.rename` — about
-    * 4 ms each, six of them per commit. */
+    * FileSystem forks a process per file it creates (`chmod` in
+    * `create`), about 4 ms each. */
   private def osPath(f: FileSystem, p: Path): Option[java.nio.file.Path] =
     if (isLocalBacked(f) && linkSafe.get(authorityKey(p)).contains(true))
       Some(java.nio.file.Paths.get(p.toUri.getPath))
@@ -410,32 +402,22 @@ object ManifestCommit {
     }
   }
 
-  /** The raw pointer file's version, 0 when absent/unreadable. */
-  private def rawPointerVersion(f: FileSystem, base: Path): Long =
-    try readLines(f, pointer(base))(0).trim.toLong
-    catch { case _: java.io.IOException => 0L }
-
-  /** Current manifest lines. One small driver-side read plus one
-    * listing — the 100 TB analog is one GET of the pointer object and
-    * one LIST of the manifest prefix. The pointer is a CACHE over the
-    * versioned log and the read is REGRESSION-PROOF: it resolves
-    * max(pointer version, latest `MANIFEST.v<N>` on disk), so a pointer
-    * that a cross-process race left stale — or momentarily absent on a
-    * scheme whose overwrite-rename decomposes into delete+rename — is
-    * healed from the committed truth, never trusted over it. */
-  def readPointer(dir: String): Array[String] = {
+  /** Current manifest lines, None when the store has no committed
+    * version. One prefix listing plus one read of the newest version it
+    * finds — the 100 TB analog is one LIST of the manifest prefix and
+    * one GET. A version that is gone by the time it is read was
+    * reclaimed by a vacuum, which only happens once newer versions
+    * exist, so the read lists again and finds one of those. */
+  @scala.annotation.tailrec
+  def readCurrent(dir: String): Option[Array[String]] = {
     val (f, base) = fsFor(dir)
-    val ptr =
-      try Some(readLines(f, pointer(base)))
-      catch { case _: java.io.FileNotFoundException => None }
-    val ptrV = ptr.flatMap(l => l.headOption.flatMap(_.trim.toLongOption))
     latestVersionOnDisk(f, base) match {
-      case Some(latest) if ptrV.forall(_ < latest) =>
-        metrics.inc("pointer_heals")
-        readLines(f, new Path(base, s"MANIFEST.v$latest"))
-      case _ => ptr.getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"no MANIFEST (and no versioned manifest) at $dir"))
+      case None => None
+      case Some(v) =>
+        val lines =
+          try Some(readLines(f, versionPath(base, v)))
+          catch { case _: java.io.FileNotFoundException => None }
+        if (lines.isDefined) lines else readCurrent(dir)
     }
   }
 
@@ -444,12 +426,15 @@ object ManifestCommit {
     * vacuumed away. */
   def readVersioned(dir: String, version: Long): Array[String] = {
     val (f, base) = fsFor(dir)
-    readLines(f, new Path(base, s"MANIFEST.v$version"))
+    readLines(f, versionPath(base, version))
   }
 
-  /** Committed version of the pointer, 0 when the store is empty. */
-  def currentVersion(dir: String): Long =
-    if (exists(dir)) readPointer(dir)(0).trim.toLong else 0L
+  /** The newest committed version, 0 when the store is empty. One
+    * listing, no read. */
+  def currentVersion(dir: String): Long = {
+    val (f, base) = fsFor(dir)
+    latestVersionOnDisk(f, base).getOrElse(0L)
+  }
 
   /** A fresh data-directory name for a commit targeting version `v`:
     * version-stamped for the human reading a listing, random-suffixed
@@ -460,97 +445,30 @@ object ManifestCommit {
     s"${prefix}_${v}_${UUID.randomUUID().toString.take(8)}"
 
   /** Try to commit `lines` as version `v`: claim `MANIFEST.v<v>` via
-    * the scheme's atomic put-if-absent, then swap the pointer. Returns
-    * false iff the version was already claimed by another writer (the
-    * caller's base is stale — re-read and retry). */
+    * the scheme's atomic put-if-absent. Returns false iff the version
+    * was already claimed by another writer (the caller's base is stale —
+    * re-read and retry). */
   def tryCommit(dir: String, v: Long, lines: Seq[String]): Boolean = {
     val (f, base) = fsFor(dir)
     f.mkdirs(base)
-    val versioned = new Path(base, s"MANIFEST.v$v")
     val owner = ownerFor(dir)
-    // claim + swap under the store's JVM stripe: in-process writers
+    // the claim runs under the store's JVM stripe: in-process writers
     // serialize here (metadata-file IO only — data writes happen before
-    // this call), which makes the pointer read-check-swap atomic
-    // in-JVM; cross-process atomicity comes from the owner's claim and
-    // the self-healing reads.
+    // this call); cross-process atomicity comes from the owner's claim.
     stripeFor(base).synchronized {
       // v or a later version on disk means the caller's base is stale.
       // Checking the newest version, not just v, keeps a stale writer
       // from re-claiming a version [[vacuum]] already reclaimed: that
       // now takes the other writers' whole retention window of commits
       // landing between this listing and the claim below.
-      if (latestVersionOnDisk(f, base).exists(_ >= v)) {
-        metrics.inc("claims_lost")
-        return false
+      val claimed = latestVersionOnDisk(f, base).forall(_ < v) && {
+        val tmp = new Path(base, s"MANIFEST.tmp.${UUID.randomUUID()}")
+        writeLines(f, tmp, lines)
+        owner.putIfAbsent(f, base, tmp, versionPath(base, v))
       }
-      val tmp = new Path(base, s"MANIFEST.tmp.${UUID.randomUUID()}")
-      writeLines(f, tmp, lines)
-      val claimed = owner.putIfAbsent(f, base, tmp, versioned)
-      if (claimed) swapPointerLocked(f, base, v, lines)
-      else metrics.inc("claims_lost")
+      if (!claimed) metrics.inc("claims_lost")
       claimed
     }
-  }
-
-  /** Pointer swap, called with the store stripe held. Always targets
-    * the NEWEST committed version on disk (≥ the caller's `v`) and
-    * re-verifies after each rename: a cross-process racing swap that
-    * clobbers ours with older content is detected and redone, so the
-    * pointer converges forward — it can lag transiently, never stick
-    * regressed (and [[readPointer]] heals even the transient lag). */
-  private def swapPointerLocked(
-      f: FileSystem, base: Path, v: Long, lines: Seq[String]): Unit = {
-    var target = v
-    var content = lines
-    var tries = 0
-    while (tries < 20) {
-      tries += 1
-      latestVersionOnDisk(f, base).foreach { latest =>
-        if (latest > target) {
-          target = latest
-          content = readLines(f, new Path(base, s"MANIFEST.v$latest")).toSeq
-        }
-      }
-      if (rawPointerVersion(f, base) >= target) return
-      val ptmp = new Path(base, s"MANIFEST.tmp.${UUID.randomUUID()}")
-      try {
-        writeLines(f, ptmp, content)
-        // one atomic overwriting rename(2) on a local OS path; else
-        // FileSystem.rename first, then the FileContext OVERWRITE form
-        // for schemes whose FileSystem.rename refuses an existing
-        // destination (HDFS implements atomic overwrite-rename there).
-        osPath(f, ptmp) match {
-          case Some(o) => java.nio.file.Files.move(o, osPath(f, pointer(base)).get,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-          case None => if (!f.rename(ptmp, pointer(base)))
-            fcFor(base).rename(ptmp, pointer(base), Options.Rename.OVERWRITE)
-        }
-      } catch {
-        // racing cross-process swap (FileAlreadyExists from the local
-        // FileContext's delete+rename decomposition, or a FNF gap) —
-        // clean up and re-verify. Counted per ITERATION: a persistently
-        // failing pointer write (disk full, permissions) is visible in
-        // the counter long before the 20-try warning fires (round-14
-        // ADVICE — the bare catch burned 20 silent loops).
-        case _: java.io.IOException =>
-          metrics.inc("pointer_swap_io_errors")
-          f.delete(ptmp, false): Unit
-      }
-      // post-swap re-verify: done only when the pointer names OUR
-      // target or newer (a racing swap may have replaced it — if with
-      // something newer, fine; if with something older, loop redoes it)
-      if (rawPointerVersion(f, base) >= target &&
-          latestVersionOnDisk(f, base).forall(_ <= rawPointerVersion(f, base)))
-        return
-    }
-    // Readers self-heal via readPointer's max(pointer, latest-on-disk),
-    // so a non-converged swap degrades to a slower read, never a wrong
-    // one — but it still signals cross-process contention worth seeing:
-    // counted (metrics."pointer_swap_nonconverged") AND logged.
-    metrics.inc("pointer_swap_nonconverged")
-    System.err.println(
-      s"[graft] WARNING: pointer swap at $base did not converge after " +
-        s"$tries tries; readers self-heal from the versioned log")
   }
 
   /** Single-shot commit at exactly version `v`; throws
@@ -578,17 +496,16 @@ object ManifestCommit {
     * land, in either order. */
   def commitLoop(dir: String)(
       make: (Long, Option[Array[String]]) => Seq[String]): Long = {
-    def current(): (Long, Option[Array[String]]) =
-      if (exists(dir)) {
-        val l = readPointer(dir); (l(0).trim.toLong, Some(l))
-      } else (0L, None)
+    def current(): (Long, Option[Array[String]]) = {
+      val l = readCurrent(dir); (l.fold(0L)(_(0).trim.toLong), l)
+    }
     var base = current()
     var guard = 0
     while (guard < 10000) {
       val v = base._1 + 1
       if (tryCommit(dir, v, make(v, base._2))) return v
-      // lost the claim: the self-healing read resolves at least the
-      // winner's version, even once a vacuum reclaimed that version
+      // lost the claim: the current read resolves at least the winner's
+      // version, even once a vacuum reclaimed that version
       base = current()
       guard += 1
     }
@@ -600,7 +517,7 @@ object ManifestCommit {
   // ------------------------------------------------------------------
 
   /** Line 1 of every store manifest. Line 0 stays the commit version
-    * (what [[currentVersion]], [[commitLoop]] and [[vacuum]] read); the
+    * (what [[commitLoop]] reads; it is the N of `MANIFEST.v<N>`); the
     * lines after the tag are `key=value`, one of them `store=<kind>`. A
     * layout change bumps the tag, so a reader fails loudly on a layout
     * it does not know instead of misreading it. */
@@ -667,9 +584,15 @@ object ManifestCommit {
       fields.get("value").map(_.toLong))
   }
 
-  /** The current manifest of the `store` at `dir` — one small
-    * driver-side read through the self-healing [[readPointer]]. */
-  def read(dir: String, store: String): Record = decode(dir, store)(readPointer(dir))
+  /** The current manifest of the `store` at `dir`, None when it has no
+    * committed version — one small driver-side read ([[readCurrent]]). */
+  def readOption(dir: String, store: String): Option[Record] =
+    readCurrent(dir).map(decode(dir, store))
+
+  /** [[readOption]] of a store that must exist. */
+  def read(dir: String, store: String): Record =
+    readOption(dir, store).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed $store manifest at $dir"))
 
   /** The manifest committed as `version` (snapshot read / time travel).
     * Throws FileNotFoundException if never published or vacuumed away. */
@@ -680,10 +603,10 @@ object ManifestCommit {
     * before the store exists or before any stamped mutation) — the
     * exactly-once predicate of a streaming sink: skip a redelivered
     * batch iff `lastBatchId(dir, store).exists(_ >= bid)`. The stamp
-    * rode the same manifest swap that published the batch's effects, so
+    * rode the same version claim that published the batch's effects, so
     * there is no state-written-but-not-marked window. */
   def lastBatchId(dir: String, store: String): Option[Long] =
-    if (exists(dir)) read(dir, store).batchId else None
+    readOption(dir, store).flatMap(_.batchId)
 
   /** The stamp rule: the highest batch APPLIED — monotone under max and
     * carried through unstamped mutations (delete, compact, a manual
@@ -775,9 +698,8 @@ object ManifestCommit {
 
   /** Reclaim entries outside the retention window. `refsOf` maps a
     * store's manifest lines to the data-directory names it references.
-    * Retention keeps `retainVersions` versions BEFORE the
-    * current one readable. Versions NEWER than the resolved current one
-    * (a commit racing this vacuum) are live unconditionally. See the
+    * Retention keeps `retainVersions` versions BEFORE the current one —
+    * the newest version in this vacuum's one listing — readable. See the
     * object scaladoc for the three-way classification (published
     * garbage / in-flight age guard / hidden). */
   def vacuum(
@@ -786,33 +708,23 @@ object ManifestCommit {
       retainVersions: Int,
       minAgeMs: Long): Unit = {
     val (f, base) = fsFor(dir)
-    val cur = readPointer(dir) // self-healing: ≥ any lagging pointer
-    val curV = cur(0).trim.toLong
     val entries = f.listStatus(base)
-    val vPat = "MANIFEST\\.v(\\d+)".r
-    val onDisk: Map[Long, Array[String]] = entries.iterator.flatMap { e =>
-      e.getPath.getName match {
-        case vPat(n) =>
-          try Some(n.toLong -> readLines(f, e.getPath))
-          catch { case _: java.io.IOException => None }
-        case _ => None
-      }
+    val versions = entries.toSeq.map(_.getPath.getName).collect { case VersionName(n) => n.toLong }
+    val curV = versions.maxOption.getOrElse(
+      throw new java.io.FileNotFoundException(s"no versioned manifest at $dir"))
+    val onDisk: Map[Long, Array[String]] = versions.flatMap { v =>
+      try Some(v -> readLines(f, versionPath(base, v)))
+      catch { case _: java.io.IOException => None }
     }.toMap
+    // the current version is gone only if a concurrent vacuum that saw a
+    // newer one reclaimed it; that vacuum covers this pass
+    if (!onDisk.contains(curV)) return
     val retained = (curV - retainVersions).max(1L) to curV
-    // a version claimed between our readPointer and the listing above is
-    // NEWER than curV: fully committed, racing this vacuum — live, with
-    // everything it references (deleting it was the round-13 ADVICE bug:
-    // `published` caught its data dirs and reclaimed a committed version)
-    val newer = onDisk.filter { case (n, _) => n > curV }
-    val retainedManifests =
-      retained.flatMap(v => if (v == curV) Some(cur) else onDisk.get(v)) ++
-        newer.values
-    val live = retainedManifests.flatMap(refsOf).toSet ++
-      retained.map(v => s"MANIFEST.v$v") ++
-      newer.keys.map(v => s"MANIFEST.v$v") + "MANIFEST"
+    val live = retained.flatMap(onDisk.get).flatMap(refsOf).toSet ++
+      retained.map(v => s"MANIFEST.v$v")
     // referenced by ANY manifest still on disk → was published → its
     // age is irrelevant, only liveness matters
-    val published = onDisk.values.flatMap(refsOf).toSet ++ refsOf(cur)
+    val published = onDisk.values.flatMap(refsOf).toSet
     val now = System.currentTimeMillis()
     entries.foreach { e =>
       val name = e.getPath.getName
@@ -820,19 +732,11 @@ object ManifestCommit {
         if (live.contains(name) || name.startsWith(".")) false
         else if (name.startsWith("MANIFEST.v") || published.contains(name)) true
         // everything else — MANIFEST.tmp.* included: a tmp file younger
-        // than the guard may be mid-rename in a live commit — waits out
-        // the in-flight age guard
+        // than the guard may be a live commit's claim in flight — waits
+        // out the in-flight age guard
         else now - e.getModificationTime > minAgeMs
       if (drop) f.delete(e.getPath, true): Unit
     }
-    // repair a lagging/regressed pointer while we're here: vacuum may
-    // have just deleted the version the stale pointer file names (reads
-    // self-heal through the versioned log, but the pointer should name
-    // a live version again without waiting for the next commit)
-    if (rawPointerVersion(f, base) < curV)
-      stripeFor(base).synchronized {
-        swapPointerLocked(f, base, curV, cur.toSeq)
-      }
   }
 
   /** [[vacuum]] for a codec store: a manifest references its segments,

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.col
   * partitioned layout (`cell=<c>/` or `bprefix=<p>/` directories)
   * resolves, through Spark's partition discovery, to the same columns,
   * and the stores union segments by name — the next compact rewrites
-  * it here. Visibility comes from the caller's manifest swap, never
+  * it here. Visibility comes from the caller's manifest commit, never
   * from files appearing in a listed directory. */
 private[graft] object Segments {
 

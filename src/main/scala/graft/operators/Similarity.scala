@@ -907,9 +907,9 @@ object Similarity {
     * runs read them instead of re-deriving — at 100 TB the index IS the
     * product, and per-run recompute (the honest cost the benchmarks pay)
     * is amortized away. Two tables under `dir`, committed via
-    * [[AnnStore]] manifest generations (atomic pointer swap — the
+    * [[AnnStore]] manifest generations (an atomic version claim — the
     * object-store commit shape; every mutation writes fresh
-    * directories and publishes, readers resolve the pointer once):
+    * directories and publishes, readers resolve the manifest once):
     *   - `centroids` (a `cent_<v>` generation): (cell, centroid array<double>, cnorm,
     *     nshards) — nlist rows, written once. The per-cell posting
     *     counts ride the manifest (`counts=`) and the shard widths this
@@ -956,7 +956,7 @@ object Similarity {
 
   /** Appends a vector batch into an EXISTING index — centroids fixed,
     * the batch lands in ONE fresh segment directory ([[Segments]]) and
-    * becomes visible in one [[AnnStore]] manifest swap (existing
+    * becomes visible in one [[AnnStore]] manifest commit (existing
     * segments are never rewritten or read; a reader mid-append sees
     * either the old segment list or the new one, never a partially
     * listed directory). The m-tier composition (m4 MERGE / m5 dynamic
@@ -971,7 +971,7 @@ object Similarity {
     * re-bucketing a table. The batch's per-cell counts add to the
     * manifest's in the same commit, keeping the read path scan-free.
     * `batchId`: optional exactly-once ingest stamp — rides the manifest
-    * swap ([[AnnStore.lastBatchId]]), so a streaming embedding sink
+    * commit ([[AnnStore.lastBatchId]]), so a streaming embedding sink
     * skips a redelivered batch with no state-written-but-not-marked
     * window (the DedupIndex/StateTable discipline, round-14).
     * Returns per-cell APPENDED counts (cell, n_appended). */
@@ -1058,7 +1058,7 @@ object Similarity {
     }.toSeq.toDF("cell", "centroid", "cnorm", "nshards")
       .write.mode("overwrite").parquet(s"$dir/$cent")
     // fresh-build commit: everything above went into fresh directories;
-    // this swap is the moment the index EXISTS for readers. A build
+    // this claim is the moment the index EXISTS for readers. A build
     // REPLACES the index wholesale — CommitConflict on a racing writer
     // (no merge is meaningful), fresh dirs age out via vacuum.
     ManifestCommit.publish(dir,
@@ -1069,7 +1069,7 @@ object Similarity {
   /** The append both tiers share: centroids, shard widths and (PQ)
     * codebooks stay fixed, so the batch encodes and assigns exactly as
     * a fixed-centroid rebuild would. One commit = one fresh segment +
-    * one pointer swap whose manifest adds the batch's per-cell counts
+    * one version claim whose manifest adds the batch's per-cell counts
     * (never an in-place write, and no centroid rewrite). The segment is
     * written ONCE (its content depends only on the fixed
     * centroids/widths); when a concurrent writer claims the version
@@ -1228,7 +1228,7 @@ object Similarity {
     * maintenance op, [[appendToIvfIndex]]'s inverse, O(|deleted ids|)
     * in write volume: the delete writes a TOMBSTONE segment (the ids
     * actually present, one column) and publishes it with the decremented
-    * per-cell counts in one [[AnnStore]] manifest swap — no posting or
+    * per-cell counts in one [[AnnStore]] manifest commit — no posting or
     * centroid data is rewritten, and a reader mid-delete sees either
     * the old state or the new one.
     * Readers drop tombstoned ids with a broadcast anti-join
@@ -1295,9 +1295,9 @@ object Similarity {
     * (per-commit file sets), every delete adds a broadcast anti-join to
     * the read path; compact collapses both back to the fresh-build
     * shape (one segment, no tombstones) and publishes in one manifest
-    * swap. A reader that resolved the old manifest keeps its old
+    * commit. A reader that resolved the old manifest keeps its old
     * segments (they are not touched until [[AnnStore.vacuum]]); a
-    * reader arriving after the swap sees exactly the new one. Row
+    * reader arriving after the commit sees exactly the new one. Row
     * content is untouched modulo tombstones: a post-compaction read is
     * row-identical (spec-pinned), only the file layout changes. The
     * centroid generation and the manifest counts carry over unchanged —
@@ -1492,7 +1492,7 @@ object Similarity {
       indexDir: String,
       k: Int)(
       candidates: (DataFrame, AnnStore.Manifest, Boolean) => DataFrame): DataFrame = {
-    val man = AnnStore.read(indexDir) // ONE pointer resolve per query
+    val man = AnnStore.read(indexDir) // ONE manifest resolve per query
     val small = DriverBatch.gather(queries)
     val q = small.getOrElse(queries)
     val cand = candidates(q, man, small.isDefined)
@@ -1592,7 +1592,7 @@ object Similarity {
     * fixed (the batch encodes with the persisted codebooks
     * bit-identically — training is never re-run, so existing postings
     * and new ones live in one code space), the encoded batch lands in a
-    * fresh segment, and one [[AnnStore]] manifest swap publishes it with
+    * fresh segment, and one [[AnnStore]] manifest commit publishes it with
     * the batch's per-cell counts added. The
     * parity contract mirrors the int8 tier's: the read path after an
     * append is ROW-IDENTICAL to a fresh [[buildPqIndex]] over the full

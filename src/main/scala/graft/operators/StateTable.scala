@@ -5,16 +5,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Manifest-committed MAINTAINED TABLE — the commit primitive for the
   * incremental tiers' state (the s12 HLL sketch table, the s13 quantile
   * bucket table, any read-merge-publish fold): each publish writes the
-  * new state into a FRESH generation directory and swaps one pointer
-  * file (via [[ManifestCommit]] — the shared Hadoop-FileSystem commit
-  * module, so the store runs against `file://`/`hdfs://` URIs, not just
-  * local paths), so
+  * new state into a FRESH generation directory and claims the next
+  * manifest version naming it (via [[ManifestCommit]] — the shared
+  * Hadoop-FileSystem commit module, so the store runs against
+  * `file://`/`hdfs://` URIs, not just local paths), so
   *
   *   - a reader mid-publish sees the old generation or the new one,
   *     never a half-written overwrite (the plain `mode("overwrite")`
   *     read-merge-overwrite loop deletes files under concurrent
   *     readers);
-  *   - the EXACTLY-ONCE stamp rides the same swap: `publish` records
+  *   - the EXACTLY-ONCE stamp rides the same claim: `publish` records
   *     the micro-batch id in the manifest, so "state updated" and
   *     "batch committed" are one atomic event — a redelivered batch is
   *     skipped by reading the stamp back ([[lastBatchId]]). The stamp
@@ -70,7 +70,7 @@ object StateTable {
     * Survives unstamped publishes in between (see the object doc). */
   def lastBatchId(dir: String): Option[Long] = ManifestCommit.lastBatchId(dir, Store)
 
-  /** The current state. One pointer resolve — the DataFrame keeps
+  /** The current state. One manifest resolve — the DataFrame keeps
     * seeing its generation even if a publish lands mid-query. */
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/${readManifest(dir).gen}")
@@ -80,8 +80,8 @@ object StateTable {
     spark.read.parquet(s"$dir/${readManifestAt(dir, version).gen}")
 
   /** Commit a new state: materialize `state` into a fresh generation
-    * directory, then claim the next version and swap the pointer in one
-    * atomic rename. Reading the CURRENT state while computing `state`
+    * directory, then claim the next version in one atomic put-if-absent
+    * of its manifest. Reading the CURRENT state while computing `state`
     * is safe — the write targets a different directory, so no
     * localCheckpoint fence is needed. Returns the new version.
     *
@@ -98,7 +98,7 @@ object StateTable {
       dir: String,
       batchId: Option[Long] = None,
       expectedVersion: Option[Long] = None): Long = {
-    val cur = if (exists(dir)) Some(readManifest(dir)) else None
+    val cur = ManifestCommit.readOption(dir, Store).map(manifest)
     val curV = cur.map(_.version).getOrElse(0L)
     expectedVersion.foreach { ev =>
       if (curV != ev)

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * the new value, where a lost claim re-reads the winner's value and
   * retries. So every update is atomic across threads, handles and
   * processes, as the reference's Redis INCR/DECR are, with no lock of
-  * its own: the version claim is the lock. GET is one pointer read, and
-  * an absent counter reads 0 (`plan-server.ts:80-82`). No operation
+  * its own: the version claim is the lock. GET is one listing and one
+  * read of the newest version, and an absent counter reads 0 (`plan-server.ts:80-82`). No operation
   * launches a Spark job.
   *
   * A path that holds entries but no manifest (the one-row parquet
@@ -43,9 +43,10 @@ final class Counter(path: String) {
 
   import Counter._
 
-  def get(): Long =
-    if (ManifestCommit.exists(path)) valueOf(ManifestCommit.read(path, Store))
-    else { requireFresh(); 0L }
+  def get(): Long = ManifestCommit.readOption(path, Store) match {
+    case Some(r) => valueOf(r)
+    case None => requireFresh(); 0L
+  }
 
   def set(v: Long): Long = update(_ => v)
   def incr(): Long = update(_ + 1)
@@ -69,13 +70,13 @@ final class Counter(path: String) {
   /** No manifest yet: an absent or empty path is a fresh counter. Any
     * other visible entry (a parquet part file, `_SUCCESS`) means the
     * path holds something else, and the op fails. Dot-prefixed entries
-    * (checksums, a claim's link probe) and `MANIFEST*` files (an
+    * (checksums, a claim's link probe) and `MANIFEST.*` files (an
     * in-flight first claim) are not counted. */
   private def requireFresh(): Unit = {
     val (fs, base) = ManifestCommit.fsFor(path)
     val foreign =
       try fs.listStatus(base).map(_.getPath.getName)
-        .filterNot(n => n.startsWith(".") || n.startsWith("MANIFEST"))
+        .filterNot(n => n.startsWith(".") || n.startsWith("MANIFEST."))
       catch { case _: java.io.FileNotFoundException => Array.empty[String] }
     if (foreign.nonEmpty)
       throw new IllegalStateException(s"$path holds no counter manifest but " +

@@ -585,7 +585,7 @@ object WindowBatchQueries {
   /** S/L: EXACTLY-ONCE ANN INGEST, driver-gated — the embedding tier's
     * s10: a vector corpus streams in as stamped micro-batch appends
     * ([[graft.operators.Similarity.appendToIvfIndex]] with `batchId`
-    * riding the manifest swap, round-14), a restart REDELIVERS a batch,
+    * riding the manifest commit, round-14), a restart REDELIVERS a batch,
     * and the [[graft.operators.AnnStore.lastBatchId]] predicate must
     * skip it — a double-append would both duplicate postings and
     * double-count the centroid totals. Nothing is held in memory

@@ -212,7 +212,7 @@ class ConditionalPutOwnerContractSpec extends SparkSpec with CommitOwnerContract
 
   test("conditional-PUT owner end-to-end: a registered object-store scheme sustains the full commit protocol under contention") {
     // beyond the primitive's contract: the protocol built ON it (version
-    // claims, loser merges, pointer swaps, self-healing reads) must hold
+    // claims, loser merges, reads of the newest version) must hold
     // on a scheme whose ONLY atomic write is the conditional PUT. 8
     // in-JVM writers × 25 contended versions through commitLoop — every
     // writer's item lands exactly once.
@@ -236,7 +236,7 @@ class ConditionalPutOwnerContractSpec extends SparkSpec with CommitOwnerContract
         }(ec)
       }
       futures.foreach(Await.result(_, 5.minutes))
-      val lines = ManifestCommit.readPointer(dir)
+      val lines = ManifestCommit.readCurrent(dir).get
       assert(lines(0).toLong == 200L, s"200 commits → version 200, got ${lines(0)}")
       val items = lines(1).split(",").toSet
       val want = (for (w <- 1 to 8; r <- 1 to 25) yield s"w$w-r$r").toSet

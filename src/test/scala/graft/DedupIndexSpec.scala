@@ -218,7 +218,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // unreferenced) and leaves the live generation + meta intact
     DedupIndex.vacuum(dir)
     val left = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(left == Set("MANIFEST", s"MANIFEST.v${m.version}", m.meta) ++ m.segments,
+    assert(left == Set(s"MANIFEST.v${m.version}", m.meta) ++ m.segments,
       s"vacuum left unexpected entries: $left")
     assert(DedupIndex.query(incoming, "doc_id", "text", dir)
       .select($"doc_id").collect().map(_.getLong(0)).toSet == before)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AnnStore, DedupIndex, ManifestCommit, StateTable}
@@ -123,20 +121,17 @@ class ManifestCodecSpec extends AnyFunSuite {
   }
 
   test("only ManifestCommit reads raw manifest lines; the format tag is defined once") {
-    val main = Paths.get("src", "main")
-    assert(Files.isDirectory(main), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
-    val walk = Files.walk(main)
-    val sources =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => main.relativize(p).toString -> Files.readString(p)).toSeq.sortBy(_._1)
-      finally walk.close()
-    def code(text: String): String = text.linesIterator
-      .map(_.replaceAll("""(^|\s)//.*$""", ""))
-      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
-      .mkString("\n")
-    val rawRead = """\b(readPointer|readVersioned)\s*\(""".r
+    val sources = SourceCheck.mainSources
+    val rawRead = """\b(readCurrent|readVersioned)\s*\(""".r
     val commit = Paths.get("scala", "graft", "operators", "ManifestCommit.scala").toString
-    assert(sources.collect { case (f, t) if rawRead.findFirstIn(code(t)).isDefined => f } == Seq(commit))
+    assert(sources.collect {
+      case (f, t) if rawRead.findFirstIn(SourceCheck.chains(t).mkString("\n")).isDefined => f
+    } == Seq(commit))
     assert(sources.flatMap { case (f, t) => "graft-manifest/".r.findAllIn(t).map(_ => f) } == Seq(commit))
+    // the current state is the newest MANIFEST.v<N>: no source names a
+    // single-file manifest beside the log
+    val pointerFile = "\"MANIFEST\""
+    assert(sources.collect { case (f, t) if t.contains(pointerFile) => f }.isEmpty)
   }
+
 }

@@ -60,7 +60,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(ManifestCommit.tryCommit(dir, 1L, Seq("1", "base")))
     assert(!ManifestCommit.tryCommit(dir, 1L, Seq("1", "usurper")),
       "a committed version must be unclaimable")
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("1", "base"))
+    assert(ManifestCommit.readCurrent(dir).get.toSeq == Seq("1", "base"))
 
     // two writers interleaved: both read version 1. Writer A commits
     // first; writer B (latched inside its make callback, so the
@@ -84,34 +84,30 @@ class ManifestCommitSpec extends SparkSpec {
     val vB = Await.result(fB, 60.seconds)
     assert(vB == 3L, s"loser must land at the next version, got $vB")
     assert(makeCalls.get() == 2, "loser must have retried exactly once")
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("3", "base,segA,segB"),
+    assert(ManifestCommit.readCurrent(dir).get.toSeq == Seq("3", "base,segA,segB"),
       "both writers' deltas must survive")
     // versioned history is immutable and complete
     assert(ManifestCommit.readVersioned(dir, 2L).toSeq == Seq("2", "base,segA"))
   }
 
-  test("pointer-lag recovery: a claim whose writer crashed before the pointer swap is walked over, never lost") {
+  test("a claimed version is current at once") {
     val dir = "file:" + tmp("lag")
     ManifestCommit.tryCommit(dir, 1L, Seq("1", "a"))
-    // fabricate the crash state: MANIFEST.v2 exists (fully written —
-    // claims rename complete files) but the pointer still names v1
+    // another process claims v2 and exits: its complete MANIFEST.v2 is
+    // all it leaves, and it is the current state with no further step
     val hc = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(s"$dir/MANIFEST.v2")
     val out = p.getFileSystem(hc).create(p, false)
     out.write("2\na,ghost\n".getBytes("UTF-8")); out.close()
-    // round-14: readPointer SELF-HEALS — it resolves max(pointer,
-    // latest-on-disk), so the lagging (or regressed) pointer is never
-    // trusted over the committed log; the crashed writer's v2 is
-    // immediately the current state
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("2", "a,ghost"),
-      "a reader must resolve the committed log past a lagging pointer")
-    // a commitLoop starting from the healed state walks onto v2 and
-    // commits v3 on top of it
+    assert(ManifestCommit.readCurrent(dir).get.toSeq == Seq("2", "a,ghost"),
+      "a reader must resolve the newest claimed version")
+    assert(ManifestCommit.currentVersion(dir) == 2L)
+    // a commitLoop builds on v2 and commits v3 on top of it
     val v = ManifestCommit.commitLoop(dir) { (vv, base) =>
       Seq(vv.toString, base.get(1) + ",mine")
     }
     assert(v == 3L)
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("3", "a,ghost,mine"),
+    assert(ManifestCommit.readCurrent(dir).get.toSeq == Seq("3", "a,ghost,mine"),
       "the crashed writer's committed claim must be honored, not overwritten")
   }
 
@@ -210,7 +206,7 @@ class ManifestCommitSpec extends SparkSpec {
     val m = DedupIndex.readManifest(dir)
     val left = new java.io.File(dir.stripPrefix("file:"))
       .listFiles().map(_.getName).toSet
-    assert(left == Set("MANIFEST", s"MANIFEST.v${m.version}", m.meta,
+    assert(left == Set(s"MANIFEST.v${m.version}", m.meta,
       "seg_99_inflight") ++ m.segments, s"unexpected survivors: $left")
     // past the age guard the orphan is reclaimable
     DedupIndex.vacuum(dir, minAgeMs = 0L)
@@ -341,61 +337,68 @@ class ManifestCommitSpec extends SparkSpec {
           Seq(v.toString, s"writer-$winner"),
           s"version $v must hold the winning writer's content")
       }
-      assert(ManifestCommit.readPointer(dir)(0) == "25")
+      assert(ManifestCommit.readCurrent(dir).get(0) == "25")
     } finally pool.shutdown()
   }
 
-  test("regressed pointer self-heal: a pointer clobbered back to an older version is never trusted over the log") {
-    // fabricate the round-13 race's END STATE: MANIFEST.v2 committed,
-    // pointer file regressed to v1's content (an old writer's swap
-    // landed after a newer one's). Readers must resolve v2; the next
-    // commit must land at v3 and repair the pointer file itself.
+  test("a stray `MANIFEST` file is never read and vacuum reclaims it") {
+    // the single-file pointer earlier versions kept beside the log: a
+    // store they last wrote may still hold one, naming an older version
     val dir = "file:" + tmp("regress")
+    val local = dir.stripPrefix("file:")
     ManifestCommit.tryCommit(dir, 1L, Seq("1", "old"))
     ManifestCommit.tryCommit(dir, 2L, Seq("2", "old,newer"))
-    val f = new java.io.File(dir.stripPrefix("file:") + "/MANIFEST")
-    val w = new java.io.FileWriter(f); w.write("1\nold\n"); w.close()
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("2", "old,newer"),
-      "reader must take max(pointer, latest-on-disk)")
+    val w = new java.io.FileWriter(new java.io.File(local, "MANIFEST"))
+    w.write("1\nold\n"); w.close()
+    assert(ManifestCommit.readCurrent(dir).get.toSeq == Seq("2", "old,newer"),
+      "the current state is the newest claimed version, whatever the stray file says")
     assert(ManifestCommit.currentVersion(dir) == 2L)
     val v = ManifestCommit.commitLoop(dir) { (vv, base) =>
       Seq(vv.toString, base.get(1) + ",mine")
     }
-    assert(v == 3L, "the next commit must build on the committed v2, not the regressed pointer")
-    assert(scala.io.Source.fromFile(f).getLines().next() == "3",
-      "the commit's swap must repair the pointer file")
+    assert(v == 3L, "the next commit must build on the committed v2")
+    ManifestCommit.vacuum(dir, _ => Nil, retainVersions = 0, minAgeMs = 0L)
+    assert(new java.io.File(local).listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).toSet == Set("MANIFEST.v3"),
+      "vacuum reclaims the stray file and the versions outside the window")
+    assert(ManifestCommit.readCurrent(dir).get.toSeq == Seq("3", "old,newer,mine"))
   }
 
-  test("vacuum never destroys a committed version newer than the pointer it found") {
-    // the round-13 ADVICE bug: a committed MANIFEST.v(N+1) whose pointer
-    // swap lagged (or regressed) matched startsWith("MANIFEST.v") outside
-    // the retained range AND its data dirs landed in `published` — vacuum
-    // deleted a fully committed version with no age guard. Fabricate
-    // exactly that state and vacuum: v3 and its data must survive.
-    val dir = "file:" + tmp("vacnew")
-    val local = dir.stripPrefix("file:")
-    ManifestCommit.tryCommit(dir, 1L, Seq("1", "d1"))
-    ManifestCommit.tryCommit(dir, 2L, Seq("2", "d2"))
-    new java.io.File(local, "d2").mkdirs()
-    // committed v3 (complete versioned manifest + its young data dir)
-    // whose pointer swap hasn't landed; pointer regressed to v2
-    val w3 = new java.io.FileWriter(new java.io.File(local, "MANIFEST.v3"))
-    w3.write("3\nd3\n"); w3.close()
-    new java.io.File(local, "d3").mkdirs()
-    val wp = new java.io.FileWriter(new java.io.File(local, "MANIFEST"))
-    wp.write("2\nd2\n"); wp.close()
-    ManifestCommit.vacuum(dir, lines => lines.drop(1).toSeq,
-      retainVersions = 0, minAgeMs = 0L)
-    val left = new java.io.File(local).listFiles().map(_.getName).toSet
-    assert(left.contains("MANIFEST.v3") && left.contains("d3"),
-      s"a committed version newer than the pointer must survive vacuum: $left")
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("3", "d3"),
-      "the newest committed version stays readable after the vacuum")
-    // and the vacuum REPAIRS the stale pointer file itself (it may have
-    // just deleted the version the pointer named)
-    assert(scala.io.Source.fromFile(
-      new java.io.File(local, "MANIFEST")).getLines().next() == "3",
-      "vacuum must re-point the lagging pointer at the live version")
+  test("readers racing commits and vacuums: every read is complete and decodable, never goes back, never throws") {
+    // each commit is followed by a vacuum that keeps only the newest
+    // version, so a reader's listed version is often reclaimed before
+    // it is read; the read must then list again, never fail
+    val dir = "file:" + tmp("race")
+    val store = "race"
+    def commit(): ManifestCommit.Record =
+      ManifestCommit.commitRecord(dir, store) { (v, _) =>
+        ManifestCommit.Record(v, store, Map.empty, segments = (1L to v).map(i => s"s$i"),
+          value = Some(v))
+      }
+    commit()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readers = (1 to 2).map { _ =>
+      Future {
+        var last = 0L
+        var reads = 0
+        while (!done.get) {
+          val r = ManifestCommit.read(dir, store)
+          assert(r.value.contains(r.version) && r.segments.size == r.version,
+            s"incomplete record: $r")
+          assert(r.version >= last, s"read went back from v$last to v${r.version}")
+          last = r.version
+          reads += 1
+        }
+        reads
+      }
+    }
+    try (2 to 200).foreach { _ =>
+      commit()
+      ManifestCommit.vacuum(dir, store, retainVersions = 0, minAgeMs = 0L)
+    } finally done.set(true)
+    val reads = readers.map(Await.result(_, 60.seconds))
+    assert(reads.forall(_ > 0), s"every reader must have read: $reads")
+    assert(ManifestCommit.read(dir, store).version == 200L)
   }
 
   test("manifest format tags: an unknown layout fails loudly at parse, never misreads") {
@@ -406,12 +409,10 @@ class ManifestCommitSpec extends SparkSpec {
     // this binary) — the parse must throw, not misinterpret fields
     val local = st.stripPrefix("file:")
     val v = ManifestCommit.currentVersion(st)
-    val lines = ManifestCommit.readPointer(st)
+    val lines = ManifestCommit.readCurrent(st).get
     val forged = lines.updated(1, "graft-state-table/999")
-    for (name <- Seq("MANIFEST", s"MANIFEST.v$v")) {
-      val w = new java.io.FileWriter(new java.io.File(local, name))
-      w.write(forged.mkString("", "\n", "\n")); w.close()
-    }
+    val w = new java.io.FileWriter(new java.io.File(local, s"MANIFEST.v$v"))
+    w.write(forged.mkString("", "\n", "\n")); w.close()
     val e = intercept[IllegalArgumentException] {
       StateTable.readManifest(st)
     }
@@ -432,23 +433,13 @@ class ManifestCommitSpec extends SparkSpec {
     assert(ManifestCommit.ownerFor("file:" + tmp("ident")).name == "hard-link")
   }
 
-  test("metrics: lost claims, pointer heals, and swap IO contention are counted (observable, not stderr-only)") {
+  test("metrics: lost claims are counted (observable, not stderr-only)") {
     val dir = "file:" + tmp("metrics")
     val lost0 = ManifestCommit.metrics.get("claims_lost")
     assert(ManifestCommit.tryCommit(dir, 1L, Seq("1", "a")))
     assert(!ManifestCommit.tryCommit(dir, 1L, Seq("1", "b")))
     assert(ManifestCommit.metrics.get("claims_lost") >= lost0 + 1,
       "a lost version claim must increment claims_lost")
-    // fabricate a lagging pointer (crashed writer): the healing read is
-    // counted, so production can SEE cross-process pointer lag
-    val hc = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$dir/MANIFEST.v2")
-    val out = p.getFileSystem(hc).create(p, false)
-    out.write("2\na,b\n".getBytes("UTF-8")); out.close()
-    val heals0 = ManifestCommit.metrics.get("pointer_heals")
-    assert(ManifestCommit.readPointer(dir).toSeq == Seq("2", "a,b"))
-    assert(ManifestCommit.metrics.get("pointer_heals") >= heals0 + 1,
-      "a read that resolved the log past a stale pointer must count a heal")
     assert(ManifestCommit.metrics.snapshot.contains("claims_lost"))
   }
 

@@ -599,14 +599,14 @@ class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Similarity.deleteFromIvfIndex(
       emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), dir).count()
     // a reader that resolved the pre-compact manifest: its DataFrame
-    // pins the old segment+tombstone set (one pointer resolve at open)
+    // pins the old segment+tombstone set (one manifest resolve at open)
     val oldReader = Similarity.indexPostings(spark, dir)
     val before = oldReader.count()
     Similarity.compactIvfIndex(spark, dir)
-    // the old generation's files are untouched by the swap, so the
+    // the old generation's files are untouched by the commit, so the
     // in-flight reader still computes — and sees its own generation
     assert(oldReader.count() == before)
-    // a NEW reader resolves the new pointer: exactly one segment, no
+    // a NEW reader resolves the new manifest: exactly one segment, no
     // tombstone anti-join, same rows
     val man = graft.operators.AnnStore.read(dir)
     assert(man.segments.size == 1 && man.tombstones.isEmpty, s"got $man")
@@ -615,7 +615,7 @@ class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // generation (and the manifest) survive and the view is unchanged
     graft.operators.AnnStore.vacuum(dir)
     val left = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(left == Set("MANIFEST", s"MANIFEST.v${man.version}",
+    assert(left == Set(s"MANIFEST.v${man.version}",
       man.cent, man.segments.head), s"unexpected survivors: $left")
     assert(Similarity.indexPostings(spark, dir).count() == before)
     // snapshot read: the current version reads back through its

@@ -94,7 +94,7 @@ class StateTableSpec extends SparkSpec {
     intercept[java.io.IOException] { StateTable.readManifestAt(dir, 1L) }
     StateTable.vacuum(dir)
     val left = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(left == Set("MANIFEST", "MANIFEST.v3", StateTable.readManifest(dir).gen),
+    assert(left == Set("MANIFEST.v3", StateTable.readManifest(dir).gen),
       s"unexpected survivors: $left")
     assert(got(StateTable.read(spark, dir)) == want(3, "v3"))
   }

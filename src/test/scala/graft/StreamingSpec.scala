@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSpec {
     /** Drive the three batches through a file source with a real
       * checkpoint into a PERSISTED sketch table at `stateDir` —
       * read-merge-PUBLISH per batch through [[graft.operators
-      * .StateTable]] (fresh generation + pointer swap; a mid-publish
+      * .StateTable]] (fresh generation + version claim; a mid-publish
       * reader keeps its generation, unlike the former in-place
       * overwrite). `crash` injects a failure AFTER batch 1's effects
       * ran (state committed, stream commit log not) and restarts with
@@ -559,7 +559,7 @@ class StreamingSpec extends SparkSpec {
       * batch would double-count it (HLL register maxima absorbed that
       * for free). The sink therefore publishes through
       * [[graft.operators.StateTable]] WITH the batch stamp: the state
-      * write and the exactly-once marker are ONE atomic pointer swap —
+      * write and the exactly-once marker are ONE atomic version claim —
       * there is no window where the state is updated but the batch not
       * recorded (the separate marker-file dance had exactly that
       * window), which is the commit shape a Delta/Iceberg sink

@@ -5,11 +5,11 @@ import graft.plans.Counter
 
 /** Child-process entry point for CrossProcessCommitSpec: a SEPARATE JVM
   * hammering one shared `file://` store through [[ManifestCommit]], so
-  * the atomic claim (hard link) and the pointer-swap re-verify are
-  * contended WITHOUT the in-JVM striped lock in the way — the round-14
-  * race specs all ran threads inside one JVM, where the stripe
-  * serializes claim+swap before the kernel-atomic owner is ever
-  * exercised; this is the inter-process half of the guarantee.
+  * the atomic claim (hard link) is contended WITHOUT the in-JVM striped
+  * lock in the way — the round-14 race specs all ran threads inside one
+  * JVM, where the stripe serializes the claims before the kernel-atomic
+  * owner is ever exercised; this is the inter-process half of the
+  * guarantee.
   *
   * No SparkSession: the commit plane is pure Hadoop-FS driver-side IO
   * (exactly what lets N independent writers on N hosts share a store).
