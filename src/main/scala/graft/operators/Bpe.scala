@@ -42,8 +42,9 @@ import org.apache.spark.sql.functions._
   * row-local codegen — into one hash-agg whose map side combines, over
   * the WORD table (≪ corpus); the argmax is a 1-row `orderBy.limit(1)`
   * collect; the rewrite is a row-local UDF over the word table. Each
-  * round's vocab is localCheckpoint-rotated ([[graft.Checkpoints]], one
-  * live frame per round) so lineage doesn't stack across rounds.
+  * round's vocab is localCheckpointed, and the previous round's blocks
+  * are freed once the next one is materialized ([[graft.Checkpoints]]),
+  * so lineage doesn't stack across rounds.
   * Encoding broadcasts the merge list (KBs) and is purely row-local —
   * the corpus never shuffles.
   */
@@ -192,7 +193,7 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    var vocab = graft.Checkpoints.rotate("bpe.vocab", vocabTable(docs, textCol))
+    var vocab = vocabTable(docs, textCol).localCheckpoint()
 
     // SUB-FLOOR SKIP (round-15, guide §1.2): one bounded fetch
     // ([[DriverBatch.rows]]) decides the branch AND carries the whole
@@ -209,8 +210,8 @@ object Bpe {
         val freshVocab = words.zip(syms)
           .map { case ((w, f), ss) => (w, ss, f) }.toSeq
           .toDF("w", "syms", "freq")
-        return (merges.toSeq.toDF("rank", "left", "right", "pair_count"),
-          graft.Checkpoints.rotate("bpe.vocab", freshVocab))
+        graft.Checkpoints.free(vocab)
+        return (merges.toSeq.toDF("rank", "left", "right", "pair_count"), freshVocab)
       case None =>
     }
 
@@ -236,8 +237,10 @@ object Bpe {
         val rewrite = udf { (syms: Seq[String]) =>
           mergePass(syms.toIndexedSeq, l, r)
         }
-        vocab = graft.Checkpoints.rotate("bpe.vocab",
-          vocab.select(col("w"), rewrite(col("syms")).as("syms"), col("freq")))
+        val next = vocab.select(col("w"), rewrite(col("syms")).as("syms"), col("freq"))
+          .localCheckpoint()
+        graft.Checkpoints.free(vocab)
+        vocab = next
         rank += 1
       }
     }

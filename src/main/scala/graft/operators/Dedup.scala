@@ -262,8 +262,8 @@ object Dedup {
     // rep-pair expansion + both sides of the intra-group self-join),
     // each of which would re-run the whole-text grouping otherwise —
     // materialize the narrow (id, rid) table once per invocation
-    lazy val members = graft.Checkpoints.rotate("dedup.ngramJaccard.members",
-      base.join(groups, "txt").select(col("id"), col("rid")))
+    lazy val members =
+      base.join(groups, "txt").select(col("id"), col("rid")).localCheckpoint()
     val reps =
       if (preDeduped) base else groups.select(col("rid").as("id"), col("txt"))
 
@@ -287,11 +287,12 @@ object Dedup {
     // repartition first: reps often arrives as ONE AQE-coalesced (or
     // checkpointed) partition, and without the spread the explode+hash
     // map side of the distinct runs single-threaded.
-    val sets = graft.Checkpoints.rotate("dedup.ngramJaccard.sets", reps
+    val sets = reps
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("id"))
       .select(col("id"),
         explode(shingleHash64(col("txt"), shingleN)).as("s"))
-      .distinct())
+      .distinct()
+      .localCheckpoint()
     val dfs = sets.groupBy(col("s")).agg(count(lit(1)).as("df"))
     // rare shingles only through the self-join — the df histogram is one
     // extra agg on data already shuffled by shingle, and it bounds the
@@ -675,9 +676,9 @@ object Dedup {
     // and the non-first-occurrence join — unchecked, each reference
     // re-scans and re-fingerprints the whole corpus (the plan audit
     // showed 3 corpus scans; at 100 TB two of them are redundant reads)
-    val wins = graft.Checkpoints.rotate("window_dedup_wins",
-      base.select(col(idCol),
-        posexplode(shingleHash64(col(textCol), k)).as(Seq("pos", "w"))))
+    val wins = base.select(col(idCol),
+        posexplode(shingleHash64(col(textCol), k)).as(Seq("pos", "w")))
+      .localCheckpoint()
     // only DUPLICATED windows can produce bad starts, so the per-window
     // minimum table is filtered to count > 1 BEFORE the join: occurrences
     // of unique windows (the overwhelming mass of a real corpus) then
@@ -915,15 +916,15 @@ object Dedup {
     // probe×index join, its partition-discovery listing and its pruned
     // index scan, all run twice per maintenance cycle (round-15,
     // measured: 2 listing jobs + 2 scan jobs per run collapsed to 1+1).
-    val contracted = graft.Checkpoints.rotate("dedup.incremental.contracted",
-      deltaEdges
-        .join(la, Seq("id_a"), "left")
-        .join(lb, Seq("id_b"), "left")
-        .select(
-          coalesce(col("ca"), col("id_a")).as("u"),
-          col("ca").isNull.as("u_raw"),
-          coalesce(col("cb"), col("id_b")).as("v"),
-          col("cb").isNull.as("v_raw")))
+    val contracted = deltaEdges
+      .join(la, Seq("id_a"), "left")
+      .join(lb, Seq("id_b"), "left")
+      .select(
+        coalesce(col("ca"), col("id_a")).as("u"),
+        col("ca").isNull.as("u_raw"),
+        coalesce(col("cb"), col("id_b")).as("v"),
+        col("cb").isNull.as("v_raw"))
+      .localCheckpoint()
     val edges = contracted.select(col("u"), col("v")).filter(col("u") =!= col("v"))
     // 2. close the contracted graph (touched comps + batch nodes only).
     // Sub-floor skip, the engageCap discipline: a daily append's
@@ -1031,8 +1032,7 @@ object Dedup {
     // (the banded near-dup join) the whole pair pipeline executed TWICE
     // (measured: dedup_groups at 10⁵ paid ~2× its near-dup stage before
     // the CC rounds even started)
-    val p0 = graft.Checkpoints.rotate("dedup.connectedComponentsProp.pairs",
-      pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    val p0 = pairs.select(col(aCol).as("u"), col(bCol).as("v")).localCheckpoint()
     val sym = p0.unionAll(p0.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint()
     var labels = sym.select(col("u").as("id")).distinct()
@@ -1061,10 +1061,10 @@ object Dedup {
         "pair graph has a longer diameter than a dedup workload should; " +
         "raise maxIter or switch to star-contraction for chain graphs")
     graft.Checkpoints.free(sym)
-    // the final labels checkpoint must outlive this call (the caller's
-    // plan reads it), so it rotates: the next invocation frees this
-    // generation's blocks instead of letting bench loops accumulate them
-    graft.Checkpoints.adopt("dedup.connectedComponentsProp.labels", labels)
+    graft.Checkpoints.free(p0)
+    // the final labels checkpoint is what the returned frame reads: it
+    // lives as long as that frame (graft.Checkpoints)
+    labels
   }
 
   /** Connected components by alternating large-star / small-star
@@ -1119,7 +1119,7 @@ object Dedup {
     val uv = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
     // a local pair relation at or under the floor (a request-sized
     // batch) is its own edge list: it closes on the driver with no job
-    // (no pair rotation, no edge checkpoint, no sample). Its self-pairs
+    // (no pair checkpoint, no edge checkpoint, no sample). Its self-pairs
     // enter the union-find too, so their nodes label themselves. Any
     // other input, or one with a null id, takes the path below.
     val idType = uv.select(col("u")).unionAll(uv.select(col("v").as("u"))).schema("u").dataType
@@ -1134,7 +1134,7 @@ object Dedup {
     }
     // materialize the pair input once (see connectedComponents: the
     // symmetrizing union's branches would re-execute the producer)
-    val p0 = graft.Checkpoints.rotate("dedup.connectedComponentsStars.pairs", uv)
+    val p0 = uv.localCheckpoint()
     // the every-endpoint output contract survives contraction via this
     // node set, not via the edge list (contraction keeps every node,
     // but nodes from degenerate self-pairs (u == v) leave it). NOT
@@ -1233,6 +1233,7 @@ object Dedup {
       .select(col("id"), coalesce(col("c"), col("id")).as("comp"))
       .localCheckpoint()
     graft.Checkpoints.free(edges)
-    graft.Checkpoints.adopt("dedup.connectedComponentsStars.labels", labels)
+    graft.Checkpoints.free(p0)
+    labels
   }
 }

@@ -276,9 +276,8 @@ object DedupIndex {
       case Some(batch) => driverProbe(batch, col(idCol), "__qid", textCol, "__qsig", k, bands, shingleN)
       case None =>
         val n = spark.sparkContext.defaultParallelism
-        val rows = graft.Checkpoints.rotate("dedup_index_probe",
-          bandRows(incoming.repartition(n, col(idCol)), col(idCol), "__qid", textCol, "__qsig",
-            k, bands, shingleN))
+        val rows = bandRows(incoming.repartition(n, col(idCol)), col(idCol), "__qid", textCol,
+          "__qsig", k, bands, shingleN).localCheckpoint()
         // ≤ 256 groups by construction — driver-bounded. One job
         // yields BOTH probe-side scalars: the prefix list for the
         // pushed prefix filter AND the probe band-row count the
@@ -410,7 +409,7 @@ object DedupIndex {
           build(b, idCol, textCol, dir, shingleN, k, bands, Some(0L)); b
         } else {
           val (probe, surv) = surviveAgainst(b, idCol, textCol, dir, threshold)
-          val s = graft.Checkpoints.rotate(s"dix_ingest_b$i", surv)
+          val s = surv.localCheckpoint()
           val seg = ManifestCommit.uniqueName("seg", readManifest(dir).version + 1)
           writeBandRows(
             probe.join(s.select(col(idCol).as("__qid")), Seq("__qid"),
@@ -522,9 +521,8 @@ object DedupIndex {
         // batch-sized probe, materialized once (prefix list + join
         // probe — the surviveAgainst discipline)
         val n = spark.sparkContext.defaultParallelism
-        val nb = graft.Checkpoints.rotate("dedup_index_delta_probe",
-          bandRows(batch.repartition(n, col(idCol)), id, "id_a", textCol, "sig_a",
-            k, bands, shingleN))
+        val nb = bandRows(batch.repartition(n, col(idCol)), id, "id_a", textCol, "sig_a",
+          k, bands, shingleN).localCheckpoint()
         // ≤ 256 distinct values by construction — driver-bounded (the
         // same pruning discipline as query's probe); the delta probe
         // always broadcasts, so its band-row count is never needed

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.Multimodal
-import graft.{Checkpoints, Q, Tables}
+import graft.{Q, Scratch, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -712,9 +712,9 @@ object LlmQueries {
       val corpus = all.filter(col("doc_id") % 50 =!= 0)
       // materialized once — four downstream branches re-run the
       // whole-text groupBy otherwise (same rationale as l28)
-      val reps = Checkpoints.rotate("l27.reps",
-        Dedup.exact(corpus, "text", "doc_id")
-          .join(corpus.select(col("doc_id"), col("source")), "doc_id"))
+      val reps = Dedup.exact(corpus, "text", "doc_id")
+        .join(corpus.select(col("doc_id"), col("source")), "doc_id")
+        .localCheckpoint()
       val gated = reps
         .filter(length(col("text")) >= 100 && size(split(col("text"), " ")) >= 20)
         .join(TextAnalysis.repetitionSignals(reps, "doc_id", "text")
@@ -789,19 +789,19 @@ object LlmQueries {
     * component kept — agreed. */
   /** The l28 chain over an arbitrary documents relation — shared by l28
     * (direct fixture table) and l65 (the same corpus resolved through a
-    * PINNED catalog name). `ckKey` keys the materialized exact-dedup
-    * checkpoint so distinct call sites never rotate each other's
-    * still-live generation. */
-  private def pretrainNearDupPipeline(all: DataFrame, ckKey: String): DataFrame = {
+    * PINNED catalog name). The materialized exact-dedup checkpoint lives
+    * as long as the returned frame ([[graft.Checkpoints]]), so any number
+    * of calls may be built before any runs. */
+  private def pretrainNearDupPipeline(all: DataFrame): DataFrame = {
     val bench = all.filter(col("doc_id") % 50 === 0)
     val corpus = all.filter(col("doc_id") % 50 =!= 0)
     // materialize the exact-dedup output ONCE: six downstream branches
     // (pair stage, anti-join, quality gates, repetition signals,
     // decontamination, final agg) would each re-run the whole-text
     // groupBy otherwise — measured as most of the query's cost
-    val reps = Checkpoints.rotate(ckKey,
-      Dedup.exact(corpus, "text", "doc_id")
-        .join(corpus.select(col("doc_id"), col("source")), "doc_id"))
+    val reps = Dedup.exact(corpus, "text", "doc_id")
+      .join(corpus.select(col("doc_id"), col("source")), "doc_id")
+      .localCheckpoint()
     // component collapse: drop every doc whose component label is a
     // smaller id (the survivor is the component min — deterministic).
     // reps is exact-deduped by construction, so the pair stage skips
@@ -907,24 +907,8 @@ object LlmQueries {
   val l28PipelineNearDup = Q(
     "l28_pretrain_neardup",
     (s, dir) =>
-      pretrainNearDupPipeline(Tables(s, dir, "documents"), "l28.reps"),
+      pretrainNearDupPipeline(Tables(s, dir, "documents")),
     Some(pretrainNearDupOracleSql("")))
-
-  /** One session-fixed root for every persisted-index artifact the
-    * declared queries create, deleted recursively on JVM exit — repeated
-    * verify/bench invocations REUSE paths under it instead of leaking a
-    * fresh /tmp directory per run (the round-7 advisory). */
-  private lazy val annIndexRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_ann_index")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p.toFile)))
-    p
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(): Unit
-  }
 
   /** The l29 index for `dir`'s embeddings table: built ONCE per session
     * (first caller pays the ingest; l30/l31 and every later invocation
@@ -934,7 +918,7 @@ object LlmQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
     annIndexBuilt.computeIfAbsent(dir, _ => {
-      val out = annIndexRoot.resolve("idx_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("idx_" + Integer.toHexString(dir.hashCode))
       Similarity.buildIvfIndex(
         Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
         out, cellCap = Some(256)).count()
@@ -1071,8 +1055,7 @@ object LlmQueries {
     "l32_ann_index_append",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val out = annIndexRoot.resolve(
-        "append_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("append_" + Integer.toHexString(dir.hashCode))
       Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 10 =!= 0), out, cellCap = Some(256)).count()
       Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 10 === 0), out).count()
@@ -1099,8 +1082,7 @@ object LlmQueries {
                    CAST(1 AS BOOLEAN) AS integrity_ok FROM embeddings"""),
     bench = Some((s, dir) => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val out = annIndexRoot.resolve(
-        "append_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("append_" + Integer.toHexString(dir.hashCode))
       Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 10 =!= 0), out, cellCap = Some(256)).count()
       Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 10 === 0), out).count()
@@ -1111,7 +1093,7 @@ object LlmQueries {
 
   /** L: the index INGEST cost, unamortized — a fresh [[Similarity
     * .buildIvfIndex]] into a new directory on every invocation (no
-    * session cache; a rotating counter keeps the paths distinct, all
+    * session cache; [[Scratch.dir]] keeps the paths distinct, all
     * under the JVM-exit-cleaned root). l29 measures the tier a
     * deployment READS (built once, amortized); this row measures what
     * a growing 100 TB deployment PAYS daily — the write path — which
@@ -1120,13 +1102,10 @@ object LlmQueries {
     * same deterministic per-cell histogram as l29 (same corpus, same
     * centroids, same cellCap) — the declared invariant output asserts
     * exactly that, cell for cell, plus the DuckDB-checked total. */
-  private val freshIndexCounter = new java.util.concurrent.atomic.AtomicLong(0)
   val l33AnnIndexFresh = Q(
     "l33_ann_index_fresh",
     (s, dir) => {
-      val out = annIndexRoot.resolve(
-        "fresh_" + Integer.toHexString(dir.hashCode) + "_" +
-          freshIndexCounter.getAndIncrement()).toString
+      val out = Scratch.dir("fresh_" + Integer.toHexString(dir.hashCode) + "_")
       Similarity.buildIvfIndex(
         Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
         out, cellCap = Some(256)).count()
@@ -1149,9 +1128,7 @@ object LlmQueries {
     Some("""SELECT count(*) AS n_vectors_total,
                    CAST(1 AS BOOLEAN) AS histogram_parity FROM embeddings"""),
     bench = Some((s, dir) => {
-      val out = annIndexRoot.resolve(
-        "fresh_" + Integer.toHexString(dir.hashCode) + "_" +
-          freshIndexCounter.getAndIncrement()).toString
+      val out = Scratch.dir("fresh_" + Integer.toHexString(dir.hashCode) + "_")
       Similarity.buildIvfIndex(
         Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
         out, cellCap = Some(256)).count()
@@ -1200,7 +1177,7 @@ object LlmQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pqIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
     pqIndexBuilt.computeIfAbsent(dir, _ => {
-      val out = annIndexRoot.resolve("pq_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("pq_" + Integer.toHexString(dir.hashCode))
       Similarity.buildPqIndex(
         Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
         out, cellCap = Some(256), centroidsFrom = Some(annIndex(s, dir))).count()
@@ -1413,7 +1390,7 @@ object LlmQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupIndex(s: org.apache.spark.sql.SparkSession, dir: String): String =
     dedupIndexBuilt.computeIfAbsent("b:" + dir, _ => {
-      val out = annIndexRoot.resolve("dix_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("dix_" + Integer.toHexString(dir.hashCode))
       DedupIndex.build(
         Tables(s, dir, "documents").filter(col("doc_id") % 2 === 0),
         "doc_id", "text", out)
@@ -1421,7 +1398,7 @@ object LlmQueries {
     })
   private def dedupIndexAppended(s: org.apache.spark.sql.SparkSession, dir: String): String =
     dedupIndexBuilt.computeIfAbsent("a:" + dir, _ => {
-      val out = annIndexRoot.resolve("dixa_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("dixa_" + Integer.toHexString(dir.hashCode))
       val docs = Tables(s, dir, "documents")
       DedupIndex.build(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", out)
       DedupIndex.append(docs.filter(col("doc_id") % 4 === 2), "doc_id", "text", out)
@@ -1431,7 +1408,7 @@ object LlmQueries {
     * an indexed corpus pay the pair stage from `bands/`, not a re-band. */
   private def dedupIndexFull(s: org.apache.spark.sql.SparkSession, dir: String): String =
     dedupIndexBuilt.computeIfAbsent("f:" + dir, _ => {
-      val out = annIndexRoot.resolve("dixf_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("dixf_" + Integer.toHexString(dir.hashCode))
       DedupIndex.build(Tables(s, dir, "documents"), "doc_id", "text", out)
       out
     })
@@ -1560,7 +1537,7 @@ object LlmQueries {
     * mutated. */
   private def dedupIndexDeleted(s: org.apache.spark.sql.SparkSession, dir: String): String =
     dedupIndexBuilt.computeIfAbsent("d:" + dir, _ => {
-      val out = annIndexRoot.resolve("dixd_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("dixd_" + Integer.toHexString(dir.hashCode))
       val docs = Tables(s, dir, "documents")
       DedupIndex.build(docs, "doc_id", "text", out)
       DedupIndex.delete(
@@ -1621,8 +1598,8 @@ object LlmQueries {
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
     val key = "n:" + dir
     dedupIndexBuilt.computeIfAbsent(key, _ => {
-      val out = annIndexRoot.resolve("dixn_" + Integer.toHexString(dir.hashCode)).toString
-      val lab = annIndexRoot.resolve("dixnl_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("dixn_" + Integer.toHexString(dir.hashCode))
+      val lab = Scratch.path("dixnl_" + Integer.toHexString(dir.hashCode))
       val docs = Tables(s, dir, "documents")
       DedupIndex.build(docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text", out)
       Dedup.connectedComponents(DedupIndex.selfPairs(s, out), "id_a", "id_b")
@@ -1689,7 +1666,7 @@ object LlmQueries {
   private def dedupIndexSnap(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, Long) = {
     dedupIndexBuilt.computeIfAbsent("s:" + dir, _ => {
-      val out = annIndexRoot.resolve("dixs_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("dixs_" + Integer.toHexString(dir.hashCode))
       val docs = Tables(s, dir, "documents")
       DedupIndex.build(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", out)
       val v1 = DedupIndex.readManifest(out).version
@@ -1739,8 +1716,7 @@ object LlmQueries {
     (s, dir) => {
       val (idx, v1) = dedupIndexSnap(s, dir)
       val cat = dedupIndexBuilt.computeIfAbsent("cat:" + dir, _ => {
-        val c = annIndexRoot.resolve(
-          "cat_" + Integer.toHexString(dir.hashCode)).toString
+        val c = Scratch.path("cat_" + Integer.toHexString(dir.hashCode))
         // ONE commit for the deployment pair (live re-point + pinned
         // snapshot name): a reader never sees the half-published state
         // the former two-register sequence allowed
@@ -1755,8 +1731,6 @@ object LlmQueries {
     },
     Some("""SELECT doc_id, CAST(8 AS BIGINT) AS n_bands FROM documents
             WHERE doc_id % 2 = 0 AND text IS NOT NULL ORDER BY doc_id"""))
-
-  private val l65Runs = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** L: CATALOG-RESOLVED REPRODUCIBLE PIPELINE — "rerun last week's job
     * byte-identical", end to end through the catalog (the round-14
@@ -1779,21 +1753,19 @@ object LlmQueries {
   val l65CatalogPinnedPipeline = Q(
     "l65_catalog_pinned_pipeline",
     (s, dir) => {
-      val n = l65Runs.incrementAndGet()
       val all = Tables(s, dir, "documents")
-      // fresh store+catalog per invocation (the s14 ingestRoot
-      // discipline: publishes accumulate; a re-run must not fold onto a
-      // previous invocation's mutated live state)
-      val store = annIndexRoot.resolve(s"l65corp_$n").toString
-      val cat = annIndexRoot.resolve(s"l65cat_$n").toString
+      // fresh store+catalog per invocation (publishes accumulate; a
+      // re-run must not fold onto a previous invocation's mutated live
+      // state)
+      val store = Scratch.dir("l65corp_")
+      val cat = Scratch.dir("l65cat_")
       val v1 = StateTable.publish(all, store)
       Catalog.registerAll(s, cat, Seq(
         ("pretrain-corpus", "state-table", store, None),
         ("pretrain-corpus@v1", "state-table", store, Some(v1))))
       // run 1, resolved through the PIN and materialized BEFORE the
       // live mutation (localCheckpoint — the "last week" run completed)
-      val r1 = pretrainNearDupPipeline(
-        Catalog.stateTable(s, cat, "pretrain-corpus@v1"), "l65.reps")
+      val r1 = pretrainNearDupPipeline(Catalog.stateTable(s, cat, "pretrain-corpus@v1"))
         .localCheckpoint()
       // mutate the LIVE corpus: a junk tranche that would alter exact
       // dedup (duplicate texts), the near-dup components, the quality
@@ -1805,7 +1777,7 @@ object LlmQueries {
       // run 2: a FRESH pinned resolve, after the mutation (checkpointed
       // — three consumers below: two exceptAll sides and the output)
       val pinned2 = Catalog.stateTable(s, cat, "pretrain-corpus@v1")
-      val r2 = pretrainNearDupPipeline(pinned2, "l65.reps").localCheckpoint()
+      val r2 = pretrainNearDupPipeline(pinned2).localCheckpoint()
       val identical = r2.exceptAll(r1).isEmpty && r1.exceptAll(r2).isEmpty
       val liveMutated = Catalog.stateTable(s, cat, "pretrain-corpus")
         .count() > pinned2.count()
@@ -1822,17 +1794,14 @@ object LlmQueries {
     bench = Some((s, dir) => {
       val cat = dedupIndexBuilt.computeIfAbsent("l65b:" + dir, _ => {
         val all = Tables(s, dir, "documents")
-        val store = annIndexRoot.resolve(
-          "l65bs_" + Integer.toHexString(dir.hashCode)).toString
-        val c = annIndexRoot.resolve(
-          "l65bc_" + Integer.toHexString(dir.hashCode)).toString
+        val store = Scratch.path("l65bs_" + Integer.toHexString(dir.hashCode))
+        val c = Scratch.path("l65bc_" + Integer.toHexString(dir.hashCode))
         val v1 = StateTable.publish(all, store)
         Catalog.registerAll(s, c, Seq(
           ("pretrain-corpus@v1", "state-table", store, Some(v1))))
         c
       })
-      pretrainNearDupPipeline(
-        Catalog.stateTable(s, cat, "pretrain-corpus@v1"), "l65.reps")
+      pretrainNearDupPipeline(Catalog.stateTable(s, cat, "pretrain-corpus@v1"))
     }))
 
   /** L: SQL SURFACE over the persisted tiers, driver-gated — the l63
@@ -1869,13 +1838,11 @@ object LlmQueries {
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) =
     annIndexDeletedBuilt.computeIfAbsent(dir, _ => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val delIdx = annIndexRoot.resolve(
-        "del_" + Integer.toHexString(dir.hashCode)).toString
+      val delIdx = Scratch.path("del_" + Integer.toHexString(dir.hashCode))
       Similarity.buildIvfIndex(emb, delIdx, cellCap = Some(256)).count()
       Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") % 10 === 7).select(col("vec_id")), delIdx).count()
-      val refIdx = annIndexRoot.resolve(
-        "delref_" + Integer.toHexString(dir.hashCode)).toString
+      val refIdx = Scratch.path("delref_" + Integer.toHexString(dir.hashCode))
       Similarity.buildIvfIndex(emb.filter(col("vec_id") % 10 =!= 7), refIdx,
         cellCap = Some(256), centroidsFrom = Some(delIdx)).count()
       (delIdx, refIdx)
@@ -1908,9 +1875,7 @@ object LlmQueries {
             ORDER BY vec_id"""),
     bench = Some((s, dir) => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val out = annIndexRoot.resolve(
-        "bdel_" + Integer.toHexString(dir.hashCode) + "_" +
-          freshIndexCounter.getAndIncrement()).toString
+      val out = Scratch.dir("bdel_" + Integer.toHexString(dir.hashCode) + "_")
       Similarity.buildIvfIndex(emb, out, cellCap = Some(256)).count()
       Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") % 10 === 7).select(col("vec_id")), out).count()
@@ -2245,8 +2210,8 @@ object LlmQueries {
     val key = "jlpq:" + dir
     dedupIndexBuilt.computeIfAbsent(key, _ => {
       val hex = Integer.toHexString(dir.hashCode)
-      val projDir = annIndexRoot.resolve("jlproj_" + hex).toString
-      val idxDir = annIndexRoot.resolve("jlpq_" + hex).toString
+      val projDir = Scratch.path("jlproj_" + hex)
+      val idxDir = Scratch.path("jlpq_" + hex)
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = emb.unionByName(
         emb.select((col("vec_id") + PlantOffset).as("vec_id"), col("embedding")))
@@ -2311,8 +2276,7 @@ object LlmQueries {
     "l62_pq_index_append",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val out = annIndexRoot.resolve(
-        "pqappend_" + Integer.toHexString(dir.hashCode)).toString
+      val out = Scratch.path("pqappend_" + Integer.toHexString(dir.hashCode))
       Similarity.buildPqIndex(
         emb.filter(col("vec_id") % 10 =!= 0), out, cellCap = Some(256)).count()
       Similarity.appendToPqIndex(emb.filter(col("vec_id") % 10 === 0), out).count()
@@ -2333,9 +2297,7 @@ object LlmQueries {
                    CAST(1 AS BOOLEAN) AS integrity_ok FROM embeddings"""),
     bench = Some((s, dir) => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val out = annIndexRoot.resolve(
-        "pqappend_" + Integer.toHexString(dir.hashCode) + "_" +
-          freshIndexCounter.getAndIncrement()).toString
+      val out = Scratch.dir("pqappend_" + Integer.toHexString(dir.hashCode) + "_")
       Similarity.buildPqIndex(
         emb.filter(col("vec_id") % 10 =!= 0), out, cellCap = Some(256)).count()
       Similarity.appendToPqIndex(emb.filter(col("vec_id") % 10 === 0), out).count()

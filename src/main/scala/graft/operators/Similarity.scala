@@ -1282,6 +1282,7 @@ object Similarity {
           man.version + 1, tombstones = Seq(tomb),
           counts = removed.map { case (c, n) => c -> -n }))
       }
+      graft.Checkpoints.free(present)
       // lost the claim — re-derive everything against the winner (the
       // orphan tombstone dir ages out via vacuum)
       if (!committed) man = AnnStore.read(dir)
@@ -1718,7 +1719,7 @@ object Similarity {
     // A driver-built probe needs no checkpoint: its LUTs are data in a
     // local relation.
     val joined = probeJoin(queries, indexDir, man, nprobe, pqProbe(cbBc), postings, local,
-      graft.Checkpoints.rotate("similarity.pqProbe", _))
+      _.localCheckpoint())
 
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val adc = ColumnBridge.column(graft.functions.PqAdcExpr(
@@ -2156,7 +2157,7 @@ object Similarity {
         (x, y, Seq("band", "bkey"))
       case Some(cap) =>
         require(cap > 0, s"bucketCap must be positive, got $cap")
-        val mat = graft.Checkpoints.rotate("similarity.bandedGuard", banded)
+        val mat = banded.localCheckpoint()
         val hot = mat.groupBy(col("band"), col("bkey"))
           .agg(count(lit(1)).as("s"))
           .filter(col("s") > cap)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{Q, Tables}
+import graft.{Q, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -256,7 +256,7 @@ object PlanPipeline {
     (s, dir) => {
       import s.implicits._
       val orders = Tables(s, dir, "orders")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_m5_dyn").toString
+      val tmp = Scratch.dir("m5_dyn")
       orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(tmp)
       // incremental refresh: recompute ONLY the 'F' partition
       orders.filter($"o_orderstatus" === "F")

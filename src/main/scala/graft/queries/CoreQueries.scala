@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Canon, Q, Tables}
+import graft.{Canon, Q, Scratch, Tables}
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2b groups A (sources/sinks) and B (row ops).
@@ -33,7 +33,7 @@ object CoreQueries {
     "a2_csv_roundtrip",
     (s, dir) => {
       val region = Tables(s, dir, "region")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_a2_csv").toString
+      val tmp = Scratch.dir("a2_csv")
       region.write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.schema(region.schema).option("header", "true").csv(tmp)
         .orderBy("r_regionkey")
@@ -45,7 +45,7 @@ object CoreQueries {
     "a3_json_roundtrip",
     (s, dir) => {
       val nation = Tables(s, dir, "nation")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_a3_json").toString
+      val tmp = Scratch.dir("a3_json")
       nation.write.mode("overwrite").json(tmp)
       s.read.schema(nation.schema).json(tmp).orderBy("n_nationkey")
     },
@@ -60,7 +60,7 @@ object CoreQueries {
     (s, dir) => {
       import s.implicits._
       val customer = Tables(s, dir, "customer")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_a6_orc").toString
+      val tmp = Scratch.dir("a6_orc")
       customer.write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .select($"c_custkey", $"c_name", $"c_nationkey", $"c_acctbal")
@@ -79,7 +79,7 @@ object CoreQueries {
     (s, dir) => {
       import s.implicits._
       val orders = Tables(s, dir, "orders")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_a4_part").toString
+      val tmp = Scratch.dir("a4_part")
       orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(tmp)
       s.read.parquet(tmp)
         .groupBy($"o_orderstatus")
@@ -192,7 +192,7 @@ object CoreQueries {
     "a5_bucketed_join",
     (s, dir) => {
       import s.implicits._
-      val wh = java.nio.file.Files.createTempDirectory("graft_a5_bucket").toString
+      val wh = Scratch.dir("a5_bucket")
       Tables(s, dir, "orders").write.mode("overwrite")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
         .option("path", s"$wh/orders_b").saveAsTable("graft_orders_b")

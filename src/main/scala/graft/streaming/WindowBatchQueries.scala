@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Canon, Q, Tables}
+import graft.{Canon, Q, Scratch, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -295,24 +295,6 @@ object WindowBatchQueries {
                   FROM events)
             WHERE rn = 1 ORDER BY user_id"""))
 
-  /** Session-fixed root for s10's per-invocation index directories,
-    * deleted on JVM exit (same lifecycle as LlmQueries' index root). A
-    * FRESH subdirectory per invocation, not a reused one: the fold's
-    * appends accumulate, so re-running into the same directory would
-    * probe a stale, doubly-appended index. */
-  private lazy val ingestRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_ingest_dix")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rec(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rec)
-        f.delete(): Unit
-      }
-      rec(p.toFile)
-    }))
-    p
-  }
-  private val ingestRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** S: streaming ingest dedup replay — the persisted dedup index
     * ([[graft.operators.DedupIndex]], l42/l43) driven as a STREAM: four
     * time-ordered micro-batches (`doc_id % 4` — the test's deterministic
@@ -330,7 +312,10 @@ object WindowBatchQueries {
       val docs = Tables(s, dir, "documents")
       val batches = (0 to 3).map(i =>
         docs.filter(pmod(col("doc_id"), lit(4)) === i))
-      val idx = ingestRoot.resolve("run_" + ingestRuns.incrementAndGet()).toString
+      // a FRESH directory per invocation, not a reused one: the fold's
+      // appends accumulate, so re-running into the same directory would
+      // probe a stale, doubly-appended index
+      val idx = Scratch.dir("run_")
       graft.operators.DedupIndex.ingestFold(batches, "doc_id", "text", idx)
         .orderBy(col("doc_id"))
     },
@@ -481,12 +466,6 @@ object WindowBatchQueries {
             SELECT window_start, k, n, rank FROM r WHERE rank <= 3
             ORDER BY window_start, rank"""))
 
-  /** Fresh persisted-state directory per invocation for s14 (the s10
-    * ingestRoot discipline: the fold's publishes accumulate, so a
-    * re-run into the same store would read a stale, doubly-folded
-    * state — Bench runs each query three times). */
-  private val restartRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** S: EXACTLY-ONCE ACROSS A RESTART, driver-gated — s13's quantile
     * maintenance driven through the persisted [[graft.operators
     * .StateTable]] with the batch stamp riding each commit, and a
@@ -513,8 +492,9 @@ object WindowBatchQueries {
       val batches = (0 to 2).map(i =>
         ev.filter(pmod(col("event_id"), lit(3)) === i))
       val dims = Seq("event_type", "day")
-      val st = ingestRoot.resolve(
-        "qrestart_" + restartRuns.incrementAndGet()).toString
+      // fresh per invocation, as s10: a re-run into the same store would
+      // read a stale, doubly-folded state (Bench runs each query 3 times)
+      val st = Scratch.dir("qrestart_")
       // one micro-batch application, STATELESS between calls: the skip
       // predicate and the fold base both come from the persisted store
       def apply(b: org.apache.spark.sql.DataFrame, bid: Long): Unit =
@@ -602,8 +582,7 @@ object WindowBatchQueries {
       import graft.operators.{AnnStore, Similarity}
       val emb = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val idx = ingestRoot.resolve(
-        "annri_" + restartRuns.incrementAndGet()).toString
+      val idx = Scratch.dir("annri_")
       // batch 0 seeds the index (a build, unstamped); batches 1 and 2
       // are stamped ingest appends
       Similarity.buildIvfIndex(

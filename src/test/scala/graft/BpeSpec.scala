@@ -37,15 +37,13 @@ class BpeSpec extends SparkSpec {
   test("encoding a training word yields its final training symbols (consistency law)") {
     val docs = Tables(spark, sf, "documents").limit(120)
     val (mergesDf, vocabDf) = Bpe.bpeTrainFull(docs, "text", nMerges = 16, minPairCount = 2)
-    // collect both promptly: vocab references rotated checkpoint blocks
-    // that a later bpe.vocab rotation would evict (Checkpoints contract)
     val merges = mergesDf.orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
+    val stats = Bpe.bpeEncodeStats(docs, "doc_id", "text", merges)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val finalLen = vocabDf.collect()
       .map(r => r.getString(0) -> r.getSeq[String](1).length).toMap
     assert(merges.nonEmpty && finalLen.nonEmpty)
-    val stats = Bpe.bpeEncodeStats(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     docs.select(col("doc_id"), col("text")).collect().foreach { r =>
       val toks = Option(r.getString(1)).map(_.split(" ").filter(_.nonEmpty))
         .getOrElse(Array.empty[String])

@@ -324,7 +324,7 @@ class DedupSpec extends SparkSpec {
     }
     assert(close(selfOnly.toDF("id_a", "id_b")) == Map(7L -> 7L, 8L -> 8L))
     // a local pair relation under the floor closes on the driver: no
-    // pair rotation, no edge checkpoint, no sample (5 jobs when it
+    // pair checkpoint, no edge checkpoint, no sample (5 jobs when it
     // checkpointed first, 7 when it took the distributed branch); the
     // one job allowed is the labels' collect
     val jobs = jobsLaunched(close(selfOnly.toDF("id_a", "id_b")))
@@ -368,14 +368,10 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(incrBig == fullBig, "distributed branch diverged from full closure")
     // merge case pinned by hand: a new node bridges two old components,
-    // and the merged label is the min over BOTH memberships.
-    // localCheckpoint: lab2 is held across TWO incrementalComponents
-    // calls, each of which runs an internal closure under the same
-    // rotation key — the Checkpoints depth-2 caller contract requires
-    // an independently-materialized copy for that pattern
+    // and the merged label is the min over BOTH memberships. lab2 is
+    // held across TWO incrementalComponents calls
     val lab2 = Dedup.connectedComponents(
       Seq((1L, 2L), (10L, 11L)).toDF("id_a", "id_b"), "id_a", "id_b")
-      .localCheckpoint()
     val got = Dedup.incrementalComponents(
       lab2, Seq((2L, 50L), (50L, 10L)).toDF("id_a", "id_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

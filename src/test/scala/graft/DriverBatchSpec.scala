@@ -26,11 +26,15 @@ class DriverBatchSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
-  /** Whether building `f` registered a checkpoint generation. */
+  /** The ids of every RDD the context holds persisted: checkpoints
+    * included, whoever made them. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Whether building `f` persisted an RDD that is still held. */
   private def checkpointed[T](f: => T): (T, Boolean) = {
-    val before = Checkpoints.liveIds
+    val before = persisted
     val out = f
-    (out, Checkpoints.liveIds != before)
+    (out, (persisted -- before).nonEmpty)
   }
 
   private def dedupIndex(): String = {
@@ -189,7 +193,7 @@ class DriverBatchSpec extends SparkSpec {
         () => rows(Similarity.pqTopKIndexed(v, emb, pq, 3)))
     }
     val serial = probes.map(_())
-    val before = Checkpoints.liveIds
+    val before = persisted
     val pool = Executors.newFixedThreadPool(4)
     try {
       val runs = (0 until 4).map(t => pool.submit(new Callable[Seq[(Int, Seq[String])]] {
@@ -207,7 +211,7 @@ class DriverBatchSpec extends SparkSpec {
       pool.shutdown()
       pool.awaitTermination(1, TimeUnit.MINUTES)
     }
-    assert(Checkpoints.liveIds == before, "a driver-built probe registered a checkpoint")
+    assert((persisted -- before).isEmpty, "a driver-built probe persisted an RDD")
   }
 
   /** The chains of `text` that take a `limit(n + 1)` branch sample by hand. */
